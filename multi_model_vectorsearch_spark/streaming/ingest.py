@@ -78,18 +78,6 @@ class StateCommitStormError(RuntimeError):
     endpoints) and receive the last torn-excluded view instead."""
 
 
-class RenameModePollError(RuntimeError):
-    """``maybe_rewarm()`` was called on a ``commit_mode="rename"``
-    pipeline without ``allow_rename_mode_poll=True``. Rename commit
-    MOVES live directories during ``compact()``/re-train, so a reader
-    polling through another process's swap can capture a plan over a
-    directory that vanishes mid-scan — the one documented reader
-    restriction pointer mode exists to remove. Deployments where the
-    poller and the writer are the same actor (or readers quiesce around
-    maintenance) opt in explicitly; multi-process serving should use
-    ``commit_mode="pointer"``."""
-
-
 class WriterFencedError(RuntimeError):
     """This pipeline's writer lease was usurped by a newer writer: a
     second writer process acquired the lease (higher epoch) on the same
@@ -123,14 +111,13 @@ class IngestPipeline:
     mid-write data is invisible; (2) one torn-set per query — a batch
     missing ANY store's marker is excluded from EVERY store's view, so a
     query never mixes a batch's committed corpus rows with its
-    not-yet-committed edges; (3) under ``commit_mode="pointer"``,
-    epoch-stable plans plus generation retention — compact/re-train
-    publish by pointer flip, readers pin one epoch's physical paths, and
-    the superseded generation stays on disk for ``retain_generations``
-    more flips so in-flight scans complete. ``commit_mode="rename"``
-    moves live directories during compact/re-train and is therefore
-    single-actor: quiesce readers around those two maintenance ops (plain
-    batch appends are safe in both modes). Warm readers call
+    not-yet-committed edges; (3) epoch-stable plans plus generation
+    retention — compact, re-train and ``refresh_edges`` publish by
+    flipping a ``_CURRENT`` generation pointer (the one commit protocol,
+    on every backend), readers pin one epoch's physical paths, and the
+    superseded generation stays on disk for ``retain_generations`` more
+    flips so in-flight scans complete. No live directory ever moves, so
+    readers never quiesce around maintenance. Warm readers call
     ``maybe_rewarm()`` on their own cadence to pick up the writer's
     progress — a strictly read-only poll.
 
@@ -142,8 +129,8 @@ class IngestPipeline:
     :class:`WriterFencedError` instead of silently interleaving batch
     keys (see the writer-fencing section below).
 
-    Retention SLA for readers: under pointer commit a cold query plans
-    against one epoch's physical paths and must finish its SCAN within
+    Retention SLA for readers: a cold query plans against one epoch's
+    physical paths and must finish its SCAN within
     ``retain_generations`` subsequent writer flips (default 1) — a scan
     outliving that window reads swept files and fails. Size
     ``retain_generations`` to ceil(max scan seconds / min seconds
@@ -180,12 +167,10 @@ class IngestPipeline:
                  max_collect: int = 4096, n_centroids: int | None = 8,
                  ivf_bootstrap: int = 64, maintain_ivf: bool = False,
                  maintain_neardup: bool = False, ivf_probes: int = 2,
-                 fs=None, commit_mode: str = "auto",
-                 cell_rows_cap: int = 200_000,
+                 fs=None, cell_rows_cap: int = 200_000,
                  retain_generations: int = 1,
                  refresh_edges_on_retrain: bool = False,
-                 min_flip_interval_s: float = 0.0,
-                 allow_rename_mode_poll: bool = False):
+                 min_flip_interval_s: float = 0.0):
         self.spark = spark
         # every state-FS operation routes through ONE adapter (statefs.py)
         # so the commit protocol runs unchanged on local disk, HDFS, or an
@@ -197,17 +182,6 @@ class IngestPipeline:
 
         self.fs = fs if fs is not None else statefs_for(spark, state_dir)
         self.state_dir = state_dir
-        # swap strategy for compaction / IVF re-train: "rename" builds the
-        # commit point on an atomic directory rename (POSIX, HDFS);
-        # "pointer" publishes a new generation directory by atomically
-        # rewriting a tiny ``_CURRENT`` pointer file — the only commit an
-        # object store (no atomic rename) can honor. "auto" picks from
-        # the backend's rename guarantee.
-        if commit_mode not in ("auto", "rename", "pointer"):
-            raise ValueError(f"unknown commit_mode {commit_mode!r}")
-        if commit_mode == "auto":
-            commit_mode = "rename" if self.fs.atomic_rename else "pointer"
-        self.commit_mode = commit_mode
         self.corpus_dir = self.fs.join(state_dir, "corpus")
         self.edges_dir = self.fs.join(state_dir, "edges")
         self.centroids_dir = self.fs.join(state_dir, "centroids")
@@ -290,9 +264,6 @@ class IngestPipeline:
         # non-atomic window the roll-forward exists to close. 0 = off.
         self.min_flip_interval_s = min_flip_interval_s
         self._last_flip_ts = float("-inf")  # monotonic clock of last flip
-        # maybe_rewarm() poll guard (round-12 verdict item 5): see
-        # RenameModePollError — rename-mode polling is opt-in.
-        self.allow_rename_mode_poll = allow_rename_mode_poll
         # Serving observability (round-12 verdict item 4): cumulative
         # counters over the serve_* facade — "queries" answered,
         # "retries" consumed across them, "exhausted" raises — plus the
@@ -339,14 +310,15 @@ class IngestPipeline:
     def _has_parquet(self, path: str) -> bool:
         return self.fs.has_parquet(path)
 
-    # --- generation pointers (object-store commit mode) ----------------------
-    # Under commit_mode="pointer" a state root holds a tiny ``_CURRENT``
-    # file naming the live generation subdirectory (``.gen-<n>`` — hidden,
-    # so a Spark read of the root never sees a staged one). Publishing a
-    # rebuilt store = atomically rewriting that one small file, the only
-    # commit primitive an object store honors; readers resolve through
-    # ``_phys``. Under commit_mode="rename" no pointer ever exists and
-    # ``_phys`` is the identity, preserving the original layout exactly.
+    # --- generation pointers (the commit protocol) ---------------------------
+    # A state root holds a tiny ``_CURRENT`` file naming the live
+    # generation subdirectory (``.gen-<n>`` — hidden, so a Spark read of
+    # the root never sees a staged one). Publishing a rebuilt store =
+    # atomically rewriting that one small file, a commit primitive every
+    # backend honors (object stores included); readers resolve through
+    # ``_phys``. A root that has never been published has no pointer: it
+    # is generation 0 and ``_phys`` is the identity, so state stored at
+    # the root itself reads unchanged.
 
     def _phys(self, root: str) -> str:
         """The physical directory a logical state root resolves to."""
@@ -461,7 +433,7 @@ class IngestPipeline:
         since it was taken (a concurrent — possibly other-process — writer
         committed a batch, re-trained, or compacted). Returns True when a
         re-warm happened. The check is one bulk scan per store, cheap
-        enough to run between serving queries; the pointer-commit
+        enough to run between serving queries; the generation
         retention contract guarantees the PREVIOUS snapshot's files
         survive until the flip after next, so queries in flight during
         the writer's flip still complete against the old epoch.
@@ -471,24 +443,7 @@ class IngestPipeline:
         on the state root and can never race the writer's swap — a
         crashed writer's half-published re-train is handled by the
         staged-centroids forward READ in ``_probed_views``, and the flip
-        itself stays the writer's job. Rename-mode polling is now a
-        LOUD config decision (round-12 verdict item 5), not a docstring
-        caveat: ``commit_mode="rename"`` moves live directories during
-        compact/re-train, so a reader polling through another process's
-        swap can capture a plan over a directory that vanishes mid-scan
-        — this method raises :class:`RenameModePollError` under rename
-        commit unless the pipeline was built with
-        ``allow_rename_mode_poll=True`` (single-actor deployments, or
-        readers that quiesce around maintenance; plain batch appends
-        are safe in both modes). Pointer mode is unaffected."""
-        if (self.commit_mode == "rename"
-                and not self.allow_rename_mode_poll):
-            raise RenameModePollError(
-                "maybe_rewarm() polls state that commit_mode='rename' "
-                "maintenance moves out from under readers; use "
-                "commit_mode='pointer' for multi-process serving, or "
-                "opt in with allow_rename_mode_poll=True if this "
-                "deployment quiesces readers around compact/re-train")
+        itself stays the writer's job."""
         if not self._warm:
             return False
         if self.state_token() == self._warm_token:
@@ -622,10 +577,6 @@ class IngestPipeline:
                 f"{self.state_dir}; another writer holds the lease")
         self._writer_epoch = epoch
         self._writer_lease = content
-        # takeover heal (r14): a predecessor SIGKILLed mid-rename-dance
-        # leaves a store with no live directory; the new lease holder
-        # rolls the crashed publish forward before any read or write
-        self._recover_rename_crash()
         return epoch
 
     def release_writer(self) -> None:
@@ -1260,7 +1211,6 @@ class IngestPipeline:
         """
         key = key if key is not None else self._batch_key(batch_id)
         self.check_writer_fence()
-        self._recover_rename_crash()  # heal a predecessor's torn dance
         self.unwarm()  # ingest invalidates any warm serving snapshot
         batch = batch.dropDuplicates(["doc_id"])
         if self.maintain_neardup:
@@ -1431,10 +1381,10 @@ class IngestPipeline:
         per-batch time grew +37% (each batch's dedup anti-join re-lists
         the whole store) while a 50-batch cadence held it flat for
         ~1 s per compact at that state size. Per directory: read,
-        coalesce to
-        ceil(rows / target_rows_per_file) files, write beside, swap
-        atomically-enough for a single-writer pipeline (rename old →
-        .old, new → live, delete .old). Returns {dir_name: n_files}.
+        coalesce to ceil(rows / target_rows_per_file) files, stage them
+        as the store's next generation, and publish with one atomic
+        ``_CURRENT`` pointer flip (``_swap_dir``). Returns
+        {dir_name: n_files}.
 
         A torn batch (killed mid-sequence; detected via missing
         ``_SUCCESS`` markers — every key is checked, so a torn facade
@@ -1451,9 +1401,10 @@ class IngestPipeline:
         against the current centroids and appended, so the ANN member set
         converges back to the full corpus on the ops cadence.
 
-        Invalidates any ``warm()`` snapshot first: the swap deletes the
-        parquet directories the cached DataFrames' lineage points at, so
-        a stale cache would FileNotFound on eviction or executor loss.
+        Invalidates any ``warm()`` snapshot first: the flip's retention
+        sweep later deletes the parquet directories the cached
+        DataFrames' lineage points at, so a stale cache would
+        FileNotFound on eviction or executor loss.
 
         Consistency requirement: writer-side maintenance (this method and
         the re-train) folds whatever the store LISTS, so the state store
@@ -1465,7 +1416,6 @@ class IngestPipeline:
         """
         self.check_writer_fence()
         self.unwarm()
-        self._recover_rename_crash()  # heal a predecessor's torn dance
         # round-13 advice: finish a pending re-train BEFORE taking the
         # flip gate, matching retrain()'s ordering — otherwise a crash
         # roll-forward flip plus compact's own per-store flips land in
@@ -1502,14 +1452,13 @@ class IngestPipeline:
         """Replace a store's committed content with ``df`` (coalesced to
         ``files``), carrying torn-batch subdirectories over verbatim —
         the one swap primitive ``compact()`` and ``refresh_edges()``
-        share. Pointer mode: stage the fold as the next generation,
-        carry the torn subdirectories in BEFORE the pointer flip (after
-        the flip, a replay resolves ``_bdir`` to the NEW generation —
-        its torn directory must already be there; a crash before the
-        flip leaves ``_CURRENT`` on the old generation, where the
-        replay rewrites its subdirectory from scratch, so the moved
-        copies are just re-staged litter the rerun's overwrite clears).
-        Rename mode: the classic write-beside + rename dance.
+        share. Stage the fold as the next generation, carry the torn
+        subdirectories in BEFORE the pointer flip (after the flip, a
+        replay resolves ``_bdir`` to the NEW generation — its torn
+        directory must already be there; a crash before the flip leaves
+        ``_CURRENT`` on the old generation, where the replay rewrites
+        its subdirectory from scratch, so the moved copies are just
+        re-staged litter the rerun's overwrite clears).
 
         ``markers``: batch keys whose COMMIT RECORD must survive the
         fold as empty ``_SUCCESS``-only subdirectories. ``compact()``
@@ -1524,40 +1473,22 @@ class IngestPipeline:
         parquet), and the next full compact folds it away."""
         staged_markers = [k for k in markers if k not in torn]
         phys = self._phys(path)
-        if self.commit_mode == "pointer":
-            tmp = self._stage_dir(path)
-            self.fs.rmtree(tmp)
-            df.coalesce(files).write.mode("overwrite").parquet(tmp)
-            # pre-commit re-check: the torn-carry below MOVES directories
-            # out of the live generation — a usurped writer must not
-            # touch the usurper's live state (the flip itself re-checks
-            # again inside _swap_dir)
-            self.check_writer_fence()
-            for key in torn:
-                src = self.fs.join(phys, key)
-                if self.fs.isdir(src):
-                    self.fs.rename(src, self.fs.join(tmp, key))
-            for key in staged_markers:
-                self.fs.write_text(
-                    self.fs.join(tmp, key, "_SUCCESS"), "")
-            self._swap_dir(path, tmp)
-        else:
-            tmp = path + ".compact"
-            old = path + ".old"
-            self.fs.rmtree(old)  # stale litter would fail rename(path, old)
-            df.coalesce(files).write.mode("overwrite").parquet(tmp)
-            for key in staged_markers:
-                self.fs.write_text(
-                    self.fs.join(tmp, key, "_SUCCESS"), "")
-            self.check_writer_fence()  # pre-commit re-check: the rename
-            self.fs.rename(path, old)  # pair below IS the publish
-            self.fs.rename(tmp, path)
-            self._last_flip_ts = time.monotonic()  # governor anchor
-            for key in torn:
-                src = self.fs.join(old, key)
-                if self.fs.isdir(src):
-                    self.fs.rename(src, self.fs.join(path, key))
-            self.fs.rmtree(old)
+        tmp = self._stage_dir(path)
+        self.fs.rmtree(tmp)
+        df.coalesce(files).write.mode("overwrite").parquet(tmp)
+        # pre-commit re-check: the torn-carry below MOVES directories
+        # out of the live generation — a usurped writer must not
+        # touch the usurper's live state (the flip itself re-checks
+        # again inside _swap_dir)
+        self.check_writer_fence()
+        for key in torn:
+            src = self.fs.join(phys, key)
+            if self.fs.isdir(src):
+                self.fs.rename(src, self.fs.join(tmp, key))
+        for key in staged_markers:
+            self.fs.write_text(
+                self.fs.join(tmp, key, "_SUCCESS"), "")
+        self._swap_dir(path, tmp)
 
     def _heal_index_holes(self, torn: set[str]) -> dict[str, int]:
         """Assign committed-but-unindexed corpus rows (left-anti of corpus
@@ -1911,16 +1842,17 @@ class IngestPipeline:
 
         Runs inside the micro-batch (foreachBatch is the single writer, so
         no concurrent state mutation) with the same exactly-once shape as
-        the bootstrap: everything is built OFF-LINE in ``.next`` siblings
-        (new full assignment of the corpus-excluding-this-batch to the
-        root, this batch's assignment to its ``<key>`` subdirectory, then
-        the new centroids), and only then swapped live with directory
-        renames — a crash anywhere during the builds leaves the old index
-        fully intact, and the stream's replay of this batch re-runs the
-        whole re-train deterministically (hash-ordered seeds, overwrite
-        writes). The one non-atomic seam is between the two renames;
-        ``_finish_pending_retrain`` rolls that forward (the committed
-        ``centroids.next`` is the redo record), so every writer entry
+        the bootstrap: everything is built OFF-LINE in staged next
+        generations (new full assignment of the corpus-excluding-this-
+        batch to the root, this batch's assignment to its ``<key>``
+        subdirectory, then the new centroids), and only then published
+        with two pointer flips — a crash anywhere during the builds
+        leaves the old index fully intact, and the stream's replay of
+        this batch re-runs the whole re-train deterministically
+        (hash-ordered seeds, overwrite writes). The one non-atomic seam
+        is between the two flips; ``_finish_pending_retrain`` rolls that
+        forward (the committed staged centroids generation is the redo
+        record), so every writer entry
         point converges the pair. Per re-train cost is one full corpus
         assignment (n × ncent broadcast scoring) — with the 2× ratio
         trigger that totals O(log n) re-trains over the corpus's life.
@@ -1987,7 +1919,6 @@ class IngestPipeline:
             raise ValueError("retrain() requires maintain_ivf=True")
         self.check_writer_fence()
         self.unwarm()
-        self._recover_rename_crash()  # heal a predecessor's torn dance
         self._finish_pending_retrain()
         self._flip_gate()
         torn = self._torn_batch_keys()
@@ -2014,119 +1945,20 @@ class IngestPipeline:
             self.refresh_edges()
         return {"n_centroids": int(cents.count()), "assigned": int(n)}
 
-    def _recover_rename_crash(self) -> dict[str, str]:
-        """Roll a rename-mode publish crash forward (r14, found by the
-        cross-process takeover drill's ``rename:2`` kill point): a
-        writer SIGKILLed between ``rename(live, .old)`` and
-        ``rename(staged, live)`` leaves a store with NO live directory
-        — its committed content sits in ``.old`` and the fully-staged
-        replacement in ``.compact``/``.next``. A successor that reads
-        the root sees an EMPTY store (silent data loss for every query
-        until heal) and its own compact dies on the stale ``.old``
-        (``os.rename`` onto a non-empty directory). Invariants this
-        leans on, both by construction: the staged sibling is COMPLETE
-        before the first rename ever runs (staging writes finish before
-        ``_swap_dir``/``_publish_folded_store`` start the dance), and a
-        missing live directory can only mean the crash landed between
-        the two renames.
-
-        Per store with live missing, the action matches what the
-        protocol's own recovery would produce (pinned by the exhaustive
-        crash sweep's exact-equality bar, which rejected a blanket
-        roll-forward):
-
-        - ``.compact`` staged (a compact fold — compaction is NOT
-          replayed, so rolling back would lose the fold): finish the
-          publish (``rename(.compact, live)``) and drop ``.old``.
-        - ``ivf.next`` staged mid-FIRST-dance (``.old`` present): roll
-          BACK — restore ``.old`` as live and leave ``.next`` staged.
-          ``_finish_pending_retrain``'s contract is that a crash before
-          the first swap completes is recovered by the stream replay
-          RE-STAGING ``.next`` over the intact live pair; completing
-          the crashed swap here would publish a pre-replay index the
-          replay then double-writes its batch into (the sweep's
-          divergence at crash point 4).
-        - ``centroids.next`` staged with live missing: roll FORWARD —
-          the centroid dance only ever starts after the index swap
-          committed, so finishing it restores the matched pair (the
-          same completion ``_finish_pending_retrain`` performs).
-
-        Purely defensive last resort: live and staged both missing with
-        ``.old`` present (a state the protocol never produces) restores
-        ``.old`` rather than serving empty.
-
-        A cleared ``.old`` is dropped WITHOUT carrying its per-batch
-        subdirectories — deliberately, pinned by the sweep: the staged
-        fold markers don't cover every committed key (the auto
-        re-train markers only the trailing key per namespace), so a
-        membership-based carry re-introduces superseded assignment
-        rows (double-indexed docs — the sweep's crash-point-5
-        divergence). What the crashed publish would have carried are
-        its TORN keys, and losing those is the crash semantics the
-        replay machine already handles: a torn stream batch rewrites
-        its own directories from scratch on replay, and a torn facade
-        submit was never acknowledged.
-
-        Called from every WRITER entry point under rename commit
-        (``acquire_writer``, ``process_batch``/``bulk_load``,
-        ``compact``, ``retrain``) — six ``isdir`` probes when clean, a
-        no-op under pointer commit (generation flips never move the
-        live directory). Readers stay read-only: a cold reader inside
-        the crash window is the documented rename-mode hazard
-        (``RenameModePollError``); the takeover WRITER heals it.
-        Returns ``{store: action}`` for observability."""
-        if self.commit_mode != "rename":
-            return {}
-        actions: dict[str, str] = {}
-        for path in (self.corpus_dir, self.edges_dir, self.centroids_dir,
-                     self.index_dir, self.sig_dir, self.flags_dir):
-            name = path.rstrip("/").rsplit("/", 1)[-1]
-            old = path + ".old"
-            live = self.fs.isdir(path)
-            if not live and self.fs.isdir(path + ".compact"):
-                self.fs.rename(path + ".compact", path)
-                actions[name] = "rolled_forward_compact"
-                live = True
-            elif not live and self.fs.isdir(path + ".next"):
-                if path == self.index_dir and self.fs.isdir(old):
-                    # first dance of the re-train pair: restore the
-                    # intact pre-dance pair; the replay re-stages .next
-                    self.fs.rename(old, path)
-                    actions[name] = "rolled_back_next"
-                    live = True
-                else:
-                    self.fs.rename(path + ".next", path)
-                    actions[name] = "rolled_forward_next"
-                    live = True
-            if not live:
-                if self.fs.isdir(old):
-                    self.fs.rename(old, path)
-                    actions[name] = "restored_old"
-                continue
-            if self.fs.isdir(old):
-                self.fs.rmtree(old)
-                actions.setdefault(name, "cleared_old")
-        return actions
-
     def _stage_dir(self, root: str) -> str:
-        """Where a rebuilt store is staged before its swap: a ``.next``
-        sibling under rename commit, the next (hidden) generation
-        subdirectory under pointer commit. Both are deterministic — a
-        replayed re-train re-stages the SAME location and its overwrite
-        writes clear any half-built residue (the pointer target stays
-        fixed across attempts because ``_CURRENT`` only advances at the
-        flip)."""
-        if self.commit_mode == "pointer":
-            return self.fs.join(root, f".gen-{self._gen_num(root) + 1}")
-        return root + ".next"
+        """Where a rebuilt store is staged before its flip: the next
+        (hidden) generation subdirectory. Deterministic — a replayed
+        re-train re-stages the SAME location and its overwrite writes
+        clear any half-built residue (the target stays fixed across
+        attempts because ``_CURRENT`` only advances at the flip)."""
+        return self.fs.join(root, f".gen-{self._gen_num(root) + 1}")
 
     def _staged_pending(self, root: str) -> str | None:
         """The staged-but-not-yet-live build of ``root``, if one exists —
-        the redo-record probe ``_finish_pending_retrain`` keys off. Under
-        pointer commit a completed swap leaves the generation directory
-        in place but advances ``_CURRENT`` past it, so 'pending' is
-        exactly 'the next-generation directory exists'; under rename the
-        staged ``.next`` sibling disappears into the live name at swap."""
+        the redo-record probe ``_finish_pending_retrain`` keys off. A
+        completed flip leaves the generation directory in place but
+        advances ``_CURRENT`` past it, so 'pending' is exactly 'the
+        next-generation directory exists'."""
         staged = self._stage_dir(root)
         return staged if self.fs.isdir(staged) else None
 
@@ -2147,89 +1979,65 @@ class IngestPipeline:
             time.sleep(wait)
 
     def _swap_dir(self, live: str, nxt: str) -> None:
-        """Publish staged ``nxt`` as the live content of root ``live``.
+        """Publish staged generation ``nxt`` as the live content of root
+        ``live``.
 
-        rename mode (POSIX/HDFS): the classic dance — live → ``.old``,
-        staged → live, drop ``.old``. The commit point is the second
-        rename, atomic on these filesystems.
-
-        pointer mode (object stores): the commit point is one atomic
-        small-object write of ``_CURRENT`` naming the staged generation —
-        no directory ever moves, so the protocol never leans on the
-        store's non-atomic O(data) rename. Superseded generations are
+        The commit point is one atomic small-file write of ``_CURRENT``
+        naming the staged generation — no directory ever moves, so the
+        protocol never leans on a directory rename (an O(data),
+        non-atomic copy on object stores). Superseded generations are
         swept after the flip, RETAINING the newest ``retain_generations``
         of them (default 1): an in-flight reader planned against the
         just-superseded generation finishes its scan on files that still
         exist, and the retained generation is removed at a LATER flip.
         A crash mid-cleanup leaves unreferenced litter that the next
-        swap's sweep removes, never readable state.
+        flip's sweep removes, never readable state.
 
         Fence-checked immediately before the commit point: a usurped
         writer's staged build must never flip live."""
         self.check_writer_fence()
-        if self.commit_mode == "pointer":
-            old_gen = self._gen_num(live)
-            gen = nxt.rstrip("/").rsplit("/", 1)[-1]
-            m = re.fullmatch(r"\.gen-(\d+)", gen)
-            if m and old_gen >= int(m.group(1)):
-                # already published (e.g. another process's
-                # _finish_pending_retrain rolled this flip forward first):
-                # re-flipping is content-neutral, but re-SWEEPING from the
-                # advanced generation would delete the retained previous
-                # generation early, under any in-flight reader
-                return
-            self.fs.write_text(self.fs.join(live, "_CURRENT"), gen)
-            self._last_flip_ts = time.monotonic()  # governor anchor
-            # generations >= keep_floor survive this sweep (the root-level
-            # pre-pointer state counts as generation 0)
-            keep_floor = max(0, old_gen - self.retain_generations + 1)
-            for entry in self.fs.listdir(live):
-                p = self.fs.join(live, entry)
-                if entry in (gen, "_CURRENT", "_CURRENT.tmp"):
-                    continue
-                m = re.fullmatch(r"\.gen-(\d+)", entry)
-                if m:
-                    if int(m.group(1)) < keep_floor:
-                        self.fs.rmtree(p)
-                elif not entry.startswith((".", "_")) and keep_floor > 0:
-                    # root-level gen-0 state, past its retention window
-                    self.fs.rmtree(p)
+        old_gen = self._gen_num(live)
+        gen = nxt.rstrip("/").rsplit("/", 1)[-1]
+        m = re.fullmatch(r"\.gen-(\d+)", gen)
+        if m and old_gen >= int(m.group(1)):
+            # already published (e.g. another process's
+            # _finish_pending_retrain rolled this flip forward first):
+            # re-flipping is content-neutral, but re-SWEEPING from the
+            # advanced generation would delete the retained previous
+            # generation early, under any in-flight reader
             return
-        old = live + ".old"
-        self.fs.rmtree(old)
-        if self.fs.isdir(live):
-            self.fs.rename(live, old)
-        self.fs.rename(nxt, live)
+        self.fs.write_text(self.fs.join(live, "_CURRENT"), gen)
         self._last_flip_ts = time.monotonic()  # governor anchor
-        self.fs.rmtree(old)
+        # generations >= keep_floor survive this sweep (the root-level
+        # pre-pointer state counts as generation 0)
+        keep_floor = max(0, old_gen - self.retain_generations + 1)
+        for entry in self.fs.listdir(live):
+            p = self.fs.join(live, entry)
+            if entry in (gen, "_CURRENT", "_CURRENT.tmp"):
+                continue
+            m = re.fullmatch(r"\.gen-(\d+)", entry)
+            if m:
+                if int(m.group(1)) < keep_floor:
+                    self.fs.rmtree(p)
+            elif not entry.startswith((".", "_")) and keep_floor > 0:
+                # root-level gen-0 state, past its retention window
+                self.fs.rmtree(p)
 
     def _finish_pending_retrain(self) -> None:
-        """Roll a re-train's swap seam forward.
+        """Roll a re-train's flip seam forward.
 
-        State machine: while ``ivf.next`` exists the re-train never
-        reached its first swap — the live pair is intact and a stream
-        replay will rebuild ``.next`` from scratch, so do nothing. If
-        ``centroids.next`` exists committed WITHOUT ``ivf.next``, the
-        index swap completed but the centroid swap did not (the crash
-        landed between the two renames): finish it, restoring a matched
-        centroid/assignment pair. Called from WRITER entry points only
-        (``_update_index``, ``compact``) — reader paths (``warm``,
-        ``maybe_rewarm``, cold queries) take the equivalent staged-
-        centroids forward READ in ``_probed_views`` instead, so readers
-        never mutate state and never race the writer's own swap
-        (round-11 advice: a rename-mode reader's roll-forward racing the
-        writer's in-flight second swap could consume ``centroids.next``
-        under the writer and strand the live store in ``.old``).
-
-        The same machine holds under pointer commit with 'staged build
-        exists' in place of '``.next`` exists' (``_staged_pending``): a
-        completed pointer flip advances ``_CURRENT`` past the staged
-        generation, so the probe goes quiet exactly when the rename-mode
-        ``.next`` would have disappeared. One pointer-mode nuance: a
-        crashed compact() can also leave a committed staged centroids
-        generation — flipping it here is content-neutral (a compaction
-        stages the same rows, re-folded), so the roll-forward stays
-        correct for both writers.
+        State machine: while a staged index generation exists the
+        re-train never reached its first flip — the live pair is intact
+        and a stream replay re-stages it from scratch, so do nothing. If
+        a committed staged centroids generation exists WITHOUT a staged
+        index generation, the index flip completed but the centroid flip
+        did not (the crash landed between the two flips): finish it,
+        restoring a matched centroid/assignment pair. Called from WRITER
+        entry points only (``_update_index``, ``compact``, ``retrain``)
+        — reader paths (``warm``, ``maybe_rewarm``, cold queries) take
+        the equivalent staged-centroids forward READ in
+        ``_probed_views`` instead, so readers never mutate state and
+        never race the writer's own flip.
         """
         if self._staged_pending(self.index_dir):
             return

@@ -1,8 +1,9 @@
 """Filesystem adapter for the ingest state machine.
 
 The exactly-once commit protocol in ``ingest.py`` (per-batch
-subdirectories + ``_SUCCESS`` markers, rename-swap for compaction and IVF
-re-train, torn-batch detection) needs exactly seven primitives: join,
+subdirectories + ``_SUCCESS`` markers, a ``_CURRENT`` generation-pointer
+flip for compaction and IVF re-train, torn-batch detection) needs
+exactly seven primitives: join,
 isdir, isfile, listdir, rename, rmtree, and small-file read/write. On a
 laptop those are ``os``/``shutil``; on the cluster where a 100 TB corpus
 actually lives the state sits on HDFS or an object store, where none of
@@ -20,13 +21,15 @@ Two backends:
   Spark conf already carries. No new dependency: the classes ship inside
   every Spark distribution.
 
-Atomicity is the property the commit protocol actually consumes, and it
-differs by store: POSIX and HDFS renames are atomic; object-store
-"rename" is a copy-and-delete with no atomicity at all. Each backend
-reports :attr:`StateFS.atomic_rename`, and the pipeline picks its swap
-strategy from it (directory rename-swap where renames are atomic, a
-``_CURRENT`` generation-pointer commit where they are not — see
-``IngestPipeline._swap_dir``).
+The pipeline commits every rebuilt store the same way on every backend:
+one atomic small-file write of a ``_CURRENT`` pointer naming the new
+generation (``IngestPipeline._swap_dir``); no directory rename is ever a
+commit point. Rename atomicity still differs by store — POSIX and HDFS
+renames are atomic, object-store "rename" is a copy-and-delete with no
+atomicity at all — and each backend reports it as
+:attr:`StateFS.atomic_rename`. That flag only chooses how
+``write_text`` overwrites a file: temp file + atomic rename where renames
+are atomic, a direct single-object PUT where they are not.
 """
 
 from __future__ import annotations
@@ -36,7 +39,7 @@ import shutil
 
 
 # Hadoop schemes whose rename is an O(data) copy with no atomicity —
-# the pipeline must not build a commit point on a directory rename there.
+# ``write_text`` must not build its overwrite on a rename there.
 _NON_ATOMIC_RENAME_SCHEMES = {
     "s3", "s3a", "s3n", "gs", "wasb", "wasbs", "abfs", "abfss", "oss",
     "cos", "swift",
@@ -148,8 +151,7 @@ class HadoopStateFS:
     object is resolved from the state root's own URI, so an ``s3a://``
     corpus and an ``hdfs://`` checkpoint coexist. ``atomic_rename``
     reflects the resolved scheme (HDFS/file: true; object stores: false),
-    which is what flips the pipeline's swap strategy to the
-    generation-pointer commit.
+    which picks how ``write_text`` overwrites (see the module docstring).
     """
 
     def __init__(self, spark, root: str):

@@ -80,7 +80,7 @@ def writer_main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     tables = load_tables(spark, sf_dir)
     n_table = tables["documents"].count()
-    pipe = IngestPipeline(spark, state, k=6, commit_mode="pointer",
+    pipe = IngestPipeline(spark, state, k=6,
                           maintain_ivf=True, n_centroids=None,
                           ivf_bootstrap=64, retain_generations=4,
                           min_flip_interval_s=10.0)
@@ -197,7 +197,7 @@ def main() -> int:  # noqa: PLR0915 - one soak, inherently sequential
     def reader(cid: int):
         sc = spark.sparkContext
         sc.setLocalProperty("spark.scheduler.pool", f"chaos-{cid}")
-        pipe = IngestPipeline(spark, state, k=6, commit_mode="pointer",
+        pipe = IngestPipeline(spark, state, k=6,
                               maintain_ivf=True, n_centroids=None,
                               ivf_bootstrap=64,
                               retain_generations=args.retain)
@@ -331,7 +331,7 @@ def main() -> int:  # noqa: PLR0915 - one soak, inherently sequential
     fenced_line = any(p and p[0] == "FENCED" for p in lines)
 
     # ---- final sweep: verification writer heals and asserts ----
-    ver = IngestPipeline(spark, state, k=6, commit_mode="pointer",
+    ver = IngestPipeline(spark, state, k=6,
                          maintain_ivf=True, n_centroids=None,
                          ivf_bootstrap=64, retain_generations=args.retain)
     ver.acquire_writer(owner="verifier")

@@ -61,8 +61,7 @@ def _mk_pipe(spark, state):
     from multi_model_vectorsearch_spark.streaming.ingest import IngestPipeline
 
     return IngestPipeline(spark, state, k=10, maintain_ivf=True,
-                          n_centroids=None, max_collect=16384,
-                          commit_mode="pointer")
+                          n_centroids=None, max_collect=16384)
 
 
 def _session(name, cpus):

@@ -143,7 +143,7 @@ def main() -> int:
         # gating the sequential twin would just slow the valid-set build
         return IngestPipeline(spark, os.path.join(work, tag), k=10,
                               maintain_ivf=True, n_centroids=None,
-                              ivf_bootstrap=64, commit_mode="pointer",
+                              ivf_bootstrap=64,
                               retain_generations=args.retain,
                               min_flip_interval_s=(
                                   args.min_flip_interval if governed

@@ -24,20 +24,10 @@ Kill points per trial (injected in the child, all ending in
                     between two flips — THE non-atomic window);
 - ``write_text:<n>`` — immediately before the n-th small-object write
                     after lease acquisition (``_CURRENT`` flips, marker
-                    writes — mid-publish crash);
-- ``rename:<n>``  — immediately before the n-th ``fs.rename`` after
-                    lease acquisition (r13 verdict item 5: under
-                    ``--commit-mode rename`` the commit point IS a
-                    directory rename, and the window between
-                    ``rename(live, .old)`` and ``rename(staged, live)``
-                    — no live directory at all — only exists in this
-                    mode; every RENAME is noted to the progress file so
-                    the trial records exactly which move died).
+                    writes — mid-publish crash).
 
-``--commit-mode`` (default pointer) selects the protocol for writer A
-AND the healing writer B; the rename-mode arm covers the two-store flip
-sequencing with real directory moves that previously had only
-in-process crash-sweep coverage (test_statefs.py).
+Both writers publish through the generation-pointer commit, the one
+commit protocol the pipeline has on every backend.
 
 Per-trial invariants after B's takeover + heal + continuation:
 every planned doc exactly once (corpus count == distinct == planned),
@@ -70,7 +60,6 @@ def child_main() -> int:
     spec. Progress (START/DONE per key) streams to the progress file so
     the parent knows exactly what was in flight at death."""
     state, sf_dir, progress_path, kill_spec = sys.argv[2:6]
-    commit_mode = sys.argv[6] if len(sys.argv) > 6 else "pointer"
 
     prog = open(progress_path, "a", buffering=1)
 
@@ -93,27 +82,10 @@ def child_main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     docs = load_tables(spark, sf_dir)["documents"].select(
         "doc_id", "text", F.lit("text").alias("modality"))
-    pipe = IngestPipeline(spark, state, k=4, commit_mode=commit_mode,
-                          maintain_ivf=True, n_centroids=None,
-                          ivf_bootstrap=16)
+    pipe = IngestPipeline(spark, state, k=4, maintain_ivf=True,
+                          n_centroids=None, ivf_bootstrap=16)
     pipe.acquire_writer(owner="writer-a")
     note(f"ACQUIRED {os.getpid()}")
-
-    # every protocol-level directory move is noted (with its ordinal) so
-    # a rename:<n> trial's JSON records exactly which move died
-    real_rename = pipe.fs.rename
-    rename_calls = {"n": 0, "kill_at": 0}
-
-    def noting_rename(src, dst):
-        rename_calls["n"] += 1
-        note(f"RENAME {rename_calls['n']} "
-             f"{os.path.basename(src.rstrip('/'))} -> "
-             f"{os.path.basename(dst.rstrip('/'))}")
-        if rename_calls["n"] == rename_calls["kill_at"]:
-            die_now()
-        return real_rename(src, dst)
-
-    pipe.fs.rename = noting_rename
 
     mode, _, arg = kill_spec.partition(":")
     n_arg = int(arg)
@@ -139,8 +111,6 @@ def child_main() -> int:
             return real_wt(path, text)
 
         pipe.fs.write_text = killing_wt
-    elif mode == "rename":
-        rename_calls["kill_at"] = n_arg
     elif mode != "time":
         raise ValueError(f"unknown kill spec {kill_spec!r}")
 
@@ -164,8 +134,7 @@ def child_main() -> int:
     return 0
 
 
-def run_trial(spark, docs, sf_dir: str, kill_spec: str,
-              commit_mode: str = "pointer") -> dict:
+def run_trial(spark, docs, sf_dir: str, kill_spec: str) -> dict:
     from pyspark.sql import functions as F
 
     from multi_model_vectorsearch_spark.streaming.ingest import IngestPipeline
@@ -177,7 +146,7 @@ def run_trial(spark, docs, sf_dir: str, kill_spec: str,
 
     child = subprocess.Popen(
         [sys.executable, os.path.abspath(__file__), "--child",
-         state, sf_dir, progress, kill_spec, commit_mode],
+         state, sf_dir, progress, kill_spec],
         stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
         start_new_session=True)  # own process group: killpg-able
     try:
@@ -193,12 +162,8 @@ def run_trial(spark, docs, sf_dir: str, kill_spec: str,
     clean_exit = any(p and p[0] == "CLEAN_EXIT" for p in lines)
     killed = child.returncode == -signal.SIGKILL
 
-    renames = [ln for ln in open(progress).read().splitlines()
-               if ln.startswith("RENAME")]
-    trial = {"kill_spec": kill_spec, "commit_mode": commit_mode,
+    trial = {"kill_spec": kill_spec,
              "killed": killed, "clean_exit": clean_exit,
-             "died_at_rename": (renames[-1] if renames
-                                and kill_spec.startswith("rename") else None),
              "batches_started": len(started), "batches_done": len(done)}
     if clean_exit or not killed or not started:
         trial["ok"] = False
@@ -206,9 +171,8 @@ def run_trial(spark, docs, sf_dir: str, kill_spec: str,
         return trial
 
     # --- writer B: take over, heal, continue -----------------------------
-    b = IngestPipeline(spark, state, k=4, commit_mode=commit_mode,
-                       maintain_ivf=True, n_centroids=None,
-                       ivf_bootstrap=16)
+    b = IngestPipeline(spark, state, k=4, maintain_ivf=True,
+                       n_centroids=None, ivf_bootstrap=16)
     b.acquire_writer(owner="writer-b")
     torn_at_takeover = sorted(b.torn_batch_keys())
 
@@ -267,15 +231,13 @@ def main() -> int:
 
     ap = argparse.ArgumentParser()
     ap.add_argument("specs", nargs="*", help="kill specs (default: the "
-                    "measured per-mode battery)")
-    ap.add_argument("--commit-mode", default="pointer",
-                    choices=["pointer", "rename"])
+                    "measured battery)")
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     if args.specs:
         specs = args.specs
-    elif args.commit_mode == "pointer":
+    else:
         specs = [
             # measured landings with this plan (6x40-doc batches, compact
             # after b1/b3/b5, auto-IVF re-train at b3): swaps 1-3 = first
@@ -289,29 +251,6 @@ def main() -> int:
             "swap:5",         # re-train: THE seam between index and centroid
                               # flips (roll-forward territory)
             "write_text:3",   # mid-publish small-object write
-        ]
-    else:
-        specs = [
-            # rename mode (r13 verdict item 5): the commit point IS a
-            # directory move, so the battery kills BETWEEN the moves of
-            # the two-rename dance — the window where a store has no
-            # live directory at all. Landings MEASURED with this plan
-            # (RENAME notes in the progress log of a full clean run):
-            # 1-6 = first compact's corpus/edges/ivf dances, 7-10 = the
-            # auto-re-train's paired index+centroid dances at b3,
-            # 11-16 = second compact, 17-22 = third.
-            "time:2500",      # mid-process_batch, randomized landing
-            "time:6500",      # a later randomized landing
-            "rename:1",       # compact: staged fold built, before
-                              # corpus -> .old
-            "rename:2",       # compact: NO live corpus dir exists
-            "rename:4",       # compact: NO live edge dir exists
-            "rename:8",       # re-train: NO live ivf dir exists
-            "rename:9",       # re-train: THE seam between the index and
-                              # centroid dances (roll-forward territory)
-            "rename:10",      # re-train: NO live centroids dir exists
-            "rename:12",      # second compact: no live corpus, with
-                              # torn-carry state from the richer store
         ]
 
     from pyspark.sql import functions as F  # noqa: F401
@@ -327,15 +266,13 @@ def main() -> int:
     trials = []
     for spec in specs:
         t0 = time.monotonic()
-        t = run_trial(spark, docs, sf_dir, spec,
-                      commit_mode=args.commit_mode)
+        t = run_trial(spark, docs, sf_dir, spec)
         t["secs"] = round(time.monotonic() - t0, 1)
         trials.append(t)
         print(json.dumps(t), flush=True)
 
     ok = all(t["ok"] for t in trials)
     print(json.dumps({"metric": "writer_takeover",
-                      "commit_mode": args.commit_mode,
                       "trials": len(trials),
                       "ok_trials": sum(t["ok"] for t in trials),
                       "ok": ok}), flush=True)

@@ -48,8 +48,8 @@ def test_warm_index_policy_partial_pin(spark, tables, tmp_path):
     docs = tables["documents"].limit(120).select(
         "doc_id", "text", F.lit("text").alias("modality"))
     pipe = IngestPipeline(spark, str(tmp_path / "st"), k=5,
-                          commit_mode="pointer", maintain_ivf=True,
-                          n_centroids=None, ivf_bootstrap=16)
+                          maintain_ivf=True, n_centroids=None,
+                          ivf_bootstrap=16)
     pipe.bulk_load(docs)
     q = docs.first().text
 
@@ -74,8 +74,8 @@ def test_warm_index_policy_partial_pin(spark, tables, tmp_path):
     # root, separate pipeline object — ingest on pipe itself unwarms),
     # the reader re-warms, the partial-pin policy survives
     writer = IngestPipeline(spark, str(tmp_path / "st"), k=5,
-                            commit_mode="pointer", maintain_ivf=True,
-                            n_centroids=None, ivf_bootstrap=16)
+                            maintain_ivf=True, n_centroids=None,
+                            ivf_bootstrap=16)
     fresh = tables["documents"].filter(
         (F.col("doc_id") >= 120) & (F.col("doc_id") < 180)).select(
         "doc_id", "text", F.lit("text").alias("modality"))

@@ -4,10 +4,9 @@ The ingest state machine's seven FS primitives route through one adapter
 (streaming/statefs.py) so the exactly-once protocol runs unchanged on
 local disk, HDFS, or an object store. These tests pin (a) op-level parity
 between the POSIX and Hadoop backends over the same tree, (b) the
-pointer-commit swap (the object-store mode, where no directory rename is
-ever trusted) producing byte-identical pipeline state to the rename swap,
-and (c) the pointer-mode re-train swap seam rolling forward exactly like
-the rename-mode seam the r9 suite already pins.
+generation-pointer commit (where no directory rename is ever trusted)
+publishing the same logical state it folded, on its retention schedule,
+and (c) the re-train flip seam rolling forward after a crash.
 """
 from __future__ import annotations
 
@@ -111,26 +110,25 @@ def test_scan_tree_parity_and_contract(spark, tmp_path):
         assert fs.scan_tree(fs.join(root, "nope")) == []
 
 
-def test_statefs_routing_and_commit_mode(spark, tmp_path):
+def test_statefs_routing_and_pointer_commit(spark, tmp_path, tables):
     """Bare paths get the POSIX backend; URI schemes go through Hadoop.
-    commit_mode='auto' resolves from the backend's rename guarantee."""
+    A default POSIX pipeline publishes its compact by generation
+    pointer, like every other backend."""
     assert isinstance(statefs_for(spark, str(tmp_path)), LocalStateFS)
     assert isinstance(statefs_for(spark, "file:///tmp/x"), HadoopStateFS)
 
-    class FakeObjectStore(LocalStateFS):
-        atomic_rename = False
-
-    p1 = IngestPipeline(spark, str(tmp_path / "a"))
-    assert p1.commit_mode == "rename"
-    p2 = IngestPipeline(spark, str(tmp_path / "b"), fs=FakeObjectStore())
-    assert p2.commit_mode == "pointer"
-    with pytest.raises(ValueError, match="commit_mode"):
-        IngestPipeline(spark, str(tmp_path / "c"), commit_mode="bogus")
+    pipe = IngestPipeline(spark, str(tmp_path / "a"), k=5)
+    assert isinstance(pipe.fs, LocalStateFS)
+    pipe.process_batch(_moddocs(tables, 20), 0)
+    pipe.compact()
+    assert pipe.fs.read_text(
+        pipe.fs.join(pipe.corpus_dir, "_CURRENT")) == ".gen-1"
 
 
-def test_pointer_compact_matches_rename_compact(spark, tables, tmp_path):
-    """The generation-pointer compact publishes byte-identical state to
-    the rename compact, flips atomically (a _CURRENT file names the live
+def test_pointer_compact_matches_precompact_snapshot(spark, tables,
+                                                     tmp_path):
+    """The generation-pointer compact publishes exactly the logical state
+    it folded, flips atomically (a _CURRENT file names the live
     generation), and sweeps superseded generations on the RETENTION
     schedule: the just-superseded generation survives one more flip (so
     in-flight concurrent readers finish their scans), older ones go."""
@@ -138,19 +136,16 @@ def test_pointer_compact_matches_rename_compact(spark, tables, tmp_path):
     b0 = docs.filter(F.col("doc_id") < 20)
     b1 = docs.filter(F.col("doc_id") >= 20)
 
-    ref = IngestPipeline(spark, str(tmp_path / "ref"), k=5)
-    ptr = IngestPipeline(spark, str(tmp_path / "ptr"), k=5,
-                         commit_mode="pointer")
-    for pipe in (ref, ptr):
-        pipe.process_batch(b0, 0)
-        pipe.process_batch(b1, 1)
-        assert pipe.compact().get("corpus") == 1
-
     def snap(pipe):
         return (sorted(map(tuple, pipe.corpus().collect())),
                 sorted(map(tuple, pipe.edges().collect())))
 
-    assert snap(ptr) == snap(ref)
+    ptr = IngestPipeline(spark, str(tmp_path / "ptr"), k=5)
+    ptr.process_batch(b0, 0)
+    ptr.process_batch(b1, 1)
+    before = snap(ptr)
+    assert ptr.compact().get("corpus") == 1
+    assert snap(ptr) == before
     cur = ptr.fs.read_text(ptr.fs.join(ptr.corpus_dir, "_CURRENT"))
     assert cur == ".gen-1"
     # retention (default 1): the superseded root-level gen-0 state is
@@ -175,7 +170,7 @@ def test_pointer_compact_matches_rename_compact(spark, tables, tmp_path):
 
     # retain_generations=0 restores the immediate sweep (single-actor)
     imm = IngestPipeline(spark, str(tmp_path / "imm"), k=5,
-                         commit_mode="pointer", retain_generations=0)
+                         retain_generations=0)
     imm.process_batch(b0, 0)
     imm.compact()
     assert [e for e in imm.fs.listdir(imm.corpus_dir)
@@ -200,8 +195,7 @@ def test_pointer_torn_batch_survives_compact_and_replays(
     ref.process_batch(b0, 0)
     ref.process_batch(b1, 1)
 
-    ptr = IngestPipeline(spark, str(tmp_path / "ptr"), k=5,
-                         commit_mode="pointer")
+    ptr = IngestPipeline(spark, str(tmp_path / "ptr"), k=5)
     ptr.process_batch(b0, 0)
     orig = ptr.knn_against_corpus
 
@@ -229,15 +223,15 @@ def test_pointer_torn_batch_survives_compact_and_replays(
 
 def test_pointer_retrain_seam_rolls_forward(spark, tables, tmp_path):
     """The re-train's one non-atomic seam — between the index flip and
-    the centroid flip — under pointer commit: a crash there leaves the
-    index pointer advanced with the committed next-generation centroids
-    still staged, and any writer entry point must finish the flip,
-    restoring a matched centroid/assignment pair (the rename-mode twin
-    of this pin is test_retrain_swap_seam_rolls_forward)."""
+    the centroid flip: a crash there leaves the index pointer advanced
+    with the committed next-generation centroids still staged, and any
+    writer entry point must finish the flip, restoring a matched
+    centroid/assignment pair (test_retrain_swap_seam_rolls_forward pins
+    the same seam with the crash state built by hand)."""
     docs = _moddocs(tables, 360)
     pipe = IngestPipeline(spark, str(tmp_path / "st"), k=6,
                           maintain_ivf=True, n_centroids=None,
-                          ivf_bootstrap=16, commit_mode="pointer")
+                          ivf_bootstrap=16)
     pipe.process_batch(docs.filter(F.col("doc_id") < 20), 0)
     c0 = pipe.centroids().count()
     assert c0 > 1
@@ -263,7 +257,7 @@ def test_pointer_retrain_seam_rolls_forward(spark, tables, tmp_path):
     # a fresh pipeline object (the restarted process) rolls it forward
     pipe2 = IngestPipeline(spark, str(tmp_path / "st"), k=6,
                            maintain_ivf=True, n_centroids=None,
-                           ivf_bootstrap=16, commit_mode="pointer")
+                           ivf_bootstrap=16)
     pipe2.compact()  # any writer entry point
     assert pipe2._gen_num(pipe2.centroids_dir) >= 1
     c1 = pipe2.centroids().count()
@@ -437,9 +431,7 @@ class _CrashFS(LocalStateFS):
         super().write_text(path, content)
 
 
-@pytest.mark.parametrize("commit_mode", ["rename", "pointer"])
-def test_exhaustive_crash_sweep_over_retrain_batch(spark, tables, tmp_path,
-                                                   commit_mode):
+def test_exhaustive_crash_sweep_over_retrain_batch(spark, tables, tmp_path):
     """Exhaustive crash-point sweep of the exactly-once machine: a
     re-train micro-batch performs every class of state-FS mutation the
     protocol has (staging cleanup, the two swaps, post-flip sweeps), and
@@ -447,7 +439,7 @@ def test_exhaustive_crash_sweep_over_retrain_batch(spark, tables, tmp_path,
     mutating-op index k, crash there, then recover the real way — a
     fresh pipeline replays the batch — and require the final LOGICAL
     state (corpus, edges, index, centroids) to equal the uninterrupted
-    run's, in both commit modes. This is the property all the individual
+    run's. This is the property all the individual
     seam tests (torn batch, swap seam, roll-forward) are instances of."""
     import shutil
 
@@ -458,7 +450,7 @@ def test_exhaustive_crash_sweep_over_retrain_batch(spark, tables, tmp_path,
     def mk(state, fs=None):
         return IngestPipeline(spark, state, k=6, maintain_ivf=True,
                               n_centroids=None, ivf_bootstrap=16,
-                              fs=fs, commit_mode=commit_mode)
+                              fs=fs)
 
     def snap(pipe):
         return (sorted(map(tuple, pipe.corpus().collect())),
@@ -495,11 +487,10 @@ def test_exhaustive_crash_sweep_over_retrain_batch(spark, tables, tmp_path,
         recovered = mk(state)  # the restarted process
         recovered.process_batch(b1, 1)  # at-least-once replay
         assert snap(recovered) == want, f"divergence at crash point {k}"
-    # pointer mode now mutates only 4 times per re-train batch (staging
-    # cleanup + two pointer writes + the retention-scheduled sweep keeps
-    # gen-0 in place on a first flip — fewer deletes than the r10 count
-    # of 8); rename mode still walks the full rename/delete dance
-    assert k >= (4 if commit_mode == "pointer" else 10), \
+    # a re-train batch mutates at least 4 times (staging cleanup + two
+    # pointer writes; the retention-scheduled sweep keeps gen-0 in place
+    # on a first flip)
+    assert k >= 4, \
         "sweep must have exercised the full mutation sequence"
 
 
@@ -508,8 +499,7 @@ class _FlakyObjectFS(LocalStateFS):
     item 4 — real S3/HDFS is unavailable offline, so fault injection at
     the adapter seam is the testable proxy):
 
-    - ``atomic_rename = False`` → ``commit_mode="auto"`` resolves to the
-      generation-pointer protocol, exactly as for ``s3a://`` roots;
+    - ``atomic_rename = False``, exactly as for ``s3a://`` roots;
     - ``write_text`` is a direct single-object overwrite PUT (the same
       branch HadoopStateFS takes on those schemes) — no rename involved;
     - ``rename`` is the store's true shape — a non-atomic copy-then-
@@ -571,7 +561,6 @@ def test_pointer_protocol_never_trusts_rename(spark, tables, tmp_path):
     pipe = IngestPipeline(spark, str(tmp_path / "st"), k=6,
                           maintain_ivf=True, n_centroids=None,
                           ivf_bootstrap=16, fs=fs)
-    assert pipe.commit_mode == "pointer"
     pipe.process_batch(docs.filter(F.col("doc_id") < 20), 0)
     pipe.process_batch(docs.filter(F.col("doc_id") >= 20), 1)  # re-trains
     assert pipe._gen_num(pipe.index_dir) >= 1, "re-train flipped by PUT"
@@ -585,25 +574,8 @@ def test_pointer_protocol_never_trusts_rename(spark, tables, tmp_path):
     assert fs.renames == 0, "no state op may even ATTEMPT a rename"
 
 
-def test_rename_mode_fails_loudly_on_object_store(spark, tables, tmp_path):
-    """Forcing commit_mode='rename' onto a copy-based store must surface
-    the store's failure as an exception at the swap — never a silently
-    half-applied commit (the staged build stays, the live dir is never
-    a partial mixture)."""
-    docs = _moddocs(tables, 40)
-    fs = _FlakyObjectFS(rename_mode="partial")
-    pipe = IngestPipeline(spark, str(tmp_path / "st"), k=5, fs=fs,
-                          commit_mode="rename")
-    pipe.process_batch(docs, 0)
-    before = sorted(map(tuple, pipe.corpus().collect()))
-    with pytest.raises(OSError, match="injected"):
-        pipe.compact()
-    # loud, and the live state is still the pre-compact content
-    assert sorted(map(tuple, pipe.corpus().collect())) == before
-
-
 def test_pointer_compact_partial_carry_recovers(spark, tables, tmp_path):
-    """compact()'s one rename in pointer mode — carrying a torn batch's
+    """compact()'s one rename — carrying a torn batch's
     subdirectory into the staged generation — dying midway on a
     copy-based store: the pointer never flipped, so live state is
     untouched; the batch replays against the CURRENT generation and the
@@ -621,7 +593,6 @@ def test_pointer_compact_partial_carry_recovers(spark, tables, tmp_path):
 
     fs = _FlakyObjectFS(rename_mode="partial")
     pipe = IngestPipeline(spark, str(tmp_path / "obj"), k=5, fs=fs)
-    assert pipe.commit_mode == "pointer"
     pipe.process_batch(b0, 0)
     orig = pipe.knn_against_corpus
 
@@ -697,63 +668,3 @@ def test_stale_listing_on_reader_degrades_to_prefix(spark, tables,
         del fs.scan_tree
     assert resp_stale == resp_prefix
     assert [tuple(r) for r in pipe.search(q, k=6).collect()] == resp_full
-
-
-def test_rename_crash_rollforward_on_writer_entry(spark, tables, tmp_path):
-    """r14 (found by the rename-mode takeover drill): a writer killed
-    between ``rename(live, .old)`` and ``rename(staged, live)`` leaves
-    a store with NO live directory. Every writer entry point must roll
-    the crashed publish forward — finish the rename, carry torn keys
-    from .old, drop the litter — instead of reading an empty store and
-    dying on the stale .old at its own next publish."""
-    import os
-    import shutil
-
-    docs = _moddocs(tables, 80)
-    state = str(tmp_path / "st")
-    pipe = IngestPipeline(spark, state, k=4, commit_mode="rename",
-                          maintain_ivf=True, n_centroids=None,
-                          ivf_bootstrap=16)
-    pipe.process_batch(docs.filter(F.col("doc_id") < 40), 0)
-    pipe.process_batch(docs.filter(F.col("doc_id") >= 40), 1)
-    want = sorted(r.doc_id for r in pipe.corpus().collect())
-
-    # simulate the mid-dance crash: the staged fold is complete (here:
-    # content-identical to live), live was renamed to .old, the second
-    # rename never ran
-    corpus = os.path.join(state, "corpus")
-    shutil.copytree(corpus, corpus + ".compact")
-    os.rename(corpus, corpus + ".old")
-    assert not os.path.isdir(corpus)
-
-    successor = IngestPipeline(spark, state, k=4, commit_mode="rename",
-                               maintain_ivf=True, n_centroids=None,
-                               ivf_bootstrap=16)
-    actions = successor._recover_rename_crash()
-    assert actions.get("corpus") == "rolled_forward_compact", actions
-    assert os.path.isdir(corpus)
-    assert not os.path.isdir(corpus + ".old")
-    assert not os.path.isdir(corpus + ".compact")
-    assert sorted(r.doc_id for r in successor.corpus().collect()) == want
-
-    # and the store still compacts + serves afterwards
-    successor.compact()
-    assert sorted(r.doc_id
-                  for r in successor.corpus().collect()) == want
-    q = docs.filter(F.col("doc_id") == 0).first().text
-    rows = successor.serve_search(q, k=4)
-    assert rows and rows[0].score == 1.0
-
-    # stale-.old arm: crash AFTER the second rename, before the torn
-    # carry/cleanup — entry clears .old WITHOUT a membership carry
-    # (deliberate: carried dirs can be superseded assignments, the
-    # sweep's crash-point-5 divergence; torn stream batches rewrite
-    # their directories from scratch on replay)
-    shutil.copytree(corpus, corpus + ".old")
-    torn_src = os.path.join(corpus + ".old", "tornkey")
-    os.makedirs(torn_src)
-    open(os.path.join(torn_src, "part-0.parquet"), "wb").close()
-    actions = successor._recover_rename_crash()
-    assert actions.get("corpus") == "cleared_old", actions
-    assert not os.path.isdir(os.path.join(corpus, "tornkey"))
-    assert not os.path.isdir(corpus + ".old")

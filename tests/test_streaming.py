@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from multi_model_vectorsearch_spark.operators import windows_batch as W
 from multi_model_vectorsearch_spark.streaming import windows as SW
 from multi_model_vectorsearch_spark.streaming.ingest import IngestPipeline
+from multi_model_vectorsearch_spark.streaming.statefs import LocalStateFS
 from multi_model_vectorsearch_spark.testing import canon_rows
 
 from conftest import SF_SMOKE
@@ -94,28 +95,57 @@ def test_dedup_within_watermark(spark, replay):
     assert got.select("event_id").distinct().count() == total
 
 
+class _ObjectStoreShapeFS(LocalStateFS):
+    """Local-disk stand-in for an object store's write shape:
+    ``atomic_rename = False``, ``write_text`` is a direct single-object
+    overwrite (no temp file, no rename) and ``rename`` is a
+    copy-then-delete. The generation-pointer commit must not lean on
+    rename atomicity anywhere."""
+
+    atomic_rename = False
+
+    @staticmethod
+    def write_text(path, content):
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        with open(path, "w", encoding="utf8") as f:
+            f.write(content)
+
+    @staticmethod
+    def rename(src, dst):
+        import shutil
+
+        if os.path.isdir(src):
+            shutil.copytree(src, dst)
+            shutil.rmtree(src)
+        else:
+            shutil.copy2(src, dst)
+            os.remove(src)
+
+
 @pytest.fixture(params=["posix", "hadoop", "pointer", "hadoop-pointer"])
 def state_backend(request, spark):
-    """Constructor kwargs that re-run a state-machine test on each commit
+    """Constructor kwargs that re-run a state-machine test on each state
     backend: the direct POSIX adapter (the default), the Hadoop
     FileSystem adapter resolved over local disk (the API a cluster's
-    hdfs:// state dir goes through), the generation-pointer commit
-    protocol (what an object store with no atomic rename gets), and the
-    two combined — the actual s3a:// deployment shape (Hadoop API +
-    pointer commit). The reference pipelines inside each test stay on
-    the default backend, so the final snapshot equality IS the
-    zero-output-diff proof across backends."""
+    hdfs:// state dir goes through), an object store's write shape over
+    local disk (no atomic rename: direct overwrite of small files,
+    copy-then-delete rename), and the two combined — the Hadoop API with
+    its object-store ``write_text`` branch, the s3a:// deployment shape.
+    All four publish through the same generation-pointer commit. The
+    reference pipelines inside each test stay on the default backend, so
+    the final snapshot equality IS the zero-output-diff proof across
+    backends."""
     if request.param.startswith("hadoop"):
         from multi_model_vectorsearch_spark.streaming.statefs import (
             HadoopStateFS,
         )
 
-        kw = {"fs": HadoopStateFS(spark, "file:///tmp")}
+        fs = HadoopStateFS(spark, "file:///tmp")
         if request.param == "hadoop-pointer":
-            kw["commit_mode"] = "pointer"
-        return kw
+            fs.atomic_rename = False
+        return {"fs": fs}
     if request.param == "pointer":
-        return {"commit_mode": "pointer"}
+        return {"fs": _ObjectStoreShapeFS()}
     return {}
 
 
@@ -687,13 +717,13 @@ def test_compact_rewrites_small_files(spark, tables, tmp_path):
     before_corpus = sorted(map(tuple, pipe.corpus().collect()))
     before_edges = sorted(map(tuple, pipe.edges().collect()))
     n_files = len(glob.glob(
-        str(tmp_path / "cstate" / "corpus" / "**" / "*.parquet"),
+        os.path.join(pipe._phys(pipe.corpus_dir), "**", "*.parquet"),
         recursive=True))
     assert n_files >= 3  # one-plus file per batch subdirectory
     done = pipe.compact()
     assert done["corpus"] == 1 and done["edges"] == 1
     assert len(glob.glob(
-        str(tmp_path / "cstate" / "corpus" / "**" / "*.parquet"),
+        os.path.join(pipe._phys(pipe.corpus_dir), "**", "*.parquet"),
         recursive=True)) == 1
     assert sorted(map(tuple, pipe.corpus().collect())) == before_corpus
     assert sorted(map(tuple, pipe.edges().collect())) == before_edges
@@ -1078,7 +1108,7 @@ def test_torn_nontrailing_submit_preserved_and_reported(spark, tmp_path):
     assert pipe.torn_batch_keys() == {"s1"}
     n_before = pipe.corpus().count()
     pipe.compact()
-    assert os.path.isdir(os.path.join(pipe.corpus_dir, "s1")), \
+    assert os.path.isdir(os.path.join(pipe._phys(pipe.corpus_dir), "s1")), \
         "torn submit's corpus subdirectory must be carried over un-folded"
     assert pipe.torn_batch_keys() == {"s1"}
     assert pipe.corpus().count() == n_before
@@ -1135,7 +1165,7 @@ def test_bootstrap_in_flight_detected_torn_and_replay_completes(
     shutil.rmtree(pipe.centroids_dir)
     assert "b1" in pipe.torn_batch_keys()
     pipe.compact()
-    assert os.path.isdir(os.path.join(pipe.corpus_dir, "b1"))
+    assert os.path.isdir(os.path.join(pipe._phys(pipe.corpus_dir), "b1"))
     # at-least-once: the stream replays the torn epoch wholesale
     pipe.process_batch(batches[1], 1)
     assert not pipe.centroids().isEmpty()
@@ -1212,10 +1242,11 @@ def test_ivf_auto_sizing_retrain_replay_exactly_once(spark, tables, tmp_path,
 
 
 def test_retrain_swap_seam_rolls_forward(spark, tables, tmp_path):
-    """The one non-atomic seam in a re-train is between the index rename
-    and the centroid rename. A committed ``centroids.next`` without an
-    ``ivf.next`` is the redo record: any writer entry point must finish
-    the swap, restoring a matched centroid/assignment pair."""
+    """The one non-atomic seam in a re-train is between the index flip
+    and the centroid flip. A committed staged centroids generation
+    without a staged index generation is the redo record: any writer
+    entry point must finish the flip, restoring a matched
+    centroid/assignment pair."""
     docs = _moddocs(tables, 120)
     pipe = IngestPipeline(spark, str(tmp_path / "st"), k=6,
                           maintain_ivf=True, n_centroids=None,
@@ -1223,8 +1254,15 @@ def test_retrain_swap_seam_rolls_forward(spark, tables, tmp_path):
     pipe.process_batch(docs, 0)
     cents_before = sorted(
         (r.cid, tuple(r.cvec)) for r in pipe.centroids().collect())
-    # simulate the crash: index swap done, centroid swap pending
-    os.rename(pipe.centroids_dir, pipe.centroids_dir + ".next")
+    # simulate the crash: index flip done, centroid flip pending — the
+    # live centroids move into the staged next generation
+    live = pipe._phys(pipe.centroids_dir)
+    staged = pipe._stage_dir(pipe.centroids_dir)
+    os.makedirs(staged)
+    for entry in os.listdir(live):
+        if not entry.startswith((".gen-", "_CURRENT")):
+            os.rename(os.path.join(live, entry),
+                      os.path.join(staged, entry))
     assert pipe.centroids().isEmpty()  # degraded (full-scan) window
     pipe.compact()  # any writer entry point rolls the seam forward
     assert sorted((r.cid, tuple(r.cvec))
@@ -1425,7 +1463,7 @@ def test_build_graph_torn_key_detected_and_preserved(spark, tables, tmp_path):
     assert "g1" in pipe.torn_batch_keys()
     pipe.compact()
     # the torn key is preserved verbatim, not folded into flat state
-    assert os.path.isdir(torn_dir)
+    assert os.path.isdir(os.path.join(pipe._phys(pipe.edges_dir), "g1"))
     assert "g1" in pipe.torn_batch_keys()
     # repair = rerun with the same key; the overwrite commits it
     pipe.build_graph(key="g1")
@@ -1764,8 +1802,7 @@ def test_serve_during_mutate_linearizable(spark, tables, tmp_path):
 
     def mk(d):
         return IngestPipeline(spark, str(d), k=6, maintain_ivf=True,
-                              n_centroids=None, ivf_bootstrap=16,
-                              commit_mode="pointer")
+                              n_centroids=None, ivf_bootstrap=16)
 
     query = _mk_docs(tables, 0, 1).first().text
 
@@ -1835,8 +1872,7 @@ def test_warm_reader_rewarm_across_writer_flips(spark, tables, tmp_path):
 
     def mk(d):
         return IngestPipeline(spark, str(d), k=6, maintain_ivf=True,
-                              n_centroids=None, ivf_bootstrap=16,
-                              commit_mode="pointer")
+                              n_centroids=None, ivf_bootstrap=16)
 
     query = _mk_docs(tables, 0, 1).first().text
 
@@ -1891,8 +1927,7 @@ def test_stable_read_raises_on_flapping_state(spark, tables, tmp_path):
         StateCommitStormError,
     )
 
-    pipe = IngestPipeline(spark, str(tmp_path / "st"), k=5,
-                          commit_mode="pointer")
+    pipe = IngestPipeline(spark, str(tmp_path / "st"), k=5)
     pipe.process_batch(_mk_docs(tables, 0, 10), 0)
     tick = [0]
     orig = pipe._commit_fingerprint
@@ -1919,8 +1954,7 @@ def test_commit_fingerprint_sees_success_transition(spark, tables,
     job commit)."""
     import os
 
-    pipe = IngestPipeline(spark, str(tmp_path / "st"), k=5,
-                          commit_mode="pointer")
+    pipe = IngestPipeline(spark, str(tmp_path / "st"), k=5)
     pipe.process_batch(_mk_docs(tables, 0, 10), 0)
     fp0 = pipe._commit_fingerprint()
     marker = pipe.fs.join(pipe._bdir(pipe.corpus_dir, "b0"), "_SUCCESS")
@@ -2021,12 +2055,12 @@ def test_retention_sla_slow_reader(spark, tables, tmp_path):
 
     # retain_generations=1: plan, survive one flip, die after the second
     p1 = IngestPipeline(spark, str(tmp_path / "r1"), k=5,
-                        commit_mode="pointer", retain_generations=1)
+                        retain_generations=1)
     p1.process_batch(docs, 0)
     p1.compact()  # move past gen 0 so later sweeps hit .gen-N dirs
     plan = p1.search(q, k=5)  # cold plan: pins current generation paths
     one_flip = IngestPipeline(spark, str(tmp_path / "r1"), k=5,
-                              commit_mode="pointer", retain_generations=1)
+                              retain_generations=1)
     flips(one_flip, 1)
     rows = plan.collect()  # within SLA: one flip of headroom
     assert rows and rows[0].score == 1.0
@@ -2042,12 +2076,12 @@ def test_retention_sla_slow_reader(spark, tables, tmp_path):
 
     # retain_generations=2 covers the same two-flip scan
     p2 = IngestPipeline(spark, str(tmp_path / "r2"), k=5,
-                        commit_mode="pointer", retain_generations=2)
+                        retain_generations=2)
     p2.process_batch(docs, 0)
     p2.compact()
     plan3 = p2.search(q, k=5)
     writer2 = IngestPipeline(spark, str(tmp_path / "r2"), k=5,
-                             commit_mode="pointer", retain_generations=2)
+                             retain_generations=2)
     flips(writer2, 2, start=300)
     rows = plan3.collect()
     assert rows and rows[0].score == 1.0
@@ -2099,9 +2133,9 @@ def test_freshness_gauge_tracks_writer_progress(spark, tables, tmp_path):
     """freshness(): a warm reader reports exactly how far the writer has
     moved past its snapshot, and maybe_rewarm() zeroes the gauge."""
     root = str(tmp_path / "st")
-    writer = IngestPipeline(spark, root, k=5, commit_mode="pointer")
+    writer = IngestPipeline(spark, root, k=5)
     writer.process_batch(_mk_docs(tables, 0, 20), 0)
-    reader = IngestPipeline(spark, root, k=5, commit_mode="pointer")
+    reader = IngestPipeline(spark, root, k=5)
 
     cold = reader.freshness()
     assert cold == {"warm": False, "fresh": True,
@@ -2136,9 +2170,7 @@ def test_warm_snapshot_atomic_publish_and_shared_cache(spark, tables,
     store didn't change keeps sharing that cache entry instead of
     evicting it."""
     root = str(tmp_path / "st")
-    # rename-mode poll, single-actor: opt in (the loud-guard default
-    # would raise — pinned by test_rename_mode_poll_guard)
-    pipe = IngestPipeline(spark, root, k=5, allow_rename_mode_poll=True)
+    pipe = IngestPipeline(spark, root, k=5)
     pipe.process_batch(_mk_docs(tables, 0, 20), 0)
     sizes0 = pipe.warm()
     snap0 = pipe._warm
@@ -2168,20 +2200,17 @@ def test_warm_snapshot_atomic_publish_and_shared_cache(spark, tables,
 # --- round-12: incremental edge refresh ------------------------------------
 
 
-@pytest.mark.parametrize("commit_mode", ["rename", "pointer"])
-def test_refresh_edges_diff_equals_full_supersede(spark, tables, tmp_path,
-                                                  commit_mode):
+def test_refresh_edges_diff_equals_full_supersede(spark, tables, tmp_path):
     """refresh_edges() re-scores ONLY changed cells, but its published
     store must equal refresh_edges(force_all=True) — the full supersede
     rebuild over the same index — row for row: unchanged cells keep
     byte-identical edges (same members, same kernel), so diffing loses
-    nothing. Both publish paths (rename swap, pointer flip) covered."""
+    nothing."""
     import shutil
 
     def mk(d):
         return IngestPipeline(spark, str(d), k=4, maintain_ivf=True,
-                              n_centroids=None, ivf_bootstrap=16,
-                              commit_mode=commit_mode)
+                              n_centroids=None, ivf_bootstrap=16)
 
     a_dir = tmp_path / "aged"
     aged = mk(a_dir)
@@ -2239,8 +2268,7 @@ def test_refresh_edges_supersedes_surplus_after_retrain(spark, tables,
 
     def mk(d):
         return IngestPipeline(spark, str(d), k=4, maintain_ivf=True,
-                              n_centroids=None, ivf_bootstrap=16,
-                              commit_mode="pointer")
+                              n_centroids=None, ivf_bootstrap=16)
 
     a_dir = tmp_path / "aged"
     aged = mk(a_dir)
@@ -2276,7 +2304,7 @@ def test_refresh_edges_on_retrain_hook(spark, tables, tmp_path):
     re-train cadence without an explicit operator call."""
     pipe = IngestPipeline(spark, str(tmp_path / "st"), k=4,
                           maintain_ivf=True, n_centroids=None,
-                          ivf_bootstrap=16, commit_mode="pointer",
+                          ivf_bootstrap=16,
                           refresh_edges_on_retrain=True)
     pipe.bulk_load(_mk_docs(tables, 0, 80))
     pipe.build_graph(method="cells")
@@ -2357,39 +2385,6 @@ def test_writer_fence_rechecked_before_each_commit_write(spark, tables,
     assert b.corpus().count() == 40
 
 
-def test_rename_mode_poll_guard(spark, tables, tmp_path):
-    """Round-12 verdict item 5: maybe_rewarm() under commit_mode="rename"
-    raises a typed error unless the deployment opts in — the race it
-    documents (a reader polling through another process's compact/
-    re-train swap) becomes a config decision, not a docstring caveat."""
-    from multi_model_vectorsearch_spark.streaming.ingest import (
-        RenameModePollError,
-    )
-
-    root = str(tmp_path / "st")
-    pipe = IngestPipeline(spark, root, k=5)  # auto -> rename on POSIX
-    assert pipe.commit_mode == "rename"
-    pipe.process_batch(_mk_docs(tables, 0, 10), 0)
-    pipe.warm()
-    with pytest.raises(RenameModePollError, match="pointer"):
-        pipe.maybe_rewarm()
-    pipe.unwarm()
-
-    # single-actor deployments opt in explicitly and keep the behavior
-    opt = IngestPipeline(spark, root, k=5, allow_rename_mode_poll=True)
-    opt.warm()
-    assert opt.maybe_rewarm() is False, "state unchanged -> no rewarm"
-    opt.unwarm()
-
-    # pointer mode is unaffected (the safe multi-process default)
-    p = IngestPipeline(spark, str(tmp_path / "pt"), k=5,
-                       commit_mode="pointer")
-    p.process_batch(_mk_docs(tables, 0, 10), 0)
-    p.warm()
-    assert p.maybe_rewarm() is False
-    p.unwarm()
-
-
 def test_flip_rate_governor_spaces_flip_groups(spark, tables, tmp_path):
     """Round-12 verdict item 3: min_flip_interval_s bounds the writer's
     flip rate a priori — back-to-back maintenance flips (the
@@ -2400,8 +2395,7 @@ def test_flip_rate_governor_spaces_flip_groups(spark, tables, tmp_path):
     import time as _t
 
     root = str(tmp_path / "st")
-    pipe = IngestPipeline(spark, root, k=5, commit_mode="pointer",
-                          min_flip_interval_s=1.5)
+    pipe = IngestPipeline(spark, root, k=5, min_flip_interval_s=1.5)
     pipe.process_batch(_mk_docs(tables, 0, 20), 0)
     t0 = _t.monotonic()
     pipe.compact()  # first flip group: ungated (no prior flip)
@@ -2413,8 +2407,7 @@ def test_flip_rate_governor_spaces_flip_groups(spark, tables, tmp_path):
         "second flip group ran without waiting out min_flip_interval_s"
 
     # governor off by default: two compacts back-to-back do not sleep
-    free = IngestPipeline(spark, str(tmp_path / "free"), k=5,
-                          commit_mode="pointer")
+    free = IngestPipeline(spark, str(tmp_path / "free"), k=5)
     free.process_batch(_mk_docs(tables, 0, 10), 0)
     free.compact()
     assert free.min_flip_interval_s == 0.0
@@ -2425,8 +2418,7 @@ def test_serve_counters_and_last_serve_info(spark, tables, tmp_path):
     retry count + freshness-at-answer and cumulative counters, so an
     operator can tell 'healthy' from 'answering but retrying
     constantly' without log forensics."""
-    pipe = IngestPipeline(spark, str(tmp_path / "st"), k=5,
-                          commit_mode="pointer")
+    pipe = IngestPipeline(spark, str(tmp_path / "st"), k=5)
     pipe.process_batch(_mk_docs(tables, 0, 20), 0)
     q = _mk_docs(tables, 0, 1).first().text
 
@@ -2507,8 +2499,7 @@ def test_serve_guards_observability_and_bad_retries(spark, tables,
     degrades to freshness=None; (2) retries<=0 must raise ValueError
     up front instead of corrupting serve_counters['retries'] with a
     negative delta and then raising None (TypeError)."""
-    pipe = IngestPipeline(spark, str(tmp_path / "st"), k=5,
-                          commit_mode="pointer")
+    pipe = IngestPipeline(spark, str(tmp_path / "st"), k=5)
     pipe.process_batch(_mk_docs(tables, 0, 20), 0)
     q = _mk_docs(tables, 0, 1).first().text
 
@@ -2538,8 +2529,7 @@ def test_compact_finishes_pending_retrain_before_flip_gate(
     one gated interval — the retention triangle (max scan <=
     retain_generations x min_flip_interval_s) sizes readers on flips
     PER gated group."""
-    pipe = IngestPipeline(spark, str(tmp_path / "st"), k=5,
-                          commit_mode="pointer")
+    pipe = IngestPipeline(spark, str(tmp_path / "st"), k=5)
     pipe.process_batch(_mk_docs(tables, 0, 10), 0)
 
     order = []
@@ -2606,7 +2596,7 @@ def test_operator_retrain_full_corpus(spark, tables, tmp_path):
     from-scratch bootstrap derives (the premise behind measuring the
     maintenance loop against a from-scratch twin)."""
     root = str(tmp_path / "st")
-    pipe = IngestPipeline(spark, root, k=5, commit_mode="pointer",
+    pipe = IngestPipeline(spark, root, k=5,
                           maintain_ivf=True, n_centroids=None,
                           ivf_bootstrap=16)
     for i, (lo, hi) in enumerate([(0, 40), (40, 80), (80, 120)]):
@@ -2628,8 +2618,8 @@ def test_operator_retrain_full_corpus(spark, tables, tmp_path):
 
     # determinism vs a from-scratch bootstrap over the same content
     twin = IngestPipeline(spark, str(tmp_path / "twin"), k=5,
-                          commit_mode="pointer", maintain_ivf=True,
-                          n_centroids=None, ivf_bootstrap=16)
+                          maintain_ivf=True, n_centroids=None,
+                          ivf_bootstrap=16)
     twin.bulk_load(_mk_docs(tables, 0, 120))
     mine = sorted(map(tuple, pipe.centroids().collect()))
     theirs = sorted(map(tuple, twin.centroids().collect()))
@@ -2638,7 +2628,7 @@ def test_operator_retrain_full_corpus(spark, tables, tmp_path):
 
     # a replayable torn batch survives the re-train untouched and its
     # replay lands against the NEW centroids
-    pipe2 = IngestPipeline(spark, root, k=5, commit_mode="pointer",
+    pipe2 = IngestPipeline(spark, root, k=5,
                            maintain_ivf=True, n_centroids=None,
                            ivf_bootstrap=16)
     pipe2.process_batch(_mk_docs(tables, 120, 160), 3)
@@ -2660,8 +2650,7 @@ def test_search_many_matches_per_query_search(spark, tables, tmp_path):
     value-identical per query to M separate search() calls — exact and
     ivf routes, cold and warm, including the modality-balanced
     selection and the 1-hop expansion."""
-    pipe = IngestPipeline(spark, str(tmp_path / "st"), k=5,
-                          commit_mode="pointer", maintain_ivf=True,
+    pipe = IngestPipeline(spark, str(tmp_path / "st"), k=5, maintain_ivf=True,
                           n_centroids=None, ivf_bootstrap=16)
     docs = _mk_docs(tables, 0, 90)
     pipe.bulk_load(docs)
