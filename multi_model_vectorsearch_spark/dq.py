@@ -301,52 +301,11 @@ _IDX = {n: i for i, n in enumerate(_GATE_ORDER)}
 _REGISTRY.sort(key=lambda e: (_IDX.get(e.name, len(_GATE_ORDER)), e.name))
 
 
-
-
-# Queries with a green (or by-design rows-only) driver CORRECTNESS row from a
-# prior round.  The driver's oracle gate only checks the first 50 registry
-# entries per round, so `registry()` rotates not-yet-verified entries to the
-# front; once a round's CORRECTNESS_r{N}.json lands, its green names move here.
-_DRIVER_VERIFIED: frozenset[str] = frozenset({
-    # CORRECTNESS_r01.json — 48 hash-green + dq57 rows-only-by-design.
-    "dq01_scan_project", "dq02_filter_battery", "dq03_case_expr",
-    "dq04_join_broadcast", "dq05_left_outer", "dq06_left_semi",
-    "dq07_left_anti", "dq08_range_join", "dq09_asof_join",
-    "dq11_count_distinct", "dq12_rollup", "dq13_ordered_collect",
-    "dq14_conditional_agg", "dq15_topk_per_group", "dq16_lag",
-    "dq17_running_sum", "dq18_ntile", "dq19_union", "dq20_intersect_except",
-    "dq21_string_battery", "dq22_datetime_battery", "dq23_math_battery",
-    "dq24_array_battery", "dq25_json_extract", "dq26_tokenize_explode",
-    "dq27_sha256", "dq28_dedup_by_hash", "dq29_knn_topk", "dq30_l2_normalize",
-    "dq31_knn_join", "dq32_modality_balanced_topk", "dq33_build_edges",
-    "dq34_expand", "dq35_hydrate_filter", "dq54_expand_top1",
-    "dq55_expand_2hop", "dq56_bigram_udtf", "dq57_approx_distinct",
-    "dq58_pivot", "dq59_percentiles", "dq60_stats_agg", "dq63_bm25_topk",
-    "dq64_hybrid_rrf", "dq65_unpivot", "dq66_regex_battery",
-    "dq67_null_battery", "dq68_date_arith", "dq69_array_ops",
-    "dq72_pagerank",
-    # CORRECTNESS_r02.json — 38 hash-green + dq51 rows-only-by-design.
-    # (The 11 hash-mismatched entries stay pending: their DECIMAL output
-    # columns were re-projected to rounded DOUBLE this round and need a
-    # fresh driver row.)
-    "dq100_pmi_bigrams", "dq107_temperature_mixture", "dq10_hash_agg",
-    "dq40_minhash_signatures", "dq41_minhash_lsh_pairs",
-    "dq42_ngram_jaccard_topk", "dq43_simhash", "dq44_langid", "dq45_quality",
-    "dq46_cosine_neardup_topk", "dq47_ivf_knn", "dq48_embed_stub",
-    "dq49_embed_knn", "dq51_lsh_ann", "dq52_centroid_applyinpandas",
-    "dq53_bpe_tokens", "dq61_dedup_clusters", "dq62_winnow_fingerprint",
-    "dq71_funnel", "dq73_cube", "dq74_histogram", "dq75_window_battery",
-    "dq76_nullsafe_join", "dq78_tpch_q3", "dq80_tpch_q6",
-    "dq82_correlated_subquery", "dq83_map_ops", "dq84_normalize_text",
-    "dq85_vocab_topk", "dq86_length_filter", "dq87_tpch_q4", "dq89_tpch_q12",
-    "dq90_tpch_q14", "dq91_tpch_q15", "dq93_tpch_q19", "dq95_hash_split",
-    "dq96_stratified_sample", "dq98_contamination", "dq99_pii_redact",
-})
-
-
 def _driver_verified_now() -> frozenset[str]:
-    """The static set plus every green row found in CORRECTNESS_r*.json.
+    """Every green row found in the committed CORRECTNESS_r*.json files.
 
+    Each round's oracle gate checks only the first 50 registry entries,
+    so ``registry()`` rotates not-yet-verified entries to the front.
     Reading the driver's own result files makes the rotation hands-free:
     when a new round's CORRECTNESS lands in the repo root, its green
     entries automatically stop occupying the next round's gate window.
@@ -372,7 +331,7 @@ def _driver_verified_now() -> frozenset[str]:
 def _parse_driver_files(key: tuple) -> frozenset[str]:
     import json
 
-    names = set(_DRIVER_VERIFIED)
+    names: set[str] = set()
     for path, _mtime in key:
         try:
             with open(path) as fh:

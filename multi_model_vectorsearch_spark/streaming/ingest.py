@@ -66,6 +66,116 @@ FLAG_SCHEMA = "doc_id bigint, is_dup boolean, dup_of bigint"
 
 
 OVERFETCH = 6  # reference main.py:209: KNN pool is k*6 before the modality split
+# Serving probe count in fixed-centroid mode, and the floor under auto
+# (√n) sizing (see IngestPipeline._auto_probes)
+IVF_PROBES = 2
+# Lloyd iterations at bootstrap/re-train under auto sizing — random doc
+# seeds give arbitrary cells and probed recall pays for it (see
+# IngestPipeline._lloyd_refine)
+LLOYD_ITERS = 2
+CANDIDATE_SCHEMA = ("qid bigint, qm string, doc_id bigint, modality string, "
+                    "s double")
+
+
+def _vectors(values):
+    """A column of embedding arrays as one float64 (rows × dim) matrix."""
+    import numpy as np
+
+    if len(values) == 0:
+        return np.empty((0, 0))
+    return np.stack([np.asarray(v, dtype=np.float64) for v in values])
+
+
+def _top_pool(q, qids, c, cids, pool_k: int):
+    """Each query's top-``pool_k`` candidates by snapped cosine — the one
+    numpy scorer behind the ingest KNN (``_knn_kernel``) and the cells
+    graph build (``_within_cell_neighbors``, ``_block_pair_neighbors``).
+
+    ``q`` (nq × d) and ``c`` (n × d) are raw float64 embeddings and
+    ``cids`` is sorted ascending: a candidate's row position IS its
+    doc_id tie-break. Scores are cosines on unit-normalized rows (an
+    all-zero embedding scores 0 everywhere instead of NaN, which compares
+    false and silently vanishes from a top-k), snapped to the 1e-6 grid
+    by ``snap_double``'s numpy twin, the floor snap: ``np.round``'s
+    half-to-even would rank a .xxxxxx5 tie differently from the join
+    path's ``snap_double``. Every candidate whose doc_id equals the
+    query's is pinned to exactly 1.0 after the snap — the
+    ``when(doc_id == qid, 1.0)`` rule of ``_knn_join``, found by binary
+    search on ``cids`` (so a duplicated doc_id pins every copy).
+
+    Selection: the composite float64 key s_int·2^24 + (2^24-1-position)
+    totally orders a query's candidates by (s desc, doc_id asc) with NO
+    ties and stays integer-exact (|key| < 2^45 < 2^53). A row-wise
+    argpartition plus a pool-sized argsort keep exactly the top
+    ``min(pool_k, n)`` per query. Returns ``(top, s)``, both
+    (nq × min(pool_k, n)): candidate positions and snapped scores, each
+    row in rank order — the order ``_balanced_select``'s window uses.
+
+    Memory discipline (round-8, from a measured profile): scores are
+    computed a query block at a time into ONE reused buffer with queries
+    as ROWS, and every full-matrix op is in place — a fresh allocation
+    per numpy op page-faults gigabytes (a 50k×4096 matmul measured 10 s
+    freshly-allocated vs 0.5 s blocked into a reused buffer), and axis-0
+    selection on a C-order matrix strides the whole row width per
+    element. A block holds min(1024, 4e6 // n) query rows, so the buffer
+    (and argpartition's index array, the one other block-sized
+    allocation) stays within ~32 MB at any candidate count."""
+    import numpy as np
+
+    n, nq = len(cids), len(qids)
+    if n >= (1 << 24):  # enforced regardless of python -O assert strip
+        raise ValueError(
+            f"candidate block of {n} rows exceeds the 2^24 packing bound")
+    kk = min(pool_k, n)
+    top = np.empty((nq, kk), dtype=np.int64)
+    s = np.empty((nq, kk))
+    if nq == 0 or kk == 0:
+        return top, s
+    qn = q / np.maximum(np.linalg.norm(q, axis=1, keepdims=True), 1e-12)
+    cn = c / np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
+    pin_lo = np.searchsorted(cids, qids, side="left")
+    pin_hi = np.searchsorted(cids, qids, side="right")
+    posval = (2.0**24 - 1.0) - np.arange(n, dtype=np.float64)
+    rows = min(1024, max(1, 4_000_000 // n))
+    buf = np.empty((min(rows, nq), n))
+    for lo in range(0, nq, rows):
+        hi = min(lo + rows, nq)
+        blk = buf[:hi - lo]
+        np.dot(qn[lo:hi], cn.T, out=blk)
+        # floor snap: blk then holds s_int, the snapped score on the
+        # micro grid (integer-valued, |s_int| <= 1e6)
+        np.multiply(blk, 1e6, out=blk)
+        np.add(blk, 0.5, out=blk)
+        np.floor(blk, out=blk)
+        for j in np.nonzero(pin_hi[lo:hi] > pin_lo[lo:hi])[0]:
+            blk[j, pin_lo[lo + j]:pin_hi[lo + j]] = 1e6
+        # negated composite key: ascending order is rank order
+        np.multiply(blk, 2.0**24, out=blk)
+        np.add(blk, posval, out=blk)
+        np.negative(blk, out=blk)
+        if kk < n:
+            part = np.argpartition(blk, kk - 1, axis=1)[:, :kk]
+        else:
+            part = np.broadcast_to(np.arange(n), blk.shape)
+        sub = np.take_along_axis(blk, part, axis=1)
+        order = np.argsort(sub, axis=1)
+        top[lo:hi] = np.take_along_axis(part, order, axis=1)
+        s[lo:hi] = np.floor(
+            -np.take_along_axis(sub, order, axis=1) / 2.0**24) / 1e6
+    return top, s
+
+
+def _pool_rows(qids, qms, cids, cms, top, s):
+    """``_top_pool``'s output as candidate rows (``CANDIDATE_SCHEMA``):
+    one row per (query, pooled candidate)."""
+    import numpy as np
+    import pandas as pd
+
+    qi = np.repeat(np.arange(len(qids)), top.shape[1])
+    ci = top.reshape(-1)
+    return pd.DataFrame({"qid": qids[qi], "qm": qms[qi],
+                         "doc_id": cids[ci], "modality": cms[ci],
+                         "s": s.reshape(-1)})
 
 
 class StateCommitStormError(RuntimeError):
@@ -166,8 +276,7 @@ class IngestPipeline:
     def __init__(self, spark: SparkSession, state_dir: str, k: int = 10,
                  max_collect: int = 4096, n_centroids: int | None = 8,
                  ivf_bootstrap: int = 64, maintain_ivf: bool = False,
-                 maintain_neardup: bool = False, ivf_probes: int = 2,
-                 fs=None, cell_rows_cap: int = 200_000,
+                 maintain_neardup: bool = False, fs=None, cell_rows_cap: int = 200_000,
                  retain_generations: int = 1,
                  refresh_edges_on_retrain: bool = False,
                  min_flip_interval_s: float = 0.0):
@@ -203,16 +312,6 @@ class IngestPipeline:
         # default batch path stays faithful (and the e2e bench comparable);
         # serving deployments that call search_ivf turn this on
         self.maintain_ivf = maintain_ivf
-        # fat-batch ingest KNN probes this many cells per query once the
-        # index has bootstrapped (round-5 verdict item: the exact
-        # corpus x batch nested loop is a scale-killer for ingest bursts).
-        # Under auto sizing this is a FLOOR: serving probes √ncent cells
-        # (see _auto_probes).
-        self.ivf_probes = ivf_probes
-        # Lloyd iterations at bootstrap/re-train under auto sizing —
-        # random doc seeds give arbitrary cells and probed recall pays
-        # for it (see _lloyd_refine); 0 restores raw seeds
-        self.lloyd_iters = 2
         # opt-in: per-batch MinHash near-dup flagging against the running
         # signature store (dq181's incremental form) — a curation ingest
         # turns this on; the faithful /submit analog keeps it off
@@ -878,10 +977,12 @@ class IngestPipeline:
         The 10⁹⁺-doc bulk-build design the other two scorers can't reach:
         every doc's candidates are the members of its OWN IVF cell, so
         the similarity square never crosses a cell boundary. Work =
-        Σ m_cell² · d ≈ n^{3/2}·d flops under √n sizing, ALL of it dgemm
-        inside one ``applyInPandas`` per cell (the dq148 SemDeDup tiling
-        pattern applied to graph construction); shuffle = one exchange of
-        the corpus on cid plus n·pool_k emitted candidate rows. Nothing
+        Σ m_cell² · d ≈ n^{3/2}·d flops under √n sizing, ALL of it the
+        shared ``_top_pool`` dgemm kernel (queries = candidates = the
+        cell's members) inside one ``applyInPandas`` per cell (the dq148
+        SemDeDup tiling pattern applied to graph construction); shuffle =
+        one exchange of the corpus on cid plus n·pool_k emitted candidate
+        rows. Nothing
         corpus-sized is collected or broadcast, and cells are ~√n by
         Lloyd balance with re-train keeping the ideal/active ratio ≤ 2×
         (a pathological giant cell still lands in one task — the known
@@ -890,13 +991,15 @@ class IngestPipeline:
         Approximation: neighbors outside the query's cell are missed —
         strictly narrower than the probed join (probes ≥ 1 cell) and the
         exact scan; the self-match pin is exact (a doc is always in its
-        own cell; diagonal pinned to 1.0 AFTER the snap, mirroring the
-        join paths' ``when(doc_id == qid, 1.0)``). Scores are
-        snap_double's numpy twin — identical to both other scorers on
-        shared pairs. Per-cell emission of each query's top ``pool_k``
-        by (snapped s desc, doc_id asc) is LOSSLESS for the downstream
-        ``_balanced_select`` pool because all of a query's candidates
-        live in this one cell.
+        own cell, and ``_top_pool`` pins it to 1.0 AFTER the snap,
+        mirroring the join paths' ``when(doc_id == qid, 1.0)``). The
+        exact build's ``_knn_kernel`` scores with the same ``_top_pool``,
+        so shared pairs carry the same snapped score (a dgemm ulp landing
+        on a snap boundary can still move one 1e-6 bucket — the fixture
+        note on test_build_graph_cells_method). Per-cell emission of each
+        query's top ``pool_k`` by (snapped s desc, doc_id asc) is LOSSLESS
+        for the downstream ``_balanced_select`` pool because all of a
+        query's candidates live in this one cell.
 
         Skew bound (r9 verdict item 2 closed): a cell larger than
         ``cell_rows_cap`` no longer lands its whole m² square in one
@@ -905,14 +1008,13 @@ class IngestPipeline:
         block) tasks — ``_block_pair_neighbors`` — whose per-query block
         tops union into a SUPERSET of the cell-local top pool; the
         ``prn <= pool_k`` window that opens ``_balanced_select`` then
-        reduces it to exactly the rows the one-task kernel would have
+        reduces it to exactly the rows the one-task scorer would have
         kept (same (s desc, doc_id asc) order), so the split is
         value-identical by construction and pinned by test. A dominant
         near-dup cluster — the workload dedup exists for — now costs
         ~2r·m shuffled rows instead of an executor-OOM or the 2^24
         packing abort."""
         import numpy as np
-        import pandas as pd
 
         pool_k = self.k * OVERFETCH
         members = self.ivf_index().select("doc_id", "cid").join(
@@ -932,52 +1034,12 @@ class IngestPipeline:
             pdf = pdf.sort_values("doc_id", kind="stable")
             ids = pdf["doc_id"].values.astype(np.int64)
             mods = pdf["modality"].values
-            e = np.stack([np.asarray(v, dtype=np.float64)
-                          for v in pdf["embedding"].values])
-            n = len(ids)
-            if n >= (1 << 24):  # position term fits 24 bits; enforced
-                raise ValueError(  # regardless of python -O assert strip
-                    f"cell of {n} rows exceeds the 2^24 packing bound")
-            norms = np.linalg.norm(e, axis=1)
-            kk = min(pool_k, n)
-            # doc_id-ascending position → higher posval = lower doc_id,
-            # so the composite key's tie-break matches _balanced_select's
-            # (s desc, doc_id asc) window order exactly
-            posval = (2.0**24 - 1.0) - np.arange(n, dtype=np.float64)
-            chunk = max(1, 4_000_000 // max(n, 1))
-            out_q, out_d, out_s = [], [], []
-            for lo in range(0, n, chunk):
-                hi = min(lo + chunk, n)
-                sims = e[lo:hi] @ e.T
-                denom = np.maximum(
-                    norms[lo:hi, None] * norms[None, :], 1e-12)
-                np.divide(sims, denom, out=sims)
-                np.multiply(sims, 1e6, out=sims)
-                np.add(sims, 0.5, out=sims)
-                np.floor(sims, out=sims)
-                for r in range(hi - lo):  # self-pin: exactly 1.0 * 1e6
-                    sims[r, lo + r] = 1e6
-                key = sims * (2.0**24)
-                np.add(key, posval[None, :], out=key)
-                top = np.argpartition(key, n - kk, axis=1)[:, n - kk:]
-                out_q.append(np.repeat(np.arange(lo, hi), kk))
-                out_d.append(top.reshape(-1))
-                # gather the snapped micro scores straight from the block
-                # buffer — the emitted score IS the selection key's score
-                rows = np.arange(hi - lo)[:, None]
-                out_s.append((sims[rows, top] / 1e6).reshape(-1))
-            qpos = np.concatenate(out_q)
-            dpos = np.concatenate(out_d)
-            return pd.DataFrame({
-                "qid": ids[qpos], "qm": mods[qpos],
-                "doc_id": ids[dpos], "modality": mods[dpos],
-                "s": np.concatenate(out_s),
-            })
+            e = _vectors(pdf["embedding"].values)
+            return _pool_rows(ids, mods, ids, mods,
+                              *_top_pool(e, ids, e, ids, pool_k))
 
         cand = members.groupBy("cid").applyInPandas(
-            score_cell,
-            "qid bigint, qm string, doc_id bigint, modality string, "
-            "s double")
+            score_cell, CANDIDATE_SCHEMA)
         if big is not None and not big.isEmpty():
             cand = cand.unionByName(
                 self._block_pair_neighbors(big, pool_k, cap))
@@ -992,15 +1054,15 @@ class IngestPipeline:
         ordering shuffle). A row is replicated r times as a QUERY (once
         per candidate block) and r times as a CANDIDATE (once per query
         block), so task (cid, qb, cb) holds exactly query-block qb and
-        candidate-block cb of its cell: r² bounded dgemm tasks instead of
-        one m² task. Emitted per-query block tops are a superset of the
-        cell-local pool; the caller's ``_balanced_select`` window reduces
-        them under the same (s desc, doc_id asc) key — value-identical to
-        the single-task kernel (pinned by test_build_graph_cells_blocked).
-        The self-pin lands in the qb == cb diagonal task, matched by
-        doc_id rather than position."""
+        candidate-block cb of its cell: r² bounded tasks instead of one
+        m² task, each one call of the shared ``_top_pool`` kernel with
+        its two halves. Emitted per-query block tops are a superset of
+        the cell-local pool; the caller's ``_balanced_select`` window
+        reduces them under the same (s desc, doc_id asc) key —
+        value-identical to the single-task build (pinned by
+        test_build_graph_cells_blocked). The self-pin lands in the
+        qb == cb diagonal task, where ``_top_pool`` matches it by doc_id."""
         import numpy as np
-        import pandas as pd
 
         if cap is None:
             cap = self.cell_rows_cap
@@ -1021,66 +1083,15 @@ class IngestPipeline:
         def score_block(pdf):
             q = pdf[pdf["is_q"]].sort_values("doc_id", kind="stable")
             c = pdf[~pdf["is_q"]].sort_values("doc_id", kind="stable")
-            if q.empty or c.empty:
-                return pd.DataFrame({
-                    "qid": np.array([], dtype=np.int64), "qm": [],
-                    "doc_id": np.array([], dtype=np.int64),
-                    "modality": [], "s": np.array([], dtype=np.float64)})
             qids = q["doc_id"].values.astype(np.int64)
-            qmods = q["modality"].values
-            qe = np.stack([np.asarray(v, dtype=np.float64)
-                           for v in q["embedding"].values])
             cids = c["doc_id"].values.astype(np.int64)
-            cmods = c["modality"].values
-            ce = np.stack([np.asarray(v, dtype=np.float64)
-                           for v in c["embedding"].values])
-            nc = len(cids)
-            if nc >= (1 << 24):
-                raise ValueError(f"candidate block of {nc} rows exceeds "
-                                 "the 2^24 packing bound")
-            qn = np.linalg.norm(qe, axis=1)
-            cn = np.linalg.norm(ce, axis=1)
-            kk = min(pool_k, nc)
-            posval = (2.0**24 - 1.0) - np.arange(nc, dtype=np.float64)
-            # self-pin: for each query, its own row's slot in this block's
-            # candidates (present iff qb == cb), found by binary search
-            pin_lo = np.searchsorted(cids, qids, side="left")
-            pin_hi = np.searchsorted(cids, qids, side="right")
-            nq = len(qids)
-            chunk = max(1, 4_000_000 // max(nc, 1))
-            out_q, out_d, out_s = [], [], []
-            for lo in range(0, nq, chunk):
-                hi = min(lo + chunk, nq)
-                sims = qe[lo:hi] @ ce.T
-                denom = np.maximum(qn[lo:hi, None] * cn[None, :], 1e-12)
-                np.divide(sims, denom, out=sims)
-                np.multiply(sims, 1e6, out=sims)
-                np.add(sims, 0.5, out=sims)
-                np.floor(sims, out=sims)
-                for r_i in range(hi - lo):
-                    a, b = pin_lo[lo + r_i], pin_hi[lo + r_i]
-                    if a < b:
-                        sims[r_i, a:b] = 1e6
-                key = sims * (2.0**24)
-                np.add(key, posval[None, :], out=key)
-                top = np.argpartition(key, nc - kk, axis=1)[:, nc - kk:]
-                out_q.append(np.repeat(np.arange(lo, hi), kk))
-                out_d.append(top.reshape(-1))
-                rows = np.arange(hi - lo)[:, None]
-                out_s.append((sims[rows, top] / 1e6).reshape(-1))
-            qpos = np.concatenate(out_q)
-            dpos = np.concatenate(out_d)
-            return pd.DataFrame({
-                "qid": qids[qpos], "qm": qmods[qpos],
-                "doc_id": cids[dpos], "modality": cmods[dpos],
-                "s": np.concatenate(out_s),
-            })
+            return _pool_rows(
+                qids, q["modality"].values, cids, c["modality"].values,
+                *_top_pool(_vectors(q["embedding"].values), qids,
+                           _vectors(c["embedding"].values), cids, pool_k))
 
         return qrep.unionByName(crep).groupBy("cid", "qb", "cb") \
-            .applyInPandas(
-                score_block,
-                "qid bigint, qm string, doc_id bigint, modality string, "
-                "s double")
+            .applyInPandas(score_block, CANDIDATE_SCHEMA)
 
     def _read_state(self, path: str, schema: str) -> DataFrame:
         """Read a parquet state dir (flat compacted files and/or per-batch
@@ -1670,22 +1681,22 @@ class IngestPipeline:
         return max(4, min(65536, int(round(math.sqrt(n_corpus)))))
 
     def _auto_probes(self, ncent: int) -> int:
-        """Serving probe count. Fixed-centroid mode keeps the configured
-        ``ivf_probes``. Auto (√n) mode probes √ncent = n^¼ cells — with
+        """Serving probe count. Fixed-centroid mode probes ``IVF_PROBES``
+        cells. Auto (√n) mode probes √ncent = n^¼ cells — with
         ~√n-member cells the scanned candidate set is ~n^¾: still
         sublinear per query, but the probed FRACTION (n^-¼) shrinks
         slowly enough to hold recall as the corpus grows, where a fixed
         probe count over √n cells scans a vanishing n^-½ fraction and
-        recall collapses with scale. ``ivf_probes`` stays the floor.
+        recall collapses with scale. ``IVF_PROBES`` stays the floor.
         The 2× constant is measured, not guessed: on Lloyd-refined cells
         at the 5k corpus (71 cells), 1·√ncent probes read recall@10 =
         0.84, 1.5× = 0.90 (the dq120 gauge), 2× = 0.95+ — margin over
         the gauge without changing the n^¾ asymptotic."""
         if self.n_centroids is not None:
-            return self.ivf_probes
+            return IVF_PROBES
         import math
 
-        return max(self.ivf_probes, 2 * math.isqrt(max(ncent, 1)))
+        return max(IVF_PROBES, 2 * math.isqrt(max(ncent, 1)))
 
     @staticmethod
     def _seed_centroids_plan(corpus: DataFrame, ncent: int) -> DataFrame:
@@ -1708,16 +1719,16 @@ class IngestPipeline:
     def _seed_centroids(self, corpus: DataFrame, ncent: int) -> DataFrame:
         return self._seed_centroids_plan(corpus, ncent).transform(pin)
 
-    def _lloyd_refine(self, corpus: DataFrame, cents: DataFrame,
-                      iters: int | None = None) -> DataFrame:
+    def _lloyd_refine(self, corpus: DataFrame,
+                      cents: DataFrame) -> DataFrame:
         """Spherical k-means refinement of the centroid set, REPLAY-EXACT.
 
         Random doc seeds give arbitrary Voronoi cells, and probed recall
         pays for it directly (measured 0.56 recall@10 at probes=√ncent on
         unrefined seeds at the 5k corpus). A few Lloyd iterations
         (assign → per-cell mean) fix the cell geometry for one extra
-        assignment pass each — O(iters · n · ncent) broadcast scoring,
-        bootstrap/re-train cost only, never per-batch.
+        assignment pass each (``LLOYD_ITERS``) — O(iters · n · ncent)
+        broadcast scoring, bootstrap/re-train cost only, never per-batch.
 
         Determinism: a naive ``avg(embedding)`` sums doubles in partition
         order, so a stream replay could compute a bitwise-different mean
@@ -1726,8 +1737,7 @@ class IngestPipeline:
         final division is one IEEE op on identical integers — every
         replay reproduces the centroids bit-for-bit. Cells that lose all
         members keep their previous centroid."""
-        iters = self.lloyd_iters if iters is None else iters
-        for _ in range(iters):
+        for _ in range(LLOYD_ITERS):
             assigned = self._assign(corpus, cents).join(
                 corpus.select("doc_id", "embedding"), "doc_id")
             lanes = assigned.select(
@@ -2224,12 +2234,6 @@ class IngestPipeline:
 
         return route_embedding_local(text, modality)
 
-    def _query_literal(self, text: str, modality: str):
-        """``_query_vec`` as an array literal Column (None stays None) —
-        a one-row query needs no embed job, no broadcast, no cross join."""
-        qv = self._query_vec(text, modality)
-        return None if qv is None else F.lit(qv)
-
     def search_ivf(self, text: str, k: int | None = None,
                    modality: str = "text",
                    probes: int | None = None) -> DataFrame:
@@ -2239,8 +2243,8 @@ class IngestPipeline:
         query touches ~probes/n_centroids of the corpus; falls back to the
         full scan while the index hasn't bootstrapped. With ``warm()``
         state all reads hit the in-memory caches and the existence checks
-        cost nothing. ``probes`` defaults to ``_auto_probes``: the
-        configured ``ivf_probes`` in fixed-centroid mode; √ncent cells
+        cost nothing. ``probes`` defaults to ``_auto_probes``:
+        ``IVF_PROBES`` cells in fixed-centroid mode; √ncent cells
         under auto (√n) sizing — a ~n^¾ candidate set, sublinear per
         query while the probed fraction shrinks slowly enough (n^-¼) to
         hold recall at scale (probe-table evidence in BASELINE.md r9)."""
@@ -2398,7 +2402,6 @@ class IngestPipeline:
     def _probed_corpus(self, qv, probes: int | None = None,
                        require: bool = False,
                        qv_raw: list | None = None,
-                       torn: set[str] | None = None,
                        views: tuple | None = None,
                        warm: dict | None = None,
                        fallback: bool = False) -> DataFrame:
@@ -2413,7 +2416,7 @@ class IngestPipeline:
 
         Cold reads are CONSISTENT against a concurrent writer (see the
         class docstring's reader/writer contract): batches whose write
-        sequence hasn't fully committed are excluded (``torn``), and the
+        sequence hasn't fully committed are excluded (the torn set), and the
         view listings run inside a ``_stable_read`` bracket — equal
         commit fingerprints before and after prove no store commit,
         pointer flip, or re-train landed while the views were being
@@ -2434,8 +2437,6 @@ class IngestPipeline:
         else:
             if views is not None:
                 corpus, cents, idx = views
-            elif torn is not None:
-                corpus, cents, idx = self._probed_views(torn)
             else:
                 corpus, cents, idx = self._stable_read(
                     self._probed_views, fallback=fallback)
@@ -2545,11 +2546,12 @@ class IngestPipeline:
         * **kernel path** (batch ≤ max_collect rows): the query vectors ship
           to every task inside a ``mapInPandas`` closure (broadcast side of a
           broadcast join without the O(batch × corpus) pair table). Each
-          corpus partition does one float64 matmul and emits only rows
-          at-or-above its per-query pool threshold — ties included, so the
-          global per-query window is exact. One corpus scan, ~batch×k*6
-          shuffled candidate rows, vectorized arithmetic (7.3 s → <1 s per
-          sf0.1 batch).
+          scored block of a corpus partition is one call of the shared
+          ``_top_pool`` dgemm kernel and emits exactly each query's top
+          ``pool_k`` of that block by (s desc, doc_id asc) — the order
+          ``_balanced_select`` ranks by, so the global per-query window
+          is exact. One corpus scan, ~batch×k*6 shuffled candidate rows,
+          vectorized arithmetic (7.3 s → <1 s per sf0.1 batch).
         * **chunked kernel path** (fat batch): the SAME kernel, applied to
           query chunks of ``max_collect`` rows — each chunk's driver
           collect stays bounded, queries are independent so the union of
@@ -2571,10 +2573,11 @@ class IngestPipeline:
             n_queries = fresh.count()
         if n_queries == 0:
             return self.spark.createDataFrame(
-                [], "qid bigint, qm string, doc_id bigint, modality string, "
-                    "s double, rn int")
+                [], CANDIDATE_SCHEMA + ", rn int")
         # Candidate emission is P x pool_k x Q (each partition's local
-        # top-pool_k per query), so partition count P — not corpus size —
+        # top-pool_k per query; a partition past
+        # spark.sql.execution.arrow.maxRecordsPerBatch rows counts once
+        # per Arrow batch), so partition count P — not corpus size —
         # drives the shuffle into the selection windows. Right-size P to
         # ~100k corpus rows per partition: a small/freshly-bootstrapped
         # corpus collapses to a handful of partitions (32 -> 1 at sf0.1,
@@ -2631,150 +2634,70 @@ class IngestPipeline:
                     pool_k: int, finish_k: int | None = None) -> DataFrame:
         """Vectorized candidate scorer; bounded collect (≤ max_collect).
 
+        The query vectors ship to every task inside the ``mapInPandas``
+        closure, and each scored block of corpus rows is one call of the
+        shared ``_top_pool`` kernel (the cells build's scorer too), which
+        emits exactly each query's top ``pool_k`` of that block by
+        (s desc, doc_id asc). ``mapInPandas`` hands a partition over in
+        Arrow batches of spark.sql.execution.arrow.maxRecordsPerBatch
+        rows, and each batch is scored as its own block.
+
         With ``finish_k`` (only valid on a single-partition corpus scan) the
         kernel also applies the modality-quota selection per query and emits
         the final ranked top-``finish_k`` rows — semantically identical to
-        ``_balanced_select`` over the same pool, minus its shuffle.
-
-        Memory discipline (round-8, from a measured profile): the score
-        matrix is computed QUERY-BLOCK at a time into one reused buffer
-        with queries as ROWS — a fresh (corpus × queries) allocation per
-        numpy op page-faults gigabytes (a 50k×4096 matmul measured 10 s
-        freshly-allocated vs 0.5 s blocked into a reused buffer), and
-        axis-0 selection on a C-order matrix strides the whole row width
-        per element. Every full-matrix op is in-place; per-query state
-        (pin, pool, quotas) lives in (block × pool) arrays.
+        ``_balanced_select`` over the same pool, minus its shuffle. That
+        finish is a quota pass over ``_top_pool``'s rank-ordered output.
         """
         import numpy as np
         import pandas as pd
 
         qrows = fresh.select("doc_id", "modality", "embedding").collect()
         qids = np.array([r.doc_id for r in qrows], dtype=np.int64)
-        qms = [r.modality for r in qrows]
-        qmat = np.stack([np.asarray(r.embedding, dtype=np.float64)
-                         for r in qrows])
-        # zero-norm guard: an all-zero embedding scores 0 everywhere instead
-        # of NaN (NaN compares false and silently vanishes from top-k)
-        qn = qmat / np.maximum(
-            np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12)
-        QBLOCK = 1024
+        qms = np.array([r.modality for r in qrows], dtype=object)
+        qmat = _vectors([r.embedding for r in qrows])
+        half = (finish_k or 0) // 2
 
         def score(batches):
             if finish_k is not None:
                 # The balanced finish needs the ENTIRE partition as one pool:
-                # mapInPandas splits a partition into Arrow batches of
-                # spark.sql.execution.arrow.maxRecordsPerBatch rows, and an
-                # independent "final" top-k per batch would emit duplicate
-                # (qid, rn) rows. Concatenate first — this path is gated to a
-                # single coalesced partition of < 200k rows, so the corpus
-                # matrix is bounded (~800 MB float64 at dim 512).
+                # an independent "final" top-k per Arrow batch would emit
+                # duplicate (qid, rn) rows. Concatenate first — this path is
+                # gated to a single coalesced partition of < 200k rows, so
+                # the corpus matrix is bounded (~800 MB float64 at dim 512).
                 whole = [b for b in batches if len(b)]
                 batches = [pd.concat(whole, ignore_index=True)] if whole else []
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                # row position IS the doc_id tie-break for the composite
-                # key below, and sorted docs enable the binary-search pin
                 pdf = pdf.sort_values("doc_id", kind="stable")
-                c = np.stack([np.asarray(v, dtype=np.float64)
-                              for v in pdf["embedding"].values])
-                cn = c / np.maximum(
-                    np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
                 docs = pdf["doc_id"].values.astype(np.int64)
                 mods = pdf["modality"].values
-                qarr = np.array(qms, dtype=object)
-                n, nq = cn.shape[0], qn.shape[0]
-                # position term fits 24 bits: partitions are bounded far
-                # below 16.7M rows (finish path < 200k by the coalesce
-                # gate; scan partitions by maxPartitionBytes)
-                if n >= (1 << 24):
-                    raise ValueError(f"partition of {n} rows exceeds the "
-                                     "2^24 packing bound")
-                # self-pin (main.py:223-224) via binary search on the
-                # sorted docs — the old n×q equality matrix was a full
-                # extra pass. [lo, hi) covers duplicate doc_ids too.
-                pin_lo = np.searchsorted(docs, qids, side="left")
-                pin_hi = np.searchsorted(docs, qids, side="right")
-                pk = min(pool_k, n)
-                posval = (2.0**24 - 1.0) - np.arange(n, dtype=np.float64)
-                buf = np.empty((min(QBLOCK, nq), n))
-                half = (finish_k or 0) // 2
-                for lo in range(0, nq, QBLOCK):
-                    hi = min(lo + QBLOCK, nq)
-                    b = hi - lo
-                    blk = buf[:b]
-                    np.dot(qn[lo:hi], cn.T, out=blk)
-                    # floor snap, not np.round: half-to-even vs the join
-                    # path's half-up can rank a .xxxxxx5 cosine tie
-                    # differently between two paths the kernel≡join
-                    # contract promises identical. blk now holds s_int —
-                    # the snapped score on the micro grid (integer-valued,
-                    # |s_int| <= 1e6)
-                    np.multiply(blk, 1e6, out=blk)
-                    np.add(blk, 0.5, out=blk)
-                    np.floor(blk, out=blk)
-                    for j in np.nonzero(pin_hi[lo:hi] > pin_lo[lo:hi])[0]:
-                        blk[j, pin_lo[lo + j]:pin_hi[lo + j]] = 1e6
-                    if finish_k is None:
-                        # partition-local pool: emit every row at-or-above
-                        # the query's pk-th score — ties included, so the
-                        # global per-query window downstream stays exact
-                        if pk < n:
-                            thresh = np.partition(
-                                blk, n - pk, axis=1)[:, n - pk]
-                            qi, ci = np.nonzero(blk >= thresh[:, None])
-                        else:
-                            qi = np.repeat(np.arange(b), n)
-                            ci = np.tile(np.arange(n), b)
-                        yield pd.DataFrame({
-                            "qid": qids[lo + qi],
-                            "qm": qarr[lo + qi],
-                            "doc_id": docs[ci],
-                            "modality": mods[ci],
-                            "s": blk[qi, ci] / 1e6,
-                        })
-                        continue
-                    # in-task balanced finish: the composite float64 key
-                    # s_int·2^24 + (2^24-1-position) totally orders each
-                    # query's candidates by (s desc, doc_id asc) with NO
-                    # ties and stays integer-exact (|key| < 2^45 < 2^53).
-                    # Row-wise argpartition + a pool-sized argsort replace
-                    # the old full column sort. Cumulative same/cross
-                    # counts then apply the k//2 quotas and the final
-                    # top-k; surviving rows are already in rank order —
-                    # byte-for-byte what _balanced_select computes.
-                    np.multiply(blk, 2.0**24, out=blk)
-                    np.add(blk, posval, out=blk)
-                    np.negative(blk, out=blk)
-                    if pk < n:
-                        part = np.argpartition(blk, pk - 1, axis=1)[:, :pk]
-                    else:
-                        part = np.broadcast_to(
-                            np.arange(n), (b, n)).copy()
-                    sub = np.take_along_axis(blk, part, axis=1)
-                    order = np.argsort(sub, axis=1)
-                    top = np.take_along_axis(part, order, axis=1)  # (b, pk)
-                    keyval = -np.take_along_axis(sub, order, axis=1)
-                    s_top = np.floor(keyval / 2.0**24) / 1e6
-                    same = mods[top] == qarr[lo:hi, None]
-                    cs = np.cumsum(same, axis=1)
-                    cc = np.cumsum(~same, axis=1)
-                    kept = np.where(same, cs <= half, cc <= half)
-                    fin = kept & (np.cumsum(kept, axis=1) <= finish_k)
-                    rn = np.cumsum(fin, axis=1)
-                    qi, pi = np.nonzero(fin)
-                    rows = top[qi, pi]
-                    yield pd.DataFrame({
-                        "qid": qids[lo + qi],
-                        "qm": qarr[lo + qi],
-                        "doc_id": docs[rows],
-                        "modality": mods[rows],
-                        "s": s_top[qi, pi],
-                        "rn": rn[qi, pi].astype("int32"),
-                    })
+                cmat = _vectors(pdf["embedding"].values)
+                top, s = _top_pool(qmat, qids, cmat, docs, pool_k)
+                if finish_k is None:
+                    yield _pool_rows(qids, qms, docs, mods, top, s)
+                    continue
+                # quota pass over each query's rank-ordered pool: cumulative
+                # same/cross counts apply the k//2 quotas and the final
+                # top-k; surviving rows are already in rank order —
+                # byte-for-byte what _balanced_select computes
+                same = mods[top] == qms[:, None]
+                kept = np.where(same, np.cumsum(same, axis=1) <= half,
+                                np.cumsum(~same, axis=1) <= half)
+                fin = kept & (np.cumsum(kept, axis=1) <= finish_k)
+                rn = np.cumsum(fin, axis=1)
+                qi, pi = np.nonzero(fin)
+                rows = top[qi, pi]
+                yield pd.DataFrame({
+                    "qid": qids[qi],
+                    "qm": qms[qi],
+                    "doc_id": docs[rows],
+                    "modality": mods[rows],
+                    "s": s[qi, pi],
+                    "rn": rn[qi, pi].astype("int32"),
+                })
 
-        schema = ("qid bigint, qm string, doc_id bigint, modality string, "
-                  "s double")
+        schema = CANDIDATE_SCHEMA
         if finish_k is not None:
             schema += ", rn int"
         return corpus.mapInPandas(score, schema=schema)
@@ -2847,7 +2770,7 @@ class IngestPipeline:
         double every member row and the downstream per-query rank would
         count candidates twice.
         """
-        probes = probes or self.ivf_probes
+        probes = probes or IVF_PROBES
 
         def maybe_b(df: DataFrame) -> DataFrame:
             return F.broadcast(df) if broadcast_queries else df
@@ -3067,9 +2990,7 @@ class IngestPipeline:
                                           require=(route == "ivf"),
                                           qv_raw=vec, views=captured))
         if qv is None:
-            cand = self.spark.createDataFrame(
-                [], "qid bigint, qm string, doc_id bigint, modality string, "
-                    "s double")
+            cand = self.spark.createDataFrame([], CANDIDATE_SCHEMA)
         else:
             cand = corpus.select(
                 F.lit(-1).cast("bigint").alias("qid"),
