@@ -20,6 +20,23 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from multi_model_vectorsearch_spark import dq, get_spark, load_tables  # noqa: E402
 
+# The result line is parsed from the last 2,000 characters of stdout; a
+# longer line loses its head and fails the parse.
+RESULT_LINE_MAX = 2000
+
+
+def result_line(line: dict) -> str:
+    """``line`` as the one-line JSON result. Raises when it would not fit
+    in ``RESULT_LINE_MAX`` characters, since the printed key set only
+    grows and a clipped line fails the parse without saying why."""
+    out = json.dumps(line, separators=(",", ":"))
+    if len(out) >= RESULT_LINE_MAX:
+        raise ValueError(
+            f"result line is {len(out)} characters; it must stay under "
+            f"{RESULT_LINE_MAX} to survive the stdout capture: trim the "
+            "printed key set (every timing is in bench_full.json)")
+    return out
+
 
 def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
@@ -427,7 +444,7 @@ def main() -> None:
                    "retries": retries,
                    "cache_builders": sorted(cache_builders), **labels}, fh,
                   indent=1, sort_keys=True)
-    print(json.dumps(line, separators=(",", ":")))
+    print(result_line(line))
 
 
 if __name__ == "__main__":

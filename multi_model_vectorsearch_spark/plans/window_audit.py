@@ -120,8 +120,9 @@ SERVING_WINDOW_CLASS: dict[str, tuple[str, str]] = {
     "ingest.centroid_seeds": (
         "driver-bounded",
         "cid numbering window over the post-LIMIT ncent≈√n seed rows — "
-        "ingest._seed_centroids_plan (both bootstrap modes share the "
-        "shape: TakeOrdered bounds the input before the window)"),
+        "ingest._seed_centroids_plan, the auto-sized seeds (TakeOrdered "
+        "bounds the input before the window; fixed-mode seeds are "
+        "numbered on the driver, with no window)"),
 }
 
 

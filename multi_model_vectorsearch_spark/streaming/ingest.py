@@ -45,7 +45,7 @@ import re
 import threading
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
 from multi_model_vectorsearch_spark.checkpointing import pin, pin_lazy
@@ -176,6 +176,31 @@ def _pool_rows(qids, qms, cids, cms, top, s):
     return pd.DataFrame({"qid": qids[qi], "qm": qms[qi],
                          "doc_id": cids[ci], "modality": cms[ci],
                          "s": s.reshape(-1)})
+
+
+def _assign_kernel(e, cmat):
+    """Row position in ``cmat`` (centroids sorted by cid) of each row of
+    ``e``'s nearest centroid — the one scorer of ``_assign`` and every
+    Lloyd pass. Float64 matmul cosine over the norm product (floored at
+    1e-12), snapped by snap_double's numpy twin (its /1e6 is
+    argmax-invariant and skipped); np.argmax takes the FIRST maximum, so
+    ties go to the lowest cid. Chunked: the score buffer stays ≤ ~32 MB."""
+    import numpy as np
+
+    cnorm = np.linalg.norm(cmat, axis=1)
+    en = np.linalg.norm(e, axis=1)
+    out = np.empty(len(e), dtype=np.int64)
+    chunk = max(1, 4_000_000 // max(len(cmat), 1))
+    for lo in range(0, len(e), chunk):
+        hi = min(lo + chunk, len(e))
+        sims = e[lo:hi] @ cmat.T
+        np.divide(sims, np.maximum(en[lo:hi, None] * cnorm[None, :], 1e-12),
+                  out=sims)
+        np.multiply(sims, 1e6, out=sims)
+        np.add(sims, 0.5, out=sims)
+        np.floor(sims, out=sims)
+        out[lo:hi] = sims.argmax(axis=1)
+    return out
 
 
 class StateCommitStormError(RuntimeError):
@@ -796,17 +821,19 @@ class IngestPipeline:
             raise ValueError(f"unknown method {method!r}")
         self.check_writer_fence()
         key = key or self._next_key("g", root=self.edges_dir)
-        neighbors = self._build_graph_neighbors(probes, method=method)
+        crows, cells = self._live_ivf()
+        neighbors = self._build_graph_neighbors(probes, method=method,
+                                                crows=crows)
         self.unwarm()  # the edge append invalidates any warm snapshot
         self.check_writer_fence()  # pre-commit re-check (scoring ran)
         self.build_edges(neighbors).write.mode("overwrite").parquet(
             self._bdir(self.edges_dir, key))
-        if not self.ivf_index().isEmpty():
+        if cells:
             # record the cell-membership states as of this build (every
             # doc's neighborhood was just scored, whatever the method),
             # so a later refresh_edges() diffs and re-scores only cells
             # that move AFTER this point
-            self._write_edge_manifest()
+            self._write_edge_manifest(cells)
         return key
 
     # --- incremental edge refresh (round-12) ---------------------------------
@@ -846,8 +873,14 @@ class IngestPipeline:
                     F.collect_list("doc_id")))).alias("mh"))
                 .collect())
 
-    def _write_edge_manifest(self, rows: list | None = None) -> None:
-        rows = rows if rows is not None else self._cell_membership()
+    def _live_ivf(self) -> tuple[list, list]:
+        """``(centroid rows, cell membership)`` of the live IVF index, or
+        ``([], [])``; the membership job doubles as the has-members test."""
+        crows = self._centroid_rows()
+        cells = self._cell_membership() if crows else []
+        return (crows, cells) if cells else ([], [])
+
+    def _write_edge_manifest(self, rows: list) -> None:
         self.fs.write_text(
             self._edge_manifest_path,
             "\n".join(str(r.mh) for r in
@@ -947,25 +980,26 @@ class IngestPipeline:
                 "refreshed_docs": int(n_docs), "edge_rows": int(n)}
 
     def _build_graph_neighbors(self, probes: int | None = None,
-                               method: str = "auto") -> DataFrame:
+                               method: str = "auto",
+                               crows: list | None = None) -> DataFrame:
         """The neighbor-selection plan behind ``build_graph`` — exposed so
         the serving-plan window audit (plans/window_audit.py) walks the
         actual plan the bulk build executes. All its windows partition by
         qid (balanced selection, qcells top-p), so the partitionless
-        audit expects zero here."""
+        audit expects zero here. ``crows``: ``_live_ivf``'s centroid
+        rows, read here when ``None``."""
         corpus = self.corpus().transform(pin_lazy)
         n = corpus.count()
-        cents = self.centroids()
-        idx = self.ivf_index()
-        if method in ("ivf", "cells") and (cents.isEmpty()
-                                           or idx.isEmpty()):
+        if crows is None:
+            crows = self._live_ivf()[0]
+        if method in ("ivf", "cells") and not crows:
             raise ValueError(f"method={method!r} requires a live IVF index")
         if method == "cells":
             return self._within_cell_neighbors(corpus, n_total=n)
-        if method == "exact" or cents.isEmpty() or idx.isEmpty():
+        if method == "exact" or not crows:
             return self.knn_against_corpus(corpus, n_queries=n)
         cand = self._knn_join_ivf(
-            corpus, corpus, cents.transform(pin), idx, probes=probes,
+            corpus, corpus, crows, self.ivf_index(), probes=probes,
             broadcast_queries=False, include_fresh_assignment=False)
         return self._balanced_select(cand, self.k, self.k * OVERFETCH)
 
@@ -1133,9 +1167,15 @@ class IngestPipeline:
                 parts.append(self.fs.join(phys, entry))
         return parts
 
+    def _empty(self, schema: str) -> DataFrame:
+        """A typed empty frame over zero partitions (``createDataFrame([])``
+        runs a Python task per default-parallelism slice, ~2 s at 32)."""
+        return self.spark.createDataFrame(
+            self.spark.sparkContext.emptyRDD(), schema)
+
     def _read_parts(self, parts: list[str], schema: str) -> DataFrame:
         if not parts:
-            return self.spark.createDataFrame([], schema)
+            return self._empty(schema)
         return (self.spark.read.schema(schema)
                 .option("recursiveFileLookup", "true").parquet(*parts))
 
@@ -1270,7 +1310,7 @@ class IngestPipeline:
                 fresh, n_queries=n_fresh).transform(pin)
             edges = self.build_edges(neighbors)
         else:
-            edges = self.spark.createDataFrame([], EDGE_SCHEMA)
+            edges = self._empty(EDGE_SCHEMA)
         self.check_writer_fence()  # pre-commit re-check (KNN ran between)
         edges.write.mode("overwrite").parquet(
             self._bdir(self.edges_dir, key))
@@ -1280,13 +1320,6 @@ class IngestPipeline:
             self._update_neardup(batch, fresh, key)
 
     # --- state maintenance ---------------------------------------------------
-
-    def _write_committed(self, root: str, key: str) -> bool:
-        """True iff batch ``key``'s write to ``root`` completed — parquet
-        writes drop a ``_SUCCESS`` marker on job commit, so a directory
-        torn mid-write (or never written) reads as uncommitted."""
-        return self.fs.isfile(self.fs.join(self._bdir(root, key),
-                                           "_SUCCESS"))
 
     def _write_committed_root(self, path: str) -> bool:
         """True iff ``path`` (a PHYSICAL directory — a resolved root or a
@@ -1503,12 +1536,12 @@ class IngestPipeline:
 
     def _heal_index_holes(self, torn: set[str]) -> dict[str, int]:
         """Assign committed-but-unindexed corpus rows (left-anti of corpus
-        against the index) with the current centroids and append. Torn
-        batches' rows are excluded — a stream replay will write its own
-        per-batch assignment, and double-indexing a doc would duplicate
-        its candidate rows in the probed scorers."""
-        cents = self.centroids()
-        if cents.isEmpty():
+        against the index) with the current centroids (one read) and
+        append. Torn batches' rows are excluded — a stream replay will
+        write its own per-batch assignment, and double-indexing a doc
+        would duplicate its candidate rows in the probed scorers."""
+        crows = self._centroid_rows()
+        if not crows:
             return {}
         committed = self._read_state_excluding_keys(
             self.corpus_dir, CORPUS_SCHEMA, torn)
@@ -1519,7 +1552,7 @@ class IngestPipeline:
         if n == 0:
             return {"ivf_healed": 0}
         self.check_writer_fence()  # pre-commit re-check
-        self._assign(missing, cents).write.mode("append").parquet(
+        self._assign(missing, crows).write.mode("append").parquet(
             self._phys(self.index_dir))
         return {"ivf_healed": n}
 
@@ -1568,103 +1601,57 @@ class IngestPipeline:
 
     # --- incremental IVF index maintenance ---------------------------------
 
-    # Below this centroid count, assignment routes to the Arrow kernel:
-    # the JVM expression path evaluates an interpreted (no-codegen)
-    # higher-order cosine per docs×cents candidate, which is the right
-    # cost at fixed-mode scale (8 cells) but dominates bootstrap at √n
-    # sizing — a 5M-doc bootstrap is ~1.1e10 interpreted evals per Lloyd
-    # pass. The threshold is a deterministic function of the input, so a
-    # stream replay always re-picks the path the original attempt took.
-    ASSIGN_KERNEL_MIN_CENTS = 64
+    # Each upkeep call reads the centroid set ONCE into driver rows sorted
+    # by cid (≤ 65536 cells, ~8 MB at dim 16) and scores with one kernel.
 
-    def _assign(self, docs: DataFrame, cents: DataFrame) -> DataFrame:
+    def _centroid_rows(self) -> list:
+        """The live centroid set as driver rows sorted by cid (``[]``
+        before bootstrap) — one job that serves as the caller's emptiness
+        test, centroid count and assignment input."""
+        return sorted(self.centroids().collect(), key=lambda r: r.cid)
+
+    def _centroid_frame(self, crows: list) -> DataFrame:
+        """Driver rows as a frame, via pandas: Arrow ships them with no
+        Python task (a row list costs one per parallelism slice)."""
+        import numpy as np
+        import pandas as pd
+
+        return self.spark.createDataFrame(pd.DataFrame({
+            "cid": np.array([r.cid for r in crows], dtype=np.int32),
+            "cvec": [list(r.cvec) for r in crows]}), CENTROID_SCHEMA)
+
+    def _write_centroids(self, crows: list, path: str) -> None:
+        self._centroid_frame(crows).coalesce(1).write.mode(
+            "overwrite").parquet(path)  # one file
+
+    def _assign(self, docs: DataFrame, crows: list) -> DataFrame:
         """Nearest-centroid assignment — (doc_id, cid), one row per doc.
 
-        Tiebreak everywhere: highest snapped cosine, then lowest cid.
-        Routes by centroid count: small sets (fixed mode's 8) keep the
-        JVM expression plan; √n-sized sets take the numpy kernel, whose
-        per-pair cost is a fused matmul lane instead of an interpreted
-        expression tree. The centroid set is collected either way —
-        bounded by the 65536-cell cap (~8 MB at dim 16) and already
-        driver-built at bootstrap. Kernel vs JVM agreement: both snap
-        through snap_double's exact op sequence in float64; the dot/norm
-        SUMMATION order differs (sequential fold vs pairwise matmul), a
-        ≤ few-ulp difference the 1e-6 snap absorbs except exactly on a
-        bucket boundary — pinned row-identical on the fixture corpora by
-        test_assign_kernel_matches_join, and immaterial to serving
-        semantics (an assignment is an index routing choice, and each
-        path is deterministic, so replays reproduce state bit-for-bit)."""
-        crows = cents.collect()
-        if len(crows) < self.ASSIGN_KERNEL_MIN_CENTS:
-            # rebuild the tiny broadcast frame from the collected rows so
-            # the centroid plan executes exactly once per call (not once
-            # for the route decision and again inside the broadcast join)
-            cents_local = self.spark.createDataFrame(crows, cents.schema)
-            return self._assign_join(docs, cents_local)
-        return self._assign_kernel(docs, crows)
-
-    def _assign_join(self, docs: DataFrame, cents: DataFrame) -> DataFrame:
-        """JVM expression path: broadcast the tiny centroid set, take the
-        per-doc argmax with a map-side-combining aggregate. A row_number
-        window here would move every docs×cents candidate row through an
-        exchange; ``max_by`` folds each doc's ncent candidates to ONE
-        partial row before the shuffle, since the broadcast cross join
-        produces all of a doc's candidates inside one task."""
-        sims = docs.select("doc_id", "embedding").crossJoin(
-            F.broadcast(cents)).select(
-            "doc_id", "cid",
-            snap_double(cosine_similarity(F.col("embedding"), F.col("cvec")))
-            .alias("cs"),
-        )
-        return sims.groupBy("doc_id").agg(
-            F.max_by("cid", F.struct(F.col("cs"), (-F.col("cid")).alias("nc")))
-            .alias("cid"))
-
-    def _assign_kernel(self, docs: DataFrame, crows: list) -> DataFrame:
-        """Arrow kernel path: centroids ride the mapInPandas closure (the
-        same broadcast-into-closure pattern as ``_knn_kernel``); each
-        worker scores its Arrow batch against the centroid matrix in one
-        float64 matmul, snaps via snap_double's numpy twin, and emits the
-        argmax row. Rows are chunked so the score buffer stays ≤ ~32 MB
-        regardless of centroid count. Tie-break: centroids are sorted by
-        cid ascending, and np.argmax returns the FIRST maximum — lowest
-        cid on equal snapped scores, the JVM path's exact rule."""
+        ``crows`` (the caller's one centroid read, sorted here because the
+        tie-break reads row order) ride the ``mapInPandas`` closure, and
+        ``_assign_kernel`` scores each Arrow batch: highest snapped
+        cosine, then lowest cid. Deterministic, so replays reproduce the
+        index bit for bit. Row-identical to a JVM cosine plan on the
+        fixture corpora (test_assign_kernel_matches_join): only the
+        dot/norm summation order differs, a few-ulp gap the 1e-6 snap
+        absorbs except exactly on a bucket boundary."""
         import numpy as np
         import pandas as pd
 
         crows = sorted(crows, key=lambda r: r.cid)
         cids = np.array([r.cid for r in crows], dtype=np.int32)
-        cmat = np.stack([np.asarray(r.cvec, dtype=np.float64)
-                         for r in crows])
-        cnorm = np.maximum(np.linalg.norm(cmat, axis=1), 0.0)
-        chunk = max(1, 4_000_000 // max(len(crows), 1))
+        cmat = _vectors([r.cvec for r in crows])
 
         def assign(batches):
             for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                e = np.stack([np.asarray(v, dtype=np.float64)
-                              for v in pdf["embedding"].values])
-                en = np.linalg.norm(e, axis=1)
-                ids = pdf["doc_id"].values.astype(np.int64)
-                out = np.empty(len(pdf), dtype=np.int64)
-                for lo in range(0, len(pdf), chunk):
-                    hi = min(lo + chunk, len(pdf))
-                    sims = e[lo:hi] @ cmat.T
-                    denom = np.maximum(
-                        en[lo:hi, None] * cnorm[None, :], 1e-12)
-                    np.divide(sims, denom, out=sims)
-                    # snap_double numpy twin (fixedpoint.py contract):
-                    # same three IEEE ops; the /1e6 is argmax-invariant
-                    np.multiply(sims, 1e6, out=sims)
-                    np.add(sims, 0.5, out=sims)
-                    np.floor(sims, out=sims)
-                    out[lo:hi] = sims.argmax(axis=1)
-                yield pd.DataFrame(
-                    {"doc_id": ids, "cid": cids[out].astype(np.int32)})
+                if len(pdf):
+                    yield pd.DataFrame({
+                        "doc_id": pdf["doc_id"].values.astype(np.int64),
+                        "cid": cids[_assign_kernel(
+                            _vectors(pdf["embedding"].values), cmat)]})
 
         return docs.select("doc_id", "embedding").mapInPandas(
-            assign, "doc_id bigint, cid int")
+            assign, INDEX_SCHEMA)
 
     def _target_centroids(self, n_corpus: int) -> int:
         """Centroid count the index SHOULD have at ``n_corpus`` docs.
@@ -1716,49 +1703,68 @@ class IngestPipeline:
             F.col("embedding").alias("cvec"),
         )
 
-    def _seed_centroids(self, corpus: DataFrame, ncent: int) -> DataFrame:
-        return self._seed_centroids_plan(corpus, ncent).transform(pin)
-
-    def _lloyd_refine(self, corpus: DataFrame,
-                      cents: DataFrame) -> DataFrame:
-        """Spherical k-means refinement of the centroid set, REPLAY-EXACT.
+    def _lloyd_refine(self, corpus: DataFrame, crows: list) -> list:
+        """Spherical k-means refinement of the driver-held seed rows
+        ``crows``, REPLAY-EXACT; returns the refined rows sorted by cid.
 
         Random doc seeds give arbitrary Voronoi cells, and probed recall
         pays for it directly (measured 0.56 recall@10 at probes=√ncent on
-        unrefined seeds at the 5k corpus). A few Lloyd iterations
-        (assign → per-cell mean) fix the cell geometry for one extra
-        assignment pass each (``LLOYD_ITERS``) — O(iters · n · ncent)
-        broadcast scoring, bootstrap/re-train cost only, never per-batch.
+        unrefined seeds at the 5k corpus). ``LLOYD_ITERS`` iterations
+        (assign → per-cell mean) fix the cell geometry — bootstrap and
+        re-train cost only, never per-batch. Each iteration is ONE fused
+        ``mapInPandas`` pass over the corpus: ``_assign_kernel`` assigns
+        each Arrow batch, each task emits count and lane sums for its
+        non-empty cells only, and one cid-keyed aggregation folds the
+        partials, so the driver receives one row per non-empty cell.
 
-        Determinism: a naive ``avg(embedding)`` sums doubles in partition
-        order, so a stream replay could compute a bitwise-different mean
-        and flip assignments. Lane values are instead quantized to a 1e-9
-        grid and summed as BIGINTs (exact, order-free), and the single
-        final division is one IEEE op on identical integers — every
-        replay reproduces the centroids bit-for-bit. Cells that lose all
-        members keep their previous centroid."""
+        Determinism: summing doubles depends on partition order, so a
+        replay could compute a bitwise-different mean. Lanes are instead
+        quantized, ``floor(x·1e9 + 0.5)``, and summed as int64 (exact,
+        order-free), and the new lane is ``sx / n / 1e9`` — two IEEE
+        divisions on identical integers, so replays reproduce the
+        centroids bit for bit. Empty cells keep their previous vector."""
+        import numpy as np
+        import pandas as pd
+
+        crows = sorted(crows, key=lambda r: r.cid)
+        zero = F.array_repeat(F.lit(0).cast("bigint"), len(crows[0].cvec))
         for _ in range(LLOYD_ITERS):
-            assigned = self._assign(corpus, cents).join(
-                corpus.select("doc_id", "embedding"), "doc_id")
-            lanes = assigned.select(
-                "cid", F.posexplode("embedding").alias("pos", "x"))
-            sums = lanes.groupBy("cid", "pos").agg(
-                F.sum(F.floor(F.col("x") * 1e9 + F.lit(0.5)).cast("bigint"))
-                .alias("sx"),
-                F.count("*").alias("n"),
-            )
-            new = (
-                sums.groupBy("cid")
-                .agg(F.array_sort(F.collect_list(F.struct(
-                    "pos",
-                    (F.col("sx") / F.col("n") / F.lit(1e9)).alias("m"),
-                ))).alias("pm"))
-                .select("cid", F.transform("pm", lambda s: s.m).alias("cvec"))
-            )
-            cents = new.unionByName(
-                cents.join(new.select("cid"), "cid", "left_anti")
-            ).transform(pin)
-        return cents
+            cids = np.array([r.cid for r in crows], dtype=np.int32)
+            cmat = _vectors([r.cvec for r in crows])
+
+            def partials(batches, cids=cids, cmat=cmat):
+                n = np.zeros(len(cids), dtype=np.int64)
+                sx = np.zeros(cmat.shape, dtype=np.int64)
+                for pdf in (b for b in batches if len(b)):
+                    e = _vectors(pdf["embedding"].values)
+                    a = _assign_kernel(e, cmat)
+                    n += np.bincount(a, minlength=len(cids))
+                    np.add.at(sx, a, np.floor(e * 1e9 + 0.5).astype(np.int64))
+                live = np.nonzero(n)[0]
+                if len(live):
+                    yield pd.DataFrame({"cid": cids[live], "n": n[live],
+                                        "sx": list(sx[live])})
+
+            sums = {r.cid: r for r in (
+                corpus.select("embedding")
+                .mapInPandas(partials, "cid int, n bigint, sx array<bigint>")
+                .groupBy("cid")
+                .agg(F.sum("n").alias("n"),
+                     F.aggregate(F.collect_list("sx"), zero,
+                                 lambda acc, x: F.zip_with(
+                                     acc, x, lambda a, b: a + b)).alias("sx"))
+                .collect())}
+            crows = [Row(cid=r.cid, cvec=(
+                np.array(sums[r.cid].sx, dtype=np.int64).astype(np.float64)
+                / float(sums[r.cid].n) / 1e9).tolist())
+                if r.cid in sums else r for r in crows]
+        return crows
+
+    def _train_centroids(self, corpus: DataFrame, n_corpus: int) -> list:
+        """Auto-sized centroid rows: hash-ordered seeds, Lloyd-refined —
+        deterministic in the corpus (bootstrap, re-train, ``retrain()``)."""
+        return self._lloyd_refine(corpus, self._seed_centroids_plan(
+            corpus, self._target_centroids(n_corpus)).collect())
 
     def _update_index(self, fresh: DataFrame, key: str = "b0") -> None:
         """Keep a coarse IVF index in sync with the corpus as it grows.
@@ -1772,28 +1778,25 @@ class IngestPipeline:
         checks the corpus/centroid ratio and re-trains (``_retrain``) when
         the ideal count reaches 2× the active one — so re-trains happen
         O(log n) times over the corpus's life, each a full reassignment.
+        One centroid read per call (``_centroid_rows``) decides bootstrap,
+        counts cells for the trigger and feeds every assignment.
         """
         self._finish_pending_retrain()
-        cents = self.centroids()
-        if cents.isEmpty():
+        crows = self._centroid_rows()
+        if not crows:
             corpus = self.corpus()
             n_corpus = corpus.count()
             if n_corpus < self.ivf_bootstrap:
                 return
             if self.n_centroids is not None:
                 # fixed mode keeps the pre-r9 lowest-doc_id seeds (pinned
-                # by the replay tests' state expectations)
-                seeds = corpus.orderBy("doc_id").limit(self.n_centroids)
-                ws = Window.orderBy("doc_id")  # n_centroids rows — tiny
-                cents = seeds.select(
-                    (F.row_number().over(ws) - 1).cast("int").alias("cid"),
-                    F.col("embedding").alias("cvec"),
-                ).transform(pin)
+                # by the replay tests' state expectations), numbered in
+                # doc_id order
+                crows = [Row(cid=i, cvec=r.embedding) for i, r in enumerate(
+                    corpus.orderBy("doc_id").limit(self.n_centroids)
+                    .select("embedding").collect())]
             else:
-                cents = self._lloyd_refine(
-                    corpus,
-                    self._seed_centroids(
-                        corpus, self._target_centroids(n_corpus)))
+                crows = self._train_centroids(corpus, n_corpus)
             # Write order: index ROOT → centroids → per-batch assignment.
             # The three writes are not atomic, and search_ivf gates probing
             # on centroids-present — root-before-centroids makes
@@ -1815,17 +1818,15 @@ class IngestPipeline:
             prev = self._read_state_excluding(
                 self.corpus_dir, CORPUS_SCHEMA, key)
             self.check_writer_fence()  # pre-commit re-check (Lloyd ran)
-            self._assign(prev, cents).write.mode(
+            self._assign(prev, crows).write.mode(
                 "overwrite").parquet(self._phys(self.index_dir))
-            cents.write.mode("overwrite").parquet(
-                self._phys(self.centroids_dir))
-            self._assign(fresh, cents).write.mode("overwrite").parquet(
+            self._write_centroids(crows, self._phys(self.centroids_dir))
+            self._assign(fresh, crows).write.mode("overwrite").parquet(
                 self._bdir(self.index_dir, key))
         else:
             if self.n_centroids is None:
                 n_corpus = self.corpus().count()  # parquet-footer count
-                n_cents = cents.count()
-                if self._target_centroids(n_corpus) >= 2 * n_cents:
+                if self._target_centroids(n_corpus) >= 2 * len(crows):
                     # Re-train INSTEAD of writing this batch's assignment
                     # into the outgoing generation: the staged generation
                     # already carries it (_retrain writes fresh under
@@ -1837,18 +1838,18 @@ class IngestPipeline:
                     # sequential batch boundary ever exposes (the batch
                     # stays torn to readers until the flip; a crash
                     # anywhere re-runs this branch deterministically).
-                    self._retrain(fresh, key)
+                    self._retrain(fresh, key, n_corpus)
                     return
             # per-batch subdirectory, not append: a replayed batch must
             # rewrite its own assignment rows, not double-append them
             self.check_writer_fence()  # pre-commit re-check
-            self._assign(fresh, cents).write.mode("overwrite").parquet(
+            self._assign(fresh, crows).write.mode("overwrite").parquet(
                 self._bdir(self.index_dir, key))
 
     # --- IVF re-train (round-9) ---------------------------------------------
 
-    def _retrain(self, fresh: DataFrame, key: str) -> None:
-        """Re-size and re-train the IVF index to the current corpus.
+    def _retrain(self, fresh: DataFrame, key: str, n_corpus: int) -> None:
+        """Re-size and re-train the IVF index to the ``n_corpus``-doc corpus.
 
         Runs inside the micro-batch (foreachBatch is the single writer, so
         no concurrent state mutation) with the same exactly-once shape as
@@ -1868,18 +1869,15 @@ class IngestPipeline:
         trigger that totals O(log n) re-trains over the corpus's life.
         """
         self._flip_gate()  # rate-govern the paired index+centroid flip
-        corpus = self.corpus()
-        ncent = self._target_centroids(corpus.count())
-        cents = self._lloyd_refine(
-            corpus, self._seed_centroids(corpus, ncent))
+        crows = self._train_centroids(self.corpus(), n_corpus)
         inext = self._stage_dir(self.index_dir)
         cnext = self._stage_dir(self.centroids_dir)
         self.fs.rmtree(inext)
         prev = self._read_state_excluding(self.corpus_dir, CORPUS_SCHEMA, key)
-        self._assign(prev, cents).write.mode("overwrite").parquet(inext)
-        self._assign(fresh, cents).write.mode("overwrite").parquet(
+        self._assign(prev, crows).write.mode("overwrite").parquet(inext)
+        self._assign(fresh, crows).write.mode("overwrite").parquet(
             self.fs.join(inext, key))
-        cents.write.mode("overwrite").parquet(cnext)
+        self._write_centroids(crows, cnext)
         self._swap_dir(self.index_dir, inext)
         self._swap_dir(self.centroids_dir, cnext)
         if self.refresh_edges_on_retrain:
@@ -1894,7 +1892,7 @@ class IngestPipeline:
         corpus — the ops-cadence twin of the automatic 2×-growth
         re-train inside ``_update_index``. Re-sizes to
         ``_target_centroids`` (√n under auto sizing), re-seeds and
-        Lloyd-refines deterministically (hash-ordered seeds — the same
+        Lloyd-refines deterministically (``_train_centroids`` — the same
         inputs produce the same centroids the bootstrap would), assigns
         the whole committed corpus, and publishes with ``_retrain``'s
         exact two-flip sequence (stage index → stage centroids → flip
@@ -1937,23 +1935,22 @@ class IngestPipeline:
         n = corpus.count()
         if n == 0:
             raise ValueError("retrain() on an empty committed corpus")
-        cents = self._lloyd_refine(
-            corpus, self._seed_centroids(corpus, self._target_centroids(n)))
+        crows = self._train_centroids(corpus, n)
         inext = self._stage_dir(self.index_dir)
         cnext = self._stage_dir(self.centroids_dir)
         self.fs.rmtree(inext)
-        self._assign(corpus, cents).write.mode("overwrite").parquet(inext)
+        self._assign(corpus, crows).write.mode("overwrite").parquet(inext)
         for entry, (is_dir, committed, _p) in sorted(
                 self._store_scan(self.corpus_dir)[1].items()):
             if is_dir and committed and entry not in torn:
                 self.fs.write_text(
                     self.fs.join(inext, entry, "_SUCCESS"), "")
-        cents.write.mode("overwrite").parquet(cnext)
+        self._write_centroids(crows, cnext)
         self._swap_dir(self.index_dir, inext)
         self._swap_dir(self.centroids_dir, cnext)
         if self.refresh_edges_on_retrain:
             self.refresh_edges()
-        return {"n_centroids": int(cents.count()), "assigned": int(n)}
+        return {"n_centroids": len(crows), "assigned": int(n)}
 
     def _stage_dir(self, root: str) -> str:
         """Where a rebuilt store is staged before its flip: the next
@@ -2734,7 +2731,7 @@ class IngestPipeline:
         )
 
     def _knn_join_ivf(self, corpus: DataFrame, fresh: DataFrame,
-                      cents: DataFrame, idx: DataFrame,
+                      crows: list, idx: DataFrame,
                       probes: int | None = None,
                       broadcast_queries: bool = True,
                       include_fresh_assignment: bool = True) -> DataFrame:
@@ -2768,9 +2765,11 @@ class IngestPipeline:
         on-the-fly assignment union — REQUIRED when fresh's docs are
         already in ``idx`` (bulk graph build), where the union would
         double every member row and the downstream per-query rank would
-        count candidates twice.
+        count candidates twice. ``crows`` (the caller's one centroid
+        read) feeds both the probe scoring and the fresh assignment.
         """
         probes = probes or IVF_PROBES
+        cents = self._centroid_frame(crows)
 
         def maybe_b(df: DataFrame) -> DataFrame:
             return F.broadcast(df) if broadcast_queries else df
@@ -2796,7 +2795,7 @@ class IngestPipeline:
         )
         members = idx.select("doc_id", "cid")
         if include_fresh_assignment:
-            members = members.unionByName(self._assign(fresh, cents))
+            members = members.unionByName(self._assign(fresh, crows))
         pairs = members.join(maybe_b(qcells), "cid").select(
             "qid", "doc_id")
         q = maybe_b(fresh.select(

@@ -156,3 +156,21 @@ def test_bench_artifact_self_labels_stall():
     # no anchor: labels degrade to load + flag, never guess
     labels = bench.stall_labels(5.0, timings, set(), None, 2.0, 1.5)
     assert labels == {"load": 2.0, "stalled_host": True}
+
+
+def test_bench_result_line_refuses_overflow():
+    """The one-line result is parsed from the last 2,000 characters of
+    stdout. ``result_line`` passes the round-15 line (807 characters)
+    and raises on a line that would be clipped, instead of printing it."""
+    import pytest
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
+    import bench
+
+    with open(os.path.join(os.path.dirname(__file__), "..",
+                           "BENCH_r15.json")) as fh:
+        parsed = json.load(fh)["parsed"]
+    assert json.loads(bench.result_line(parsed)) == parsed
+    wide = dict(parsed, queries={f"dq{i}": 1.0 for i in range(200)})
+    with pytest.raises(ValueError, match="result line is"):
+        bench.result_line(wide)

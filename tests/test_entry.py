@@ -110,10 +110,15 @@ def test_gate_artifact_is_fresh():
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     # numeric round order: a lexical sort ranks GATE_r9 after GATE_r13
-    # and silently freshness-checks a stale artifact
-    gates = sorted(
-        glob.glob(os.path.join(root, "GATE_r*.json")),
-        key=lambda p: int(re.search(r"GATE_r(\d+)", p).group(1)))
+    # and silently freshness-checks a stale artifact. Only exact
+    # GATE_r<N>.json names count: a partial rerun (GATE_r15_sf1_rerun.json)
+    # would otherwise tie its round's full gate on the sort key
+    rounds = {}
+    for p in glob.glob(os.path.join(root, "GATE_r*.json")):
+        m = re.fullmatch(r"GATE_r(\d+)\.json", os.path.basename(p))
+        if m:
+            rounds[int(m.group(1))] = p
+    gates = [rounds[r] for r in sorted(rounds)]
     assert gates, "no GATE_r*.json committed"
     with open(gates[-1]) as fh:
         gate = json.load(fh)
