@@ -123,35 +123,6 @@ def expand_one_hop_micro(seeds: DataFrame, edges: DataFrame, k: int = 10,
     )
 
 
-def expand_one_hop_many(seeds: DataFrame, edges: DataFrame, k: int = 10,
-                        decay: float = DECAY) -> DataFrame:
-    """Multi-query twin of :func:`expand_one_hop` — seeds carry a
-    ``qid`` and every stage keys on it, so M queries expand in ONE job
-    (the batched-serving path, r13 verdict item 7). Per qid the rows
-    are value-identical to :func:`expand_one_hop` on that query's seeds
-    (same hop product, same max-per-node dedup, same (score desc, id)
-    top-k — pinned by test); the final per-query top-k is a qid window
-    instead of a global limit."""
-    from pyspark.sql import Window
-
-    hop = snap_double(F.col("s") * F.col("score") * decay)
-    fwd = seeds.join(edges, seeds.vec_id == edges.src).select(
-        "qid", F.col("dst").alias("id"), hop.alias("score"))
-    bwd = seeds.join(edges, seeds.vec_id == edges.dst).select(
-        "qid", F.col("src").alias("id"), hop.alias("score"))
-    own = seeds.select(
-        "qid", F.col("vec_id").alias("id"), F.col("s").alias("score"))
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("id"))
-    return (
-        own.unionAll(fwd).unionAll(bwd)
-        .groupBy("qid", "id")
-        .agg(F.max("score").alias("score"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("qid", "id", "score")
-    )
-
-
 def expand_one_hop(seeds: DataFrame, edges: DataFrame, k: int = 10,
                    decay: float = DECAY) -> DataFrame:
     """Generalized 1-hop expansion re-rank over canonicalized edges.
@@ -159,7 +130,9 @@ def expand_one_hop(seeds: DataFrame, edges: DataFrame, k: int = 10,
     ``seeds`` is ``(vec_id, s)``; traversal follows both edge directions
     (edges are stored canonicalized). Dedup keeps the best-scoring path per
     node (reference keeps first-seen, search.py:6,27 — max is the
-    order-independent, hence distributed-safe, generalization).
+    order-independent, hence distributed-safe, generalization). Serving
+    runs the same rule on the driver over its seeds' gathered edges
+    (``streaming/ingest._expand``).
     """
     fwd = seeds.join(edges, seeds.vec_id == edges.src).select(
         F.col("dst").alias("id"),

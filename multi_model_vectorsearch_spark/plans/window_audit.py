@@ -96,15 +96,9 @@ GLOBAL_WINDOW_CLASS: dict[str, tuple[str, str]] = {}
 # Classes as above, plus:
 #   "trigger-bounded": window input is one streaming MICRO-BATCH — bounded
 #       by ingest trigger configuration, never by corpus size.
+# (``/search`` plans no window: its pool is one kernel pass and its
+# modality finish and expansion run on the driver.)
 SERVING_WINDOW_CLASS: dict[str, tuple[str, str]] = {
-    "search.exact": (
-        "driver-bounded",
-        "the balanced-selection windows run on the post-TakeOrdered pool "
-        "(≤ k·OVERFETCH = 60 rows by the .limit(pool_k) pre-reduce) — "
-        "they APPEAR partitionless because the single query's constant "
-        "qid literal is folded out of the PARTITION BY by the optimizer; "
-        "the corpus-sized scoring never passes through a window "
-        "(ingest.search, r8 round's distributed-top-k pre-reduce)"),
     "knn.fat_batch_chunking": (
         "trigger-bounded",
         "row_number chunking of a fat batch into max_collect query chunks "
@@ -112,11 +106,6 @@ SERVING_WINDOW_CLASS: dict[str, tuple[str, str]] = {
         "never the corpus — ingest._chunk_ranked; the window executes in "
         "the kernel's per-chunk driver collect, so the returned candidate "
         "plan (knn.fat_batch, audited at zero windows) does not carry it"),
-    "search.routed": (
-        "driver-bounded",
-        "search(route='ivf') — the identical balanced-selection windows "
-        "as search.exact (post-TakeOrdered ≤ pool_k rows), fed by the "
-        "probed semi-join instead of the full scan"),
     "ingest.centroid_seeds": (
         "driver-bounded",
         "cid numbering window over the post-LIMIT ncent≈√n seed rows — "
@@ -128,19 +117,22 @@ SERVING_WINDOW_CLASS: dict[str, tuple[str, str]] = {
 
 def serving_plan_suite(pipe, query_text: str) -> dict[str, "DataFrame"]:
     """Representative serving/ingest DataFrames for the audit — covers the
-    paths the r8 audit missed: exact `/search` (cold or warm per the
-    pipeline's current state), probed `search_ivf`, the ingest KNN on both
-    physical routes (kernel ≤ max_collect and the chunked fat-batch), and
-    the centroid-seed plan. Builds plans only (collect-free except the
-    bounded counts the builders themselves run)."""
+    paths the r8 audit missed: the `/search` kernel pool on the exact and
+    probed routes (cold or warm per the pipeline's current state — the
+    one serving DataFrame Spark executes; ``search()`` itself returns a
+    driver-built local relation), probed `search_ivf`, the ingest KNN on
+    both physical routes (kernel ≤ max_collect and the chunked
+    fat-batch), and the centroid-seed plan. Builds plans only
+    (collect-free except the bounded jobs the builders themselves run)."""
     corpus = pipe.corpus()
+    qv = [pipe._query_vec(query_text, "text")]
     fresh = corpus.limit(3)
     # force the fat-batch chunking route via the per-call override — no
     # shared-state mutation (r9 advisor nit: a concurrent pipeline user
     # must never observe a transiently-shrunk max_collect)
     fat = pipe.knn_against_corpus(fresh, n_queries=3, max_collect=1)
     return {
-        "search.exact": pipe.search(query_text, k=4),
+        "search.pool": pipe._search_pool(qv, 4)[0],
         "search_ivf.probed": pipe.search_ivf(query_text, k=4),
         "knn.kernel": pipe.knn_against_corpus(fresh, n_queries=3),
         "knn.fat_batch": fat,
@@ -149,9 +141,9 @@ def serving_plan_suite(pipe, query_text: str) -> dict[str, "DataFrame"]:
         # bulk graph build (round-9): every window is qid-partitioned —
         # expected to contribute ZERO partitionless windows
         "build_graph.neighbors": pipe._build_graph_neighbors(),
-        # probed /search route: same balanced-selection windows as
-        # search.exact, over the probed scan
-        "search.routed": pipe.search(query_text, k=4, route="ivf"),
+        # probed /search route: the same kernel pass over the probed
+        # cells' members
+        "search.pool_routed": pipe._search_pool(qv, 4, route="ivf")[0],
         # within-cell bulk build: the applyInPandas cohort emits the
         # per-query pool; the only windows are _balanced_select's
         # qid-partitioned ones — expected ZERO partitionless

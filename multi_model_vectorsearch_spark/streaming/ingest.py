@@ -40,6 +40,7 @@ completes it.
 from __future__ import annotations
 
 import hashlib
+import math
 import os
 import re
 import threading
@@ -52,7 +53,10 @@ from multi_model_vectorsearch_spark.checkpointing import pin, pin_lazy
 from multi_model_vectorsearch_spark.functions.embedding import route_embedding
 from multi_model_vectorsearch_spark.functions.fixedpoint import snap_double
 from multi_model_vectorsearch_spark.functions.vector import cosine_similarity
-from multi_model_vectorsearch_spark.operators.graph import CROSS_MODAL_FLOOR
+from multi_model_vectorsearch_spark.operators.graph import (
+    CROSS_MODAL_FLOOR,
+    DECAY,
+)
 
 CORPUS_SCHEMA = (
     "doc_id bigint, content_sha256 string, modality string, "
@@ -75,6 +79,10 @@ IVF_PROBES = 2
 LLOYD_ITERS = 2
 CANDIDATE_SCHEMA = ("qid bigint, qm string, doc_id bigint, modality string, "
                     "s double")
+# Serving query q's kernel qid is SERVE_QID0 + q: the int64 floor, far
+# below any doc_id, so _top_pool's self-pin (doc_id == qid) never fires
+# on a serving query — a /search query is not a stored doc
+SERVE_QID0 = -(1 << 63)
 
 
 def _vectors(values):
@@ -88,8 +96,9 @@ def _vectors(values):
 
 def _top_pool(q, qids, c, cids, pool_k: int):
     """Each query's top-``pool_k`` candidates by snapped cosine — the one
-    numpy scorer behind the ingest KNN (``_knn_kernel``) and the cells
-    graph build (``_within_cell_neighbors``, ``_block_pair_neighbors``).
+    numpy scorer behind the ingest KNN and every serving pool
+    (``_knn_kernel``) and the cells graph build
+    (``_within_cell_neighbors``, ``_block_pair_neighbors``).
 
     ``q`` (nq × d) and ``c`` (n × d) are raw float64 embeddings and
     ``cids`` is sorted ascending: a candidate's row position IS its
@@ -178,6 +187,53 @@ def _pool_rows(qids, qms, cids, cms, top, s):
                          "s": s.reshape(-1)})
 
 
+def _quota(same, k: int):
+    """The reference's modality-balanced finish (main.py:217-253) over
+    rank-ordered pools, one row per query: ``same`` marks each pooled
+    candidate whose modality equals its query's. Cumulative same/cross
+    counts keep at most ``k // 2`` of each split, then the first ``k``
+    survivors; returns that boolean mask, whose rows are already in rank
+    order — byte-for-byte what ``_balanced_select`` keeps of the same
+    pool. The one quota of ``_knn_kernel``'s in-task finish and of the
+    serving finish (``_seeds``)."""
+    import numpy as np
+
+    half = k // 2
+    kept = np.where(same, np.cumsum(same, axis=1) <= half,
+                    np.cumsum(~same, axis=1) <= half)
+    return kept & (np.cumsum(kept, axis=1) <= k)
+
+
+def _seeds(pool: list, qm: str, k: int, pool_k: int) -> list:
+    """One serving query's expansion seeds ``[(doc_id, s)]``: its
+    per-block pools ``[(s, doc_id, modality)]`` merged in (s desc,
+    doc_id asc) order and cut to ``pool_k`` — the order ``_top_pool``
+    ranks each block by, so the merge is the global top pool — then the
+    ``_quota`` finish."""
+    import numpy as np
+
+    pool = sorted(pool, key=lambda t: (-t[0], t[1]))[:pool_k]
+    keep = _quota(np.array([[m == qm for _, _, m in pool]], dtype=bool), k)
+    return [(d, s) for (s, d, _), kp in zip(pool, keep[0]) if kp]
+
+
+def _expand(seeds: list, adj: dict, k: int) -> list:
+    """``expand_one_hop`` on the driver: each seed keeps its score, each
+    edge neighbor scores ``snap_double(s · edge · DECAY)`` (the same IEEE
+    product order, then the floor snap), every node keeps its best path,
+    and the top ``k`` by (score desc, id asc) answer. ``adj`` maps a seed
+    to its ``(neighbor, edge score)`` pairs, both edge directions."""
+    best: dict = {}
+    for d, s in seeds:
+        best[d] = max(best.get(d, s), s)
+    for d, s in seeds:
+        for nbr, score in adj.get(d, ()):
+            h = math.floor(s * score * DECAY * 1e6 + 0.5) / 1e6
+            if nbr not in best or h > best[nbr]:
+                best[nbr] = h
+    return sorted(best.items(), key=lambda t: (-t[1], t[0]))[:k]
+
+
 def _assign_kernel(e, cmat):
     """Row position in ``cmat`` (centroids sorted by cid) of each row of
     ``e``'s nearest centroid — the one scorer of ``_assign`` and every
@@ -230,7 +286,9 @@ class IngestPipeline:
     call — micro-batches at or under it run as one call, larger batches
     run the same kernel over ``max_collect``-sized query chunks (union of
     independent per-query selections ≡ one pass), so a fat micro-batch
-    cannot OOM the driver at ingest scale and stays exact.
+    cannot OOM the driver at ingest scale and stays exact. It bounds
+    ``search_many`` too: its query vectors ship in the same kernel
+    closure, so a call with more than ``max_collect`` texts raises.
 
     **Reader/writer contract** (the reference serves ``/search`` while
     ``/submit`` ingests; Redis serializes every op — here the state store
@@ -275,27 +333,6 @@ class IngestPipeline:
     ``serve_search_ivf`` additionally re-plan and retry a query whose
     scan lost that race, so the serving facade stays always-answering
     even past the SLA.
-
-    **Sharding contract — scaling ingest past one writer** (r13 verdict
-    item 6): the single-writer contract serializes a state root's
-    ingest through one driver; to scale, partition the DOCUMENT KEY
-    SPACE into N disjoint shards (e.g. ``doc_id % N``, or a hash of
-    the stable content key), give each shard its OWN state root with
-    its own ``IngestPipeline`` + writer lease, and read through
-    :class:`ShardedReadView`. Everything above — exactly-once replay,
-    fencing, linearizable reads, retention, takeover — holds PER SHARD
-    unchanged, because nothing about a shard's state machine ever
-    references another shard's root. What changes semantically, and is
-    part of this contract rather than an approximation: (1) content
-    dedup (A5) is shard-local — route docs by a hash of the DEDUP key
-    (content sha) if global dedup is required; (2) KNN/graph edges are
-    shard-local, so a served top-k is the exact top-k of the UNION of
-    per-shard top-k (correct for disjoint doc sets) while graph
-    EXPANSION only follows intra-shard edges; (3) the union view's
-    staleness is bounded per shard by that shard's ``freshness()``
-    gauge — there is no cross-shard ordering, exactly like partitioned
-    Kafka topics. Measured scaling: scripts/probe_sharded_ingest.py +
-    the BASELINE.md r14 row.
     """
 
     def __init__(self, spark: SparkSession, state_dir: str, k: int = 10,
@@ -997,7 +1034,7 @@ class IngestPipeline:
         if method == "cells":
             return self._within_cell_neighbors(corpus, n_total=n)
         if method == "exact" or not crows:
-            return self.knn_against_corpus(corpus, n_queries=n)
+            return self.knn_against_corpus(corpus, n_queries=n, n_corpus=n)
         cand = self._knn_join_ivf(
             corpus, corpus, crows, self.ivf_index(), probes=probes,
             broadcast_queries=False, include_fresh_assignment=False)
@@ -1303,11 +1340,15 @@ class IngestPipeline:
         fresh.write.mode("overwrite").parquet(
             self._bdir(self.corpus_dir, key))
 
+        n_corpus = None
         if build_edges:
+            # one post-write corpus count per batch: it sizes the KNN's
+            # partitions and feeds _update_index's re-train trigger
+            n_corpus = self.corpus().count()
             # checkpoint: the KNN scan is the expensive stage; edge build
             # must reuse its result, not recompute the corpus scan
             neighbors = self.knn_against_corpus(
-                fresh, n_queries=n_fresh).transform(pin)
+                fresh, n_queries=n_fresh, n_corpus=n_corpus).transform(pin)
             edges = self.build_edges(neighbors)
         else:
             edges = self._empty(EDGE_SCHEMA)
@@ -1315,7 +1356,7 @@ class IngestPipeline:
         edges.write.mode("overwrite").parquet(
             self._bdir(self.edges_dir, key))
         if self.maintain_ivf:
-            self._update_index(fresh, key)
+            self._update_index(fresh, key, n_corpus=n_corpus)
         if self.maintain_neardup:
             self._update_neardup(batch, fresh, key)
 
@@ -1663,8 +1704,6 @@ class IngestPipeline:
         a frozen count degrades to (r8 verdict item 1)."""
         if self.n_centroids is not None:
             return self.n_centroids
-        import math
-
         return max(4, min(65536, int(round(math.sqrt(n_corpus)))))
 
     def _auto_probes(self, ncent: int) -> int:
@@ -1681,8 +1720,6 @@ class IngestPipeline:
         the gauge without changing the n^¾ asymptotic."""
         if self.n_centroids is not None:
             return IVF_PROBES
-        import math
-
         return max(IVF_PROBES, 2 * math.isqrt(max(ncent, 1)))
 
     @staticmethod
@@ -1766,7 +1803,8 @@ class IngestPipeline:
         return self._lloyd_refine(corpus, self._seed_centroids_plan(
             corpus, self._target_centroids(n_corpus)).collect())
 
-    def _update_index(self, fresh: DataFrame, key: str = "b0") -> None:
+    def _update_index(self, fresh: DataFrame, key: str = "b0",
+                      n_corpus: int | None = None) -> None:
         """Keep a coarse IVF index in sync with the corpus as it grows.
 
         Before the corpus reaches ``ivf_bootstrap`` docs there is no index
@@ -1780,12 +1818,15 @@ class IngestPipeline:
         O(log n) times over the corpus's life, each a full reassignment.
         One centroid read per call (``_centroid_rows``) decides bootstrap,
         counts cells for the trigger and feeds every assignment.
+        ``n_corpus`` is the caller's count of the post-write corpus
+        (``process_batch`` takes one per batch); None means count here.
         """
         self._finish_pending_retrain()
         crows = self._centroid_rows()
         if not crows:
             corpus = self.corpus()
-            n_corpus = corpus.count()
+            if n_corpus is None:
+                n_corpus = corpus.count()
             if n_corpus < self.ivf_bootstrap:
                 return
             if self.n_centroids is not None:
@@ -1825,7 +1866,8 @@ class IngestPipeline:
                 self._bdir(self.index_dir, key))
         else:
             if self.n_centroids is None:
-                n_corpus = self.corpus().count()  # parquet-footer count
+                if n_corpus is None:
+                    n_corpus = self.corpus().count()  # parquet-footer count
                 if self._target_centroids(n_corpus) >= 2 * len(crows):
                     # Re-train INSTEAD of writing this batch's assignment
                     # into the outgoing generation: the staged generation
@@ -2060,9 +2102,10 @@ class IngestPipeline:
 
         Caches and materializes: the corpus, the edge store (1-hop
         expansion reads it per query), and — when the IVF index has
-        bootstrapped — centroids and the assignment table. Serving queries
-        then plan as InMemoryTableScan → project → TakeOrdered: no file
-        listing, no parquet decode, no per-query state-existence jobs.
+        bootstrapped — centroids and the assignment table. Serving passes
+        then read InMemoryTableScans (the ``/search`` kernel pool and edge
+        collect, ``search_ivf``'s TakeOrdered): no file listing, no
+        parquet decode, no per-query state-existence jobs.
         ``process_batch`` invalidates automatically (ingest changes state);
         call ``warm()`` again after an ingest burst. At cluster scale the
         same call pins the corpus across executors — the cache is
@@ -2089,9 +2132,9 @@ class IngestPipeline:
           only shape that pins at 100 TB, where the corpus cannot.
 
         Pinned bytes per store are reported in ``sizes`` as
-        ``pinned_bytes_<store>`` (Spark RDD storage info, measured after
-        materialization) so an operator can read the pinned fraction
-        directly instead of estimating it.
+        ``pinned_bytes_<store>`` (the storage entry of the store's own
+        cached RDD, read after materialization) so an operator can read
+        the pinned fraction directly instead of estimating it.
 
         READ-ONLY, and safe to call from a serving thread while other
         threads query the SAME pipeline object: the new snapshot is
@@ -2131,24 +2174,17 @@ class IngestPipeline:
 
         corpus, cents, idx, edges = self._stable_read(build)
 
-        def cached_mem() -> int:
-            try:
-                return sum(i.memSize() for i in self.spark.sparkContext
-                           ._jsc.sc().getRDDStorageInfo())
-            except Exception:  # pragma: no cover - py4j surface drift
-                return 0
-
         sizes: dict = {"policy": policy}
 
         def pin_store(df: DataFrame, key: str) -> tuple[DataFrame, int]:
-            """cache + materialize, attributing the executor-memory
-            DELTA to this store — the operator-facing quantification of
-            what each warm policy costs (``pinned_bytes_<store>``; a
-            reader computes the pinned fraction directly from these)."""
-            before = cached_mem()
+            """cache + materialize, recording the in-memory size of THIS
+            store's own cached relation — the operator-facing
+            quantification of what each warm policy costs
+            (``pinned_bytes_<store>``; a reader computes the pinned
+            fraction directly from these)."""
             df = df.cache()
             rows = df.count()
-            sizes[f"pinned_bytes_{key}"] = max(0, cached_mem() - before)
+            sizes[f"pinned_bytes_{key}"] = self._cached_bytes(df)
             return df, rows
 
         if policy == "full":
@@ -2170,9 +2206,9 @@ class IngestPipeline:
                 nw["centroids"] = cents
                 nw["index"] = idx
                 # driver-side centroid rows (bounded: 65536-cell cap,
-                # ~8 MB at 5M docs) — lets warm probed queries pick
-                # their cells with a numpy argsort instead of a Spark
-                # job (see _probed_corpus)
+                # ~8 MB at 5M docs) — warm probed queries pick their
+                # cells from these with no Spark job, where a cold read
+                # collects its bracket's view (see _probed_corpus)
                 nw["cent_rows"] = cents.collect()
             else:  # half-built external dir: degrade to full-scan serving
                 idx.unpersist()
@@ -2184,6 +2220,23 @@ class IngestPipeline:
         self._warm_policy = policy
         self._release_snapshot(old, keep=nw)
         return dict(sizes)
+
+    def _cached_bytes(self, df: DataFrame) -> int:
+        """In-memory bytes of ``df``'s own cache entry, read from the
+        storage entry of the RDD behind its cached relation — unlike a
+        difference of storage totals, a block freed elsewhere in between
+        cannot move it. 0 when ``df`` has no materialized entry."""
+        try:
+            cached = (self.spark._jsparkSession.sharedState().cacheManager()
+                      .lookupCachedData(df._jdf))
+            if not cached.isDefined():
+                return 0
+            rid = (cached.get().cachedRepresentation().cacheBuilder()
+                   .cachedColumnBuffers().id())
+            return sum(i.memSize() for i in self.spark.sparkContext
+                       ._jsc.sc().getRDDStorageInfo() if i.id() == rid)
+        except Exception:  # pragma: no cover - py4j surface drift
+            return 0
 
     @staticmethod
     def _plans_equal(a: DataFrame, b: DataFrame) -> bool:
@@ -2234,9 +2287,10 @@ class IngestPipeline:
     def search_ivf(self, text: str, k: int | None = None,
                    modality: str = "text",
                    probes: int | None = None) -> DataFrame:
-        """Probed ANN serving over the maintained index: score the query
-        against the centroids, semi-join the corpus to the members of the
-        ``probes`` nearest clusters, exact-rank only those candidates. A
+        """Probed ANN serving over the maintained index (top-k only, no
+        modality finish or expansion): pick the query's ``probes`` nearest
+        cells on the driver, join the corpus to those cells' members
+        (``_probed_corpus``), exact-rank only those candidates. A
         query touches ~probes/n_centroids of the corpus; falls back to the
         full scan while the index hasn't bootstrapped. With ``warm()``
         state all reads hit the in-memory caches and the existence checks
@@ -2246,18 +2300,16 @@ class IngestPipeline:
         query while the probed fraction shrinks slowly enough (n^-¼) to
         hold recall at scale (probe-table evidence in BASELINE.md r9)."""
         k = k or self.k
-        out_schema = "doc_id bigint, modality string, s double"
         vec = self._query_vec(text, modality)
         if vec is None:
-            return self.spark.createDataFrame([], out_schema)
-        qv = F.lit(vec)
-        corpus = self._probed_corpus(qv, probes, qv_raw=vec,
-                                     warm=self._warm, fallback=True)
+            return self._local_frame(
+                [], "doc_id bigint, modality string, s double")
+        corpus = self._probed_corpus([vec], probes=probes)[0]
         return (
             corpus.select(
                 "doc_id", "modality",
-                snap_double(cosine_similarity(F.col("embedding"), qv))
-                .alias("s"),
+                snap_double(cosine_similarity(F.col("embedding"),
+                                              F.lit(vec))).alias("s"),
             )
             .orderBy(F.desc("s"), F.asc("doc_id"))
             .limit(k)
@@ -2366,9 +2418,9 @@ class IngestPipeline:
                      modality: str = "text", route: str = "exact",
                      probes: int | None = None,
                      retries: int = 4) -> list:
-        """``search()`` collected eagerly with the always-answers retry
-        wrapper (``_serve``): a query whose scan raced a writer flip
-        past the retention SLA re-plans and retries instead of
+        """``search()`` collected with the always-answers retry wrapper
+        (``_serve``): a query whose kernel or edge scan raced a writer
+        flip past the retention SLA re-plans and retries instead of
         surfacing FileNotFound to the caller. Returns rows."""
         return self._serve(
             lambda: self.search(text, k, modality=modality, route=route,
@@ -2396,87 +2448,68 @@ class IngestPipeline:
 
         return self._serve(build, retries)
 
-    def _probed_corpus(self, qv, probes: int | None = None,
-                       require: bool = False,
-                       qv_raw: list | None = None,
-                       views: tuple | None = None,
+    def _probed_corpus(self, vecs: list, route: str = "auto",
+                       probes: int | None = None,
                        warm: dict | None = None,
-                       fallback: bool = False) -> DataFrame:
-        """The corpus restricted to the query's probed IVF cells — the one
-        probing plan ``search_ivf`` and ``search(route="ivf")`` share.
-        Falls back to the full corpus while the index hasn't bootstrapped
-        (or is half-written — see the read-order note below) — unless
-        ``require`` (a caller who EXPLICITLY asked for the probed route,
-        e.g. ``search(route="ivf")``), where degrading to the full scan
-        would silently pay exactly the latency the route exists to avoid:
-        raise instead, matching ``build_graph(method="ivf")``'s contract.
+                       edges: bool = False) -> tuple:
+        """The candidate source of one serving call — ``search_many``'s
+        and ``search_ivf``'s — as ``(corpus, cells, edge view)``.
 
-        Cold reads are CONSISTENT against a concurrent writer (see the
-        class docstring's reader/writer contract): batches whose write
-        sequence hasn't fully committed are excluded (the torn set), and the
-        view listings run inside a ``_stable_read`` bracket — equal
-        commit fingerprints before and after prove no store commit,
-        pointer flip, or re-train landed while the views were being
-        listed, so they all belong to one committed prefix. A caller
-        that runs the bracket itself passes the ``views`` it captured
-        (``search``); plan ASSEMBLY (probe counts, joins) happens
-        outside the bracket — the captured physical paths are immutable
-        and generation retention keeps them alive across the next
-        flip. The warm snapshot is captured ONCE (``warm`` argument, or
-        one read of ``self._warm`` here) so a concurrent re-warm/unwarm
-        publishing a new dict mid-query can't mix snapshots or KeyError
-        this query."""
-        w = warm if warm is not None else self._warm
+        ``route``: ``"exact"`` serves the whole corpus; ``"ivf"`` probes
+        and raises when no live IVF index exists (a caller who EXPLICITLY
+        asked for the probed route must not silently pay the full-scan
+        latency it exists to avoid — ``build_graph(method="ivf")``'s
+        contract); ``"auto"`` probes when an index exists. Probing picks
+        each query's ``probes`` nearest cells on the driver
+        (``_probe_cids_local``; ``probes`` defaults to ``_auto_probes``)
+        and inner-joins the broadcast members of the union of those cells
+        onto the corpus, so each row carries its ``cid``; ``cells`` is
+        then, per query, its own probed cids (None on the full scan).
+
+        Warm reads serve the snapshot captured ONCE (``warm``, or one read
+        of ``self._warm``), so a concurrent re-warm publishing a new dict
+        mid-query can't mix snapshots; its centroids are the driver rows
+        ``warm()`` collected. Cold reads are CONSISTENT against a
+        concurrent writer (the class docstring's reader/writer contract):
+        one ``_stable_read`` bracket lists every view — torn batches
+        excluded, equal commit fingerprints around it — and the jobs run
+        after it: the captured physical paths are immutable and
+        generation retention keeps them alive across the next flip. A
+        committed-but-0-row index (a bootstrap whose only data batch is
+        torn) degrades to the full scan (one ``isEmpty`` job), and the
+        bracket's centroid view is collected (one job). The edge view,
+        when asked for, comes from the same snapshot or bracket."""
+        w = self._warm if warm is None else warm
+        probed = route != "exact"
         if w:
-            corpus = w["corpus"]
-            cents = w.get("centroids")
+            corpus, ev = w["corpus"], w["edges"]
+            crows = w.get("cent_rows") if probed else None
             idx = w.get("index")
         else:
-            if views is not None:
-                corpus, cents, idx = views
-            else:
-                corpus, cents, idx = self._stable_read(
-                    self._probed_views, fallback=fallback)
-            # emptiness degrade OUTSIDE the bracket (it runs a job; the
-            # pinned parts are immutable so the answer is stable): a
-            # committed-but-0-row index — e.g. a bootstrap whose only
-            # data batch is torn — must fall back to the full scan, not
-            # semi-join every query to an empty member set
-            if idx is not None and idx.isEmpty():
-                cents = idx = None
-        if idx is None:
-            if require:
+            def build(torn):
+                views = (self._probed_views(torn) if probed else (
+                    self._read_state_excluding_keys(
+                        self.corpus_dir, CORPUS_SCHEMA, torn), None, None))
+                return views, (self._read_state_excluding_keys(
+                    self.edges_dir, EDGE_SCHEMA, torn) if edges else None)
+
+            (corpus, cents, idx), ev = self._stable_read(build,
+                                                         fallback=True)
+            crows = (cents.collect()
+                     if idx is not None and not idx.isEmpty() else None)
+        if not crows:
+            if route == "ivf":
                 raise ValueError(
                     "route='ivf' requested but no live IVF index exists; "
                     "use route='auto' for silent fallback, or enable "
                     "maintain_ivf / call bulk_load first")
-            return corpus
-        crows = w.get("cent_rows") if w else None
+            return corpus, None, ev
         if probes is None:
-            probes = self._auto_probes(
-                len(crows) if crows else cents.count())
-        if crows and qv_raw is not None:
-            # warm serving: the centroid set already lives on the driver
-            # (bounded by the 65536-cell cap, same bound as _assign's
-            # collect), so probe selection is a numpy argsort instead of
-            # a whole Spark job per query — one job per probed query, not
-            # two. Tie-break matches the plan below ((cs desc, cid asc));
-            # dot/norm summation-order ulps can reorder near-equal
-            # centroids, the same documented contract as _assign's kernel
-            # (probe choice is an index routing decision; pinned
-            # row-identical on fixtures by test).
-            pc = self._probe_cids_local(crows, qv_raw, probes)
-            members = idx.filter(F.col("cid").isin(pc)).select("doc_id")
-        else:
-            probe_cids = (
-                cents.select("cid", cosine_similarity(
-                    F.col("cvec"), qv).alias("cs"))
-                .orderBy(F.desc("cs"), F.asc("cid")).limit(probes)
-                .select("cid")
-            )
-            members = idx.join(
-                F.broadcast(probe_cids), "cid").select("doc_id")
-        return corpus.join(F.broadcast(members), "doc_id", "left_semi")
+            probes = self._auto_probes(len(crows))
+        cells = [self._probe_cids_local(crows, v, probes) for v in vecs]
+        members = idx.filter(F.col("cid").isin(
+            sorted({c for cs in cells for c in cs}))).select("doc_id", "cid")
+        return corpus.join(F.broadcast(members), "doc_id"), cells, ev
 
     def _probed_views(self, torn: set[str]):
         """The (corpus, centroids, index) views one probed query reads,
@@ -2514,9 +2547,12 @@ class IngestPipeline:
 
     @staticmethod
     def _probe_cids_local(crows: list, vec: list, probes: int) -> list[int]:
-        """Top-``probes`` centroid ids by (cosine desc, cid asc) — the
-        driver-side twin of the probe-selection plan in
-        ``_probed_corpus``."""
+        """Top-``probes`` centroid ids by (cosine desc, cid asc) — the one
+        probe selection of every serving route, on the driver over the
+        centroid rows. Dot/norm summation-order ulps can reorder
+        near-equal centroids against a JVM cosine, the same documented
+        contract as ``_assign_kernel`` (probe choice is an index routing
+        decision)."""
         import numpy as np
 
         c = np.array([r.cvec for r in crows], dtype=np.float64)
@@ -2529,7 +2565,8 @@ class IngestPipeline:
 
     def knn_against_corpus(self, fresh: DataFrame,
                            n_queries: int | None = None,
-                           max_collect: int | None = None) -> DataFrame:
+                           max_collect: int | None = None,
+                           n_corpus: int | None = None) -> DataFrame:
         """Modality-balanced top-k corpus neighbors per fresh doc.
 
         Mirrors the reference's submit-path KNN (main.py:206-253 search_knn):
@@ -2544,11 +2581,14 @@ class IngestPipeline:
           to every task inside a ``mapInPandas`` closure (broadcast side of a
           broadcast join without the O(batch × corpus) pair table). Each
           scored block of a corpus partition is one call of the shared
-          ``_top_pool`` dgemm kernel and emits exactly each query's top
-          ``pool_k`` of that block by (s desc, doc_id asc) — the order
+          ``_top_pool`` dgemm kernel (``_knn_kernel``, the pass serving
+          pools with too) and emits exactly each query's top ``pool_k``
+          of that block by (s desc, doc_id asc) — the order
           ``_balanced_select`` ranks by, so the global per-query window
           is exact. One corpus scan, ~batch×k*6 shuffled candidate rows,
-          vectorized arithmetic (7.3 s → <1 s per sf0.1 batch).
+          vectorized arithmetic (7.3 s → <1 s per sf0.1 batch). On a
+          one-partition corpus the kernel finishes in-task with
+          ``_quota`` and no window runs.
         * **chunked kernel path** (fat batch): the SAME kernel, applied to
           query chunks of ``max_collect`` rows — each chunk's driver
           collect stays bounded, queries are independent so the union of
@@ -2562,6 +2602,11 @@ class IngestPipeline:
           ``_knn_join`` / ``_knn_join_ivf`` remain as the independent
           semantic reference (kernel≡join equivalence tests) and an
           explicitly-callable approximate scorer respectively.
+
+        ``n_queries`` and ``n_corpus`` are the caller's counts of
+        ``fresh`` and of the post-write corpus (None means count here):
+        ``process_batch`` and the exact graph build each take one corpus
+        count and hand it down, so no second count job runs.
         """
         corpus = self.corpus()  # includes the batch just appended
         k = self.k
@@ -2569,8 +2614,7 @@ class IngestPipeline:
         if n_queries is None:
             n_queries = fresh.count()
         if n_queries == 0:
-            return self.spark.createDataFrame(
-                [], CANDIDATE_SCHEMA + ", rn int")
+            return self._empty(CANDIDATE_SCHEMA + ", rn int")
         # Candidate emission is P x pool_k x Q (each partition's local
         # top-pool_k per query; a partition past
         # spark.sql.execution.arrow.maxRecordsPerBatch rows counts once
@@ -2580,8 +2624,11 @@ class IngestPipeline:
         # corpus collapses to a handful of partitions (32 -> 1 at sf0.1,
         # 2.4M -> 75k candidate rows) while a 100 TB corpus keeps its
         # natural parquet split parallelism. The count that feeds it is a
-        # parquet-footer count (no column decode).
-        target = max(1, corpus.count() // self.rows_per_partition)
+        # parquet-footer count (no column decode), or the caller's
+        # ``n_corpus`` of this same corpus (None means count here).
+        if n_corpus is None:
+            n_corpus = corpus.count()
+        target = max(1, n_corpus // self.rows_per_partition)
         if target < corpus.rdd.getNumPartitions():
             corpus = corpus.coalesce(target)
 
@@ -2627,32 +2674,49 @@ class IngestPipeline:
         return fresh.withColumn(
             "_rn", F.row_number().over(Window.orderBy("doc_id")))
 
-    def _knn_kernel(self, corpus: DataFrame, fresh: DataFrame,
-                    pool_k: int, finish_k: int | None = None) -> DataFrame:
-        """Vectorized candidate scorer; bounded collect (≤ max_collect).
+    def _knn_kernel(self, corpus: DataFrame, fresh,
+                    pool_k: int, finish_k: int | None = None,
+                    cells: list | None = None) -> DataFrame:
+        """Vectorized candidate scorer — the one Spark pass behind the
+        ingest KNN and every serving call; bounded collect (≤ max_collect).
 
-        The query vectors ship to every task inside the ``mapInPandas``
-        closure, and each scored block of corpus rows is one call of the
-        shared ``_top_pool`` kernel (the cells build's scorer too), which
-        emits exactly each query's top ``pool_k`` of that block by
+        ``fresh`` is the query frame, collected here, or (serving) the
+        query arrays ``(qids, qms, qmat)`` already on the driver. The query
+        vectors ship to every task inside the ``mapInPandas`` closure, and
+        each scored block of corpus rows is one call of the shared
+        ``_top_pool`` kernel (the cells build's scorer too), which emits
+        exactly each query's top ``pool_k`` of that block by
         (s desc, doc_id asc). ``mapInPandas`` hands a partition over in
         Arrow batches of spark.sql.execution.arrow.maxRecordsPerBatch
         rows, and each batch is scored as its own block.
+
+        ``cells`` (serving's probed routes, see ``_probed_corpus``): per
+        query its probed cell ids; ``corpus`` then carries each row's
+        ``cid``, and a query scores only the rows of its own cells.
+        Queries with the same probe set share one ``_top_pool`` call.
 
         With ``finish_k`` (only valid on a single-partition corpus scan) the
         kernel also applies the modality-quota selection per query and emits
         the final ranked top-``finish_k`` rows — semantically identical to
         ``_balanced_select`` over the same pool, minus its shuffle. That
-        finish is a quota pass over ``_top_pool``'s rank-ordered output.
+        finish is ``_quota`` over ``_top_pool``'s rank-ordered output.
         """
         import numpy as np
         import pandas as pd
 
-        qrows = fresh.select("doc_id", "modality", "embedding").collect()
-        qids = np.array([r.doc_id for r in qrows], dtype=np.int64)
-        qms = np.array([r.modality for r in qrows], dtype=object)
-        qmat = _vectors([r.embedding for r in qrows])
-        half = (finish_k or 0) // 2
+        if isinstance(fresh, DataFrame):
+            qrows = fresh.select("doc_id", "modality", "embedding").collect()
+            fresh = (np.array([r.doc_id for r in qrows], dtype=np.int64),
+                     np.array([r.modality for r in qrows], dtype=object),
+                     _vectors([r.embedding for r in qrows]))
+        qids, qms, qmat = fresh
+        groups = [(None, slice(None))]
+        if cells is not None:
+            by_set: dict = {}
+            for i, cs in enumerate(cells):
+                by_set.setdefault(tuple(sorted(cs)), []).append(i)
+            groups = [(np.array(cs), np.array(ix))
+                      for cs, ix in by_set.items()]
 
         def score(batches):
             if finish_k is not None:
@@ -2670,34 +2734,35 @@ class IngestPipeline:
                 docs = pdf["doc_id"].values.astype(np.int64)
                 mods = pdf["modality"].values
                 cmat = _vectors(pdf["embedding"].values)
-                top, s = _top_pool(qmat, qids, cmat, docs, pool_k)
-                if finish_k is None:
-                    yield _pool_rows(qids, qms, docs, mods, top, s)
-                    continue
-                # quota pass over each query's rank-ordered pool: cumulative
-                # same/cross counts apply the k//2 quotas and the final
-                # top-k; surviving rows are already in rank order —
-                # byte-for-byte what _balanced_select computes
-                same = mods[top] == qms[:, None]
-                kept = np.where(same, np.cumsum(same, axis=1) <= half,
-                                np.cumsum(~same, axis=1) <= half)
-                fin = kept & (np.cumsum(kept, axis=1) <= finish_k)
-                rn = np.cumsum(fin, axis=1)
-                qi, pi = np.nonzero(fin)
-                rows = top[qi, pi]
-                yield pd.DataFrame({
-                    "qid": qids[qi],
-                    "qm": qms[qi],
-                    "doc_id": docs[rows],
-                    "modality": mods[rows],
-                    "s": s[qi, pi],
-                    "rn": rn[qi, pi].astype("int32"),
-                })
+                for cs, qi in groups:
+                    m = slice(None) if cs is None else np.isin(
+                        pdf["cid"].values, cs)
+                    top, s = _top_pool(qmat[qi], qids[qi], cmat[m], docs[m],
+                                       pool_k)
+                    if finish_k is None:
+                        yield _pool_rows(qids[qi], qms[qi], docs[m], mods[m],
+                                         top, s)
+                        continue
+                    fin = _quota(mods[top] == qms[:, None], finish_k)
+                    rn = np.cumsum(fin, axis=1)
+                    fq, fp = np.nonzero(fin)
+                    rows = top[fq, fp]
+                    yield pd.DataFrame({
+                        "qid": qids[fq],
+                        "qm": qms[fq],
+                        "doc_id": docs[rows],
+                        "modality": mods[rows],
+                        "s": s[fq, fp],
+                        "rn": rn[fq, fp].astype("int32"),
+                    })
 
         schema = CANDIDATE_SCHEMA
         if finish_k is not None:
             schema += ", rn int"
-        return corpus.mapInPandas(score, schema=schema)
+        cols = ["doc_id", "modality", "embedding"]
+        if cells is not None:
+            cols.append("cid")
+        return corpus.select(*cols).mapInPandas(score, schema=schema)
 
     def _knn_join(self, corpus: DataFrame, fresh: DataFrame) -> DataFrame:
         """Driver-safe candidate scorer: corpus × broadcast(batch), cosine
@@ -2920,219 +2985,138 @@ class IngestPipeline:
     def search(self, text: str, k: int | None = None,
                modality: str = "text", route: str = "exact",
                probes: int | None = None) -> DataFrame:
-        """`/search` analog (main.py:90-125): embed the query, the same
-        modality-balanced ``search_knn`` selection as the submit path (no
-        self-pin — the query is not a stored doc), then 1-hop expansion.
+        """`/search` analog (main.py:90-125): ``search_many([text])``'s
+        one answer as ``(id, score)`` rows in (score desc, id asc) order —
+        the modality-balanced ``search_knn`` selection (no self-pin: the
+        query is not a stored doc), then 1-hop expansion. An unembeddable
+        query answers no rows.
 
-        The query embeds on the DRIVER (``route_embedding_local`` — the
-        same kernel the UDF maps, value-identical) and enters the plan as
-        an array literal: a one-row query needs no embed job, no
-        broadcast, no cross join. With ``warm()`` state the corpus and
-        edge reads hit the in-memory caches.
-
-        ``route`` picks the candidate scan feeding the (unchanged)
-        balanced-selection + expansion pipeline: ``"exact"`` (default —
-        reference parity) scans the corpus; ``"ivf"`` restricts it to the
-        query's probed cells (``_probed_corpus`` — the exact plan
-        ``search_ivf`` serves from), approximate exactly as ``search_ivf``
-        is and LOSSLESS at ``probes = n_centroids`` (pinned by test);
-        ``"auto"`` probes when an index exists. At the 5M-doc corpus the
-        exact scan is what made warm ``/search`` grow (1.7 s/q in the
-        BASELINE.md r9 1000× table) while probed ``search_ivf`` stayed
-        flat — this gives the full-semantics endpoint the same flat scan."""
-        if route not in ("exact", "ivf", "auto"):
-            raise ValueError(f"unknown route {route!r}")
-        from multi_model_vectorsearch_spark.operators.graph import (
-            DECAY,
-            expand_one_hop,
-        )
-
-        k = k or self.k
-        vec = self._query_vec(text, modality)
-        qv = None if vec is None else F.lit(vec)
-        # One torn set for EVERY state read in this query, validated by a
-        # stable commit fingerprint around the whole plan construction:
-        # the corpus, index, and edge views must come from the SAME
-        # committed-batch prefix — a writer commits a batch's stores one
-        # after another (corpus, then edges seconds later, then the index
-        # assignment), and views listed at different instants could
-        # otherwise mix prefixes (e.g. an expansion edge surfacing a doc
-        # the corpus view doesn't hold — a state no sequential execution
-        # ever produces).
-        # capture the warm snapshot ONCE: a concurrent maybe_rewarm()
-        # publishing a new dict mid-query must not mix snapshots or
-        # KeyError this query (round-11 advice)
-        w = self._warm
-        if w:
-            if route == "exact" or qv is None:
-                corpus = w["corpus"]
-            else:
-                corpus = self._probed_corpus(qv, probes,
-                                             require=(route == "ivf"),
-                                             qv_raw=vec, warm=w)
-            edges = w["edges"]
-        else:
-            exact = route == "exact" or qv is None
-
-            def build(torn):
-                return (
-                    self._read_state_excluding_keys(
-                        self.corpus_dir, CORPUS_SCHEMA, torn)
-                    if exact else self._probed_views(torn),
-                    self._read_state_excluding_keys(
-                        self.edges_dir, EDGE_SCHEMA, torn),
-                )
-
-            captured, edges = self._stable_read(build, fallback=True)
-            corpus = (captured if exact else
-                      self._probed_corpus(qv, probes,
-                                          require=(route == "ivf"),
-                                          qv_raw=vec, views=captured))
-        if qv is None:
-            cand = self.spark.createDataFrame([], CANDIDATE_SCHEMA)
-        else:
-            cand = corpus.select(
-                F.lit(-1).cast("bigint").alias("qid"),
-                F.lit(modality).alias("qm"),
-                "doc_id", "modality",
-                snap_double(cosine_similarity(F.col("embedding"), qv))
-                .alias("s"),
-            )
-        # pre-reduce the pool with a distributed top-k (TakeOrdered: local
-        # top per partition + merge) BEFORE the quota selection: with ONE
-        # qid, _balanced_select's window would funnel the entire corpus
-        # through a single task — the same pool order (s desc, doc_id asc;
-        # doc_id makes it tie-free) as the window's prn <= pool_k stage,
-        # so the selection input is row-identical, just driver-bounded
-        pool_k = k * OVERFETCH
-        pool = cand.orderBy(F.desc("s"), F.asc("doc_id")).limit(pool_k)
-        balanced = self._balanced_select(pool, k, pool_k)
-        seeds = balanced.select(F.col("doc_id").alias("vec_id"), "s")
-        return expand_one_hop(seeds, edges, k=k, decay=DECAY)
+        ``route`` (default ``"exact"``, reference parity) picks the
+        candidate scan: ``"ivf"`` scores only the query's probed cells —
+        approximate exactly as ``search_ivf`` is, LOSSLESS at ``probes =
+        n_centroids`` (pinned by test) — and ``"auto"`` probes when an
+        index exists. At the 5M-doc corpus the exact scan is what made
+        warm ``/search`` grow (1.7 s/q in the BASELINE.md r9 1000× table)
+        while probed ``search_ivf`` stayed flat."""
+        return self.search_many([text], k, modality=modality, route=route,
+                                probes=probes).drop("qid")
 
     def search_many(self, texts: list, k: int | None = None,
                     modality: str = "text", route: str = "auto",
                     probes: int | None = None) -> DataFrame:
-        """M ``/search`` queries in ONE Spark job — the path past the
-        ~9 QPS/driver plateau (r13 verdict item 7: the plateau is
-        job-LAUNCH overhead, measured r10, not plan cost; amortizing M
-        queries over one launch is the lever).
+        """M ``/search`` queries answered by one kernel pass — the one
+        serving body (``search`` is ``search_many([text])``). Returns
+        ``(qid, id, score)`` rows, ``qid`` the index into ``texts``, each
+        query's rows in (score desc, id asc) order; an unembeddable text
+        answers no rows.
 
-        Per query the answer rows are value-identical to ``search()``
-        (same scoring, same modality-balanced selection — which was
-        already qid-keyed for the submit path — same 1-hop expansion
-        via the qid-keyed :func:`expand_one_hop_many`; pinned by test).
-        Returns ``(qid, id, score)`` where ``qid`` is the index into
-        ``texts``.
+        The reference's shape (main.py:206-253, search.py:5-43): a k·6
+        KNN pool, split by modality, then one hop of expansion. Here:
 
-        Scale shape: all M queries share ONE corpus scan. The scored
-        candidates are projected to small ``(qid, doc_id, s)`` rows
-        BEFORE the per-qid selection exchange — embeddings never enter
-        the shuffle, so the exchange is M·n tiny rows on the exact
-        route and Σ probed-cell members (~M·n^¾ under √n sizing) on
-        the ivf route, where a per-query loop would pay M full job
-        launches AND M separate scans."""
+        1. each text embeds on the driver (``route_embedding_local``);
+        2. ``_search_pool``: one ``_knn_kernel`` pass over the candidate
+           source (``_probed_corpus``: warm snapshot or bracket-captured
+           views; on a probed route each query scores only its own
+           cells) emits every query's top ``pool_k = k·OVERFETCH`` per
+           scored block — a driver collect of at most
+           P × pool_k × M rows;
+        3. on the driver, ``_seeds`` merges each query's block pools in
+           (s desc, doc_id asc) order and applies the ``_quota`` finish;
+        4. one collect gathers every edge with ``src IN seeds OR dst IN
+           seeds`` from the same snapshot, and ``_expand`` scores the hop.
+
+        Spark jobs per call, for any M: 2 on the exact route (pool,
+        edges), 3 on a probed one (plus the members broadcast); a cold
+        probed read adds the index-emptiness check and the centroid
+        collect. The query vectors ship in the kernel closure, so
+        ``len(texts) > max_collect`` raises instead of falling back. The answer is a ``VALUES``
+        relation (``_local_frame``): collecting it runs no Spark job."""
         if route not in ("exact", "ivf", "auto"):
             raise ValueError(f"unknown route {route!r}")
-        from multi_model_vectorsearch_spark.operators.graph import (
-            DECAY,
-            expand_one_hop_many,
-        )
-
-        k = k or self.k
-        vecs = [(i, self._query_vec(t, modality))
-                for i, t in enumerate(texts)]
-        vecs = [(i, v) for i, v in vecs if v is not None]
-        out_schema = "qid bigint, id bigint, score double"
-        if not vecs:
-            return self.spark.createDataFrame([], out_schema)
-
-        w = self._warm
-        if w:
-            corpus = w["corpus"]
-            cents = w.get("centroids")
-            idx = w.get("index")
-            edges = w["edges"]
-        else:
-            def build(torn):
-                return (self._probed_views(torn),
-                        self._read_state_excluding_keys(
-                            self.edges_dir, EDGE_SCHEMA, torn))
-
-            (corpus, cents, idx), edges = self._stable_read(
-                build, fallback=True)
-            if idx is not None and idx.isEmpty():
-                cents = idx = None
-        use_ivf = route == "ivf" or (route == "auto" and idx is not None)
-        if use_ivf and idx is None:
+        if len(texts) > self.max_collect:
             raise ValueError(
-                "route='ivf' requested but no live IVF index exists; "
-                "use route='auto' for silent fallback")
-
-        qdf = self.spark.createDataFrame(
-            [(int(i), [float(x) for x in v]) for i, v in vecs],
-            "qid bigint, qvec array<double>")
-        if use_ivf:
-            crows = w.get("cent_rows") if w else None
-            if probes is None:
-                probes = self._auto_probes(
-                    len(crows) if crows else cents.count())
-            if crows:
-                # warm: probe selection is M numpy argsorts on the
-                # driver — zero Spark jobs, same as the single-query path
-                pc = [(int(i), int(c)) for i, v in vecs
-                      for c in self._probe_cids_local(crows, v, probes)]
-                probe_map = self.spark.createDataFrame(
-                    pc, "qid bigint, cid int")
-            else:
-                wq = Window.partitionBy("qid").orderBy(
-                    F.desc("cs"), F.asc("cid"))
-                probe_map = (
-                    cents.crossJoin(F.broadcast(qdf))
-                    .select("qid", "cid", cosine_similarity(
-                        F.col("cvec"), F.col("qvec")).alias("cs"))
-                    .withColumn("prn", F.row_number().over(wq))
-                    .filter(F.col("prn") <= probes)
-                    .select("qid", "cid")
-                )
-            members = idx.join(F.broadcast(probe_map), "cid").select(
-                "qid", "doc_id")
-            cand = (
-                corpus.join(members, "doc_id")
-                .join(F.broadcast(qdf), "qid")
-            )
-        else:
-            cand = corpus.crossJoin(F.broadcast(qdf))
-        scored = cand.select(
-            "qid", F.lit(modality).alias("qm"), "doc_id", "modality",
-            snap_double(cosine_similarity(F.col("embedding"),
-                                          F.col("qvec"))).alias("s"),
-        )
+                f"search_many of {len(texts)} texts exceeds max_collect="
+                f"{self.max_collect}: the query vectors ship in the kernel "
+                "closure and the driver collects P x pool_k x M rows; "
+                "split the batch")
+        k = k or self.k
         pool_k = k * OVERFETCH
-        balanced = self._balanced_select(scored, k, pool_k)
-        seeds = balanced.select(
-            "qid", F.col("doc_id").alias("vec_id"), "s")
-        return expand_one_hop_many(seeds, edges, k=k, decay=DECAY)
+        vecs = [self._query_vec(t, modality) for t in texts]
+        live = [i for i, v in enumerate(vecs) if v is not None]
+        rows = []
+        if live:
+            pool, edges = self._search_pool([vecs[i] for i in live], k,
+                                            modality, route, probes)
+            pools: list = [[] for _ in live]
+            for r in pool.collect():
+                pools[r.qid - SERVE_QID0].append((r.s, r.doc_id, r.modality))
+            seeds = [_seeds(p, modality, k, pool_k) for p in pools]
+            ids = ", ".join(map(str, sorted(
+                {d for sd in seeds for d, _ in sd})))
+            adj: dict = {}
+            if ids:
+                for e in edges.filter(F.expr(
+                        f"src IN ({ids}) OR dst IN ({ids})")).collect():
+                    adj.setdefault(e.src, []).append((e.dst, e.score))
+                    adj.setdefault(e.dst, []).append((e.src, e.score))
+            for i, sd in zip(live, seeds):
+                rows += [(i, d, s) for d, s in _expand(sd, adj, k)]
+        return self._local_frame(rows, "qid bigint, id bigint, score double")
+
+    def _search_pool(self, vecs: list, k: int, modality: str = "text",
+                     route: str = "exact", probes: int | None = None,
+                     warm: dict | None = None) -> tuple:
+        """``(pool plan, edge view)`` of one serving call — the one
+        serving DataFrame Spark executes (plans/window_audit audits it).
+        The pool is ``_knn_kernel`` over ``_probed_corpus``'s candidate
+        source with query ``q``'s kernel qid ``SERVE_QID0 + q``: per
+        scored block, each query's top ``k·OVERFETCH`` candidate rows."""
+        import numpy as np
+
+        corpus, cells, edges = self._probed_corpus(vecs, route, probes,
+                                                   warm, edges=True)
+        queries = (np.arange(len(vecs), dtype=np.int64) + SERVE_QID0,
+                   np.array([modality] * len(vecs), dtype=object),
+                   _vectors(vecs))
+        return (self._knn_kernel(corpus, queries, k * OVERFETCH,
+                                 cells=cells), edges)
+
+    def _local_frame(self, rows: list, schema: str) -> DataFrame:
+        """Driver rows (bigint/double columns) as a SQL ``VALUES``
+        relation: a LocalRelation, whose collect() runs no Spark job under
+        any session conf (``createDataFrame`` from a row list runs one;
+        from pandas, none only with Arrow on). An empty frame may also
+        type string columns."""
+        cols = [c.split() for c in schema.split(",")]
+        names = ", ".join(n for n, _ in cols)
+        if not rows:
+            nulls = ", ".join(f"CAST(NULL AS {t})" for _, t in cols)
+            return self.spark.sql(
+                f"SELECT * FROM VALUES ({nulls}) AS t({names}) WHERE false")
+        fmt = {"bigint": lambda v: f"{int(v)}L",
+               "double": lambda v: f"{float(v)!r}D"}
+        body = ", ".join(
+            "(" + ", ".join(fmt[t](v) for (_, t), v in zip(cols, r)) + ")"
+            for r in rows)
+        return self.spark.sql(f"SELECT * FROM VALUES {body} AS t({names})")
 
     def serve_search_many(self, texts: list, k: int | None = None,
                           modality: str = "text", route: str = "auto",
                           probes: int | None = None,
                           retries: int = 4) -> list:
-        """``search_many()`` collected eagerly under the always-answers
-        retry wrapper. Returns one ``list[Row]`` per input text, in
-        input order (a query whose text embeds to nothing gets ``[]``)
-        — M answers for one Spark job, one ``serve_counters`` query
-        tick per CALL (the batch is the serving unit)."""
+        """``search_many()`` collected under the always-answers retry
+        wrapper. Returns one ``list[Row]`` per input text, in input order
+        (a query whose text embeds to nothing gets ``[]``) — one
+        ``serve_counters`` query tick per CALL (the batch is the serving
+        unit)."""
         rows = self._serve(
             lambda: self.search_many(texts, k, modality=modality,
                                      route=route, probes=probes)
             .collect(), retries)
-        by_qid: dict[int, list] = {}
-        for r in rows:
-            by_qid.setdefault(int(r.qid), []).append(r)
-        for grp in by_qid.values():
-            grp.sort(key=lambda r: (-r.score, r.id))
-        return [by_qid.get(i, []) for i in range(len(texts))]
+        groups: list = [[] for _ in texts]
+        for r in rows:  # already in (qid, score desc, id asc) order
+            groups[r.qid].append(r)
+        return groups
 
 
 # --- reference API facade ----------------------------------------------------
@@ -3191,73 +3175,3 @@ def _facade_graph_data(self):
 
 IngestPipeline.submit = _facade_submit
 IngestPipeline.graph_data = _facade_graph_data
-
-
-class ShardedReadView:
-    """Union read view over N disjoint-shard state roots — the reader
-    half of the sharding contract (see IngestPipeline's class
-    docstring). One :class:`IngestPipeline` per shard root, never
-    acquiring a writer lease; every read composes per-shard
-    linearizable reads, so each answer is a tuple of per-shard
-    committed prefixes (no cross-shard ordering — the partitioned-log
-    consistency model).
-
-    ``serve_search``/``serve_search_ivf`` take the per-shard top-k and
-    merge-sort to the global top-k — EXACT for disjoint doc sets
-    (every global top-k doc is in its own shard's top-k). Expansion
-    inside each shard's ``serve_search`` follows only intra-shard
-    edges, per the contract. ``freshness()`` returns each shard's
-    gauge plus the bound the union inherits: the view is at most
-    ``max(shard.behind_units)`` batches behind any single shard's
-    writer."""
-
-    def __init__(self, spark: SparkSession, shard_roots: list,
-                 k: int = 10, **pipe_kwargs):
-        if not shard_roots:
-            raise ValueError("need at least one shard root")
-        self.k = k
-        self.pipes = [IngestPipeline(spark, r, k=k, **pipe_kwargs)
-                      for r in shard_roots]
-
-    def corpus(self) -> DataFrame:
-        out = self.pipes[0].corpus()
-        for p in self.pipes[1:]:
-            out = out.unionByName(p.corpus())
-        return out
-
-    def warm(self, policy: str | None = None) -> list:
-        return [p.warm(policy) for p in self.pipes]
-
-    def maybe_rewarm(self) -> bool:
-        return any([p.maybe_rewarm() for p in self.pipes])
-
-    def freshness(self) -> dict:
-        shards = [p.freshness() for p in self.pipes]
-        return {"shards": shards,
-                "fresh": all(s["fresh"] for s in shards),
-                "behind_units_max": max(s["behind_units"]
-                                        for s in shards)}
-
-    @staticmethod
-    def _merge(per_shard: list, k: int, key) -> list:
-        rows = [r for rows in per_shard for r in rows]
-        rows.sort(key=key)
-        return rows[:k]
-
-    def serve_search(self, text: str, k: int | None = None,
-                     modality: str = "text", route: str = "exact",
-                     retries: int = 4) -> list:
-        k = k or self.k
-        return self._merge(
-            [p.serve_search(text, k, modality=modality, route=route,
-                            retries=retries) for p in self.pipes],
-            k, lambda r: (-r.score, r.id))
-
-    def serve_search_ivf(self, text: str, k: int | None = None,
-                         modality: str = "text",
-                         retries: int = 4) -> list:
-        k = k or self.k
-        return self._merge(
-            [p.serve_search_ivf(text, k, modality=modality,
-                                retries=retries) for p in self.pipes],
-            k, lambda r: (-r.s, r.doc_id))

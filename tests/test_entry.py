@@ -98,8 +98,8 @@ def test_gate_artifact_is_fresh():
     """The committed full-gate artifact (GATE_r*.json, written by
     scripts/check_correctness.py --out) must cover exactly the registered
     queries, so a judge can read full-registry verdicts without a rerun.
-    Regenerate after adding an entry:
-    python scripts/check_correctness.py --out GATE_r4.json"""
+    Regenerate the newest one after adding an entry:
+    python scripts/check_correctness.py --out GATE_r15.json <sf0.01 dir>"""
     import glob
     import json
     import os
