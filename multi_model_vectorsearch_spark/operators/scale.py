@@ -245,7 +245,10 @@ def global_orders_scalable(df: DataFrame, specs: list,
     ascending struct; NaN unsupported); rows with NULL keys are only
     supported on all-ascending specs (they bucket first, matching
     Spark's asc-nulls-first). Every current caller orders by non-null
-    group keys / aggregates.
+    group keys / aggregates. A spec whose sample holds no row with every
+    key non-NULL has no boundary, so its bucket is a constant and its
+    window one task: past ``rowsPerRange`` rows that raises
+    ``ValueError`` naming the spec.
 
     ``specs``: ``(rank_col, order_cols, cum_sums, cum_mins)`` tuples —
     ``order_cols`` entries are ``"name"`` or ``("name", "desc")``;
@@ -290,9 +293,18 @@ def global_orders_scalable(df: DataFrame, specs: list,
             tuple((-r[name] if desc else r[name]) for name, desc in order)
             for r in smp
             if all(r[name] is not None for name, _ in order))
+        bounds = _boundaries(vals, n_buckets)
+        if not bounds and n_total > rows_per_range:
+            # _bucket_sql would return a constant, which the optimizer
+            # folds out of the partition spec: one task over every row
+            raise ValueError(
+                f"global_orders_scalable: spec {rank_col!r} ordered by "
+                f"{order} sampled no non-NULL key among {n_total} rows "
+                f"(> spark.mmvs.gos.rowsPerRange={rows_per_range}), so "
+                "its window would be partitionless")
         bname = f"_gb_{rank_col}"
         out = out.withColumn(bname, F.expr(_bucket_sql(
-            order, _boundaries(vals, n_buckets), dtypes)))
+            order, bounds, dtypes)))
         plan.append((rank_col, order, cum_sums, cum_mins, bname))
 
     # one grouping-sets job collects every spec's per-bucket counts and

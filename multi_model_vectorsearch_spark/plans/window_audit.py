@@ -106,12 +106,6 @@ SERVING_WINDOW_CLASS: dict[str, tuple[str, str]] = {
         "never the corpus — ingest._chunk_ranked; the window executes in "
         "the kernel's per-chunk driver collect, so the returned candidate "
         "plan (knn.fat_batch, audited at zero windows) does not carry it"),
-    "ingest.centroid_seeds": (
-        "driver-bounded",
-        "cid numbering window over the post-LIMIT ncent≈√n seed rows — "
-        "ingest._seed_centroids_plan, the auto-sized seeds (TakeOrdered "
-        "bounds the input before the window; fixed-mode seeds are "
-        "numbered on the driver, with no window)"),
 }
 
 
@@ -122,8 +116,11 @@ def serving_plan_suite(pipe, query_text: str) -> dict[str, "DataFrame"]:
     one serving DataFrame Spark executes; ``search()`` itself returns a
     driver-built local relation), probed `search_ivf`, the ingest KNN on
     both physical routes (kernel ≤ max_collect and the chunked
-    fat-batch), and the centroid-seed plan. Builds plans only
-    (collect-free except the bounded jobs the builders themselves run)."""
+    fat-batch), and the graph build on every route (cells, probed, and
+    both skew-split). Builds plans only (collect-free except the bounded
+    jobs those calls themselves run)."""
+    from multi_model_vectorsearch_spark.streaming.ingest import IVF_PROBES
+
     corpus = pipe.corpus()
     qv = [pipe._query_vec(query_text, "text")]
     fresh = corpus.limit(3)
@@ -137,21 +134,26 @@ def serving_plan_suite(pipe, query_text: str) -> dict[str, "DataFrame"]:
         "knn.kernel": pipe.knn_against_corpus(fresh, n_queries=3),
         "knn.fat_batch": fat,
         "knn.fat_batch_chunking": pipe._chunk_ranked(fresh),
-        "ingest.centroid_seeds": pipe._seed_centroids_plan(corpus, 4),
         # bulk graph build (round-9): every window is qid-partitioned —
         # expected to contribute ZERO partitionless windows
         "build_graph.neighbors": pipe._build_graph_neighbors(),
+        # probed graph build: the same cell-group kernel, each doc also
+        # querying its next-nearest cells — expected ZERO partitionless
+        "build_graph.ivf": pipe._build_graph_neighbors(method="ivf"),
         # probed /search route: the same kernel pass over the probed
         # cells' members
         "search.pool_routed": pipe._search_pool(qv, 4, route="ivf")[0],
-        # within-cell bulk build: the applyInPandas cohort emits the
+        # within-cell bulk build: the applyInPandas cell groups emit the
         # per-query pool; the only windows are _balanced_select's
         # qid-partitioned ones — expected ZERO partitionless
         "build_graph.cells": pipe._within_cell_neighbors(corpus),
-        # the r10 block-pair skew route (cap=1 forces every cell through
-        # the r² decomposition): still only _balanced_select's windows —
-        # the block reduce is argpartition-in-kernel + the same
-        # qid-partitioned selection, expected ZERO partitionless
+        # the skew split (cap=1 forces every cell through the r²
+        # decomposition), unprobed and probed: still only
+        # _balanced_select's windows — the block reduce is
+        # argpartition-in-kernel + the same qid-partitioned selection,
+        # expected ZERO partitionless
         "build_graph.cells_blocked": pipe._within_cell_neighbors(
             corpus, cap=1),
+        "build_graph.ivf_blocked": pipe._within_cell_neighbors(
+            corpus, cap=1, probes=IVF_PROBES, crows=pipe._centroid_rows()),
     }

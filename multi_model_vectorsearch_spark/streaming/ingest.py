@@ -97,8 +97,8 @@ def _vectors(values):
 def _top_pool(q, qids, c, cids, pool_k: int):
     """Each query's top-``pool_k`` candidates by snapped cosine — the one
     numpy scorer behind the ingest KNN and every serving pool
-    (``_knn_kernel``) and the cells graph build
-    (``_within_cell_neighbors``, ``_block_pair_neighbors``).
+    (``_knn_kernel``) and every cell-group graph build, probed or not
+    (``_within_cell_neighbors``).
 
     ``q`` (nq × d) and ``c`` (n × d) are raw float64 embeddings and
     ``cids`` is sorted ascending: a candidate's row position IS its
@@ -234,18 +234,21 @@ def _expand(seeds: list, adj: dict, k: int) -> list:
     return sorted(best.items(), key=lambda t: (-t[1], t[0]))[:k]
 
 
-def _assign_kernel(e, cmat):
-    """Row position in ``cmat`` (centroids sorted by cid) of each row of
-    ``e``'s nearest centroid — the one scorer of ``_assign`` and every
-    Lloyd pass. Float64 matmul cosine over the norm product (floored at
-    1e-12), snapped by snap_double's numpy twin (its /1e6 is
-    argmax-invariant and skipped); np.argmax takes the FIRST maximum, so
-    ties go to the lowest cid. Chunked: the score buffer stays ≤ ~32 MB."""
+def _assign_kernel(e, cmat, probes: int = 1):
+    """Row positions in ``cmat`` (centroids sorted by cid) of each row of
+    ``e``'s ``probes`` nearest centroids, nearest first — the one scorer
+    of ``_assign`` and every Lloyd pass (``probes=1``, the nearest as a
+    vector) and of the probed graph build's cell ranking. Float64 matmul
+    cosine over the norm product (floored at 1e-12), snapped by
+    snap_double's numpy twin (its /1e6 is order-invariant and skipped);
+    np.argmax takes the FIRST maximum and the stable sort keeps equal
+    scores in position order, so ties go to the lowest cid. Chunked: the
+    score buffer stays ≤ ~32 MB."""
     import numpy as np
 
     cnorm = np.linalg.norm(cmat, axis=1)
     en = np.linalg.norm(e, axis=1)
-    out = np.empty(len(e), dtype=np.int64)
+    out = np.empty((len(e), probes), dtype=np.int64)
     chunk = max(1, 4_000_000 // max(len(cmat), 1))
     for lo in range(0, len(e), chunk):
         hi = min(lo + chunk, len(e))
@@ -255,8 +258,12 @@ def _assign_kernel(e, cmat):
         np.multiply(sims, 1e6, out=sims)
         np.add(sims, 0.5, out=sims)
         np.floor(sims, out=sims)
-        out[lo:hi] = sims.argmax(axis=1)
-    return out
+        if probes == 1:
+            out[lo:hi, 0] = sims.argmax(axis=1)
+        else:
+            np.negative(sims, out=sims)
+            out[lo:hi] = np.argsort(sims, axis=1, kind="stable")[:, :probes]
+    return out[:, 0] if probes == 1 else out
 
 
 class StateCommitStormError(RuntimeError):
@@ -386,8 +393,8 @@ class IngestPipeline:
         # small corpora)
         self.rows_per_partition = 100_000
         # ~rows per side of a within-cell scoring task (build_graph's
-        # block-pair skew split). Balanced √n cells sit far below the
-        # default (a 5M-doc corpus has ~2.2k-row cells), so the split only
+        # skew split). Balanced √n cells sit far below the default (a
+        # 5M-doc corpus has ~2.2k-row cells), so the split only
         # engages on pathological skew; tests shrink it per-INSTANCE to
         # exercise the block path on small fixtures (an instance attribute
         # by r10-verdict request — a class-level override would leak to
@@ -808,12 +815,14 @@ class IngestPipeline:
         re-running with the same key). Candidate scoring routes by what
         state exists:
 
-        - with a live IVF index: the probed join
-          (``_knn_join_ivf(broadcast_queries=False)``) — per doc
-          ~probes·(n/ncent) candidates, total ~n^3/2 under √n sizing,
-          all shuffle joins (nothing corpus-sized is broadcast). The
-          neighbor set is approximate exactly as ``search_ivf`` is, with
-          the same self-pin guarantee;
+        - with a live IVF index: the probed cell build
+          (``_within_cell_neighbors``) — each doc queries its own cell
+          and its next-nearest ones, ``probes`` cells in all
+          (``IVF_PROBES`` by default), ~probes·(n/ncent) candidates per
+          doc, total ~n^3/2 under √n sizing; rows shuffle only by cell
+          key (nothing corpus-sized is broadcast). The neighbor set is
+          approximate exactly as ``search_ivf`` is, with the same
+          self-pin guarantee;
         - otherwise: the exact chunked kernel (``knn_against_corpus``) —
           n² pair work, right for small corpora and the parity baseline.
 
@@ -824,22 +833,16 @@ class IngestPipeline:
 
         ``method`` overrides the auto-routing: ``"exact"`` forces the
         chunked dgemm kernel even when an IVF index exists; ``"ivf"``
-        forces the probed join (errors if no index). Measured
-        (scripts/probe_graph_build.py, dim-16 corpus, BASELINE.md r9):
-        exact 5.5 / 220 / 646 s at 5k / 50k / 500k docs, probed join
-        6.4 / 78 s at 5k / 50k (e ≈ 1.09 → ~900 s projected at 500k) —
-        the two scorers trade places with scale (exact pays n²·d flops
-        at dgemm speed; the join pays ~n^7/4 candidate ROWS at
-        shuffle+expression speed), so the choice is a measurement, not
-        a rule — which is why it is a parameter. ``"cells"`` is the
-        10⁹⁺-doc design implemented: within-cell dgemm cohorts
-        (``_within_cell_neighbors`` — n^{3/2}·d flops, one exchange on
-        cid, no cross-cell candidates), strictly narrower than the
-        probed join but with exact self-pins and identical snapped
-        scores on shared pairs — measured 3.97 / 43.8 s at 50k / 500k
-        docs (32× / 13× faster than exact, ~linear; BASELINE.md r9);
-        the alternative at that scale is the maintained incremental
-        ingest path.
+        forces the probed cell build (errors if no index); ``"cells"``
+        is the same build with one cell per doc — the 10⁹⁺-doc design,
+        strictly narrower than the probed build, n^{3/2}·d flops and one
+        exchange on cid. Every route scores with the one ``_top_pool``
+        dgemm kernel, so shared pairs carry identical snapped scores.
+        Measured costs per route and scale (scripts/probe_graph_build.py)
+        are in BASELINE.md round 9: exact pays n²·d flops at dgemm speed
+        and the cells build ~n^{3/2}·d, so the choice is a measurement,
+        not a rule — which is why it is a parameter; the alternative at
+        10⁹⁺ docs is the maintained incremental ingest path.
 
         FRESHNESS CONTRACT (pinned by
         test_bulk_then_ingest_edge_freshness_contract): the edge store is
@@ -986,7 +989,7 @@ class IngestPipeline:
         sub = corpus.join(cdocs, "doc_id", "left_semi")
         # the within-cell kernel joins the index itself, so restricting
         # the corpus argument restricts the scored cells; n_total=None
-        # keeps the skew (block-pair) gate engaged
+        # keeps the skew-split gate engaged
         neighbors = self._within_cell_neighbors(sub)
         new_edges = self.build_edges(neighbors)
         old_edges = self._read_state_excluding_keys(
@@ -1021,8 +1024,8 @@ class IngestPipeline:
                                crows: list | None = None) -> DataFrame:
         """The neighbor-selection plan behind ``build_graph`` — exposed so
         the serving-plan window audit (plans/window_audit.py) walks the
-        actual plan the bulk build executes. All its windows partition by
-        qid (balanced selection, qcells top-p), so the partitionless
+        actual plan the bulk build executes. Its only windows are
+        ``_balanced_select``'s qid-partitioned ones, so the partitionless
         audit expects zero here. ``crows``: ``_live_ivf``'s centroid
         rows, read here when ``None``."""
         corpus = self.corpus().transform(pin_lazy)
@@ -1031,138 +1034,140 @@ class IngestPipeline:
             crows = self._live_ivf()[0]
         if method in ("ivf", "cells") and not crows:
             raise ValueError(f"method={method!r} requires a live IVF index")
-        if method == "cells":
-            return self._within_cell_neighbors(corpus, n_total=n)
         if method == "exact" or not crows:
             return self.knn_against_corpus(corpus, n_queries=n, n_corpus=n)
-        cand = self._knn_join_ivf(
-            corpus, corpus, crows, self.ivf_index(), probes=probes,
-            broadcast_queries=False, include_fresh_assignment=False)
-        return self._balanced_select(cand, self.k, self.k * OVERFETCH)
+        return self._within_cell_neighbors(
+            corpus, n_total=n, crows=crows,
+            probes=1 if method == "cells" else probes or IVF_PROBES)
 
     def _within_cell_neighbors(self, corpus: DataFrame,
                                n_total: int | None = None,
-                               cap: int | None = None) -> DataFrame:
-        """Within-cell candidate pool — ``build_graph(method="cells")``.
+                               cap: int | None = None, probes: int = 1,
+                               crows: list | None = None) -> DataFrame:
+        """Cell-group candidate pool — ``build_graph``'s ``"cells"`` and
+        ``"ivf"`` methods and ``refresh_edges``.
 
-        The 10⁹⁺-doc bulk-build design the other two scorers can't reach:
-        every doc's candidates are the members of its OWN IVF cell, so
-        the similarity square never crosses a cell boundary. Work =
-        Σ m_cell² · d ≈ n^{3/2}·d flops under √n sizing, ALL of it the
-        shared ``_top_pool`` dgemm kernel (queries = candidates = the
-        cell's members) inside one ``applyInPandas`` per cell (the dq148
-        SemDeDup tiling pattern applied to graph construction); shuffle =
-        one exchange of the corpus on cid plus n·pool_k emitted candidate
-        rows. Nothing
-        corpus-sized is collected or broadcast, and cells are ~√n by
-        Lloyd balance with re-train keeping the ideal/active ratio ≤ 2×
-        (a pathological giant cell still lands in one task — the known
-        applyInPandas bound, same as dq148's).
+        Every doc queries ``probes`` IVF cells: its own stored cell, then
+        its next-nearest cells by ``_assign_kernel``'s ranking of the
+        centroid rows ``crows`` (snapped cosine, ties to the lowest cid;
+        needed only when ``probes > 1``). A cell's candidates are its
+        members from the index. Work = Σ over cells of (visiting queries
+        × members) · d ≈ probes · n^{3/2}·d flops under √n sizing, ALL of
+        it the shared ``_top_pool`` dgemm kernel: one ``applyInPandas``
+        over ``(cid, qb, cb)`` groups, each holding query rows (``is_q``)
+        and candidate rows (``is_c``), scored by one ``_top_pool`` call
+        (the dq148 SemDeDup tiling pattern applied to graph
+        construction). Rows reach the shuffle only through their cell
+        key; nothing corpus-sized is collected or broadcast. With
+        ``probes=1`` and no cell over the cap the plan is one exchange on
+        the cell key with one row per member, each both query and
+        candidate.
 
-        Approximation: neighbors outside the query's cell are missed —
-        strictly narrower than the probed join (probes ≥ 1 cell) and the
-        exact scan; the self-match pin is exact (a doc is always in its
-        own cell, and ``_top_pool`` pins it to 1.0 AFTER the snap,
-        mirroring the join paths' ``when(doc_id == qid, 1.0)``). The
-        exact build's ``_knn_kernel`` scores with the same ``_top_pool``,
-        so shared pairs carry the same snapped score (a dgemm ulp landing
-        on a snap boundary can still move one 1e-6 bucket — the fixture
-        note on test_build_graph_cells_method). Per-cell emission of each
-        query's top ``pool_k`` by (snapped s desc, doc_id asc) is LOSSLESS
-        for the downstream ``_balanced_select`` pool because all of a
-        query's candidates live in this one cell.
+        Approximation: neighbors outside the probed cells are missed —
+        ``probes=1`` is strictly narrower than any probed build and the
+        exact scan. The self-match pin is exact: a doc is a candidate in
+        its own stored cell, which it always queries, and ``_top_pool``
+        pins it to 1.0 AFTER the snap, mirroring the join paths'
+        ``when(doc_id == qid, 1.0)``. The exact build's ``_knn_kernel``
+        scores with the same ``_top_pool``, so shared pairs carry the same
+        snapped score (a dgemm ulp landing on a snap boundary can still
+        move one 1e-6 bucket — the fixture note on
+        test_build_graph_cells_method).
 
-        Skew bound (r9 verdict item 2 closed): a cell larger than
-        ``cell_rows_cap`` no longer lands its whole m² square in one
-        task. Oversized cells are hash-split into r = ceil(m/cap) row
-        blocks and scored as r² independent (query-block × candidate-
-        block) tasks — ``_block_pair_neighbors`` — whose per-query block
-        tops union into a SUPERSET of the cell-local top pool; the
-        ``prn <= pool_k`` window that opens ``_balanced_select`` then
-        reduces it to exactly the rows the one-task scorer would have
-        kept (same (s desc, doc_id asc) order), so the split is
-        value-identical by construction and pinned by test. A dominant
-        near-dup cluster — the workload dedup exists for — now costs
-        ~2r·m shuffled rows instead of an executor-OOM or the 2^24
-        packing abort."""
+        Skew bound: a cell larger than ``cell_rows_cap`` does not land
+        its whole square in one task. Its members hash into r =
+        ceil(m/cap) blocks by ``pmod(xxhash64(doc_id), r)``, and so do
+        the queries visiting it; a query row is replicated once per
+        candidate block and a candidate row once per query block, so
+        group (cid, qb, cb) holds query block qb and candidate block cb:
+        r² bounded tasks instead of one m² task. The gate runs only when
+        a cell COULD exceed the cap (``n_total`` ≤ cap proves none can,
+        so the sizes pass is skipped).
+
+        Each group emits each of its queries' top ``pool_k`` by (snapped
+        s desc, doc_id asc); a query's candidates are partitioned across
+        its groups, so the union of its group pools contains its global
+        top pool, and the ``prn <= pool_k`` window that opens
+        ``_balanced_select`` keeps exactly that pool — value-identical to
+        scoring every query against all its candidates in one task
+        (pinned by test_build_graph_cells_blocked_matches_single_task)."""
         import numpy as np
 
         pool_k = self.k * OVERFETCH
         members = self.ivf_index().select("doc_id", "cid").join(
             corpus.select("doc_id", "modality", "embedding"), "doc_id")
+        if crows:
+            probes = min(probes, len(crows))
+        if probes > 1:
+            crows = sorted(crows, key=lambda r: r.cid)
+            ccids = np.array([r.cid for r in crows], dtype=np.int32)
+            cmat = _vectors([r.cvec for r in crows])
+
+            def probe_rows(batches):
+                # each member row in its stored cell (own), then once per
+                # next-nearest cell after it, up to ``probes`` cells
+                for pdf in batches:
+                    if not len(pdf):
+                        continue
+                    rank = ccids[_assign_kernel(
+                        _vectors(pdf["embedding"].values), cmat, probes)]
+                    keep = rank != pdf["cid"].values[:, None]
+                    keep &= np.cumsum(keep, axis=1) < probes
+                    qi = np.concatenate([np.arange(len(pdf)),
+                                         np.nonzero(keep)[0]])
+                    out = pdf.iloc[qi].reset_index(drop=True)
+                    out["cid"] = np.concatenate(
+                        [pdf["cid"].values, rank[keep]]).astype(np.int32)
+                    out["own"] = np.arange(len(qi)) < len(pdf)
+                    yield out
+
+            rows = members.mapInPandas(
+                probe_rows, "doc_id bigint, cid int, modality string, "
+                "embedding array<double>, own boolean")
+        else:
+            rows = members.withColumn("own", F.lit(True))
         if cap is None:  # per-call override (plan audits), else configured
             cap = self.cell_rows_cap
-        big = None
-        if n_total is None or n_total > cap:
-            # skew gate engaged only when a cell COULD exceed the cap
-            # (n_total ≤ cap proves none can — skip the sizes pass)
-            counts = members.groupBy("cid").agg(F.count("*").alias("m"))
-            sized = members.join(F.broadcast(counts), "cid")
-            big = sized.filter(F.col("m") > cap)
-            members = sized.filter(F.col("m") <= cap).drop("m")
+        gated = n_total is None or n_total > cap
+        if gated:
+            blocks = members.groupBy("cid").agg(
+                F.ceil(F.count("*") / F.lit(cap)).cast("int").alias("r"))
+            rows = rows.join(F.broadcast(blocks), "cid")
+            r = F.col("r")
+        else:
+            r = F.lit(1)
+        blk = F.pmod(F.xxhash64("doc_id"), r).cast("int")
+        other = F.explode(F.sequence(F.lit(0), r - 1))
+        payload = ["doc_id", "modality", "embedding"]
+        # every row queries its cell's blocks; an own row is also a
+        # candidate in its own block's diagonal group
+        groups = rows.select(
+            "cid", blk.alias("qb"), other.alias("cb"), "own", *payload
+        ).select("cid", "qb", "cb", F.lit(True).alias("is_q"),
+                 (F.col("own") & (F.col("qb") == F.col("cb"))).alias("is_c"),
+                 *payload)
+        if gated:
+            # an oversized cell's members as candidates of the query
+            # blocks other than their own
+            groups = groups.unionByName(members.join(
+                F.broadcast(blocks), "cid").filter(F.col("r") > 1).select(
+                "cid", other.alias("qb"), blk.alias("cb"),
+                F.lit(False).alias("is_q"), F.lit(True).alias("is_c"),
+                *payload).filter(F.col("qb") != F.col("cb")))
 
-        def score_cell(pdf):
+        def score_group(pdf):
             pdf = pdf.sort_values("doc_id", kind="stable")
             ids = pdf["doc_id"].values.astype(np.int64)
             mods = pdf["modality"].values
             e = _vectors(pdf["embedding"].values)
-            return _pool_rows(ids, mods, ids, mods,
-                              *_top_pool(e, ids, e, ids, pool_k))
-
-        cand = members.groupBy("cid").applyInPandas(
-            score_cell, CANDIDATE_SCHEMA)
-        if big is not None and not big.isEmpty():
-            cand = cand.unionByName(
-                self._block_pair_neighbors(big, pool_k, cap))
-        return self._balanced_select(cand, self.k, pool_k)
-
-    def _block_pair_neighbors(self, big: DataFrame, pool_k: int,
-                              cap: int | None = None) -> DataFrame:
-        """Block-pair decomposition of oversized IVF cells.
-
-        Each row of a cell with m > ``cell_rows_cap`` is hashed into one
-        of r = ceil(m/cap) blocks (xxhash64 of doc_id — deterministic, no
-        ordering shuffle). A row is replicated r times as a QUERY (once
-        per candidate block) and r times as a CANDIDATE (once per query
-        block), so task (cid, qb, cb) holds exactly query-block qb and
-        candidate-block cb of its cell: r² bounded tasks instead of one
-        m² task, each one call of the shared ``_top_pool`` kernel with
-        its two halves. Emitted per-query block tops are a superset of
-        the cell-local pool; the caller's ``_balanced_select`` window
-        reduces them under the same (s desc, doc_id asc) key —
-        value-identical to the single-task build (pinned by
-        test_build_graph_cells_blocked). The self-pin lands in the
-        qb == cb diagonal task, where ``_top_pool`` matches it by doc_id."""
-        import numpy as np
-
-        if cap is None:
-            cap = self.cell_rows_cap
-        big = big.withColumn(
-            "r", F.ceil(F.col("m") / F.lit(cap)).cast("int")
-        ).withColumn(
-            "blk", F.pmod(F.xxhash64("doc_id"), F.col("r")).cast("int"))
-        blocks = F.sequence(F.lit(0), F.col("r") - 1)
-        qrep = big.select(
-            "cid", F.col("blk").alias("qb"),
-            F.explode(blocks).alias("cb"), F.lit(True).alias("is_q"),
-            "doc_id", "modality", "embedding")
-        crep = big.select(
-            "cid", F.explode(blocks).alias("qb"),
-            F.col("blk").alias("cb"), F.lit(False).alias("is_q"),
-            "doc_id", "modality", "embedding")
-
-        def score_block(pdf):
-            q = pdf[pdf["is_q"]].sort_values("doc_id", kind="stable")
-            c = pdf[~pdf["is_q"]].sort_values("doc_id", kind="stable")
-            qids = q["doc_id"].values.astype(np.int64)
-            cids = c["doc_id"].values.astype(np.int64)
+            q, c = pdf["is_q"].values, pdf["is_c"].values
             return _pool_rows(
-                qids, q["modality"].values, cids, c["modality"].values,
-                *_top_pool(_vectors(q["embedding"].values), qids,
-                           _vectors(c["embedding"].values), cids, pool_k))
+                ids[q], mods[q], ids[c], mods[c],
+                *_top_pool(e[q], ids[q], e[c], ids[c], pool_k))
 
-        return qrep.unionByName(crep).groupBy("cid", "qb", "cb") \
-            .applyInPandas(score_block, CANDIDATE_SCHEMA)
+        cand = groups.groupBy("cid", "qb", "cb").applyInPandas(
+            score_group, CANDIDATE_SCHEMA)
+        return self._balanced_select(cand, self.k, pool_k)
 
     def _read_state(self, path: str, schema: str) -> DataFrame:
         """Read a parquet state dir (flat compacted files and/or per-batch
@@ -1723,22 +1728,20 @@ class IngestPipeline:
         return max(IVF_PROBES, 2 * math.isqrt(max(ncent, 1)))
 
     @staticmethod
-    def _seed_centroids_plan(corpus: DataFrame, ncent: int) -> DataFrame:
-        """Deterministic centroid seeds: ``ncent`` docs by xxhash64 order
-        (a stable pseudo-random sample — the standard k-means-style init,
-        spread across the corpus rather than the ``ncent`` lowest ids),
-        numbered by doc_id. TakeOrdered keeps the driver materialization
-        at ncent ≈ √n rows; identical on every replay. The cid-numbering
-        window is partitionless by construction and DRIVER-BOUNDED (it
-        runs over the post-LIMIT seed rows) — classified in
-        plans/window_audit.SERVING_WINDOW_CLASS."""
-        seeds = (corpus.select("doc_id", "embedding")
-                 .orderBy(F.xxhash64("doc_id"), "doc_id").limit(ncent))
-        ws = Window.orderBy("doc_id")  # ncent rows — driver-bounded
-        return seeds.select(
-            (F.row_number().over(ws) - 1).cast("int").alias("cid"),
-            F.col("embedding").alias("cvec"),
-        )
+    def _seed_centroids(corpus: DataFrame, ncent: int,
+                        hashed: bool = True) -> list:
+        """Deterministic centroid seed rows, numbered by doc_id on the
+        driver: ``ncent`` docs by xxhash64 order (``hashed``: a stable
+        pseudo-random sample — the standard k-means-style init, spread
+        across the corpus), or the ``ncent`` lowest doc_ids (fixed-mode
+        bootstrap, pinned by the replay tests' state expectations).
+        TakeOrdered keeps the driver materialization at ncent rows;
+        identical on every replay."""
+        order = [F.xxhash64("doc_id"), "doc_id"] if hashed else ["doc_id"]
+        seeds = (corpus.select("doc_id", "embedding").orderBy(*order)
+                 .limit(ncent).collect())
+        return [Row(cid=i, cvec=r.embedding) for i, r in enumerate(
+            sorted(seeds, key=lambda r: r.doc_id))]
 
     def _lloyd_refine(self, corpus: DataFrame, crows: list) -> list:
         """Spherical k-means refinement of the driver-held seed rows
@@ -1800,8 +1803,8 @@ class IngestPipeline:
     def _train_centroids(self, corpus: DataFrame, n_corpus: int) -> list:
         """Auto-sized centroid rows: hash-ordered seeds, Lloyd-refined —
         deterministic in the corpus (bootstrap, re-train, ``retrain()``)."""
-        return self._lloyd_refine(corpus, self._seed_centroids_plan(
-            corpus, self._target_centroids(n_corpus)).collect())
+        return self._lloyd_refine(corpus, self._seed_centroids(
+            corpus, self._target_centroids(n_corpus)))
 
     def _update_index(self, fresh: DataFrame, key: str = "b0",
                       n_corpus: int | None = None) -> None:
@@ -1830,12 +1833,8 @@ class IngestPipeline:
             if n_corpus < self.ivf_bootstrap:
                 return
             if self.n_centroids is not None:
-                # fixed mode keeps the pre-r9 lowest-doc_id seeds (pinned
-                # by the replay tests' state expectations), numbered in
-                # doc_id order
-                crows = [Row(cid=i, cvec=r.embedding) for i, r in enumerate(
-                    corpus.orderBy("doc_id").limit(self.n_centroids)
-                    .select("embedding").collect())]
+                crows = self._seed_centroids(corpus, self.n_centroids,
+                                             hashed=False)
             else:
                 crows = self._train_centroids(corpus, n_corpus)
             # Write order: index ROOT → centroids → per-batch assignment.
@@ -2102,7 +2101,8 @@ class IngestPipeline:
 
         Caches and materializes: the corpus, the edge store (1-hop
         expansion reads it per query), and — when the IVF index has
-        bootstrapped — centroids and the assignment table. Serving passes
+        bootstrapped — the assignment table, plus the centroid rows
+        collected to the driver. Serving passes
         then read InMemoryTableScans (the ``/search`` kernel pool and edge
         collect, ``search_ivf``'s TakeOrdered): no file listing, no
         parquet decode, no per-query state-existence jobs.
@@ -2120,9 +2120,9 @@ class IngestPipeline:
           the snapshot (measured: >97% of pinned bytes at 60k docs —
           BASELINE.md r14 table), so this is the policy that stops
           scaling first.
-        - ``"index"``: pin only the NAVIGATIONAL state — centroids
-          (√n rows), the IVF assignment (n tiny rows), the edge store
-          (k·n tiny rows), plus the driver-side centroid block — and
+        - ``"index"``: pin only the NAVIGATIONAL state — the IVF
+          assignment (n tiny rows) and the edge store (k·n tiny rows),
+          plus the driver-side centroid rows (√n) — and
           leave the corpus as the bracket-captured UNCACHED plan: every
           query still routes cells with zero Spark jobs and joins the
           broadcast member set against a STREAMED parquet scan of the
@@ -2200,16 +2200,14 @@ class IngestPipeline:
         if cents is not None:
             idx, ni = pin_store(idx, "index")
             if ni > 0:
-                cents, nc = pin_store(cents, "centroids")
-                sizes["centroid_rows"] = nc
-                sizes["index_rows"] = ni
-                nw["centroids"] = cents
-                nw["index"] = idx
                 # driver-side centroid rows (bounded: 65536-cell cap,
                 # ~8 MB at 5M docs) — warm probed queries pick their
                 # cells from these with no Spark job, where a cold read
                 # collects its bracket's view (see _probed_corpus)
                 nw["cent_rows"] = cents.collect()
+                sizes["centroid_rows"] = len(nw["cent_rows"])
+                sizes["index_rows"] = ni
+                nw["index"] = idx
             else:  # half-built external dir: degrade to full-scan serving
                 idx.unpersist()
                 sizes.pop("pinned_bytes_index", None)
@@ -2599,9 +2597,8 @@ class IngestPipeline:
           — 284 s/batch vs the chunked kernel's numpy matmuls at the 10×
           probe scale). All chunk branches materialize in ONE job, so the
           corpus scan parallelism multiplies across chunks.
-          ``_knn_join`` / ``_knn_join_ivf`` remain as the independent
-          semantic reference (kernel≡join equivalence tests) and an
-          explicitly-callable approximate scorer respectively.
+          ``_knn_join`` remains as the independent semantic reference
+          (kernel≡join equivalence tests).
 
         ``n_queries`` and ``n_corpus`` are the caller's counts of
         ``fresh`` and of the post-write corpus (None means count here):
@@ -2786,93 +2783,6 @@ class IngestPipeline:
         return (
             corpus.withColumn("_nc", l2_norm(F.col("embedding")))
             .crossJoin(q)
-            .select(
-                "qid", "qm", "doc_id", "modality",
-                F.when(F.col("doc_id") == F.col("qid"), F.lit(1.0))
-                .otherwise(snap_double(cosine_with_norms(
-                    F.col("embedding"), F.col("qv"),
-                    F.col("_nc"), F.col("_nq")))).alias("s"),
-            )
-        )
-
-    def _knn_join_ivf(self, corpus: DataFrame, fresh: DataFrame,
-                      crows: list, idx: DataFrame,
-                      probes: int | None = None,
-                      broadcast_queries: bool = True,
-                      include_fresh_assignment: bool = True) -> DataFrame:
-        """IVF-pruned candidate scorer (round-6) — an explicitly-callable
-        APPROXIMATE alternative, no longer on the default ingest route
-        (round 8 replaced it with the exact chunked kernel after the 10×
-        profile showed this pair table paying interpreted HOF cosines and
-        a pair-sized shuffle): probe each query's ``probes`` nearest cells
-        and score only their members.
-
-        Membership = the maintained index UNION this batch's own on-the-fly
-        assignment (``_update_index`` runs AFTER the KNN step, so the
-        fresh rows — already appended to the corpus — are not in the
-        stored index yet; without the union, fresh-vs-fresh neighbors and
-        the self-match pin would silently vanish). The probe table is
-        batch×probes rows (broadcast); scoring joins shuffle on doc_id
-        once, so per-batch cost is ~ batch × corpus·probes/n_centroids —
-        independent of total corpus size once cells stay balanced. The
-        self-match is pinned exactly as in the exact join: a query's own
-        assignment cell is its top-1 probe cell, so it always survives
-        the pruning.
-
-        ``broadcast_queries=False`` is the corpus-sized-query-set mode
-        (``build_graph``: fresh IS the corpus): every join runs as a
-        shuffle join instead of broadcasting the query table — nothing
-        corpus-sized crosses a broadcast. The qcells window is
-        qid-partitioned over the n·ncent cell-scoring rows, the same
-        volume order (n^3/2 under √n sizing) as the candidate scoring
-        itself, so it adds no asymptotic cost.
-        ``include_fresh_assignment=False`` skips the fresh-side
-        on-the-fly assignment union — REQUIRED when fresh's docs are
-        already in ``idx`` (bulk graph build), where the union would
-        double every member row and the downstream per-query rank would
-        count candidates twice. ``crows`` (the caller's one centroid
-        read) feeds both the probe scoring and the fresh assignment.
-        """
-        probes = probes or IVF_PROBES
-        cents = self._centroid_frame(crows)
-
-        def maybe_b(df: DataFrame) -> DataFrame:
-            return F.broadcast(df) if broadcast_queries else df
-        from multi_model_vectorsearch_spark.functions.vector import (
-            cosine_with_norms,
-            l2_norm,
-        )
-
-        qsims = (
-            fresh.select(F.col("doc_id").alias("qid"), "embedding")
-            .crossJoin(F.broadcast(cents))
-            .select(
-                "qid", "cid",
-                cosine_similarity(F.col("embedding"), F.col("cvec"))
-                .alias("cs"),
-            )
-        )
-        wq = Window.partitionBy("qid").orderBy(F.desc("cs"), F.asc("cid"))
-        qcells = (
-            qsims.withColumn("rn", F.row_number().over(wq))
-            .filter(F.col("rn") <= probes)
-            .select("qid", "cid")
-        )
-        members = idx.select("doc_id", "cid")
-        if include_fresh_assignment:
-            members = members.unionByName(self._assign(fresh, crows))
-        pairs = members.join(maybe_b(qcells), "cid").select(
-            "qid", "doc_id")
-        q = maybe_b(fresh.select(
-            F.col("doc_id").alias("qid"),
-            F.col("modality").alias("qm"),
-            F.col("embedding").alias("qv"),
-            l2_norm(F.col("embedding")).alias("_nq"),
-        ))
-        return (
-            pairs.join(corpus.withColumn("_nc", l2_norm(F.col("embedding"))),
-                       "doc_id")
-            .join(q, "qid")
             .select(
                 "qid", "qm", "doc_id", "modality",
                 F.when(F.col("doc_id") == F.col("qid"), F.lit(1.0))

@@ -5,15 +5,15 @@
 Completes the round-9 bulk-bootstrap story: BASELINE.md's graph-chain
 probe measured the REGISTRY edge build (fixed 20-query graph) and the
 algorithm chains; this probe measures the one-pass full-corpus build
-that ``bulk_load`` defers — both scorers where affordable:
+that ``bulk_load`` defers — each method where affordable:
 
 - ``exact``: chunked dgemm kernel, n^2*d flops over max_collect query
   blocks (each block is one corpus pass) — expected e ~= 2 on wall
   time with a large constant DIVIDED by dgemm throughput.
-- ``ivf``: the probed join, ~n*probes*(n/ncent) interpreted candidate
-  rows (n^{7/4} under sqrt-n sizing + auto probes) — expected to lose
-  to exact on wall time at every factor this box can hold (the
-  docstring's measured claim), skipped past --ivf-max-factor.
+- ``ivf``: the probed cell build — the cells kernel with each doc also
+  querying its next-nearest cells (``IVF_PROBES`` cells in all),
+  ~n*probes*(n/ncent) pairs scored by dgemm; skipped past
+  --ivf-max-factor.
 
 Usage:
     python3 scripts/probe_graph_build.py --factors 1,10 --ivf-max-factor 10

@@ -35,10 +35,10 @@ def test_fingerprint_distinguishes_queries(tables):
 
 def test_warm_index_policy_partial_pin(spark, tables, tmp_path):
     """r13 verdict item 8: warm(policy='index') pins only navigational
-    state (centroids + IVF assignment + edges) and streams the corpus
-    scan — the shape that still pins at 100 TB — while serving stays
-    correct on both routes; pinned bytes are measured per store and the
-    policy is sticky across maybe_rewarm."""
+    state (IVF assignment + edges; the centroids are driver rows) and
+    streams the corpus scan — the shape that still pins at 100 TB — while
+    serving stays correct on both routes; pinned bytes are measured per
+    store and the policy is sticky across maybe_rewarm."""
     from pyspark.sql import functions as F
 
     from multi_model_vectorsearch_spark.streaming.ingest import (
@@ -60,7 +60,9 @@ def test_warm_index_policy_partial_pin(spark, tables, tmp_path):
     assert sizes["policy"] == "index"
     assert "pinned_bytes_corpus" not in sizes, "corpus must NOT pin"
     assert sizes["pinned_bytes_index"] > 0
-    assert sizes["pinned_bytes_centroids"] > 0
+    assert sizes["centroid_rows"] > 0
+    assert "pinned_bytes_centroids" not in sizes, "centroids must NOT pin"
+    assert "centroids" not in pipe._warm
     assert sizes["pinned_bytes_edges"] >= 0
     assert pipe._warm["corpus"].storageLevel.useMemory is False
     assert pipe._warm["index"].storageLevel.useMemory is True

@@ -433,10 +433,10 @@ def test_partitionless_windows_serving_plans_classified(tables, tmp_path):
     """Round-9 verdict item 3: the registry audit above misses serving and
     ingest plans. Build the representative serving DataFrames (exact
     /search cold+warm, probed search_ivf, ingest KNN on both physical
-    routes, centroid seeding) and apply the same classified-or-fail rule
-    via SERVING_WINDOW_CLASS — any NEW unclassified global window in the
-    serving path fails here, and a classified plan that stops planning one
-    goes stale-red."""
+    routes, every graph-build route) and apply the same classified-or-fail
+    rule via SERVING_WINDOW_CLASS — any NEW unclassified global window in
+    the serving path fails here, and a classified plan that stops planning
+    one goes stale-red."""
     from pyspark.sql import functions as F
 
     from multi_model_vectorsearch_spark.plans.window_audit import (

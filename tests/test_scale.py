@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import contextlib
+
 import pyspark.sql.functions as F
 
 from multi_model_vectorsearch_spark.operators.scale import (
@@ -209,6 +211,70 @@ def test_global_orders_scalable_matches_window_reference(spark, tables):
     cols = ["user_id", "spend", "n", "r_up", "cum_n", "r_dn", "prev_min_n"]
     assert (sorted(map(tuple, got.select(*cols).collect()))
             == sorted(map(tuple, ref.select(*cols).collect())))
+
+
+@contextlib.contextmanager
+def _rows_per_range(spark, n):
+    """``spark.mmvs.gos.rowsPerRange`` set to ``n``, then unset."""
+    spark.conf.set("spark.mmvs.gos.rowsPerRange", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.unset("spark.mmvs.gos.rowsPerRange")
+
+
+def test_global_orders_scalable_all_null_keys_raise(spark):
+    """A spec whose sampled keys are all NULL has no range boundary, so
+    its bucket would be a constant and its window one task: past
+    rowsPerRange rows the helper raises, naming the spec."""
+    import pytest
+
+    from multi_model_vectorsearch_spark.operators.scale import (
+        global_orders_scalable,
+    )
+
+    df = spark.range(50).select(
+        F.lit(None).cast("bigint").alias("k"), F.col("id"))
+    with _rows_per_range(spark, 4), pytest.raises(ValueError, match="'r'"):
+        global_orders_scalable(df, [("r", ["k", "id"], (), ())])
+
+
+def test_global_orders_scalable_empty_input(spark):
+    """An empty input has no boundary either, but nothing to rank: no
+    rows come back and nothing raises."""
+    from multi_model_vectorsearch_spark.operators.scale import (
+        global_orders_scalable,
+    )
+
+    df = spark.range(0).select(F.col("id").alias("k"), F.col("id"))
+    with _rows_per_range(spark, 4):
+        got, n_total = global_orders_scalable(df, [("r", ["k", "id"], (),
+                                                     ())])
+        assert n_total == 0 and got.collect() == []
+
+
+def test_global_orders_scalable_equal_keys_match_window(spark):
+    """All-equal leading keys with a unique tie-break still cut into
+    several buckets and rank row-identically to ``Window.orderBy``."""
+    from pyspark.sql import Window
+
+    from multi_model_vectorsearch_spark.operators.scale import (
+        global_orders_scalable,
+    )
+
+    df = spark.range(60).select(F.lit(7).cast("bigint").alias("k"),
+                                F.col("id"))
+    with _rows_per_range(spark, 8):
+        got, n_total = global_orders_scalable(
+            df, [("r", ["k", ("id", "desc")], (("cum", "id"),), ())])
+        got = sorted(map(tuple, got.select("k", "id", "r", "cum").collect()))
+    w = Window.orderBy("k", F.desc("id"))
+    ref = df.withColumn("r", F.row_number().over(w)).withColumn(
+        "cum", F.sum("id").over(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    assert n_total == 60
+    assert got == sorted(map(tuple, ref.select("k", "id", "r",
+                                               "cum").collect()))
 
 
 def test_grouped_lower_median_matches_window_reference(tables):
