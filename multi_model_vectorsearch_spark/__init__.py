@@ -11,9 +11,15 @@ Design principles (see SURVEY.md for the full blueprint):
 
 - Declarative plans: every operator is a DataFrame/SQL composition so Catalyst
   handles pushdown, pruning, join selection, and AQE re-planning.
-- JVM-side execution: vector math uses higher-order SQL functions
-  (``aggregate``/``zip_with``/``transform``) — no Python in the hot path.
-  Pandas UDFs appear only at the model-inference boundary (embedding).
+- JVM-side execution where the plan is relational: the registry's vector
+  math uses higher-order SQL functions (``aggregate``/``zip_with``/
+  ``transform``), and joins, windows and aggregates stay in Catalyst.
+  Python runs in three places: the pandas UDFs at the model-inference
+  boundary (embedding), the ``_top_pool`` dgemm kernel in
+  ``mapInPandas`` that scores the ``/submit`` KNN, every ``/search``
+  pool and the graph builds (``streaming/ingest.py``), and the driver
+  side of serving (query embedding, probe selection, the balanced finish
+  and the 1-hop expansion).
 - Scale-first: small dimensions are broadcast, top-k is planned as
   ``TakeOrderedAndProject``, per-query KNN never collects the corpus.
 """

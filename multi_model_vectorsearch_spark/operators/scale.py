@@ -234,9 +234,14 @@ def global_orders_scalable(df: DataFrame, specs: list,
 
     Output is row-for-row IDENTICAL to the partitionless
     ``Window.orderBy`` form provided each spec's order is a TOTAL order
-    (include a unique tie-break column): boundary placement only moves
-    rows between PARALLEL buckets, never changes any rank or running
-    value. Replaces the r8 repartitionByRange form, which paid a
+    (include a unique tie-break column) and every ``cum_sums`` input is
+    integral or decimal: boundary placement only moves rows between
+    PARALLEL buckets, never changes any rank, running min or exact
+    running sum. A floating-point running sum is the bucket's offset
+    plus its in-bucket sum, so its summation order — and its last bits
+    — depend on where the boundaries fall; it matches the window form
+    to rounding (relative ~1e-12 at double precision), not bit for bit.
+    Replaces the r8 repartitionByRange form, which paid a
     sampling pass + an eager pin + a collect PER SORT ORDER (measured
     r15: dq238's three ntile passes ran 20 builder-time jobs; this form
     runs 4 for any number of specs).
@@ -271,7 +276,10 @@ def global_orders_scalable(df: DataFrame, specs: list,
     # capped at n_ranges — tiny inputs get tiny bucket expressions (less
     # optimizer/codegen per plan), huge inputs saturate the cap. Raise
     # the knobs on a real cluster (they are parallelism knobs, not
-    # correctness knobs: any bucketing yields identical output).
+    # correctness knobs: any bucketing yields identical ranks, running
+    # mins and integral/decimal running sums; a float running sum's
+    # summation order follows the bucket offsets, so its last bits can
+    # move with the bucketing).
     rows_per_range = int(df.sparkSession.conf.get(
         "spark.mmvs.gos.rowsPerRange", "16384"))
     # floor of 2: a single bucket would make the bucket column a constant,

@@ -10,6 +10,24 @@ The engine pins a deterministic, scale-ready configuration:
   ``events.parquet`` carries TIMESTAMP(NANOS), which Spark 4.x otherwise
   rejects (PARQUET_TYPE_ILLEGAL). The sources registry re-exposes the column
   as a microsecond timestamp (see sources/registry.py).
+
+Importing this module (every engine import does, through the package
+``__init__``) also backports CPython 3.13's lazy zipimport invalidation
+(``_lazy_zipimport_invalidation``). PySpark's worker calls
+``importlib.invalidate_caches()`` before every Python task, and on
+Python 3.11 and 3.12.1 each ``zipimporter`` on the path then re-reads
+its archive's central directory at once. A worker running from
+``pyspark.zip`` holds 16 of them, all over that one archive, so every
+task re-read it 16 times. On a 4-core host (pyspark 4.1.2, Python
+3.11.7, ``local[2]``) a 1-row ``rdd.map`` took a median 214 ms without
+the backport and 103 ms with it, and the re-reads per
+``invalidate_caches()`` went from 16 to 0.
+With the backport the call only drops the cached directory, and the
+next lookup in that archive reads it once. Every Python worker that
+unpickles an engine function imports the engine and so installs it;
+the driver installs it at its first engine import. A runtime whose
+``zipimporter`` already reads lazily (it has ``_get_files``, as 3.13
+does) is left as it is.
 """
 
 from __future__ import annotations
@@ -144,3 +162,47 @@ def get_spark(app_name: str = "multi_model_vectorsearch_spark",
         # import this package at UDF deserialization (see ship_package)
         ship_package(spark)
     return spark
+
+
+def _lazy_zipimport_invalidation() -> None:
+    """Make ``zipimporter.invalidate_caches`` lazy, as in CPython 3.13:
+    it drops the archive's entry from ``zipimport._zip_directory_cache``,
+    and ``zipimporter._files`` becomes a property that re-reads a missing
+    entry once per archive (a missing or unreadable archive reads as
+    ``{}``, so imports from it fail with ``ImportError``). A no-op when
+    the runtime's ``zipimporter`` is already lazy (it has ``_get_files``)
+    and when already installed. Code that reads
+    ``_zip_directory_cache`` directly, as ``pkgutil.iter_modules`` does
+    for a zip path, finds no entry between an invalidation and the next
+    import lookup in that archive."""
+    import zipimport
+
+    zi = zipimport.zipimporter
+    if hasattr(zi, "_get_files") or isinstance(
+            zi.__dict__.get("_files"), property):
+        return
+
+    def files(self):
+        cache = zipimport._zip_directory_cache
+        try:
+            return cache[self.archive]
+        except KeyError:
+            pass
+        try:
+            found = zipimport._read_directory(self.archive)
+        except zipimport.ZipImportError:
+            return {}
+        cache[self.archive] = found
+        return found
+
+    def invalidate_caches(self):
+        zipimport._zip_directory_cache.pop(self.archive, None)
+
+    # zipimporter.__init__ assigns the directory it has just cached
+    # under the archive path, before it sets ``archive``: the property
+    # reads it back from the cache, so the assignment is dropped
+    zi._files = property(files, lambda self, value: None)
+    zi.invalidate_caches = invalidate_caches
+
+
+_lazy_zipimport_invalidation()

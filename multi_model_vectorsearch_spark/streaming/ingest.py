@@ -2099,13 +2099,15 @@ class IngestPipeline:
         """Pin the serving state in executor memory so `/search` stops
         paying parquet listing + scan + query-embed job setup per call.
 
-        Caches and materializes: the corpus, the edge store (1-hop
-        expansion reads it per query), and — when the IVF index has
-        bootstrapped — the assignment table, plus the centroid rows
-        collected to the driver. Serving passes
-        then read InMemoryTableScans (the ``/search`` kernel pool and edge
-        collect, ``search_ivf``'s TakeOrdered): no file listing, no
-        parquet decode, no per-query state-existence jobs.
+        Caches and materializes: the corpus, each row carrying its IVF
+        ``cid`` (``_with_cid``), the edge store (1-hop expansion reads it
+        per query), and — when the IVF index has bootstrapped — the
+        assignment table, plus the centroid rows collected to the driver.
+        Serving passes then read InMemoryTableScans (the ``/search``
+        kernel pool and edge collect, ``search_ivf``'s TakeOrdered): no
+        file listing, no parquet decode, no per-query state-existence
+        jobs, and a probed query filters the pinned corpus by its cells
+        with no members join.
         ``process_batch`` invalidates automatically (ingest changes state);
         call ``warm()`` again after an ingest burst. At cluster scale the
         same call pins the corpus across executors — the cache is
@@ -2124,10 +2126,12 @@ class IngestPipeline:
           assignment (n tiny rows) and the edge store (k·n tiny rows),
           plus the driver-side centroid rows (√n) — and
           leave the corpus as the bracket-captured UNCACHED plan: every
-          query still routes cells with zero Spark jobs and joins the
-          broadcast member set against a STREAMED parquet scan of the
-          corpus. Per-query latency pays one corpus scan (bounded by
-          probed-cell selectivity after the semi-join) in exchange for
+          query still routes cells with zero Spark jobs, and a probed
+          one joins the pinned assignment inside its plan — its cell
+          filter reaches the broadcast member side of that join against
+          a STREAMED parquet scan of the corpus. Per-query latency pays
+          one corpus scan (bounded by probed-cell selectivity after the
+          join) in exchange for
           O(navigational) instead of O(corpus) executor memory — the
           only shape that pins at 100 TB, where the corpus cannot.
 
@@ -2187,16 +2191,7 @@ class IngestPipeline:
             sizes[f"pinned_bytes_{key}"] = self._cached_bytes(df)
             return df, rows
 
-        if policy == "full":
-            corpus, n = pin_store(corpus, "corpus")
-        else:
-            # "index" policy: the corpus stays the bracket-captured
-            # UNCACHED plan — streamed from parquet per query, bounded
-            # by the probed-cell semi-join; only navigation pins
-            n = corpus.count()
-        edges, ne = pin_store(edges, "edges")
-        nw: dict = {"corpus": corpus, "edges": edges, "policy": policy}
-        sizes.update({"corpus_rows": n, "edge_rows": ne})
+        nw: dict = {"policy": policy}
         if cents is not None:
             idx, ni = pin_store(idx, "index")
             if ni > 0:
@@ -2211,6 +2206,17 @@ class IngestPipeline:
             else:  # half-built external dir: degrade to full-scan serving
                 idx.unpersist()
                 sizes.pop("pinned_bytes_index", None)
+                idx = None
+        if policy == "full":
+            corpus, n = pin_store(self._with_cid(corpus, idx), "corpus")
+        else:
+            # "index" policy: the corpus stays the bracket-captured
+            # UNCACHED plan — streamed from parquet per query, bounded
+            # by the probed cells' members; only navigation pins
+            n = corpus.count()
+        edges, ne = pin_store(edges, "edges")
+        nw.update(corpus=corpus, edges=edges)
+        sizes.update({"corpus_rows": n, "edge_rows": ne})
         nw["sizes"] = sizes
         old = self._warm
         self._warm = nw  # atomic publish: one dict assignment
@@ -2218,6 +2224,16 @@ class IngestPipeline:
         self._warm_policy = policy
         self._release_snapshot(old, keep=nw)
         return dict(sizes)
+
+    @staticmethod
+    def _with_cid(corpus: DataFrame, idx: DataFrame | None) -> DataFrame:
+        """The probed serving corpus shape: each row with its IVF ``cid``,
+        a left join to the assignment ``idx`` (null ``cid`` where no
+        index exists). A probed query keeps the rows whose ``cid`` is one
+        of its cells (``_probed_corpus``)."""
+        if idx is None:
+            return corpus.withColumn("cid", F.lit(None).cast("int"))
+        return corpus.join(idx.select("doc_id", "cid"), "doc_id", "left")
 
     def _cached_bytes(self, df: DataFrame) -> int:
         """In-memory bytes of ``df``'s own cache entry, read from the
@@ -2287,7 +2303,7 @@ class IngestPipeline:
                    probes: int | None = None) -> DataFrame:
         """Probed ANN serving over the maintained index (top-k only, no
         modality finish or expansion): pick the query's ``probes`` nearest
-        cells on the driver, join the corpus to those cells' members
+        cells on the driver, keep the corpus rows of those cells
         (``_probed_corpus``), exact-rank only those candidates. A
         query touches ~probes/n_centroids of the corpus; falls back to the
         full scan while the index hasn't bootstrapped. With ``warm()``
@@ -2460,9 +2476,13 @@ class IngestPipeline:
         contract); ``"auto"`` probes when an index exists. Probing picks
         each query's ``probes`` nearest cells on the driver
         (``_probe_cids_local``; ``probes`` defaults to ``_auto_probes``)
-        and inner-joins the broadcast members of the union of those cells
-        onto the corpus, so each row carries its ``cid``; ``cells`` is
-        then, per query, its own probed cids (None on the full scan).
+        and keeps the corpus rows whose ``cid`` is in the union of those
+        cells; ``cells`` is then, per query, its own probed cids (None on
+        the full scan). The corpus ``warm()`` pins carries each row's
+        ``cid`` (``_with_cid``), so a warm probed query filters it with
+        no join and no broadcast job; an unpinned corpus (a cold read, or
+        ``warm(policy="index")``) takes the same join inside the query's
+        plan, the index side broadcast.
 
         Warm reads serve the snapshot captured ONCE (``warm``, or one read
         of ``self._warm``), so a concurrent re-warm publishing a new dict
@@ -2505,9 +2525,10 @@ class IngestPipeline:
         if probes is None:
             probes = self._auto_probes(len(crows))
         cells = [self._probe_cids_local(crows, v, probes) for v in vecs]
-        members = idx.filter(F.col("cid").isin(
-            sorted({c for cs in cells for c in cs}))).select("doc_id", "cid")
-        return corpus.join(F.broadcast(members), "doc_id"), cells, ev
+        if "cid" not in corpus.columns:
+            corpus = self._with_cid(corpus, F.broadcast(idx))
+        return (corpus.filter(F.col("cid").isin(
+            sorted({c for cs in cells for c in cs}))), cells, ev)
 
     def _probed_views(self, torn: set[str]):
         """The (corpus, centroids, index) views one probed query reads,
@@ -2935,10 +2956,11 @@ class IngestPipeline:
         4. one collect gathers every edge with ``src IN seeds OR dst IN
            seeds`` from the same snapshot, and ``_expand`` scores the hop.
 
-        Spark jobs per call, for any M: 2 on the exact route (pool,
-        edges), 3 on a probed one (plus the members broadcast); a cold
-        probed read adds the index-emptiness check and the centroid
-        collect. The query vectors ship in the kernel closure, so
+        Spark jobs per call, for any M, warm: 2 (pool, edges) on either
+        route — a probed route filters the pinned corpus by ``cid``. A
+        probed read of an unpinned corpus adds the members join's
+        broadcast, and a cold one also the index-emptiness check and the
+        centroid collect. The query vectors ship in the kernel closure, so
         ``len(texts) > max_collect`` raises instead of falling back. The answer is a ``VALUES``
         relation (``_local_frame``): collecting it runs no Spark job."""
         if route not in ("exact", "ivf", "auto"):

@@ -15,6 +15,10 @@ that ``bulk_load`` defers — each method where affordable:
   ~n*probes*(n/ncent) pairs scored by dgemm; skipped past
   --ivf-max-factor.
 
+Every build appends to the one edge store under its own key, so each
+route's edge count (``cells_edges``, ``exact_edges``, ``ivf_edges``) is
+read from that key's own write, not from the cumulative store.
+
 Usage:
     python3 scripts/probe_graph_build.py --factors 1,10 --ivf-max-factor 10
     python3 scripts/probe_graph_build.py --factors 1,10,100   # exact at 100x
@@ -35,12 +39,19 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from multi_model_vectorsearch_spark import get_spark  # noqa: E402
 from multi_model_vectorsearch_spark.streaming.ingest import (  # noqa: E402
+    EDGE_SCHEMA,
     IngestPipeline,
 )
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from probe_serving_scale import docs_frame  # noqa: E402
 from scale_probe import synthesize  # noqa: E402
+
+
+def key_edges(pipe: IngestPipeline, key: str) -> int:
+    """Edge rows one ``build_graph`` call wrote under its own ``key``."""
+    return pipe._read_parts([pipe._bdir(pipe.edges_dir, key)],
+                            EDGE_SCHEMA).count()
 
 
 def mode_skew(spark, args) -> None:
@@ -143,17 +154,17 @@ def main() -> None:
             t0 = time.perf_counter()
             pipe.build_graph(method="cells", key="gc")
             row["cells_sec"] = round(time.perf_counter() - t0, 2)
-            row["cells_edges"] = pipe.edges().count()
+            row["cells_edges"] = key_edges(pipe, "gc")
             if f <= args.exact_max_factor:
                 t0 = time.perf_counter()
                 pipe.build_graph(method="exact", key="gx")
                 row["exact_sec"] = round(time.perf_counter() - t0, 2)
-                row["edges_after_exact"] = pipe.edges().count()
+                row["exact_edges"] = key_edges(pipe, "gx")
             if f <= args.ivf_max_factor:
                 t0 = time.perf_counter()
                 pipe.build_graph(method="ivf", key="gi")
                 row["ivf_sec"] = round(time.perf_counter() - t0, 2)
-                row["total_edges_after_ivf"] = pipe.edges().count()
+                row["ivf_edges"] = key_edges(pipe, "gi")
             rows.append(row)
             print(f"## factor {f}: {json.dumps(row)}", flush=True)
         finally:

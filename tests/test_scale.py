@@ -277,6 +277,34 @@ def test_global_orders_scalable_equal_keys_match_window(spark):
                                                "cum").collect()))
 
 
+def test_global_orders_scalable_cum_sums_by_type(spark):
+    """Running sums over several buckets: a bigint ``cum_sums`` equals
+    the ``Window.orderBy`` reference exactly, while a double one is the
+    bucket offset plus the in-bucket sum, a different summation order,
+    so it matches only to a relative 1e-12."""
+    from pyspark.sql import Window
+
+    from multi_model_vectorsearch_spark.operators.scale import (
+        global_orders_scalable,
+    )
+
+    df = spark.range(200).select(
+        "id", ((F.col("id") * 7919) % 211).alias("ki"),
+        (F.col("id") * 0.1 + F.lit(1.0) / 3).alias("kd"))
+    with _rows_per_range(spark, 16):
+        got, _ = global_orders_scalable(
+            df, [("r", ["id"], (("ci", "ki"), ("cd", "kd")), ())])
+        got = sorted(map(tuple, got.select("id", "ci", "cd").collect()))
+    w = Window.orderBy("id").rowsBetween(Window.unboundedPreceding,
+                                         Window.currentRow)
+    ref = sorted(map(tuple, df.select(
+        "id", F.sum("ki").over(w).alias("ci"),
+        F.sum("kd").over(w).alias("cd")).collect()))
+    assert [(i, ci) for i, ci, _ in got] == [(i, ci) for i, ci, _ in ref]
+    for (_, _, a), (_, _, b) in zip(got, ref):
+        assert abs(a - b) <= 1e-12 * abs(b)
+
+
 def test_grouped_lower_median_matches_window_reference(tables):
     """r15: the two-phase bucket median equals the per-group cumulative
     window selection (ties included via the RANGE frame) exactly —

@@ -1720,9 +1720,11 @@ def test_ivf_upkeep_job_budget(spark, tables, tmp_path):
 # Spark jobs per call on the fixture below, as this engine measures
 # them. Before serving pooled with the kernel and finished on the driver,
 # a warm search ran 4 and an 8-query search_many 11; before process_batch
-# shared its corpus count with the index upkeep, a 30-doc batch ran 16.
+# shared its corpus count with the index upkeep, a 30-doc batch ran 16;
+# before the warm corpus carried each row's cid, the probed search_many
+# broadcast its cells' members in a job of its own and ran 3.
 # Raise a budget only with a note in CHANGES.md saying why.
-SERVE_JOB_BUDGET = {"process_batch": 14, "search": 2, "search_many": 3}
+SERVE_JOB_BUDGET = {"process_batch": 14, "search": 2, "search_many": 2}
 
 
 def test_serve_job_budget(spark, tables, tmp_path):
