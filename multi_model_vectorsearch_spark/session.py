@@ -28,16 +28,132 @@ unpickles an engine function imports the engine and so installs it;
 the driver installs it at its first engine import. A runtime whose
 ``zipimporter`` already reads lazily (it has ``_get_files``, as 3.13
 does) is left as it is.
+
+Sessions the engine builds on a ``local[...]`` master run the
+JVM<->Python-worker channel over Unix domain sockets
+(``spark.python.unix.domain.socket.enabled``, Spark 4.1). Over the
+default loopback TCP socket a small Python task waited ~40 ms for its
+first Arrow batch: a Nagle/delayed-ACK stall on the JVM's small writes,
+the same for 1 or 100 rows (42 ms) and gone once the data is large
+(4.8 ms for 200k rows). A warm ``/search`` runs one small Python task,
+so the stall was a fixed share of its latency. On a 4-core host
+(pyspark 4.1.2, Python 3.11.7, ``local[4]``), medians of 10 jobs in
+two sessions per side: a 100-row ``mapInPandas`` job 143 / 179 ms over
+TCP, 108 / 108 ms over Unix sockets (200k rows: 194 / 211 against
+188 / 218 ms). Warm exact ``/search`` on a 100-doc corpus, medians of
+30 new texts: 274–300 ms before, 236 ms with only the compile-free
+filters of ``search_many``, 189–205 ms with both.
+
+The socket directory (``PYTHON_SOCKET_DIR``, ``_python_socket_dir``) is
+``/tmp/mmvs-<uid>``, and it must be:
+
+- private: PySpark's daemon skips the worker secret on a Unix socket,
+  so the directory's permissions are the only guard. It is made 0700
+  and checked with ``lstat``: a directory, not a symlink, owned by the
+  user, mode 0700;
+- short: sockets are named ``.<uuid>.sock`` (42 characters after the
+  separator), and ``AF_UNIX`` paths hold 107 bytes, so the directory
+  may take 64. Spark's default, ``java.io.tmpdir``, lies under the
+  checkout in the benchmark, and a deep checkout then failed every
+  session start with ``OSError: AF_UNIX path too long``;
+- present before the ``SparkContext`` starts: the driver's accumulator
+  server binds there first (a missing directory fails with
+  ``FileNotFoundError``).
+
+It is made at every engine import, Python workers included, so the
+call is two system calls when it exists and never raises: where the
+directory cannot be made or fails the checks, ``RUNTIME_CONFS`` leaves
+the socket keys out and the session keeps TCP. Sockets whose process
+died without removing them are swept when a process that imported
+the engine exits (``_sweep_sockets``), so they do not pile up across
+runs. Masters other than ``local[...]`` keep TCP (``session_confs``):
+a directory made by the driver does not exist on executor hosts.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import stat
 
 from pyspark.sql import SparkSession
 
-# Runtime-settable SQL confs applied to any session handed to the engine
-# (including a driver-created one we did not build ourselves).
+#: The static confs that move the JVM<->Python-worker channel onto Unix
+#: domain sockets; a live session cannot change them.
+SOCKET_CONFS = ("spark.python.unix.domain.socket.enabled",
+                "spark.python.unix.domain.socket.dir")
+#: Longest socket directory: ``AF_UNIX`` holds 107 path bytes, and each
+#: socket adds ``/.<uuid>.sock``, 43 characters.
+_SOCKET_DIR_MAX = 107 - 43
+
+
+def _python_socket_dir(path: str | None = None) -> str | None:
+    """``path`` (default ``/tmp/mmvs-<uid>``), made 0700 if missing;
+    None where it cannot be made, or is not a private directory of this
+    user (a symlink, another owner, a wider mode) or is too long.
+    Idempotent, and it never raises: every engine import runs it, in
+    Python workers too."""
+    getuid = getattr(os, "getuid", None)
+    if getuid is None:
+        return None
+    if path is None:
+        path = f"/tmp/mmvs-{getuid()}"
+    if len(path) > _SOCKET_DIR_MAX:
+        return None
+    try:
+        os.mkdir(path, 0o700)
+        os.chmod(path, 0o700)  # the umask may have narrowed the mode
+    except FileExistsError:
+        pass
+    except OSError:
+        return None
+    try:
+        st = os.lstat(path)
+    except OSError:
+        return None
+    if (not stat.S_ISDIR(st.st_mode) or st.st_uid != getuid()
+            or stat.S_IMODE(st.st_mode) != 0o700):
+        return None
+    return path
+
+
+def _sweep_sockets(path: str) -> None:
+    """Remove the socket files in ``path`` that no other process holds
+    bound (``/proc/net/unix``): those of processes that died without
+    removing them, and this exiting process's own. A live session's
+    sockets stay. A no-op where ``/proc/net/unix`` cannot be read."""
+    try:
+        own = set()
+        for fd in os.listdir("/proc/self/fd"):
+            try:
+                link = os.readlink(f"/proc/self/fd/{fd}")
+            except OSError:
+                continue
+            if link.startswith("socket:["):
+                own.add(link[8:-1])
+        with open("/proc/net/unix") as fh:
+            fh.readline()  # the header
+            bound = {f[7] for f in map(str.split, fh)
+                     if len(f) > 7 and f[6] not in own}
+        names = os.listdir(path)
+    except OSError:
+        return
+    for name in names:
+        sock = os.path.join(path, name)
+        if name.endswith(".sock") and sock not in bound:
+            try:
+                os.remove(sock)
+            except OSError:
+                pass
+
+
+PYTHON_SOCKET_DIR = _python_socket_dir()
+if PYTHON_SOCKET_DIR is not None:
+    atexit.register(_sweep_sockets, PYTHON_SOCKET_DIR)
+
+# Engine confs applied to any session handed to the engine (including a
+# driver-created one we did not build ourselves): all at build time, and
+# the runtime-settable ones again by ``configure``.
 RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.adaptive.enabled": "true",
@@ -49,6 +165,18 @@ RUNTIME_CONFS: dict[str, str] = {
     # even at sf0.1; on a real cluster this is a per-job knob.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
 }
+if PYTHON_SOCKET_DIR is not None:
+    RUNTIME_CONFS[SOCKET_CONFS[0]] = "true"
+    RUNTIME_CONFS[SOCKET_CONFS[1]] = PYTHON_SOCKET_DIR
+
+
+def session_confs(master: str) -> dict[str, str]:
+    """The build-time confs of a session on ``master``: ``RUNTIME_CONFS``,
+    less the Unix-socket keys unless the master is ``local[...]`` (the
+    socket directory exists on the driver's host only)."""
+    if master.startswith("local["):
+        return dict(RUNTIME_CONFS)
+    return {k: v for k, v in RUNTIME_CONFS.items() if k not in SOCKET_CONFS}
 
 
 # applicationId -> shipped zip path: the per-context idempotence guard
@@ -102,14 +230,13 @@ def ship_package(spark: SparkSession) -> str:
 
 
 def configure(spark: SparkSession) -> SparkSession:
-    """Apply the engine's runtime confs to an existing session (idempotent)."""
+    """Apply the engine's runtime confs to an existing session
+    (idempotent): only the keys a live session can modify, so no set
+    raises. The static ones, the socket keys among them, take effect
+    only when the session is built."""
     for key, value in RUNTIME_CONFS.items():
-        try:
+        if spark.conf.isModifiable(key):
             spark.conf.set(key, value)
-        except Exception:
-            # A conf may be fixed at session build time in exotic deployments;
-            # the engine still works, just without that knob.
-            pass
     return spark
 
 
@@ -154,7 +281,7 @@ def get_spark(app_name: str = "multi_model_vectorsearch_spark",
     )
     if fair_scheduler:
         builder = builder.config("spark.scheduler.mode", "FAIR")
-    for key, value in RUNTIME_CONFS.items():
+    for key, value in session_confs(master).items():
         builder = builder.config(key, value)
     spark = configure(builder.getOrCreate())
     if not master.startswith("local["):
@@ -167,14 +294,15 @@ def get_spark(app_name: str = "multi_model_vectorsearch_spark",
 def _lazy_zipimport_invalidation() -> None:
     """Make ``zipimporter.invalidate_caches`` lazy, as in CPython 3.13:
     it drops the archive's entry from ``zipimport._zip_directory_cache``,
-    and ``zipimporter._files`` becomes a property that re-reads a missing
-    entry once per archive (a missing or unreadable archive reads as
-    ``{}``, so imports from it fail with ``ImportError``). A no-op when
-    the runtime's ``zipimporter`` is already lazy (it has ``_get_files``)
-    and when already installed. Code that reads
-    ``_zip_directory_cache`` directly, as ``pkgutil.iter_modules`` does
-    for a zip path, finds no entry between an invalidation and the next
-    import lookup in that archive."""
+    and the next lookup of that entry reads the archive once. The cache
+    becomes a dict whose missing entry loads the archive, so every
+    reader sees a listing — ``zipimporter._files`` (now a property over
+    the cache) and code that reads the cache directly, as
+    ``pkgutil.iter_modules`` does for a zip path. A missing or unreadable
+    archive raises ``ZipImportError`` there and reads as ``{}`` through
+    ``_files``, so imports from it fail with ``ImportError``. A no-op
+    when the runtime's ``zipimporter`` is already lazy (it has
+    ``_get_files``) and when already installed."""
     import zipimport
 
     zi = zipimport.zipimporter
@@ -182,22 +310,23 @@ def _lazy_zipimport_invalidation() -> None:
             zi.__dict__.get("_files"), property):
         return
 
+    class DirectoryCache(dict):
+        def __missing__(self, archive):
+            found = zipimport._read_directory(archive)
+            self[archive] = found
+            return found
+
     def files(self):
-        cache = zipimport._zip_directory_cache
         try:
-            return cache[self.archive]
-        except KeyError:
-            pass
-        try:
-            found = zipimport._read_directory(self.archive)
+            return zipimport._zip_directory_cache[self.archive]
         except zipimport.ZipImportError:
             return {}
-        cache[self.archive] = found
-        return found
 
     def invalidate_caches(self):
         zipimport._zip_directory_cache.pop(self.archive, None)
 
+    zipimport._zip_directory_cache = DirectoryCache(
+        zipimport._zip_directory_cache)
     # zipimporter.__init__ assigns the directory it has just cached
     # under the archive path, before it sets ``archive``: the property
     # reads it back from the cache, so the assignment is dropped

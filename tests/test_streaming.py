@@ -658,6 +658,37 @@ def test_submit_and_graph_data_facade(spark, tmp_path):
     assert pipe.corpus().count() == before
 
 
+def test_submit_batch_is_a_local_relation(spark, tmp_path):
+    """``submit()``'s one-row batch is a ``LocalRelation`` (Arrow from
+    pandas: scanning it starts no Python task, where a row-list frame
+    starts one per parallelism slice), and its neighbours equal those of
+    the same documents ingested as row-list batches."""
+    docs = [(1, "spark shuffles the hash join", "text"),
+            (2, "broadcast the small build side", "text"),
+            (3, "spark shuffles the sort merge join", "image")]
+    pipe = IngestPipeline(spark, str(tmp_path / "facade"), k=3)
+    ref = IngestPipeline(spark, str(tmp_path / "rows"), k=3)
+    leaves = []
+    run = pipe.process_batch
+
+    def spy(batch, *args, **kwargs):
+        seq = batch._jdf.queryExecution().analyzed().collectLeaves()
+        leaves.append([seq.apply(i).nodeName() for i in range(seq.length())])
+        return run(batch, *args, **kwargs)
+
+    pipe.process_batch = spy
+    for epoch, (doc_id, text, modality) in enumerate(docs):
+        got = pipe.submit(text, modality, doc_id=doc_id).collect()
+        ref.process_batch(spark.createDataFrame(
+            [(doc_id, text, modality)],
+            "doc_id bigint, text string, modality string"), epoch)
+        want = ref.knn_against_corpus(
+            ref.corpus().filter(F.col("doc_id") == doc_id)).select(
+            F.col("doc_id").alias("id"), "modality", "s", "rn").collect()
+        assert got == want and got, (doc_id, got, want)
+    assert leaves == [["LocalRelation"]] * len(docs)
+
+
 def test_balanced_finish_matches_window_select(spark, tables, tmp_path):
     """The in-kernel vectorized balanced finish (single-partition corpus)
     must be byte-for-byte the window-based _balanced_select over the same
@@ -1763,6 +1794,38 @@ def test_serve_job_budget(spark, tables, tmp_path):
     assert got.keys() == SERVE_JOB_BUDGET.keys()
     for call, budget in SERVE_JOB_BUDGET.items():
         assert got[call] <= budget, (call, got)
+
+
+def test_warm_serving_compiles_nothing(spark, tables, tmp_path):
+    """After one warmup call of each kind, warm ``search`` on the exact
+    and auto routes and ``search_many`` on texts not seen before compile
+    no generated code. Their filters take the seed and cell ids as one
+    array literal, which generated code reads from its references; an
+    ``IN`` of up to 10 literals put the values in the code, so each new
+    query compiled ~2.6 classes (~3 exact, ~5.7 auto on this fixture)."""
+    pipe = IngestPipeline(spark, str(tmp_path / "st"), k=10,
+                          maintain_ivf=True, n_centroids=None)
+    pipe.bulk_load(_mk_docs(tables, 0, 100))
+    pipe.build_graph(method="cells")
+    pipe.warm()
+    texts = iter(sorted({r.text for r in _mk_docs(tables, 0, 400)
+                         .collect()}))
+    calls = {
+        "exact": lambda: pipe.search(next(texts), route="exact").collect(),
+        "auto": lambda: pipe.search(next(texts), route="auto").collect(),
+        "many": lambda: pipe.search_many(
+            [next(texts) for _ in range(4)]).collect(),
+    }
+    compiled = (spark.sparkContext._jvm.org.apache.spark.metrics.source
+                .CodegenMetrics.METRIC_COMPILATION_TIME())
+    for call in calls.values():
+        call()
+    got = {}
+    for name, call in calls.items():
+        before = compiled.getCount()
+        answered = sum(bool(call()) for _ in range(5))
+        got[name] = (compiled.getCount() - before, answered)
+    assert got == {name: (0, 5) for name in calls}, got
 
 
 # Spark jobs per build_graph call on the fixture below, as this engine
