@@ -114,7 +114,7 @@ def serving_plan_suite(pipe, query_text: str) -> dict[str, "DataFrame"]:
     paths the r8 audit missed: the `/search` kernel pool on the exact and
     probed routes (cold or warm per the pipeline's current state — the
     one serving DataFrame Spark executes; ``search()`` itself returns a
-    driver-built local relation), probed `search_ivf`, the ingest KNN on
+    driver-built answer), probed `search_ivf`'s pool, the ingest KNN on
     both physical routes (kernel ≤ max_collect and the chunked
     fat-batch), and the graph build on every route (cells, probed, and
     both skew-split). Builds plans only (collect-free except the bounded
@@ -130,7 +130,8 @@ def serving_plan_suite(pipe, query_text: str) -> dict[str, "DataFrame"]:
     fat = pipe.knn_against_corpus(fresh, n_queries=3, max_collect=1)
     return {
         "search.pool": pipe._search_pool(qv, 4)[0],
-        "search_ivf.probed": pipe.search_ivf(query_text, k=4),
+        # search_ivf's pool: the same kernel pass, pool_k = k, auto route
+        "search_ivf.probed": pipe._search_pool(qv, 4, route="auto")[0],
         "knn.kernel": pipe.knn_against_corpus(fresh, n_queries=3),
         "knn.fat_batch": fat,
         "knn.fat_batch_chunking": pipe._chunk_ranked(fresh),

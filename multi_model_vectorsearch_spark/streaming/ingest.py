@@ -45,14 +45,14 @@ import os
 import re
 import threading
 import time
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame as _ClassicFrame
 
 from multi_model_vectorsearch_spark.checkpointing import pin, pin_lazy
 from multi_model_vectorsearch_spark.functions.embedding import route_embedding
-from multi_model_vectorsearch_spark.functions.fixedpoint import snap_double
-from multi_model_vectorsearch_spark.functions.vector import cosine_similarity
 from multi_model_vectorsearch_spark.operators.graph import (
     CROSS_MODAL_FLOOR,
     DECAY,
@@ -70,6 +70,12 @@ FLAG_SCHEMA = "doc_id bigint, is_dup boolean, dup_of bigint"
 
 
 OVERFETCH = 6  # reference main.py:209: KNN pool is k*6 before the modality split
+# Driver-tier budget: warm() also holds the snapshot's vectors and
+# adjacency as driver arrays (_DriverSnapshot) when they fit in this many
+# bytes, and warm search answers from them with no Spark job. 64 MB
+# admits ~15k docs at 512 float64 dims (~490k at the 16-dim hash
+# embedding) with ~10 edges each; 0 turns the tier off.
+DRIVER_TIER_BYTES = 64 << 20
 # Serving probe count in fixed-centroid mode, and the floor under auto
 # (√n) sizing (see IngestPipeline._auto_probes)
 IVF_PROBES = 2
@@ -109,8 +115,9 @@ def _top_pool(q, qids, c, cids, pool_k: int):
     half-to-even would rank a .xxxxxx5 tie differently from the join
     path's ``snap_double``. Every candidate whose doc_id equals the
     query's is pinned to exactly 1.0 after the snap — the
-    ``when(doc_id == qid, 1.0)`` rule of ``_knn_join``, found by binary
-    search on ``cids`` (so a duplicated doc_id pins every copy).
+    ``when(doc_id == qid, 1.0)`` rule of the JVM join reference the tests
+    keep (``_knn_join``), found by binary search on ``cids`` (so a
+    duplicated doc_id pins every copy).
 
     Selection: the composite float64 key s_int·2^24 + (2^24-1-position)
     totally orders a query's candidates by (s desc, doc_id asc) with NO
@@ -212,9 +219,16 @@ def _seeds(pool: list, qm: str, k: int, pool_k: int) -> list:
     ``_quota`` finish."""
     import numpy as np
 
-    pool = sorted(pool, key=lambda t: (-t[0], t[1]))[:pool_k]
+    pool = _merged(pool, pool_k)
     keep = _quota(np.array([[m == qm for _, _, m in pool]], dtype=bool), k)
     return [(d, s) for (s, d, _), kp in zip(pool, keep[0]) if kp]
+
+
+def _merged(pool: list, n: int) -> list:
+    """Per-block pools ``[(s, doc_id, modality)]`` merged in (s desc,
+    doc_id asc) order — the order ``_top_pool`` ranks each block by —
+    and cut to the top ``n``."""
+    return sorted(pool, key=lambda t: (-t[0], t[1]))[:n]
 
 
 def _expand(seeds: list, adj: dict, k: int) -> list:
@@ -232,6 +246,185 @@ def _expand(seeds: list, adj: dict, k: int) -> list:
             if nbr not in best or h > best[nbr]:
                 best[nbr] = h
     return sorted(best.items(), key=lambda t: (-t[1], t[0]))[:k]
+
+
+def _serve_queries(vecs: list, modality: str) -> tuple:
+    """Serving query vectors as ``_score_block``'s ``queries``: query
+    ``q``'s qid is ``SERVE_QID0 + q``, every query of one modality."""
+    import numpy as np
+
+    return (np.arange(len(vecs), dtype=np.int64) + SERVE_QID0,
+            np.array([modality] * len(vecs), dtype=object), _vectors(vecs))
+
+
+def _cell_groups(cells: list | None) -> list:
+    """``_score_block``'s query groups: ``(None, all queries)`` on a full
+    scan, else one ``(cell ids, query positions)`` group per distinct
+    probe set, so queries probing the same cells share a kernel call."""
+    import numpy as np
+
+    if cells is None:
+        return [(None, slice(None))]
+    by_set: dict = {}
+    for i, cs in enumerate(cells):
+        by_set.setdefault(tuple(sorted(cs)), []).append(i)
+    return [(np.array(cs), np.array(ix)) for cs, ix in by_set.items()]
+
+
+def _score_block(docs, mods, cmat, cid, queries: tuple, groups: list,
+                 pool_k: int, finish_k: int | None = None):
+    """Score one block of corpus rows — ``docs`` sorted ascending, their
+    ``mods``, raw embedding matrix ``cmat`` and IVF ``cid`` (None on a
+    full scan) — against ``queries = (qids, qms, qmat)``: per group of
+    ``_cell_groups``, one ``_top_pool`` call over the rows of the
+    group's cells. Yields candidate frames (``CANDIDATE_SCHEMA``; with
+    ``finish_k`` the ``_quota`` finish and its ``rn``).
+
+    The one serving body, run in two places: ``_knn_kernel``'s
+    ``mapInPandas`` tasks call it per Arrow batch (``_score_batches``),
+    and the driver tier (``_pools``) calls it once over a whole
+    ``_DriverSnapshot``."""
+    import numpy as np
+    import pandas as pd
+
+    qids, qms, qmat = queries
+    for cs, qi in groups:
+        m = slice(None) if cs is None else np.isin(cid, cs)
+        top, s = _top_pool(qmat[qi], qids[qi], cmat[m], docs[m], pool_k)
+        if finish_k is None:
+            yield _pool_rows(qids[qi], qms[qi], docs[m], mods[m], top, s)
+            continue
+        fin = _quota(mods[top] == qms[:, None], finish_k)
+        rn = np.cumsum(fin, axis=1)
+        fq, fp = np.nonzero(fin)
+        rows = top[fq, fp]
+        yield pd.DataFrame({
+            "qid": qids[fq],
+            "qm": qms[fq],
+            "doc_id": docs[rows],
+            "modality": mods[rows],
+            "s": s[fq, fp],
+            "rn": rn[fq, fp].astype("int32"),
+        })
+
+
+def _score_batches(batches, queries: tuple, groups: list, pool_k: int,
+                   finish_k: int | None = None):
+    """``_knn_kernel``'s ``mapInPandas`` body: each Arrow batch of corpus
+    rows, sorted by ``doc_id``, is one ``_score_block``."""
+    import numpy as np
+    import pandas as pd
+
+    if finish_k is not None:
+        # The balanced finish needs the ENTIRE partition as one pool:
+        # an independent "final" top-k per Arrow batch would emit
+        # duplicate (qid, rn) rows. Concatenate first — this path is
+        # gated to a single coalesced partition of < 200k rows, so
+        # the corpus matrix is bounded (~800 MB float64 at dim 512).
+        whole = [b for b in batches if len(b)]
+        batches = [pd.concat(whole, ignore_index=True)] if whole else []
+    for pdf in batches:
+        if len(pdf) == 0:
+            continue
+        pdf = pdf.sort_values("doc_id", kind="stable")
+        yield from _score_block(
+            pdf["doc_id"].values.astype(np.int64), pdf["modality"].values,
+            _vectors(pdf["embedding"].values),
+            pdf["cid"].values if "cid" in pdf else None,
+            queries, groups, pool_k, finish_k)
+
+
+class _DriverSnapshot(NamedTuple):
+    """The driver tier: a warm snapshot's corpus and edges held as
+    arrays on the driver (``warm()``, within ``DRIVER_TIER_BYTES``).
+    Corpus rows sorted by ``doc_id`` — ``ids``, ``mods``, the raw
+    embedding matrix ``mat`` and ``cid`` (-1 where a row has none) — and
+    every edge in both directions, sorted by ``src``: ``src``, ``dst``,
+    ``w``."""
+
+    ids: object
+    mods: object
+    mat: object
+    cid: object
+    src: object
+    dst: object
+    w: object
+
+    @staticmethod
+    def nbytes_for(n: int, cells: int, edges: int) -> int:
+        """Array bytes of a copy of ``n`` rows holding ``cells`` embedding
+        values in all, and ``edges`` stored edges: 8 per value, 24 per
+        row (id, modality reference, cid), 48 per edge (both
+        directions)."""
+        return 8 * cells + 24 * n + 48 * edges
+
+    @classmethod
+    def of(cls, corpus, edges) -> "_DriverSnapshot":
+        """From the collected pandas frames of the pinned corpus
+        ``(doc_id, modality, embedding, cid)`` and edge store."""
+        import numpy as np
+
+        order = np.argsort(corpus["doc_id"].values, kind="stable")
+        corpus = corpus.iloc[order]
+        src = np.concatenate([edges["src"].values, edges["dst"].values])
+        dst = np.concatenate([edges["dst"].values, edges["src"].values])
+        w = np.concatenate([edges["score"].values] * 2)
+        by = np.argsort(src, kind="stable")
+        return cls(corpus["doc_id"].values.astype(np.int64),
+                   corpus["modality"].values.astype(object),
+                   _vectors(corpus["embedding"].values),
+                   corpus["cid"].fillna(-1).values.astype(np.int64),
+                   src[by].astype(np.int64), dst[by].astype(np.int64),
+                   w[by].astype(np.float64))
+
+    def adjacency(self, ids) -> dict:
+        """``_expand``'s ``adj`` for the seed ``ids``: each id's
+        ``(neighbor, edge score)`` pairs, both edge directions."""
+        import numpy as np
+
+        ids = np.asarray(sorted(ids), dtype=np.int64)
+        lo = np.searchsorted(self.src, ids, side="left")
+        hi = np.searchsorted(self.src, ids, side="right")
+        return {int(d): list(zip(self.dst[a:b].tolist(),
+                                 self.w[a:b].tolist()))
+                for d, a, b in zip(ids, lo, hi) if b > a}
+
+
+# Answer column types: the Python value Spark's collect returns, and the
+# SQL literal that reads back as exactly that value (a float's repr
+# round-trips; Spark SQL string literals take backslash escapes)
+_SQL_TYPES = {
+    "bigint": (int, lambda v: f"{v}L"),
+    "double": (float, lambda v: f"{v!r}D"),
+    "string": (str, lambda v: "'" + v.replace("\\", "\\\\")
+               .replace("'", "\\'") + "'"),
+}
+
+
+class _AnswerFrame(_ClassicFrame):
+    """A serving answer: rows the driver already holds, as a DataFrame.
+    ``collect()`` returns them with no JVM round trip; every other use
+    reads ``_jdf``, which builds the equivalent SQL ``VALUES`` relation
+    (a LocalRelation) on first touch. Spark's collect of that relation
+    returns the same rows: ``_answer_frame`` types each value as the
+    schema does, and a double literal is its exact ``repr``."""
+
+    _plan = None
+    _rows: list = []
+    _sql = ""
+
+    @property
+    def _jdf(self):
+        if self._plan is None:
+            self._plan = self.sparkSession.sql(self._sql)._jdf
+        return self._plan
+
+    @_jdf.setter
+    def _jdf(self, jdf) -> None:  # DataFrame.__init__ assigns it
+        self._plan = jdf
+
+    def collect(self) -> list:
+        return list(self._rows)
 
 
 def _assign_kernel(e, cmat, probes: int = 1):
@@ -442,6 +635,9 @@ class IngestPipeline:
         self.serve_counters = {"queries": 0, "retries": 0, "exhausted": 0}
         self.last_serve_info: dict | None = None
         self._serve_lock = threading.Lock()
+        # the tier ("driver" / "spark") that answered this thread's last
+        # serving call (_pools), read into last_serve_info by _serve
+        self._serve_tls = threading.local()
         # warm-serving state (warm()): cached corpus/edges/centroids/index.
         # Published ATOMICALLY (one dict assignment) so a serving thread
         # that captures the reference once per query never sees a
@@ -2103,11 +2299,22 @@ class IngestPipeline:
         ``cid`` (``_with_cid``), the edge store (1-hop expansion reads it
         per query), and — when the IVF index has bootstrapped — the
         assignment table, plus the centroid rows collected to the driver.
-        Serving passes then read InMemoryTableScans (the ``/search``
-        kernel pool and edge collect, ``search_ivf``'s TakeOrdered): no
-        file listing, no parquet decode, no per-query state-existence
-        jobs, and a probed query filters the pinned corpus by its cells
-        with no members join.
+        Spark-tier serving passes then read InMemoryTableScans (the
+        kernel pool and edge collect): no file listing, no parquet
+        decode, no per-query state-existence jobs, and a probed query
+        filters the pinned corpus by its cells with no members join.
+
+        **Driver tier.** When the snapshot's vectors plus adjacency fit
+        ``DRIVER_TIER_BYTES`` (64 MB: ~15k docs at 512 float64 dims,
+        ~490k at the 16-dim hash embedding, ~10 edges each), ``"full"``
+        also collects the pinned corpus and edges to the driver
+        (``_DriverSnapshot``, one Arrow collect each from their caches)
+        into the same snapshot dict, so it shares their state token and
+        is published and dropped with them. Warm ``search``,
+        ``search_many`` and ``search_ivf`` then answer on the driver with
+        no Spark job. ``sizes`` reports the copy's ``driver_bytes`` and
+        ``driver_rows`` (0 over the budget, where serving keeps the
+        Spark tier).
         ``process_batch`` invalidates automatically (ingest changes state);
         call ``warm()`` again after an ingest burst. At cluster scale the
         same call pins the corpus across executors — the cache is
@@ -2180,16 +2387,18 @@ class IngestPipeline:
 
         sizes: dict = {"policy": policy}
 
-        def pin_store(df: DataFrame, key: str) -> tuple[DataFrame, int]:
-            """cache + materialize, recording the in-memory size of THIS
-            store's own cached relation — the operator-facing
+        def pin_store(df: DataFrame, key: str, *measures) -> tuple:
+            """cache + materialize with one aggregate — the row count,
+            then each of ``measures`` — recording the in-memory size of
+            THIS store's own cached relation — the operator-facing
             quantification of what each warm policy costs
             (``pinned_bytes_<store>``; a reader computes the pinned
             fraction directly from these)."""
             df = df.cache()
-            rows = df.count()
+            got = (df.agg(F.count(F.lit(1)), *measures).collect()[0]
+                   if measures else [df.count()])
             sizes[f"pinned_bytes_{key}"] = self._cached_bytes(df)
-            return df, rows
+            return (df, *(v or 0 for v in got))
 
         nw: dict = {"policy": policy}
         if cents is not None:
@@ -2207,8 +2416,10 @@ class IngestPipeline:
                 idx.unpersist()
                 sizes.pop("pinned_bytes_index", None)
                 idx = None
+        values = 0
         if policy == "full":
-            corpus, n = pin_store(self._with_cid(corpus, idx), "corpus")
+            corpus, n, values = pin_store(self._with_cid(corpus, idx),
+                                          "corpus", F.sum(F.size("embedding")))
         else:
             # "index" policy: the corpus stays the bracket-captured
             # UNCACHED plan — streamed from parquet per query, bounded
@@ -2216,7 +2427,17 @@ class IngestPipeline:
             n = corpus.count()
         edges, ne = pin_store(edges, "edges")
         nw.update(corpus=corpus, edges=edges)
-        sizes.update({"corpus_rows": n, "edge_rows": ne})
+        sizes.update({"corpus_rows": n, "edge_rows": ne,
+                      "driver_bytes": 0, "driver_rows": 0})
+        need = _DriverSnapshot.nbytes_for(n, values, ne)
+        if policy == "full" and 0 < need <= DRIVER_TIER_BYTES:
+            # the driver tier: the same pinned frames, collected from
+            # their caches through Arrow (one job each)
+            nw["driver"] = _DriverSnapshot.of(
+                corpus.select("doc_id", "modality", "embedding",
+                              "cid").toPandas(),
+                edges.toPandas())
+            sizes.update(driver_bytes=need, driver_rows=n)
         nw["sizes"] = sizes
         old = self._warm
         self._warm = nw  # atomic publish: one dict assignment
@@ -2302,32 +2523,27 @@ class IngestPipeline:
                    modality: str = "text",
                    probes: int | None = None) -> DataFrame:
         """Probed ANN serving over the maintained index (top-k only, no
-        modality finish or expansion): pick the query's ``probes`` nearest
-        cells on the driver, keep the corpus rows of those cells
-        (``_probed_corpus``), exact-rank only those candidates. A
-        query touches ~probes/n_centroids of the corpus; falls back to the
-        full scan while the index hasn't bootstrapped. With ``warm()``
-        state all reads hit the in-memory caches and the existence checks
-        cost nothing. ``probes`` defaults to ``_auto_probes``:
-        ``IVF_PROBES`` cells in fixed-centroid mode; √ncent cells
-        under auto (√n) sizing — a ~n^¾ candidate set, sublinear per
-        query while the probed fraction shrinks slowly enough (n^-¼) to
-        hold recall at scale (probe-table evidence in BASELINE.md r9)."""
+        modality finish or expansion): ``search_many``'s pool step with
+        ``pool_k = k`` on the ``"auto"`` route — the query's ``probes``
+        nearest cells picked on the driver, only their rows scored — and
+        its block pools merged on the driver (``_merged``). A query
+        touches ~probes/n_centroids of the corpus; falls back to the full
+        scan while the index hasn't bootstrapped. Warm, it runs on the
+        driver tier with no Spark job (``search_many``). ``probes``
+        defaults to ``_auto_probes``: ``IVF_PROBES`` cells in
+        fixed-centroid mode; √ncent cells under auto (√n) sizing — a
+        ~n^¾ candidate set, sublinear per query while the probed fraction
+        shrinks slowly enough (n^-¼) to hold recall at scale (probe-table
+        evidence in BASELINE.md r9). Answers ``(doc_id, modality, s)``
+        rows in (s desc, doc_id asc) order, ``s`` the kernel's snapped
+        cosine."""
         k = k or self.k
         vec = self._query_vec(text, modality)
-        if vec is None:
-            return self._local_frame(
-                [], "doc_id bigint, modality string, s double")
-        corpus = self._probed_corpus([vec], probes=probes)[0]
-        return (
-            corpus.select(
-                "doc_id", "modality",
-                snap_double(cosine_similarity(F.col("embedding"),
-                                              F.lit(vec))).alias("s"),
-            )
-            .orderBy(F.desc("s"), F.asc("doc_id"))
-            .limit(k)
-        )
+        pools, _ = self._pools([] if vec is None else [vec], k, modality,
+                               "auto", probes)
+        return self._answer_frame(
+            [(d, m, s) for p in pools for s, d, m in _merged(p, k)],
+            "doc_id bigint, modality string, s double")
 
     def _is_stale_scan_error(self, exc: Exception) -> bool:
         """True iff ``exc`` looks like a scan that outlived its epoch's
@@ -2382,7 +2598,9 @@ class IngestPipeline:
         Observability (round-12 verdict item 4): every answered query
         updates ``serve_counters`` ("queries", "retries", "exhausted")
         and publishes ``last_serve_info`` = ``{"retries": n,
-        "freshness": gauge-at-answer}`` — the signal that separates
+        "freshness": gauge-at-answer, "tier": "driver" | "spark"}`` (the
+        serving tier that answered, see ``search_many``; "spark" for a
+        call that never reaches ``_pools``) — the signal that separates
         "healthy" from "answering but retrying constantly" without log
         forensics. ``freshness`` is free on a cold pipeline and one
         metadata scan per store on a warm one; if that gauge itself
@@ -2403,6 +2621,7 @@ class IngestPipeline:
                     self.maybe_rewarm()
                 except Exception:
                     self.unwarm()  # serve cold rather than not at all
+            self._serve_tls.tier = "spark"
             try:
                 out = build_rows()
             except StateCommitStormError as exc:
@@ -2417,7 +2636,8 @@ class IngestPipeline:
                 fresh = self.freshness()
             except Exception:
                 fresh = None  # gauge raced a sweep; the answer stands
-            info = {"retries": attempt, "freshness": fresh}
+            info = {"retries": attempt, "freshness": fresh,
+                    "tier": self._serve_tls.tier}
             with self._serve_lock:
                 self.serve_counters["queries"] += 1
                 self.serve_counters["retries"] += attempt
@@ -2470,13 +2690,10 @@ class IngestPipeline:
         and ``search_ivf``'s — as ``(corpus, cells, edge view)``.
 
         ``route``: ``"exact"`` serves the whole corpus; ``"ivf"`` probes
-        and raises when no live IVF index exists (a caller who EXPLICITLY
-        asked for the probed route must not silently pay the full-scan
-        latency it exists to avoid — ``build_graph(method="ivf")``'s
-        contract); ``"auto"`` probes when an index exists. Probing picks
-        each query's ``probes`` nearest cells on the driver
-        (``_probe_cids_local``; ``probes`` defaults to ``_auto_probes``)
-        and keeps the corpus rows whose ``cid`` is in the union of those
+        and raises when no live IVF index exists; ``"auto"`` probes when
+        an index exists. Probing picks each query's cells on the driver
+        (``_probe_cells``) and keeps the corpus rows whose ``cid`` is in
+        the union of those
         cells; ``cells`` is then, per query, its own probed cids (None on
         the full scan). The corpus ``warm()`` pins carries each row's
         ``cid`` (``_with_cid``), so a warm probed query filters it with
@@ -2515,21 +2732,34 @@ class IngestPipeline:
                                                          fallback=True)
             crows = (cents.collect()
                      if idx is not None and not idx.isEmpty() else None)
+        cells = self._probe_cells(crows, vecs, route, probes)
+        if cells is None:
+            return corpus, None, ev
+        if "cid" not in corpus.columns:
+            corpus = self._with_cid(corpus, F.broadcast(idx))
+        cids = ", ".join(map(str, sorted({c for cs in cells for c in cs})))
+        return (corpus.filter(F.expr(f"array_contains(array({cids}), cid)")),
+                cells, ev)
+
+    def _probe_cells(self, crows: list | None, vecs: list, route: str,
+                     probes: int | None) -> list | None:
+        """Per query its ``probes`` nearest cells (``_probe_cids_local``;
+        ``probes`` defaults to ``_auto_probes``) over the centroid rows
+        ``crows``, or None — the full scan — when there are none. A
+        caller who EXPLICITLY asked for the probed route
+        (``route="ivf"``) must not silently pay the full-scan latency it
+        exists to avoid, so no centroids raise there
+        (``build_graph(method="ivf")``'s contract)."""
         if not crows:
             if route == "ivf":
                 raise ValueError(
                     "route='ivf' requested but no live IVF index exists; "
                     "use route='auto' for silent fallback, or enable "
                     "maintain_ivf / call bulk_load first")
-            return corpus, None, ev
+            return None
         if probes is None:
             probes = self._auto_probes(len(crows))
-        cells = [self._probe_cids_local(crows, v, probes) for v in vecs]
-        if "cid" not in corpus.columns:
-            corpus = self._with_cid(corpus, F.broadcast(idx))
-        cids = ", ".join(map(str, sorted({c for cs in cells for c in cs})))
-        return (corpus.filter(F.expr(f"array_contains(array({cids}), cid)")),
-                cells, ev)
+        return [self._probe_cids_local(crows, v, probes) for v in vecs]
 
     def _probed_views(self, torn: set[str]):
         """The (corpus, centroids, index) views one probed query reads,
@@ -2619,8 +2849,8 @@ class IngestPipeline:
           — 284 s/batch vs the chunked kernel's numpy matmuls at the 10×
           probe scale). All chunk branches materialize in ONE job, so the
           corpus scan parallelism multiplies across chunks.
-          ``_knn_join`` remains as the independent semantic reference
-          (kernel≡join equivalence tests).
+          The tests keep a JVM broadcast-join scorer (``_knn_join``) as
+          the independent semantic reference.
 
         ``n_queries`` and ``n_corpus`` are the caller's counts of
         ``fresh`` and of the post-write corpus (None means count here):
@@ -2719,61 +2949,22 @@ class IngestPipeline:
         the final ranked top-``finish_k`` rows — semantically identical to
         ``_balanced_select`` over the same pool, minus its shuffle. That
         finish is ``_quota`` over ``_top_pool``'s rank-ordered output.
+
+        The task body is the module-level ``_score_batches`` →
+        ``_score_block``, which the driver tier also runs over its
+        copy of a warm snapshot (``search_many``).
         """
         import numpy as np
-        import pandas as pd
 
         if isinstance(fresh, DataFrame):
             qrows = fresh.select("doc_id", "modality", "embedding").collect()
             fresh = (np.array([r.doc_id for r in qrows], dtype=np.int64),
                      np.array([r.modality for r in qrows], dtype=object),
                      _vectors([r.embedding for r in qrows]))
-        qids, qms, qmat = fresh
-        groups = [(None, slice(None))]
-        if cells is not None:
-            by_set: dict = {}
-            for i, cs in enumerate(cells):
-                by_set.setdefault(tuple(sorted(cs)), []).append(i)
-            groups = [(np.array(cs), np.array(ix))
-                      for cs, ix in by_set.items()]
+        groups = _cell_groups(cells)
 
         def score(batches):
-            if finish_k is not None:
-                # The balanced finish needs the ENTIRE partition as one pool:
-                # an independent "final" top-k per Arrow batch would emit
-                # duplicate (qid, rn) rows. Concatenate first — this path is
-                # gated to a single coalesced partition of < 200k rows, so
-                # the corpus matrix is bounded (~800 MB float64 at dim 512).
-                whole = [b for b in batches if len(b)]
-                batches = [pd.concat(whole, ignore_index=True)] if whole else []
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                pdf = pdf.sort_values("doc_id", kind="stable")
-                docs = pdf["doc_id"].values.astype(np.int64)
-                mods = pdf["modality"].values
-                cmat = _vectors(pdf["embedding"].values)
-                for cs, qi in groups:
-                    m = slice(None) if cs is None else np.isin(
-                        pdf["cid"].values, cs)
-                    top, s = _top_pool(qmat[qi], qids[qi], cmat[m], docs[m],
-                                       pool_k)
-                    if finish_k is None:
-                        yield _pool_rows(qids[qi], qms[qi], docs[m], mods[m],
-                                         top, s)
-                        continue
-                    fin = _quota(mods[top] == qms[:, None], finish_k)
-                    rn = np.cumsum(fin, axis=1)
-                    fq, fp = np.nonzero(fin)
-                    rows = top[fq, fp]
-                    yield pd.DataFrame({
-                        "qid": qids[fq],
-                        "qm": qms[fq],
-                        "doc_id": docs[rows],
-                        "modality": mods[rows],
-                        "s": s[fq, fp],
-                        "rn": rn[fq, fp].astype("int32"),
-                    })
+            return _score_batches(batches, fresh, groups, pool_k, finish_k)
 
         schema = CANDIDATE_SCHEMA
         if finish_k is not None:
@@ -2782,37 +2973,6 @@ class IngestPipeline:
         if cells is not None:
             cols.append("cid")
         return corpus.select(*cols).mapInPandas(score, schema=schema)
-
-    def _knn_join(self, corpus: DataFrame, fresh: DataFrame) -> DataFrame:
-        """Driver-safe candidate scorer: corpus × broadcast(batch), cosine
-        in the JVM. No driver materialization of the batch.
-
-        Norm folds are HOISTED to one per corpus row / one per query row
-        (``cosine_with_norms``, bit-identical to the inline form — the same
-        hoist the dq31 KNN-scan family carries), so the per-pair expression
-        is a single dot fold instead of three."""
-        from multi_model_vectorsearch_spark.functions.vector import (
-            cosine_with_norms,
-            l2_norm,
-        )
-
-        q = F.broadcast(fresh.select(
-            F.col("doc_id").alias("qid"),
-            F.col("modality").alias("qm"),
-            F.col("embedding").alias("qv"),
-            l2_norm(F.col("embedding")).alias("_nq"),
-        ))
-        return (
-            corpus.withColumn("_nc", l2_norm(F.col("embedding")))
-            .crossJoin(q)
-            .select(
-                "qid", "qm", "doc_id", "modality",
-                F.when(F.col("doc_id") == F.col("qid"), F.lit(1.0))
-                .otherwise(snap_double(cosine_with_norms(
-                    F.col("embedding"), F.col("qv"),
-                    F.col("_nc"), F.col("_nq")))).alias("s"),
-            )
-        )
 
     @staticmethod
     def _balanced_select(cand: DataFrame, k: int, pool_k: int) -> DataFrame:
@@ -2930,8 +3090,9 @@ class IngestPipeline:
         index exists. At the 5M-doc corpus the exact scan is what made
         warm ``/search`` grow (1.7 s/q in the BASELINE.md r9 1000× table)
         while probed ``search_ivf`` stayed flat."""
-        return self.search_many([text], k, modality=modality, route=route,
-                                probes=probes).drop("qid")
+        rows = self._answer_rows([text], k, modality, route, probes)
+        return self._answer_frame([(d, s) for _, d, s in rows],
+                                  "id bigint, score double")
 
     def search_many(self, texts: list, k: int | None = None,
                     modality: str = "text", route: str = "auto",
@@ -2946,34 +3107,40 @@ class IngestPipeline:
         KNN pool, split by modality, then one hop of expansion. Here:
 
         1. each text embeds on the driver (``route_embedding_local``);
-        2. ``_search_pool``: one ``_knn_kernel`` pass over the candidate
-           source (``_probed_corpus``: warm snapshot or bracket-captured
-           views; on a probed route each query scores only its own
-           cells) emits every query's top ``pool_k = k·OVERFETCH`` per
-           scored block — a driver collect of at most
-           P × pool_k × M rows;
+        2. ``_pools``: one ``_score_block`` pass over the candidate
+           source emits every query's top ``pool_k = k·OVERFETCH`` per
+           scored block (on a probed route each query scores only its
+           own cells, ``_probe_cells``);
         3. on the driver, ``_seeds`` merges each query's block pools in
            (s desc, doc_id asc) order and applies the ``_quota`` finish;
-        4. one collect gathers every edge with an endpoint among the
-           seeds from the same snapshot, and ``_expand`` scores the hop.
+        4. the edges with an endpoint among the seeds, from the same
+           snapshot, feed ``_expand``, which scores the hop.
 
-        Both filters — the seed edges' and a probed route's ``cid`` —
-        take their ids as one array literal (``arrays_overlap``,
-        ``array_contains`` over a SQL ``array(...)`` the optimizer folds),
-        which generated code reads from its references. An ``IN`` of up
-        to 10 literals stays an ``In`` whose values land in the generated
-        code, so every new query compiled ~2.6 classes (Janino, ~40 ms a
-        warm query); a warm call now compiles none. The array is written
-        as SQL text, one Py4J call for any id count: ``F.lit(ids)`` makes
-        one per id (~450 ms for 1,000 ids).
+        Two tiers run that body. **Driver tier** (``warm()`` kept a
+        driver copy, see ``DRIVER_TIER_BYTES``): step 2 is one
+        ``_score_block`` call over the copy and step 4 a lookup in its
+        adjacency — 0 Spark jobs on every route. **Spark tier** (cold,
+        ``warm(policy="index")``, or over the budget): step 2 is
+        ``_knn_kernel``'s pass over ``_probed_corpus`` (a driver collect
+        of at most P × pool_k × M rows) and step 4 one edge collect —
+        warm, 2 jobs for any M on either route; an unpinned probed read
+        adds the members join's broadcast, a cold one also the
+        index-emptiness check and the centroid collect. Both filters
+        take their ids as one folded array literal (``arrays_overlap``,
+        ``array_contains``), so a warm call compiles nothing (an ``IN``
+        of up to 10 literals put the values in generated code: ~2.6
+        classes a query). The query vectors ship in the kernel closure,
+        so ``len(texts) > max_collect`` raises on both tiers.
 
-        Spark jobs per call, for any M, warm: 2 (pool, edges) on either
-        route — a probed route filters the pinned corpus by ``cid``. A
-        probed read of an unpinned corpus adds the members join's
-        broadcast, and a cold one also the index-emptiness check and the
-        centroid collect. The query vectors ship in the kernel closure, so
-        ``len(texts) > max_collect`` raises instead of falling back. The answer is a ``VALUES``
-        relation (``_local_frame``): collecting it runs no Spark job."""
+        The answer is an ``_AnswerFrame``: ``collect()`` returns the
+        driver's rows with no JVM call."""
+        return self._answer_frame(
+            self._answer_rows(texts, k, modality, route, probes),
+            "qid bigint, id bigint, score double")
+
+    def _answer_rows(self, texts: list, k: int | None, modality: str,
+                     route: str, probes: int | None) -> list:
+        """``search_many``'s answer as driver rows ``(qid, id, score)``."""
         if route not in ("exact", "ivf", "auto"):
             raise ValueError(f"unknown route {route!r}")
         if len(texts) > self.max_collect:
@@ -2986,63 +3153,101 @@ class IngestPipeline:
         pool_k = k * OVERFETCH
         vecs = [self._query_vec(t, modality) for t in texts]
         live = [i for i, v in enumerate(vecs) if v is not None]
-        rows = []
-        if live:
-            pool, edges = self._search_pool([vecs[i] for i in live], k,
-                                            modality, route, probes)
-            pools: list = [[] for _ in live]
-            for r in pool.collect():
-                pools[r.qid - SERVE_QID0].append((r.s, r.doc_id, r.modality))
-            seeds = [_seeds(p, modality, k, pool_k) for p in pools]
-            ids = ", ".join(f"{d}L" for d in sorted(
-                {d for sd in seeds for d, _ in sd}))
-            adj: dict = {}
-            if ids:
-                for e in edges.filter(F.expr(
-                        f"arrays_overlap(array(src, dst), array({ids}))")
+        pools, edges_of = self._pools([vecs[i] for i in live], pool_k,
+                                      modality, route, probes, edges=True)
+        seeds = [_seeds(p, modality, k, pool_k) for p in pools]
+        adj = edges_of({d for sd in seeds for d, _ in sd})
+        return [(i, d, s) for i, sd in zip(live, seeds)
+                for d, s in _expand(sd, adj, k)]
+
+    def _pools(self, vecs: list, pool_k: int, modality: str, route: str,
+               probes: int | None, edges: bool = False) -> tuple:
+        """Each query's candidates ``[(s, doc_id, modality)]`` — its top
+        ``pool_k`` per scored block — and, with ``edges``, the seed-edge
+        lookup of the same snapshot: ``ids -> {id: [(neighbor, edge
+        score)]}``. Reads the warm snapshot once; with a driver copy the
+        pool is one ``_score_block`` call on the driver, otherwise the
+        ``_search_pool`` kernel pass. Records the tier that answered for
+        ``_serve`` (``last_serve_info["tier"]``)."""
+        w = self._warm
+        drv = w.get("driver")
+        self._serve_tls.tier = "spark" if drv is None else "driver"
+        pools: list = [[] for _ in vecs]
+        if not vecs:
+            return pools, lambda ids: {}
+        if drv is not None:
+            cells = self._probe_cells(
+                w.get("cent_rows") if route != "exact" else None, vecs,
+                route, probes)
+            found = [
+                zip(f["qid"].tolist(), f["s"].tolist(),
+                    f["doc_id"].tolist(), f["modality"].tolist())
+                for f in _score_block(drv.ids, drv.mods, drv.mat, drv.cid,
+                                      _serve_queries(vecs, modality),
+                                      _cell_groups(cells), pool_k)]
+            lookup = drv.adjacency
+        else:
+            pool, ev = self._search_pool(vecs, pool_k, modality, route,
+                                         probes, warm=w, edges=edges)
+            found = [((r.qid, r.s, r.doc_id, r.modality)
+                      for r in pool.collect())]
+
+            def lookup(ids):
+                adj: dict = {}
+                if not ids:
+                    return adj
+                lit = ", ".join(f"{d}L" for d in sorted(ids))
+                for e in ev.filter(F.expr(
+                        f"arrays_overlap(array(src, dst), array({lit}))")
                 ).collect():
                     adj.setdefault(e.src, []).append((e.dst, e.score))
                     adj.setdefault(e.dst, []).append((e.src, e.score))
-            for i, sd in zip(live, seeds):
-                rows += [(i, d, s) for d, s in _expand(sd, adj, k)]
-        return self._local_frame(rows, "qid bigint, id bigint, score double")
+                return adj
+        for rows in found:
+            for qid, s, d, m in rows:
+                pools[qid - SERVE_QID0].append((s, d, m))
+        return pools, lookup
 
-    def _search_pool(self, vecs: list, k: int, modality: str = "text",
+    def _search_pool(self, vecs: list, pool_k: int, modality: str = "text",
                      route: str = "exact", probes: int | None = None,
-                     warm: dict | None = None) -> tuple:
-        """``(pool plan, edge view)`` of one serving call — the one
-        serving DataFrame Spark executes (plans/window_audit audits it).
-        The pool is ``_knn_kernel`` over ``_probed_corpus``'s candidate
-        source with query ``q``'s kernel qid ``SERVE_QID0 + q``: per
-        scored block, each query's top ``k·OVERFETCH`` candidate rows."""
-        import numpy as np
+                     warm: dict | None = None, edges: bool = True) -> tuple:
+        """``(pool plan, edge view)`` of one Spark-tier serving call — the
+        one serving DataFrame Spark executes (plans/window_audit audits
+        it). The pool is ``_knn_kernel`` over ``_probed_corpus``'s
+        candidate source with query ``q``'s kernel qid
+        ``SERVE_QID0 + q``: per scored block, each query's top ``pool_k``
+        candidate rows."""
+        corpus, cells, ev = self._probed_corpus(vecs, route, probes, warm,
+                                                edges=edges)
+        return (self._knn_kernel(corpus, _serve_queries(vecs, modality),
+                                 pool_k, cells=cells), ev)
 
-        corpus, cells, edges = self._probed_corpus(vecs, route, probes,
-                                                   warm, edges=True)
-        queries = (np.arange(len(vecs), dtype=np.int64) + SERVE_QID0,
-                   np.array([modality] * len(vecs), dtype=object),
-                   _vectors(vecs))
-        return (self._knn_kernel(corpus, queries, k * OVERFETCH,
-                                 cells=cells), edges)
-
-    def _local_frame(self, rows: list, schema: str) -> DataFrame:
-        """Driver rows (bigint/double columns) as a SQL ``VALUES``
-        relation: a LocalRelation, whose collect() runs no Spark job under
-        any session conf (``createDataFrame`` from a row list runs one;
-        from pandas, none only with Arrow on). An empty frame may also
-        type string columns."""
+    def _answer_frame(self, rows: list, schema: str) -> DataFrame:
+        """Driver rows (bigint/double/string columns) as an
+        ``_AnswerFrame``: ``collect()`` returns them as the ``Row``s
+        Spark's collect of the frame would, and every other use reads a
+        SQL ``VALUES`` relation — a LocalRelation, whose collect() runs
+        no Spark job under any session conf (``createDataFrame`` from a
+        row list runs one; from pandas, none only with Arrow on)."""
         cols = [c.split() for c in schema.split(",")]
-        names = ", ".join(n for n, _ in cols)
-        if not rows:
+        names = [n for n, _ in cols]
+        typed = [tuple(_SQL_TYPES[t][0](v) for (_, t), v in zip(cols, r))
+                 for r in rows]
+        if typed:
+            body = ", ".join(
+                "(" + ", ".join(_SQL_TYPES[t][1](v)
+                                for (_, t), v in zip(cols, r)) + ")"
+                for r in typed)
+            sql = f"SELECT * FROM VALUES {body} AS t({', '.join(names)})"
+        else:
             nulls = ", ".join(f"CAST(NULL AS {t})" for _, t in cols)
-            return self.spark.sql(
-                f"SELECT * FROM VALUES ({nulls}) AS t({names}) WHERE false")
-        fmt = {"bigint": lambda v: f"{int(v)}L",
-               "double": lambda v: f"{float(v)!r}D"}
-        body = ", ".join(
-            "(" + ", ".join(fmt[t](v) for (_, t), v in zip(cols, r)) + ")"
-            for r in rows)
-        return self.spark.sql(f"SELECT * FROM VALUES {body} AS t({names})")
+            sql = (f"SELECT * FROM VALUES ({nulls}) AS t({', '.join(names)})"
+                   " WHERE false")
+        frame = _AnswerFrame(None, self.spark)
+        row = Row(*names)
+        frame._rows = [row(*r) for r in typed]
+        frame._sql = sql
+        return frame
 
     def serve_search_many(self, texts: list, k: int | None = None,
                           modality: str = "text", route: str = "auto",

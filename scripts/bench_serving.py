@@ -1,82 +1,148 @@
-"""Serving-latency A/B at the 10x corpus (round-8 verdict item 3).
+"""Serving-latency A/B: cold and warm `/search`, warm on both serving tiers.
 
-Ingests the 50k-doc synthesized corpus once (maintain_ivf on), then
-measures per-query wall time for exact `/search` and probed `search_ivf`,
-cold (per-query parquet state reads + full plan setup) vs warm
-(``pipe.warm()`` cached state + driver-side query embed).
+Builds serving state, then measures the per-query p50 wall of
+`search(route="exact")` (collected), `search_ivf` and an 8-text
+`search_many` (per call):
+
+- cold: no `warm()`, every query plans against the state stores;
+- warm, driver tier: after `warm()`, with the snapshot held on the
+  driver (`DRIVER_TIER_BYTES`);
+- warm, Spark tier: the same, re-warmed with `DRIVER_TIER_BYTES` patched
+  to 0, so warm queries run the Spark kernel pass.
+
+State: by default the `pipeline` benchmark's inputs at `--seed`
+(perfbench/inputs.py): a 100-doc `bulk_load`, a `cells` graph build,
+two 30-doc `/submit` batches and `compact()` — 148 docs at seed 101.
+`--src DIR` bulk-loads the `documents` table of a table directory
+instead (for example the 10x corpus `scripts/scale_probe.py --factor
+10 --keep` writes to /tmp/sf_scaled).
 
 Usage:
-    python scripts/scale_probe.py --factor 10 --keep   # once, builds /tmp/sf_scaled
-    python scripts/bench_serving.py /tmp/sf_scaled
+    python3 scripts/bench_serving.py                 # pipeline inputs, seed 101
+    python3 scripts/bench_serving.py --src /tmp/sf_scaled --queries 20
+
+Run it on the parent checkout and on a change to compare.
 """
 
 from __future__ import annotations
 
+import argparse
+import os
 import shutil
+import statistics
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "perfbench"))
 
-from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+SCHEMA = "doc_id bigint, text string, modality string"
 
-def timeit(fn, n=5):
-    fn()  # untimed warm-up call (JIT, broadcast build)
-    t0 = time.perf_counter()
-    for _ in range(n):
-        fn()
-    return round((time.perf_counter() - t0) / n, 3)
+
+def p50(fn, args, reps: int = 1) -> float:
+    """Median wall of ``fn(a).collect()`` over ``args``, after one
+    untimed call."""
+    fn(args[0]).collect()
+    walls = []
+    for _ in range(reps):
+        for a in args:
+            t0 = time.perf_counter()
+            fn(a).collect()
+            walls.append(time.perf_counter() - t0)
+    return statistics.median(walls)
+
+
+def build(spark, pipe, args) -> list[str]:
+    """Load the serving state; returns the query texts."""
+    if args.src:
+        from multi_model_vectorsearch_spark.sources.registry import (
+            load_tables,
+        )
+
+        docs = load_tables(spark, args.src)["documents"].select(
+            "doc_id", "text",
+            F.element_at(F.array(F.lit("text"), F.lit("image"),
+                                 F.lit("audio")),
+                         (F.col("doc_id") % 3 + 1).cast("int"))
+            .alias("modality"))
+        pipe.bulk_load(docs)
+        pipe.build_graph()
+        rows = docs.orderBy("doc_id").limit(args.queries).collect()
+        return [r.text for r in rows]
+    from inputs import PipelineInputs
+
+    inp = PipelineInputs(args.seed, 100, 30, 0.2)
+    pipe.bulk_load(spark.createDataFrame(inp.corpus, SCHEMA))
+    pipe.build_graph(method="cells")
+    for c in range(2):
+        pipe.process_batch(spark.createDataFrame(inp.batch(2).rows, SCHEMA),
+                           c, key=f"s{c}")
+    pipe.compact()
+    return [q for q, _ in inp.queries(args.queries)]
 
 
 def main():
-    src = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sf_scaled"
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "100g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    from multi_model_vectorsearch_spark.sources.registry import load_tables
-    from multi_model_vectorsearch_spark.streaming.ingest import IngestPipeline
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--src", default=None,
+                    help="table directory whose documents to bulk-load "
+                         "(default: the pipeline benchmark's inputs)")
+    ap.add_argument("--seed", type=int, default=101)
+    ap.add_argument("--queries", type=int, default=40)
+    ap.add_argument("--cores", type=int,
+                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "4")))
+    args = ap.parse_args()
 
-    docs = load_tables(spark, src)["documents"].select(
-        "doc_id", "text",
-        F.element_at(F.array(F.lit("text"), F.lit("image"), F.lit("audio")),
-                     (F.col("doc_id") % 3 + 1).cast("int")).alias("modality"),
-    ).localCheckpoint(eager=True)
-    n = docs.count()
-    queries = [r.text for r in docs.orderBy("doc_id").limit(5).collect()]
+    from multi_model_vectorsearch_spark import get_spark
+    from multi_model_vectorsearch_spark.streaming import ingest
+
+    spark = get_spark("bench-serving", master=f"local[{args.cores}]",
+                      shuffle_partitions=args.cores)
+    spark.sparkContext.setLogLevel("ERROR")
     state = tempfile.mkdtemp(prefix="serving_bench_")
     try:
-        pipe = IngestPipeline(spark, state, maintain_ivf=True)
+        pipe = ingest.IngestPipeline(spark, os.path.join(state, "st"),
+                                     k=10, maintain_ivf=True,
+                                     n_centroids=None)
         t0 = time.perf_counter()
-        for b in range(4):
-            pipe.process_batch(docs.filter(F.col("doc_id") % 4 == b), b)
-        print(f"# ingest {n} docs: {time.perf_counter() - t0:.1f} s",
-              flush=True)
+        qs = build(spark, pipe, args)
+        print(f"# state: {pipe.corpus().count()} docs, "
+              f"{pipe.edges().count()} edges, "
+              f"{time.perf_counter() - t0:.1f} s", flush=True)
+        many = [qs[i:i + 8] for i in range(0, len(qs) - 7, 8)]
 
-        def run(tag, fn):
-            per = timeit(lambda: [fn(q).collect() for q in queries]) / len(
-                queries)
-            print(f"{tag}: {per:.3f} s/q", flush=True)
+        def row(tag):
+            out = {
+                "search": p50(lambda q: pipe.search(q, k=10,
+                                                    route="exact"), qs),
+                "search_ivf": p50(lambda q: pipe.search_ivf(q, k=10), qs),
+                "search_many": p50(lambda b: pipe.search_many(b, k=10),
+                                   many),
+            }
+            print(f"{tag}: " + ", ".join(
+                f"{k} p50 {v * 1e3:.2f} ms" for k, v in out.items()),
+                flush=True)
 
-        run("cold exact /search",
-            lambda q: pipe.search(q, k=10))
-        run("cold probed search_ivf",
-            lambda q: pipe.search_ivf(q, k=10, probes=2))
-        t0 = time.perf_counter()
-        sizes = pipe.warm()
-        print(f"# warm() {sizes} in {time.perf_counter() - t0:.1f} s",
-              flush=True)
-        run("warm exact /search",
-            lambda q: pipe.search(q, k=10))
-        run("warm probed search_ivf",
-            lambda q: pipe.search_ivf(q, k=10, probes=2))
+        row("cold")
+        # a checkout without the driver tier warms once, Spark tier only
+        budget = getattr(ingest, "DRIVER_TIER_BYTES", None)
+        tiers = (("driver", budget), ("spark", 0)) if budget else (
+            ("spark", None),)
+        for tier, ceiling in tiers:
+            if ceiling is not None:
+                ingest.DRIVER_TIER_BYTES = ceiling
+            pipe.unwarm()
+            t0 = time.perf_counter()
+            sizes = pipe.warm()
+            print(f"# warm() {time.perf_counter() - t0:.2f} s, "
+                  f"driver_bytes {sizes.get('driver_bytes', 0)}",
+                  flush=True)
+            row(f"warm {tier} tier")
+        if budget:
+            ingest.DRIVER_TIER_BYTES = budget
     finally:
         shutil.rmtree(state, ignore_errors=True)
 

@@ -462,7 +462,7 @@ def test_knn_join_path_matches_kernel(spark, tables, tmp_path):
     # the JVM join reference over the same corpus agrees row-for-row
     corpus = kernel.corpus()
     ref = kernel._balanced_select(
-        kernel._knn_join(corpus.repartition(4), corpus),
+        _knn_join(corpus.repartition(4), corpus),
         kernel.k, kernel.k * 6)
     assert snap(kernel) == sorted(
         (r.qid, r.doc_id, r.rn, round(r.s, 6)) for r in ref.collect())
@@ -533,7 +533,7 @@ def test_chunked_multipartition_kernel_matches_single(spark, tables, tmp_path):
     multi = snap(pipe.knn_against_corpus(fresh))
     assert multi == single
     ref = pipe._balanced_select(
-        pipe._knn_join(pipe.corpus().repartition(4), fresh),
+        _knn_join(pipe.corpus().repartition(4), fresh),
         pipe.k, pipe.k * 6)
     assert multi == snap(ref)
 
@@ -940,9 +940,9 @@ def test_warm_serving_cached_plan_and_equality(spark, tables, tmp_path):
     tables once bootstrapped) in executor memory; serving queries must
     then plan as in-memory scans — NO parquet scan between queries — and
     return row-identical results to the cold paths (driver-side query
-    embed is the same kernel the UDF maps). For ``/search`` the plan is
-    its kernel pool (``_search_pool``); ``search()`` returns the
-    driver-finished answer as a local relation."""
+    embed is the same kernel the UDF maps). For ``/search`` and
+    ``search_ivf`` the plan is their kernel pool (``_search_pool``, the
+    Spark tier); both return the driver-finished answer."""
     docs = tables["documents"].limit(120).select(
         "doc_id", "text",
         F.element_at(
@@ -969,7 +969,8 @@ def test_warm_serving_cached_plan_and_equality(spark, tables, tmp_path):
         )
 
         vec = pipe._query_vec(sample.text, "text")
-        for df in (pipe.search_ivf(sample.text, k=6, probes=2),
+        for df in (pipe._search_pool([vec], 6, route="auto",
+                                     probes=2)[0],
                    pipe._search_pool([vec], 6)[0]):
             leaves = scan_leaf_classes(df)
             assert any("InMemoryTableScan" in c for c in leaves), leaves
@@ -1097,7 +1098,7 @@ def test_fat_batch_exact_and_ivf_join_operator(spark, tables, tmp_path):
         .localCheckpoint(eager=True)
     )
     exact_ref = pipe._balanced_select(
-        pipe._knn_join(corpus, fresh), pipe.k, pipe.k * 6)
+        _knn_join(corpus, fresh), pipe.k, pipe.k * 6)
     e_rows = sorted((r.qid, r.doc_id, r.rn, round(r.s, 6))
                     for r in exact_ref.collect())
     # a fat batch (20 > max_collect=2) is exact despite maintain_ivf
@@ -1753,17 +1754,28 @@ def test_ivf_upkeep_job_budget(spark, tables, tmp_path):
 # a warm search ran 4 and an 8-query search_many 11; before process_batch
 # shared its corpus count with the index upkeep, a 30-doc batch ran 16;
 # before the warm corpus carried each row's cid, the probed search_many
-# broadcast its cells' members in a job of its own and ran 3.
+# broadcast its cells' members in a job of its own and ran 3. "warm" is
+# 11 jobs plus the driver copy's two collects (corpus and edges, each
+# from its pinned cache); the warm driver tier answers search,
+# search_many and search_ivf with none. The spark_* entries are the
+# same calls on the Spark route (DRIVER_TIER_BYTES at 0): pool and seed
+# edges for search/search_many, the pool alone for search_ivf.
 # Raise a budget only with a note in CHANGES.md saying why.
-SERVE_JOB_BUDGET = {"process_batch": 14, "search": 2, "search_many": 2}
+SERVE_JOB_BUDGET = {"process_batch": 14, "warm": 13, "search": 0,
+                    "search_many": 0, "search_ivf": 0, "spark_search": 2,
+                    "spark_search_many": 2, "spark_search_ivf": 1}
 
 
-def test_serve_job_budget(spark, tables, tmp_path):
+def test_serve_job_budget(spark, tables, tmp_path, monkeypatch):
     """Per-call Spark job counts stay within ``SERVE_JOB_BUDGET``: a
-    30-doc ``process_batch`` on an auto-sized IVF pipeline, then, warm,
-    one exact ``search`` and an 8-query ``search_many`` on the auto
-    route, each collected. Jobs are counted from each call's job
+    30-doc ``process_batch`` on an auto-sized IVF pipeline, ``warm()``,
+    then, warm, one exact ``search``, an 8-query ``search_many`` on the
+    auto route and one ``search_ivf``, each collected — on the driver
+    tier, and again on the Spark route after a re-warm with
+    ``DRIVER_TIER_BYTES`` at 0. Jobs are counted from each call's job
     group."""
+    from multi_model_vectorsearch_spark.streaming import ingest
+
     sc = spark.sparkContext
     pipe = IngestPipeline(spark, str(tmp_path / "st"), k=10,
                           maintain_ivf=True, n_centroids=None)
@@ -1783,31 +1795,54 @@ def test_serve_job_budget(spark, tables, tmp_path):
 
     counted("process_batch",
             lambda: pipe.process_batch(_mk_docs(tables, 100, 130), 0))
-    pipe.warm()
     texts = [r.text for r in _mk_docs(tables, 0, 130)
              .filter(F.col("doc_id") % 16 == 3).limit(8).collect()]
     assert len(texts) == 8
-    rows = counted("search", lambda: pipe.search(texts[0], k=10).collect())
-    many = counted("search_many",
-                   lambda: pipe.search_many(texts, k=10).collect())
-    assert rows and {r.qid for r in many} == set(range(8))
+
+    def serve(tier):
+        rows = counted(tier + "search",
+                       lambda: pipe.search(texts[0], k=10).collect())
+        many = counted(tier + "search_many",
+                       lambda: pipe.search_many(texts, k=10).collect())
+        ann = counted(tier + "search_ivf",
+                      lambda: pipe.search_ivf(texts[1], k=10).collect())
+        assert rows and ann and {r.qid for r in many} == set(range(8))
+
+    counted("warm", pipe.warm)
+    assert "driver" in pipe._warm
+    serve("")
+    monkeypatch.setattr(ingest, "DRIVER_TIER_BYTES", 0)
+    pipe.unwarm()
+    pipe.warm()
+    assert "driver" not in pipe._warm
+    serve("spark_")
     assert got.keys() == SERVE_JOB_BUDGET.keys()
     for call, budget in SERVE_JOB_BUDGET.items():
         assert got[call] <= budget, (call, got)
 
 
-def test_warm_serving_compiles_nothing(spark, tables, tmp_path):
-    """After one warmup call of each kind, warm ``search`` on the exact
-    and auto routes and ``search_many`` on texts not seen before compile
-    no generated code. Their filters take the seed and cell ids as one
-    array literal, which generated code reads from its references; an
-    ``IN`` of up to 10 literals put the values in the code, so each new
-    query compiled ~2.6 classes (~3 exact, ~5.7 auto on this fixture)."""
+def test_warm_serving_compiles_nothing(spark, tables, tmp_path, monkeypatch):
+    """Warm serving compiles no generated code, route switches included.
+    On the driver tier no call reaches Spark, so an interleaved sequence
+    — exact ×8, auto, ``search_many``, exact, ``search_ivf``, auto,
+    ``search_many``, exact — compiles nothing from its first call. On
+    the Spark route (``DRIVER_TIER_BYTES`` at 0), after one warmup call
+    of each kind, warm ``search`` on the exact and auto routes and
+    ``search_many`` on texts not seen before compile nothing, and
+    neither does the same interleaved sequence. Their filters take the
+    seed and cell ids as one array literal, which generated code reads
+    from its references; an ``IN`` of up to 10 literals put the values
+    in the code, so each new query compiled ~2.6 classes (~3 exact,
+    ~5.7 auto on this fixture). ``search`` builds its answer directly,
+    so the first ``search_many`` after single searches plans no new
+    answer shape (it compiled 1 class when ``search`` dropped
+    ``qid``)."""
+    from multi_model_vectorsearch_spark.streaming import ingest
+
     pipe = IngestPipeline(spark, str(tmp_path / "st"), k=10,
                           maintain_ivf=True, n_centroids=None)
     pipe.bulk_load(_mk_docs(tables, 0, 100))
     pipe.build_graph(method="cells")
-    pipe.warm()
     texts = iter(sorted({r.text for r in _mk_docs(tables, 0, 400)
                          .collect()}))
     calls = {
@@ -1815,17 +1850,36 @@ def test_warm_serving_compiles_nothing(spark, tables, tmp_path):
         "auto": lambda: pipe.search(next(texts), route="auto").collect(),
         "many": lambda: pipe.search_many(
             [next(texts) for _ in range(4)]).collect(),
+        "ivf": lambda: pipe.search_ivf(next(texts)).collect(),
     }
     compiled = (spark.sparkContext._jvm.org.apache.spark.metrics.source
                 .CodegenMetrics.METRIC_COMPILATION_TIME())
+
+    def interleaved():
+        seq = ["exact"] * 8 + ["auto", "many", "exact", "ivf", "auto",
+                               "many", "exact"]
+        before = compiled.getCount()
+        answered = sum(bool(calls[c]()) for c in seq)
+        return compiled.getCount() - before, answered == len(seq)
+
+    pipe.warm()
+    assert "driver" in pipe._warm
+    assert interleaved() == (0, True)
+
+    monkeypatch.setattr(ingest, "DRIVER_TIER_BYTES", 0)
+    pipe.unwarm()
+    pipe.warm()
+    assert "driver" not in pipe._warm
     for call in calls.values():
         call()
     got = {}
-    for name, call in calls.items():
+    for name in ("exact", "auto", "many"):
         before = compiled.getCount()
-        answered = sum(bool(call()) for _ in range(5))
+        answered = sum(bool(calls[name]()) for _ in range(5))
         got[name] = (compiled.getCount() - before, answered)
-    assert got == {name: (0, 5) for name in calls}, got
+    got["interleaved"] = interleaved()
+    assert got == {"exact": (0, 5), "auto": (0, 5), "many": (0, 5),
+                   "interleaved": (0, True)}, got
 
 
 # Spark jobs per build_graph call on the fixture below, as this engine
@@ -2451,11 +2505,18 @@ def test_retention_sla_slow_reader(spark, tables, tmp_path):
     flips reads swept files and fails. Sizing retention to the flip
     count (retain_generations=2) keeps the same slow scan alive, and
     the serving facade (serve_search) answers either way by re-planning.
-    The slow reader is a cold ``search_ivf`` plan (on this index-less
-    state, a full-scan top-k): ``search()`` answers eagerly, so its
-    scans end inside the call."""
+    The slow reader is a cold kernel pool plan (``_search_pool``, the
+    one serving DataFrame Spark executes; on this index-less state a
+    full scan): ``search()`` and ``search_ivf()`` answer eagerly, so
+    their scans end inside the call."""
     docs = _mk_docs(tables, 0, 40)
     q = _mk_docs(tables, 0, 1).first().text
+
+    def cold_plan(pipe):
+        return pipe._search_pool([pipe._query_vec(q, "text")], 5)[0]
+
+    def top(rows):
+        return max(r.s for r in rows)
 
     def flips(pipe, n, start=100):
         # each compact() under pointer commit is one flip per store
@@ -2469,13 +2530,13 @@ def test_retention_sla_slow_reader(spark, tables, tmp_path):
                         retain_generations=1)
     p1.process_batch(docs, 0)
     p1.compact()  # move past gen 0 so later sweeps hit .gen-N dirs
-    plan = p1.search_ivf(q, k=5)  # cold plan: pins current generation paths
+    plan = cold_plan(p1)  # cold plan: pins current generation paths
     one_flip = IngestPipeline(spark, str(tmp_path / "r1"), k=5,
                               retain_generations=1)
     flips(one_flip, 1)
     rows = plan.collect()  # within SLA: one flip of headroom
-    assert rows and rows[0].s == 1.0
-    plan2 = p1.search_ivf(q, k=5)
+    assert rows and top(rows) == 1.0
+    plan2 = cold_plan(p1)
     flips(one_flip, 2, start=200)
     with pytest.raises(Exception) as exc_info:
         plan2.collect()
@@ -2490,12 +2551,12 @@ def test_retention_sla_slow_reader(spark, tables, tmp_path):
                         retain_generations=2)
     p2.process_batch(docs, 0)
     p2.compact()
-    plan3 = p2.search_ivf(q, k=5)
+    plan3 = cold_plan(p2)
     writer2 = IngestPipeline(spark, str(tmp_path / "r2"), k=5,
                              retain_generations=2)
     flips(writer2, 2, start=300)
     rows = plan3.collect()
-    assert rows and rows[0].s == 1.0
+    assert rows and top(rows) == 1.0
 
 
 def test_serve_search_retries_transient_stale_scan(spark, tables,
@@ -2921,7 +2982,8 @@ def test_serve_guards_observability_and_bad_retries(spark, tables,
     rows = pipe.serve_search(q, k=5)
     assert rows and rows[0].score == 1.0, \
         "an answered query survives a failing gauge"
-    assert pipe.last_serve_info == {"retries": 0, "freshness": None}
+    assert pipe.last_serve_info == {"retries": 0, "freshness": None,
+                                    "tier": "spark"}
     assert pipe.serve_counters["queries"] == 1
 
     before = dict(pipe.serve_counters)
@@ -3056,6 +3118,40 @@ def test_operator_retrain_full_corpus(spark, tables, tmp_path):
     assert before >= 1
 
 
+def _knn_join(corpus, fresh):
+    """The JVM candidate scorer the numpy kernel replaced, kept as the
+    kernel's independent semantic reference: corpus × broadcast(batch),
+    cosine in the JVM with the norm folds hoisted to one per row
+    (``cosine_with_norms``), snapped by ``snap_double``, and each
+    candidate whose doc_id equals the query's pinned to 1.0. Emits
+    ``CANDIDATE_SCHEMA`` rows for ``_balanced_select``."""
+    from multi_model_vectorsearch_spark.functions.fixedpoint import (
+        snap_double,
+    )
+    from multi_model_vectorsearch_spark.functions.vector import (
+        cosine_with_norms,
+        l2_norm,
+    )
+
+    q = F.broadcast(fresh.select(
+        F.col("doc_id").alias("qid"),
+        F.col("modality").alias("qm"),
+        F.col("embedding").alias("qv"),
+        l2_norm(F.col("embedding")).alias("_nq"),
+    ))
+    return (
+        corpus.withColumn("_nc", l2_norm(F.col("embedding")))
+        .crossJoin(q)
+        .select(
+            "qid", "qm", "doc_id", "modality",
+            F.when(F.col("doc_id") == F.col("qid"), F.lit(1.0))
+            .otherwise(snap_double(cosine_with_norms(
+                F.col("embedding"), F.col("qv"),
+                F.col("_nc"), F.col("_nq")))).alias("s"),
+        )
+    )
+
+
 def _search_oracle(pipe, text, k, route="exact", modality="text"):
     """The Spark ``/search`` plan serving ran before its finish moved to
     the driver, kept as the oracle: the JVM cosine scan of the corpus
@@ -3148,3 +3244,203 @@ def test_search_many_matches_per_query_search(spark, tables, tmp_path):
     # nothing embeds
     grps = pipe.serve_search_many([texts[0]], k=5, modality="smell")
     assert grps == [[]]
+
+
+def _tier_answers(pipe, texts, k, routes=("exact", "ivf", "auto")):
+    """Every serving answer for ``texts``: per route, ``search`` per text
+    and one ``search_many`` of all of them; then ``search_ivf`` per
+    text."""
+    out = {}
+    for route in routes:
+        out[route] = [[(r.id, r.score) for r in
+                       pipe.search(t, k=k, route=route).collect()]
+                      for t in texts]
+        out["many_" + route] = [
+            [(r.id, r.score) for r in grp]
+            for grp in pipe.serve_search_many(texts, k=k, route=route)]
+    out["search_ivf"] = [[tuple(r) for r in
+                          pipe.search_ivf(t, k=k).collect()]
+                         for t in texts]
+    return out
+
+
+def _driver_and_spark(pipe, texts, k, monkeypatch, routes):
+    """``_tier_answers`` warm on the driver tier, then again after a
+    re-warm with ``DRIVER_TIER_BYTES`` at 0 (the Spark route), with
+    ``_search_oracle``'s answer per route taken on the driver-tier
+    snapshot."""
+    from multi_model_vectorsearch_spark.streaming import ingest
+
+    pipe.warm()
+    assert "driver" in pipe._warm
+    assert pipe._warm["sizes"]["driver_rows"] == pipe._warm["sizes"][
+        "corpus_rows"]
+    drv = _tier_answers(pipe, texts, k, routes)
+    assert pipe.serve_search(texts[0], k=k) is not None
+    assert pipe.last_serve_info["tier"] == "driver"
+    want = {r: [_search_oracle(pipe, t, k, r) for t in texts]
+            for r in routes}
+    with monkeypatch.context() as m:
+        m.setattr(ingest, "DRIVER_TIER_BYTES", 0)
+        pipe.unwarm()
+        sizes = pipe.warm()
+        assert "driver" not in pipe._warm
+        assert (sizes["driver_bytes"], sizes["driver_rows"]) == (0, 0)
+        spk = _tier_answers(pipe, texts, k, routes)
+        pipe.serve_search(texts[0], k=k)
+        assert pipe.last_serve_info["tier"] == "spark"
+    return drv, spk, want
+
+
+def test_driver_tier_matches_spark_route_and_oracle(spark, tables, tmp_path,
+                                                    monkeypatch):
+    """The driver tier — ``warm()``'s driver copy, kept while it fits
+    ``DRIVER_TIER_BYTES`` — answers exactly what the Spark route answers
+    with the budget at 0, and what ``_search_oracle`` answers: ``search``
+    on the exact, ivf and auto routes, an 8-text ``search_many`` per
+    route, and ``search_ivf``. Four text docs embed exactly as four
+    media docs do (the media embedding is the text embedding of the
+    ``media:``-salted text), so their scores tie on the 1e-6 grid and
+    rank by doc_id on both tiers."""
+    pipe = IngestPipeline(spark, str(tmp_path / "st"), k=5,
+                          maintain_ivf=True, n_centroids=None,
+                          ivf_bootstrap=16)
+    docs = _mk_docs(tables, 0, 90)
+    pipe.bulk_load(docs)
+    media = (docs.filter(F.col("modality") != "text").orderBy("doc_id")
+             .limit(4).collect())
+    twins = spark.createDataFrame(
+        [(10_000 + r.doc_id, f"media:{r.text}", "text") for r in media],
+        "doc_id bigint, text string, modality string")
+    pipe.process_batch(_mk_docs(tables, 90, 120).unionByName(twins), 0)
+    texts = [r.text for r in _mk_docs(tables, 0, 120)
+             .filter(F.col("doc_id") % 17 == 2).limit(6).collect()]
+    texts += [f"media:{media[0].text}", "nothing stored reads like this"]
+    assert len(texts) == 8
+
+    drv, spk, want = _driver_and_spark(pipe, texts, 5, monkeypatch,
+                                       ("exact", "ivf", "auto"))
+    assert drv == spk
+    for route in ("exact", "ivf", "auto"):
+        assert all(want[route]), route
+        assert drv[route] == want[route], route
+        assert drv["many_" + route] == want[route], route
+    tie = drv["exact"][6]
+    assert tie[:2] == [(media[0].doc_id, 1.0),
+                       (10_000 + media[0].doc_id, 1.0)], tie
+    assert all(len(a) == 5 for a in drv["search_ivf"])
+
+
+def test_driver_tier_small_corpus_no_edges_unembeddable(spark, tables,
+                                                        tmp_path,
+                                                        monkeypatch):
+    """A 12-doc corpus (k·OVERFETCH = 30 pools every doc), an empty edge
+    store (``bulk_load`` with no graph build) and no IVF index: the
+    driver tier answers as the budget-0 Spark route and
+    ``_search_oracle`` do, ``route="ivf"`` raises on both tiers, and an
+    unembeddable modality answers no rows."""
+    pipe = IngestPipeline(spark, str(tmp_path / "st"), k=5)
+    pipe.bulk_load(_mk_docs(tables, 0, 12))
+    texts = [r.text for r in _mk_docs(tables, 0, 12).limit(3).collect()]
+    drv, spk, want = _driver_and_spark(pipe, texts, 5, monkeypatch,
+                                       ("exact", "auto"))
+    assert drv == spk
+    assert drv["exact"] == want["exact"] == drv["auto"]
+    assert drv["many_exact"] == want["exact"]
+    # k // 2 of each modality split, and no edge to expand through
+    assert all(len(a) == 4 for a in drv["exact"])
+    assert all(len(a) == 5 for a in drv["search_ivf"])
+    pipe.unwarm()
+    pipe.warm()
+    assert pipe._warm["sizes"]["edge_rows"] == 0 and "driver" in pipe._warm
+    with pytest.raises(ValueError, match="no live IVF"):
+        pipe.search(texts[0], route="ivf")
+    assert pipe.search(texts[0], modality="smell").collect() == []
+    assert pipe.search_many(texts, modality="smell").collect() == []
+    assert pipe.search_ivf(texts[0], modality="smell").collect() == []
+    assert pipe.serve_search_many(texts, modality="smell") == [[]] * 3
+    assert pipe.last_serve_info["tier"] == "driver"
+
+
+def test_driver_tier_never_answers_stale(spark, tables, tmp_path):
+    """Whatever drops the warm snapshot drops its driver copy:
+    ``process_batch``, ``compact``, ``unwarm`` and ``warm(policy=
+    "index")``, and ``maybe_rewarm`` replaces it. After each, a doc just
+    ingested ranks first on the next read — by this pipeline, or by a
+    second writer on the same state root, which leaves this pipeline's
+    snapshot in place until one of those calls."""
+    root = str(tmp_path / "st")
+    pipe = IngestPipeline(spark, root, k=5, maintain_ivf=True,
+                          n_centroids=None, ivf_bootstrap=16)
+    other = IngestPipeline(spark, root, k=5, maintain_ivf=True,
+                           n_centroids=None, ivf_bootstrap=16)
+    pipe.bulk_load(_mk_docs(tables, 0, 60))
+    pipe.build_graph(method="cells")
+    ids = iter(range(5_000, 5_100))
+
+    def ingest(writer):
+        doc = next(ids)
+        text = f"freshly ingested document {doc} about zebras"
+        writer.process_batch(spark.createDataFrame(
+            [(doc, text, "text")],
+            "doc_id bigint, text string, modality string"), doc)
+        return doc, text
+
+    def ranks_first(doc, text, tier):
+        rows = pipe.serve_search(text, k=5)
+        assert (rows[0].id, rows[0].score) == (doc, 1.0), (doc, rows)
+        assert pipe.last_serve_info["tier"] == tier
+
+    pipe.warm()
+    doc, text = ingest(pipe)
+    assert not pipe._warm
+    ranks_first(doc, text, "spark")
+
+    pipe.warm()
+    doc, text = ingest(other)
+    pipe.compact()
+    ranks_first(doc, text, "spark")
+
+    pipe.warm()
+    doc, text = ingest(other)
+    pipe.unwarm()
+    ranks_first(doc, text, "spark")
+
+    pipe.warm()
+    doc, text = ingest(other)
+    pipe.warm(policy="index")
+    assert "driver" not in pipe._warm
+    ranks_first(doc, text, "spark")
+
+    pipe.warm(policy="full")
+    assert "driver" in pipe._warm
+    doc, text = ingest(other)
+    assert pipe.maybe_rewarm() is True
+    ranks_first(doc, text, "driver")
+
+
+def test_answer_frame_collect_equals_spark(spark, tmp_path):
+    """``_answer_frame``'s ``collect()`` returns, with no JVM call, the
+    rows Spark's collect of its ``VALUES`` relation returns: the same
+    fields, Python types and values (a double through its repr, strings
+    with quotes and backslashes), and an empty answer keeps its
+    schema."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicFrame
+
+    pipe = IngestPipeline(spark, str(tmp_path / "st"))
+    rows = [(3, "te'xt", 0.1 + 0.2), (-7, "a\\b\\'c", 1e-06),
+            (2**62, "", -0.5), (0, "image", 1.0)]
+    for got, schema in ((rows, "doc_id bigint, modality string, s double"),
+                        ([], "id bigint, score double")):
+        frame = pipe._answer_frame(got, schema)
+        local = frame.collect()
+        assert frame._plan is None, "collect() made a JVM call"
+        spark_rows = ClassicFrame.collect(frame)
+        assert local == spark_rows
+        assert [r.asDict() for r in local] == [r.asDict()
+                                               for r in spark_rows]
+        assert [[type(v) for v in r] for r in local] == [
+            [type(v) for v in r] for r in spark_rows]
+        assert frame.schema.simpleString() == (
+            "struct<" + ",".join(":".join(c.split())
+                                 for c in schema.split(", ")) + ">")
