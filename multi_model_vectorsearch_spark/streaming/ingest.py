@@ -72,9 +72,15 @@ FLAG_SCHEMA = "doc_id bigint, is_dup boolean, dup_of bigint"
 OVERFETCH = 6  # reference main.py:209: KNN pool is k*6 before the modality split
 # Driver-tier budget: warm() also holds the snapshot's vectors and
 # adjacency as driver arrays (_DriverSnapshot) when they fit in this many
-# bytes, and warm search answers from them with no Spark job. 64 MB
-# admits ~15k docs at 512 float64 dims (~490k at the 16-dim hash
-# embedding) with ~10 edges each; 0 turns the tier off.
+# bytes, and warm search answers from them with no Spark job. By
+# _DriverSnapshot.nbytes_for, a 16-dim (HASH_DIM) row costs 152 B and a
+# stored edge 48 B, so 64 MiB admits ~106k docs at ~10 edges each
+# (~160k at the pipeline's ~5.6, ~440k with no edges); 0 turns the
+# tier off. The bound is on driver memory, not latency: on a 4-core
+# host (scripts/probe_serving_scale.py) a 500k-doc copy, 76 MB, still
+# answered warm search in ~14 ms against ~0.75 s through Spark, but
+# warm() took ~0.7 s longer and the driver's peak RSS went 148 -> 459
+# MB, and a re-warm holds the old and new copies at once.
 DRIVER_TIER_BYTES = 64 << 20
 # Serving probe count in fixed-centroid mode, and the floor under auto
 # (√n) sizing (see IngestPipeline._auto_probes)
@@ -100,24 +106,32 @@ def _vectors(values):
     return np.stack([np.asarray(v, dtype=np.float64) for v in values])
 
 
-def _top_pool(q, qids, c, cids, pool_k: int):
+def _unit_rows(m):
+    """``m``'s rows scaled to unit L2 norm; an all-zero row stays zero."""
+    import numpy as np
+
+    return m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
+
+
+def _top_pool(q, qids, c, cids, pool_k: int, unit: bool = False):
     """Each query's top-``pool_k`` candidates by snapped cosine — the one
     numpy scorer behind the ingest KNN and every serving pool
     (``_knn_kernel``) and every cell-group graph build, probed or not
     (``_within_cell_neighbors``).
 
-    ``q`` (nq × d) and ``c`` (n × d) are raw float64 embeddings and
-    ``cids`` is sorted ascending: a candidate's row position IS its
-    doc_id tie-break. Scores are cosines on unit-normalized rows (an
-    all-zero embedding scores 0 everywhere instead of NaN, which compares
-    false and silently vanishes from a top-k), snapped to the 1e-6 grid
-    by ``snap_double``'s numpy twin, the floor snap: ``np.round``'s
-    half-to-even would rank a .xxxxxx5 tie differently from the join
-    path's ``snap_double``. Every candidate whose doc_id equals the
-    query's is pinned to exactly 1.0 after the snap — the
-    ``when(doc_id == qid, 1.0)`` rule of the JVM join reference the tests
-    keep (``_knn_join``), found by binary search on ``cids`` (so a
-    duplicated doc_id pins every copy).
+    ``q`` (nq × d) and ``c`` (n × d) are raw float64 embeddings — with
+    ``unit``, ``c`` is already ``_unit_rows`` (the driver tier normalizes
+    its copy once, at ``warm()``) — and ``cids`` is sorted ascending: a
+    candidate's row position IS its doc_id tie-break. Scores are cosines
+    on unit-normalized rows (an all-zero embedding scores 0 everywhere
+    instead of NaN, which compares false and silently vanishes from a
+    top-k), snapped to the 1e-6 grid by ``snap_double``'s numpy twin,
+    the floor snap: ``np.round``'s half-to-even would rank a .xxxxxx5
+    tie differently from the join path's ``snap_double``. Every
+    candidate whose doc_id equals the query's is pinned to exactly 1.0
+    after the snap — the ``when(doc_id == qid, 1.0)`` rule of the JVM
+    join reference the tests keep (``_knn_join``), found by binary
+    search on ``cids`` (so a duplicated doc_id pins every copy).
 
     Selection: the composite float64 key s_int·2^24 + (2^24-1-position)
     totally orders a query's candidates by (s desc, doc_id asc) with NO
@@ -147,8 +161,8 @@ def _top_pool(q, qids, c, cids, pool_k: int):
     s = np.empty((nq, kk))
     if nq == 0 or kk == 0:
         return top, s
-    qn = q / np.maximum(np.linalg.norm(q, axis=1, keepdims=True), 1e-12)
-    cn = c / np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
+    qn = _unit_rows(q)
+    cn = c if unit else _unit_rows(c)
     pin_lo = np.searchsorted(cids, qids, side="left")
     pin_hi = np.searchsorted(cids, qids, side="right")
     posval = (2.0**24 - 1.0) - np.arange(n, dtype=np.float64)
@@ -272,13 +286,15 @@ def _cell_groups(cells: list | None) -> list:
 
 
 def _score_block(docs, mods, cmat, cid, queries: tuple, groups: list,
-                 pool_k: int, finish_k: int | None = None):
+                 pool_k: int, finish_k: int | None = None,
+                 unit: bool = False):
     """Score one block of corpus rows — ``docs`` sorted ascending, their
-    ``mods``, raw embedding matrix ``cmat`` and IVF ``cid`` (None on a
-    full scan) — against ``queries = (qids, qms, qmat)``: per group of
-    ``_cell_groups``, one ``_top_pool`` call over the rows of the
-    group's cells. Yields candidate frames (``CANDIDATE_SCHEMA``; with
-    ``finish_k`` the ``_quota`` finish and its ``rn``).
+    ``mods``, embedding matrix ``cmat`` (raw, or ``_unit_rows`` with
+    ``unit``) and IVF ``cid`` (None on a full scan) — against
+    ``queries = (qids, qms, qmat)``: per group of ``_cell_groups``, one
+    ``_top_pool`` call over the rows of the group's cells. Yields
+    candidate frames (``CANDIDATE_SCHEMA``; with ``finish_k`` the
+    ``_quota`` finish and its ``rn``).
 
     The one serving body, run in two places: ``_knn_kernel``'s
     ``mapInPandas`` tasks call it per Arrow batch (``_score_batches``),
@@ -290,7 +306,8 @@ def _score_block(docs, mods, cmat, cid, queries: tuple, groups: list,
     qids, qms, qmat = queries
     for cs, qi in groups:
         m = slice(None) if cs is None else np.isin(cid, cs)
-        top, s = _top_pool(qmat[qi], qids[qi], cmat[m], docs[m], pool_k)
+        top, s = _top_pool(qmat[qi], qids[qi], cmat[m], docs[m], pool_k,
+                           unit)
         if finish_k is None:
             yield _pool_rows(qids[qi], qms[qi], docs[m], mods[m], top, s)
             continue
@@ -337,14 +354,15 @@ def _score_batches(batches, queries: tuple, groups: list, pool_k: int,
 class _DriverSnapshot(NamedTuple):
     """The driver tier: a warm snapshot's corpus and edges held as
     arrays on the driver (``warm()``, within ``DRIVER_TIER_BYTES``).
-    Corpus rows sorted by ``doc_id`` — ``ids``, ``mods``, the raw
-    embedding matrix ``mat`` and ``cid`` (-1 where a row has none) — and
+    Corpus rows sorted by ``doc_id`` — ``ids``, ``mods``, the embedding
+    matrix normalized once (``unit``, ``_unit_rows``: a query scores it
+    without a per-call copy) and ``cid`` (-1 where a row has none) — and
     every edge in both directions, sorted by ``src``: ``src``, ``dst``,
     ``w``."""
 
     ids: object
     mods: object
-    mat: object
+    unit: object
     cid: object
     src: object
     dst: object
@@ -359,21 +377,32 @@ class _DriverSnapshot(NamedTuple):
         return 8 * cells + 24 * n + 48 * edges
 
     @classmethod
-    def of(cls, corpus, edges) -> "_DriverSnapshot":
-        """From the collected pandas frames of the pinned corpus
-        ``(doc_id, modality, embedding, cid)`` and edge store."""
+    def of(cls, corpus, edges, dim: int) -> "_DriverSnapshot":
+        """From the pinned corpus ``(doc_id, modality, embedding, cid)``
+        and edge store, each collected as one Arrow table. Every stored
+        embedding is ``dim`` wide, so the embedding column's flat values
+        are the (rows × ``dim``) matrix as they are: no Python object
+        per row (500k rows on a 4-core host: ~0.1 s, where a pandas
+        frame and ``_vectors`` took ~1.1 s beyond the collect)."""
         import numpy as np
 
-        order = np.argsort(corpus["doc_id"].values, kind="stable")
-        corpus = corpus.iloc[order]
-        src = np.concatenate([edges["src"].values, edges["dst"].values])
-        dst = np.concatenate([edges["dst"].values, edges["src"].values])
-        w = np.concatenate([edges["score"].values] * 2)
+        emb = corpus.column("embedding").combine_chunks()
+        if not np.all(np.diff(emb.offsets.to_numpy()) == dim):
+            raise ValueError(f"stored embeddings are not all {dim} wide")
+        mat = emb.flatten().to_numpy().reshape(len(emb), dim)
+        ids = corpus.column("doc_id").to_numpy()
+        order = np.argsort(ids, kind="stable")
+        e_src = edges.column("src").to_numpy()
+        e_dst = edges.column("dst").to_numpy()
+        src = np.concatenate([e_src, e_dst])
+        dst = np.concatenate([e_dst, e_src])
+        w = np.concatenate([edges.column("score").to_numpy()] * 2)
         by = np.argsort(src, kind="stable")
-        return cls(corpus["doc_id"].values.astype(np.int64),
-                   corpus["modality"].values.astype(object),
-                   _vectors(corpus["embedding"].values),
-                   corpus["cid"].fillna(-1).values.astype(np.int64),
+        return cls(ids[order].astype(np.int64),
+                   corpus.column("modality").to_numpy()[order],
+                   _unit_rows(mat[order]),
+                   corpus.column("cid").fill_null(-1).to_numpy()[order]
+                   .astype(np.int64),
                    src[by].astype(np.int64), dst[by].astype(np.int64),
                    w[by].astype(np.float64))
 
@@ -2305,14 +2334,15 @@ class IngestPipeline:
         filters the pinned corpus by its cells with no members join.
 
         **Driver tier.** When the snapshot's vectors plus adjacency fit
-        ``DRIVER_TIER_BYTES`` (64 MB: ~15k docs at 512 float64 dims,
-        ~490k at the 16-dim hash embedding, ~10 edges each), ``"full"``
-        also collects the pinned corpus and edges to the driver
-        (``_DriverSnapshot``, one Arrow collect each from their caches)
-        into the same snapshot dict, so it shares their state token and
-        is published and dropped with them. Warm ``search``,
-        ``search_many`` and ``search_ivf`` then answer on the driver with
-        no Spark job. ``sizes`` reports the copy's ``driver_bytes`` and
+        ``DRIVER_TIER_BYTES`` (64 MiB: ~106k docs of 16-dim embeddings
+        at ~10 stored edges each, 152 B a row plus 48 B an edge),
+        ``"full"`` also collects the pinned corpus and edges to the
+        driver (``_DriverSnapshot``, one Arrow collect each from their
+        caches, the embeddings normalized once) into the same snapshot
+        dict, so it shares their state token and is published and
+        dropped with them. Warm ``search``, ``search_many`` and
+        ``search_ivf`` then answer on the driver with no Spark job.
+        ``sizes`` reports the copy's ``driver_bytes`` and
         ``driver_rows`` (0 over the budget, where serving keeps the
         Spark tier).
         ``process_batch`` invalidates automatically (ingest changes state);
@@ -2387,18 +2417,16 @@ class IngestPipeline:
 
         sizes: dict = {"policy": policy}
 
-        def pin_store(df: DataFrame, key: str, *measures) -> tuple:
-            """cache + materialize with one aggregate — the row count,
-            then each of ``measures`` — recording the in-memory size of
-            THIS store's own cached relation — the operator-facing
+        def pin_store(df: DataFrame, key: str) -> tuple[DataFrame, int]:
+            """cache + materialize, recording the in-memory size of THIS
+            store's own cached relation — the operator-facing
             quantification of what each warm policy costs
             (``pinned_bytes_<store>``; a reader computes the pinned
             fraction directly from these)."""
             df = df.cache()
-            got = (df.agg(F.count(F.lit(1)), *measures).collect()[0]
-                   if measures else [df.count()])
+            rows = df.count()
             sizes[f"pinned_bytes_{key}"] = self._cached_bytes(df)
-            return (df, *(v or 0 for v in got))
+            return df, rows
 
         nw: dict = {"policy": policy}
         if cents is not None:
@@ -2416,10 +2444,8 @@ class IngestPipeline:
                 idx.unpersist()
                 sizes.pop("pinned_bytes_index", None)
                 idx = None
-        values = 0
         if policy == "full":
-            corpus, n, values = pin_store(self._with_cid(corpus, idx),
-                                          "corpus", F.sum(F.size("embedding")))
+            corpus, n = pin_store(self._with_cid(corpus, idx), "corpus")
         else:
             # "index" policy: the corpus stays the bracket-captured
             # UNCACHED plan — streamed from parquet per query, bounded
@@ -2429,14 +2455,17 @@ class IngestPipeline:
         nw.update(corpus=corpus, edges=edges)
         sizes.update({"corpus_rows": n, "edge_rows": ne,
                       "driver_bytes": 0, "driver_rows": 0})
-        need = _DriverSnapshot.nbytes_for(n, values, ne)
+        # every stored embedding comes from the query encoder
+        # (route_embedding), so one query vector's width is the row width
+        dim = len(self._query_vec("", "text"))
+        need = _DriverSnapshot.nbytes_for(n, n * dim, ne)
         if policy == "full" and 0 < need <= DRIVER_TIER_BYTES:
             # the driver tier: the same pinned frames, collected from
             # their caches through Arrow (one job each)
             nw["driver"] = _DriverSnapshot.of(
                 corpus.select("doc_id", "modality", "embedding",
-                              "cid").toPandas(),
-                edges.toPandas())
+                              "cid").toArrow(),
+                edges.toArrow(), dim)
             sizes.update(driver_bytes=need, driver_rows=n)
         nw["sizes"] = sizes
         old = self._warm
@@ -3182,9 +3211,10 @@ class IngestPipeline:
             found = [
                 zip(f["qid"].tolist(), f["s"].tolist(),
                     f["doc_id"].tolist(), f["modality"].tolist())
-                for f in _score_block(drv.ids, drv.mods, drv.mat, drv.cid,
+                for f in _score_block(drv.ids, drv.mods, drv.unit, drv.cid,
                                       _serve_queries(vecs, modality),
-                                      _cell_groups(cells), pool_k)]
+                                      _cell_groups(cells), pool_k,
+                                      unit=True)]
             lookup = drv.adjacency
         else:
             pool, ev = self._search_pool(vecs, pool_k, modality, route,

@@ -10,7 +10,11 @@ against the exact scan over the same queries. Emits fitted exponents
 e = log(t2/t1)/log(n2/n1): the verdict's target is sublinear (e << 1)
 for warm ``search_ivf`` — with √n centroids and fixed probes the scanned
 candidate set grows ~√n, so e ≈ 0.5 is the design point while exact
-search stays e ≈ 1.
+search stays e ≈ 1. Each row names the serving ``tier`` that answered
+the warm queries (``driver`` while the warm state fits
+``DRIVER_TIER_BYTES``); where the engine has the driver tier,
+``other_tier`` repeats ``warm()`` and the warm timings with the budget
+forced the other way, so both tiers are measured at every factor.
 
 ``--mode mixed``: the warm-cache invalidation A/B (item 8). At the 10x
 corpus, alternate ingest (500-doc ``process_batch``) with query bursts
@@ -40,6 +44,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from multi_model_vectorsearch_spark import get_spark, load_tables  # noqa: E402
+from multi_model_vectorsearch_spark.streaming import ingest  # noqa: E402
 from multi_model_vectorsearch_spark.streaming.ingest import IngestPipeline  # noqa: E402
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -92,7 +97,36 @@ def build_state(spark, data_dir: str, state: str) -> tuple:
     return pipe, docs, bulk_sec
 
 
+def warm_row(pipe: IngestPipeline, queries, ncent: int) -> tuple:
+    """``warm()``'s wall and sizes, then warm per-query wall of every
+    serving endpoint. ``tier`` is the tier that answered: ``driver``
+    while the warm state fits ``DRIVER_TIER_BYTES`` (a checkout without
+    that tier always reports ``spark``)."""
+    pipe.unwarm()
+    t0 = time.perf_counter()
+    sizes = pipe.warm()
+    row = {
+        "warm_sec": round(time.perf_counter() - t0, 2),
+        "tier": "driver" if sizes.get("driver_rows") else "spark",
+        "driver_bytes": sizes.get("driver_bytes", 0),
+        "warm_ivf_sq": per_query(
+            lambda q: pipe.search_ivf(q, k=10), queries),
+        "warm_exact_sq": per_query(
+            lambda q: pipe.search_ivf(q, k=10, probes=ncent), queries),
+        "warm_search_sq": per_query(
+            lambda q: pipe.search(q, k=10), queries),
+        "warm_search_routed_sq": per_query(
+            lambda q: pipe.search(q, k=10, route="ivf"), queries),
+    }
+    return row, sizes
+
+
 def mode_scaling(spark, args) -> None:
+    """Per factor, warm serving on the tier ``DRIVER_TIER_BYTES`` picks;
+    on a checkout with the driver tier, ``other_tier`` holds the same
+    warm figures with the budget forced the other way (0, or unbounded
+    for a corpus over it), so both tiers are measured at every size."""
+    budget = getattr(ingest, "DRIVER_TIER_BYTES", None)
     rows = []
     factors = ([int(x) for x in args.factors.split(",")] if args.factors
                else [f for f in (1, 10, 100, 1000) if f <= args.factor])
@@ -111,24 +145,21 @@ def mode_scaling(spark, args) -> None:
             ncent = pipe.centroids().count()
             queries = [r.text for r in
                        docs.orderBy("doc_id").limit(5).collect()]
-            t0 = time.perf_counter()
-            sizes = pipe.warm()
-            warm_sec = round(time.perf_counter() - t0, 2)
+            warm, sizes = warm_row(pipe, queries, ncent)
             row = {
                 "factor": f, "n_docs": n, "n_centroids": ncent,
-                "bulk_load_sec": bulk_sec, "warm_sec": warm_sec,
-                "warm_ivf_sq": per_query(
-                    lambda q: pipe.search_ivf(q, k=10), queries),
-                "warm_exact_sq": per_query(
-                    lambda q: pipe.search_ivf(q, k=10, probes=ncent),
-                    queries),
-                "warm_search_sq": per_query(
-                    lambda q: pipe.search(q, k=10), queries),
-                "warm_search_routed_sq": per_query(
-                    lambda q: pipe.search(q, k=10, route="ivf"), queries),
+                "edge_rows": sizes.get("edge_rows", 0),
+                "bulk_load_sec": bulk_sec, **warm,
                 "recall_at_10": recall_at_k(pipe, queries),
                 "index_rows": sizes.get("index_rows", 0),
             }
+            if budget:
+                try:
+                    ingest.DRIVER_TIER_BYTES = (
+                        0 if warm["tier"] == "driver" else 1 << 62)
+                    row["other_tier"], _ = warm_row(pipe, queries, ncent)
+                finally:
+                    ingest.DRIVER_TIER_BYTES = budget
             pipe.unwarm()
             row["cold_ivf_sq"] = per_query(
                 lambda q: pipe.search_ivf(q, k=10), queries, reps=3)
@@ -175,10 +206,12 @@ def mode_mixed(spark, args) -> None:
             pipe.bulk_load(base)
             out["n_base"] = out["n_base"] or pipe.corpus().count()
             ingest_s = warm_s = query_s = 0.0
+            tiers = set()
             if strategy != "cold":
                 t0 = time.perf_counter()
-                pipe.warm()
+                sizes = pipe.warm()
                 warm_s += time.perf_counter() - t0
+                tiers.add("driver" if sizes.get("driver_rows") else "spark")
             for r in range(args.rounds):
                 chunk = trickle[r * args.batch_docs:(r + 1) * args.batch_docs]
                 bdf = spark.createDataFrame(
@@ -191,8 +224,10 @@ def mode_mixed(spark, args) -> None:
                           (strategy == "rewarm_every_4" and r % 4 == 3))
                 if rewarm:
                     t0 = time.perf_counter()
-                    pipe.warm()
+                    sizes = pipe.warm()
                     warm_s += time.perf_counter() - t0
+                    tiers.add("driver" if sizes.get("driver_rows")
+                              else "spark")
                 t0 = time.perf_counter()
                 for q in queries:
                     pipe.search_ivf(q, k=10).collect()
@@ -204,6 +239,7 @@ def mode_mixed(spark, args) -> None:
                 "query_sq": round(
                     query_s / (args.rounds * len(queries)), 4),
                 "total_sec": round(ingest_s + warm_s + query_s, 2),
+                "warm_tiers": sorted(tiers),
             }
             print(f"## {strategy}: "
                   f"{json.dumps(out['strategies'][strategy])}", flush=True)

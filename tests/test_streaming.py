@@ -3444,3 +3444,48 @@ def test_answer_frame_collect_equals_spark(spark, tmp_path):
         assert frame.schema.simpleString() == (
             "struct<" + ",".join(":".join(c.split())
                                  for c in schema.split(", ")) + ">")
+
+
+def test_driver_snapshot_of_arrow_tables():
+    """``_DriverSnapshot.of`` reads the collected Arrow tables as they
+    are: rows sorted by doc_id, the embedding matrix normalized once
+    (bit-equal to ``_top_pool``'s own normalization, an all-zero row
+    kept zero), a null ``cid`` as -1, every edge in both directions
+    sorted by ``src``; embeddings of another width raise."""
+    import numpy as np
+    import pyarrow as pa
+
+    from multi_model_vectorsearch_spark.streaming.ingest import (
+        _DriverSnapshot,
+        _top_pool,
+        _unit_rows,
+    )
+
+    emb = [[3.0, 4.0], [0.0, 0.0], [1.0, -2.0]]
+    corpus = pa.table({"doc_id": pa.array([9, 2, 5], pa.int64()),
+                       "modality": ["text", "image", "audio"],
+                       "embedding": pa.array(emb, pa.list_(pa.float64())),
+                       "cid": pa.array([1, None, 0], pa.int32())})
+    edges = pa.table({"src": pa.array([2, 5], pa.int64()),
+                      "dst": pa.array([9, 2], pa.int64()),
+                      "score": [0.5, 0.25]})
+    snap = _DriverSnapshot.of(corpus, edges, 2)
+    assert snap.ids.tolist() == [2, 5, 9]
+    assert snap.mods.tolist() == ["image", "audio", "text"]
+    assert snap.cid.tolist() == [-1, 0, 1]
+    raw = np.array([emb[1], emb[2], emb[0]])
+    assert np.array_equal(snap.unit, _unit_rows(raw))
+    assert snap.unit[0].tolist() == [0.0, 0.0]
+    q, qids = np.array([[1.0, 1.0]]), np.array([-1])
+    for got, want in zip(_top_pool(q, qids, snap.unit, snap.ids, 3, True),
+                         _top_pool(q, qids, raw, snap.ids, 3)):
+        assert np.array_equal(got, want)
+    assert list(zip(snap.src.tolist(), snap.dst.tolist(),
+                    snap.w.tolist())) == [
+        (2, 9, 0.5), (2, 5, 0.25), (5, 2, 0.25), (9, 2, 0.5)]
+    assert snap.adjacency({2, 7}) == {2: [(9, 0.5), (5, 0.25)]}
+    ragged = corpus.set_column(
+        2, "embedding", pa.array([[1.0, 0.0], [1.0], [0.0, 1.0, 0.0]],
+                                 pa.list_(pa.float64())))
+    with pytest.raises(ValueError, match="not all 2 wide"):
+        _DriverSnapshot.of(ragged, edges, 2)
