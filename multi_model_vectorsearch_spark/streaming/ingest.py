@@ -70,17 +70,18 @@ FLAG_SCHEMA = "doc_id bigint, is_dup boolean, dup_of bigint"
 
 
 OVERFETCH = 6  # reference main.py:209: KNN pool is k*6 before the modality split
-# Driver-tier budget: warm() also holds the snapshot's vectors and
-# adjacency as driver arrays (_DriverSnapshot) when they fit in this many
-# bytes, and warm search answers from them with no Spark job. By
-# _DriverSnapshot.nbytes_for, a 16-dim (HASH_DIM) row costs 152 B and a
-# stored edge 48 B, so 64 MiB admits ~106k docs at ~10 edges each
-# (~160k at the pipeline's ~5.6, ~440k with no edges); 0 turns the
-# tier off. The bound is on driver memory, not latency: on a 4-core
-# host (scripts/probe_serving_scale.py) a 500k-doc copy, 76 MB, still
-# answered warm search in ~14 ms against ~0.75 s through Spark, but
-# warm() took ~0.7 s longer and the driver's peak RSS went 148 -> 459
-# MB, and a re-warm holds the old and new copies at once.
+# Driver-tier budget: warm() holds the snapshot's vectors and adjacency
+# as driver arrays (_DriverSnapshot), instead of executor caches, when
+# they fit in this many bytes, and warm search answers from them with no
+# Spark job. By _DriverSnapshot.nbytes_for, a 16-dim (HASH_DIM) row
+# costs 152 B and a stored edge 48 B, so 64 MiB admits ~106k docs at ~10
+# edges each (~160k at the pipeline's ~5.6, ~440k with no edges); 0
+# turns the tier off. The bound is on driver memory, not latency: on a
+# 4-core host (scripts/probe_serving_scale.py) a 500k-doc copy, 76 MB,
+# still answered warm search in ~14 ms against ~0.5-0.75 s through
+# Spark, and warm() took about as long as caching it on the executors
+# (~1.6 s), but the driver's peak RSS went 148 -> 459 MB, and a re-warm
+# holds the old and new copies at once.
 DRIVER_TIER_BYTES = 64 << 20
 # Serving probe count in fixed-centroid mode, and the floor under auto
 # (√n) sizing (see IngestPipeline._auto_probes)
@@ -378,12 +379,14 @@ class _DriverSnapshot(NamedTuple):
 
     @classmethod
     def of(cls, corpus, edges, dim: int) -> "_DriverSnapshot":
-        """From the pinned corpus ``(doc_id, modality, embedding, cid)``
-        and edge store, each collected as one Arrow table. Every stored
-        embedding is ``dim`` wide, so the embedding column's flat values
-        are the (rows × ``dim``) matrix as they are: no Python object
-        per row (500k rows on a 4-core host: ~0.1 s, where a pandas
-        frame and ``_vectors`` took ~1.1 s beyond the collect)."""
+        """From the snapshot's corpus view ``(doc_id, modality,
+        embedding, cid)`` and edge view, each collected as one Arrow
+        table by ``warm()``, which caches nothing on the executors.
+        Every stored embedding is ``dim`` wide, so the embedding
+        column's flat values are the (rows × ``dim``) matrix as they
+        are: no Python object per row (500k rows on a 4-core host: ~0.1
+        s, where a pandas frame and ``_vectors`` took ~1.1 s beyond the
+        collect)."""
         import numpy as np
 
         emb = corpus.column("embedding").combine_chunks()
@@ -667,12 +670,14 @@ class IngestPipeline:
         # the tier ("driver" / "spark") that answered this thread's last
         # serving call (_pools), read into last_serve_info by _serve
         self._serve_tls = threading.local()
-        # warm-serving state (warm()): cached corpus/edges/centroids/index.
-        # Published ATOMICALLY (one dict assignment) so a serving thread
-        # that captures the reference once per query never sees a
-        # half-built snapshot — see warm().
-        self._warm: dict[str, DataFrame] = {}
-        self._warm_policy: str | None = None  # sticky across maybe_rewarm
+        # warm-serving state (warm()): ONE resident copy — the driver
+        # arrays ("driver") while they fit DRIVER_TIER_BYTES, else the
+        # executor-cached cid-carrying corpus and edges ("corpus",
+        # "edges") — plus the driver-held centroid rows ("cent_rows")
+        # and "sizes". Published ATOMICALLY (one dict assignment) so a
+        # serving thread that captures the reference once per query
+        # never sees a half-built snapshot — see warm().
+        self._warm: dict = {}
         # state fingerprint captured by warm() — maybe_rewarm() compares
         self._warm_token = None
         # per-bracket store-scan memo (see _store_scan / _stable_read):
@@ -1514,8 +1519,13 @@ class IngestPipeline:
 
     def process_batch(self, batch: DataFrame, batch_id: int,
                       key: str | None = None,
-                      build_edges: bool = True) -> None:
+                      build_edges: bool = True) -> DataFrame | None:
         """batch: (doc_id bigint, text string, modality string).
+
+        Returns the fresh docs' neighbour frame — the pinned
+        ``knn_against_corpus`` rows the edge build reads, which
+        ``submit()`` answers with — or None when no doc was fresh or
+        with ``build_edges=False``.
 
         ``key`` is the batch's state-subdirectory name; it defaults to the
         current namespace + ``batch_id`` (streaming epochs), while the
@@ -1558,11 +1568,13 @@ class IngestPipeline:
         fresh = embedded.join(
             prev.select("content_sha256"), "content_sha256", "left_anti"
         )
-        # cache: fresh is reused for append, KNN, and edge build
-        fresh = fresh.transform(pin)
+        # cache: fresh is reused for append, KNN, and edge build; the
+        # count is its first use and materializes the cut (an eager pin
+        # runs one job of its own before the count)
+        fresh = fresh.transform(pin_lazy)
         n_fresh = fresh.count()
         if n_fresh == 0:
-            return
+            return None
         # re-check before EACH commit-producing write, not just at entry:
         # the embed/dedup stage above can run for seconds, exactly the
         # window a usurping writer acquires in (round-12 advice)
@@ -1570,7 +1582,7 @@ class IngestPipeline:
         fresh.write.mode("overwrite").parquet(
             self._bdir(self.corpus_dir, key))
 
-        n_corpus = None
+        n_corpus = neighbors = None
         if build_edges:
             # one post-write corpus count per batch: it sizes the KNN's
             # partitions and feeds _update_index's re-train trigger
@@ -1589,6 +1601,7 @@ class IngestPipeline:
             self._update_index(fresh, key, n_corpus=n_corpus)
         if self.maintain_neardup:
             self._update_neardup(batch, fresh, key)
+        return neighbors
 
     # --- state maintenance ---------------------------------------------------
 
@@ -2320,62 +2333,47 @@ class IngestPipeline:
 
     # --- warm serving (round-8) ---------------------------------------------
 
-    def warm(self, policy: str | None = None) -> dict[str, int]:
-        """Pin the serving state in executor memory so `/search` stops
+    def warm(self) -> dict[str, int]:
+        """Hold ONE resident copy of the serving state, so `/search` stops
         paying parquet listing + scan + query-embed job setup per call.
 
-        Caches and materializes: the corpus, each row carrying its IVF
-        ``cid`` (``_with_cid``), the edge store (1-hop expansion reads it
-        per query), and — when the IVF index has bootstrapped — the
-        assignment table, plus the centroid rows collected to the driver.
-        Spark-tier serving passes then read InMemoryTableScans (the
-        kernel pool and edge collect): no file listing, no parquet
-        decode, no per-query state-existence jobs, and a probed query
-        filters the pinned corpus by its cells with no members join.
+        One stable bracket captures the corpus, edge, centroid and
+        assignment views, and one plain row count over the corpus and
+        edge views (``_row_counts``) sizes them. The copy is
+        the corpus, each row carrying its IVF ``cid`` (``_with_cid``),
+        plus the edge store (1-hop expansion reads it per query), kept
+        in one of two places:
 
-        **Driver tier.** When the snapshot's vectors plus adjacency fit
-        ``DRIVER_TIER_BYTES`` (64 MiB: ~106k docs of 16-dim embeddings
-        at ~10 stored edges each, 152 B a row plus 48 B an edge),
-        ``"full"`` also collects the pinned corpus and edges to the
-        driver (``_DriverSnapshot``, one Arrow collect each from their
-        caches, the embeddings normalized once) into the same snapshot
-        dict, so it shares their state token and is published and
-        dropped with them. Warm ``search``, ``search_many`` and
-        ``search_ivf`` then answer on the driver with no Spark job.
-        ``sizes`` reports the copy's ``driver_bytes`` and
-        ``driver_rows`` (0 over the budget, where serving keeps the
-        Spark tier).
-        ``process_batch`` invalidates automatically (ingest changes state);
-        call ``warm()`` again after an ingest burst. At cluster scale the
-        same call pins the corpus across executors — the cache is
-        partition-local, nothing collects to the driver.
+        - **driver tier**, while it fits ``DRIVER_TIER_BYTES`` (64 MiB:
+          ~106k docs of 16-dim embeddings at ~10 stored edges each, 152
+          B a row plus 48 B an edge): collected straight from the views
+          through Arrow into a ``_DriverSnapshot`` (one collect each,
+          the embeddings normalized once). Nothing is cached on the
+          executors. Warm ``search``, ``search_many`` and ``search_ivf``
+          answer on the driver with no Spark job.
+        - **Spark tier**, over the budget: cached and materialized on
+          the executors. Serving passes then read InMemoryTableScans
+          (the kernel pool and edge collect): no file listing, no
+          parquet decode, and a probed query filters the pinned corpus
+          by its cells with no members join. The cache is
+          partition-local; nothing collects to the driver.
 
-        ``policy`` (r13 verdict item 8 — the memory-bound knob; sticky
-        across ``maybe_rewarm`` until changed):
+        On either tier, once the IVF index has bootstrapped, its
+        centroid rows are collected to the driver: warm probed queries
+        pick their cells from them with no Spark job. A committed index
+        that assigns no corpus row (a bootstrap whose only data batch is
+        torn) degrades to full-scan serving; the copy's ``cid`` values,
+        or the action that materializes the cache, show it.
 
-        - ``"full"`` (default): pin everything, including the corpus.
-          Right while the corpus fits aggregate executor storage memory;
-          the corpus cache is ~rows x (8·dim + text) bytes and DOMINATES
-          the snapshot (measured: >97% of pinned bytes at 60k docs —
-          BASELINE.md r14 table), so this is the policy that stops
-          scaling first.
-        - ``"index"``: pin only the NAVIGATIONAL state — the IVF
-          assignment (n tiny rows) and the edge store (k·n tiny rows),
-          plus the driver-side centroid rows (√n) — and
-          leave the corpus as the bracket-captured UNCACHED plan: every
-          query still routes cells with zero Spark jobs, and a probed
-          one joins the pinned assignment inside its plan — its cell
-          filter reaches the broadcast member side of that join against
-          a STREAMED parquet scan of the corpus. Per-query latency pays
-          one corpus scan (bounded by probed-cell selectivity after the
-          join) in exchange for
-          O(navigational) instead of O(corpus) executor memory — the
-          only shape that pins at 100 TB, where the corpus cannot.
-
-        Pinned bytes per store are reported in ``sizes`` as
-        ``pinned_bytes_<store>`` (the storage entry of the store's own
-        cached RDD, read after materialization) so an operator can read
-        the pinned fraction directly instead of estimating it.
+        ``sizes`` reports ``corpus_rows``, ``edge_rows``, the copy's
+        ``driver_bytes`` and ``driver_rows`` (0 on the Spark tier), and,
+        with a live index, ``index_rows`` (corpus rows with a ``cid``)
+        and ``centroid_rows``. On the Spark tier it also reports
+        ``pinned_bytes_corpus`` and ``pinned_bytes_edges``: the storage
+        entry of each store's own cached RDD, read after
+        materialization. ``process_batch`` and ``compact`` drop the
+        snapshot (ingest changes state); call ``warm()`` again after an
+        ingest burst.
 
         READ-ONLY, and safe to call from a serving thread while other
         threads query the SAME pipeline object: the new snapshot is
@@ -2392,18 +2390,13 @@ class IngestPipeline:
         the cached sizes (the caches stay warm — re-pinning identical
         plans and unpersisting the old would silently evict them).
         """
-        if policy is None:
-            policy = self._warm_policy or "full"
-        if policy not in ("full", "index"):
-            raise ValueError(f"unknown warm policy {policy!r}")
-        if (self._warm and self.state_token() == self._warm_token
-                and self._warm.get("policy") == policy):
+        if self._warm and self.state_token() == self._warm_token:
             return dict(self._warm["sizes"])
         # Consistent snapshot against a concurrent writer: one stable
         # metadata bracket captures every view (torn-excluded, one
-        # committed prefix); the cache materialization happens OUTSIDE
-        # the bracket — the captured paths are immutable and generation
-        # retention keeps them alive across the writer's next flip.
+        # committed prefix); the jobs run OUTSIDE the bracket — the
+        # captured paths are immutable and generation retention keeps
+        # them alive across the writer's next flip.
         token = [None]
 
         def build(torn):
@@ -2414,66 +2407,51 @@ class IngestPipeline:
             return corpus, cents, idx, edges
 
         corpus, cents, idx, edges = self._stable_read(build)
-
-        sizes: dict = {"policy": policy}
-
-        def pin_store(df: DataFrame, key: str) -> tuple[DataFrame, int]:
-            """cache + materialize, recording the in-memory size of THIS
-            store's own cached relation — the operator-facing
-            quantification of what each warm policy costs
-            (``pinned_bytes_<store>``; a reader computes the pinned
-            fraction directly from these)."""
-            df = df.cache()
-            rows = df.count()
-            sizes[f"pinned_bytes_{key}"] = self._cached_bytes(df)
-            return df, rows
-
-        nw: dict = {"policy": policy}
-        if cents is not None:
-            idx, ni = pin_store(idx, "index")
-            if ni > 0:
-                # driver-side centroid rows (bounded: 65536-cell cap,
-                # ~8 MB at 5M docs) — warm probed queries pick their
-                # cells from these with no Spark job, where a cold read
-                # collects its bracket's view (see _probed_corpus)
-                nw["cent_rows"] = cents.collect()
-                sizes["centroid_rows"] = len(nw["cent_rows"])
-                sizes["index_rows"] = ni
-                nw["index"] = idx
-            else:  # half-built external dir: degrade to full-scan serving
-                idx.unpersist()
-                sizes.pop("pinned_bytes_index", None)
-                idx = None
-        if policy == "full":
-            corpus, n = pin_store(self._with_cid(corpus, idx), "corpus")
-        else:
-            # "index" policy: the corpus stays the bracket-captured
-            # UNCACHED plan — streamed from parquet per query, bounded
-            # by the probed cells' members; only navigation pins
-            n = corpus.count()
-        edges, ne = pin_store(edges, "edges")
-        nw.update(corpus=corpus, edges=edges)
-        sizes.update({"corpus_rows": n, "edge_rows": ne,
-                      "driver_bytes": 0, "driver_rows": 0})
+        n, _, ne = self._row_counts(self._with_cid(corpus, None), edges)
+        corpus = self._with_cid(corpus, idx)
         # every stored embedding comes from the query encoder
         # (route_embedding), so one query vector's width is the row width
         dim = len(self._query_vec("", "text"))
         need = _DriverSnapshot.nbytes_for(n, n * dim, ne)
-        if policy == "full" and 0 < need <= DRIVER_TIER_BYTES:
-            # the driver tier: the same pinned frames, collected from
-            # their caches through Arrow (one job each)
-            nw["driver"] = _DriverSnapshot.of(
+        sizes: dict = {"corpus_rows": n, "edge_rows": ne,
+                       "driver_bytes": 0, "driver_rows": 0}
+        if 0 < need <= DRIVER_TIER_BYTES:
+            drv = _DriverSnapshot.of(
                 corpus.select("doc_id", "modality", "embedding",
                               "cid").toArrow(),
                 edges.toArrow(), dim)
+            nw: dict = {"driver": drv}
+            ni = int((drv.cid >= 0).sum())
             sizes.update(driver_bytes=need, driver_rows=n)
+        else:
+            corpus, edges = corpus.cache(), edges.cache()
+            _, ni, _ = self._row_counts(corpus, edges)  # materializes both
+            nw = {"corpus": corpus, "edges": edges}
+            sizes.update(pinned_bytes_corpus=self._cached_bytes(corpus),
+                         pinned_bytes_edges=self._cached_bytes(edges))
+        if ni:
+            # bounded: 65536-cell cap, ~8 MB at 5M docs
+            nw["cent_rows"] = cents.collect()
+            sizes.update(index_rows=ni, centroid_rows=len(nw["cent_rows"]))
         nw["sizes"] = sizes
         old = self._warm
         self._warm = nw  # atomic publish: one dict assignment
         self._warm_token = token[0]
-        self._warm_policy = policy
         self._release_snapshot(old, keep=nw)
         return dict(sizes)
+
+    @staticmethod
+    def _row_counts(corpus: DataFrame, edges: DataFrame) -> tuple:
+        """``(corpus rows, corpus rows with a cid, edge rows)`` of a
+        ``cid``-carrying corpus and an edge view, from one aggregate
+        over both: two jobs, where a count per view runs two each."""
+        tagged = corpus.select(F.lit(0).alias("t"), "cid").unionByName(
+            edges.select(F.lit(1).alias("t"),
+                         F.lit(None).cast("int").alias("cid")))
+        got = {r.t: (r.n, r.ni) for r in tagged.groupBy("t").agg(
+            F.count("*").alias("n"), F.count("cid").alias("ni")).collect()}
+        (n, ni), (ne, _) = got.get(0, (0, 0)), got.get(1, (0, 0))
+        return n, ni, ne
 
     @staticmethod
     def _with_cid(corpus: DataFrame, idx: DataFrame | None) -> DataFrame:
@@ -2715,29 +2693,30 @@ class IngestPipeline:
                        probes: int | None = None,
                        warm: dict | None = None,
                        edges: bool = False) -> tuple:
-        """The candidate source of one serving call — ``search_many``'s
-        and ``search_ivf``'s — as ``(corpus, cells, edge view)``.
+        """The candidate source of one Spark-tier serving call —
+        ``search_many``'s and ``search_ivf``'s — as ``(corpus, cells,
+        edge view)``.
 
         ``route``: ``"exact"`` serves the whole corpus; ``"ivf"`` probes
         and raises when no live IVF index exists; ``"auto"`` probes when
         an index exists. Probing picks each query's cells on the driver
         (``_probe_cells``) and keeps the corpus rows whose ``cid`` is in
-        the union of those
-        cells; ``cells`` is then, per query, its own probed cids (None on
-        the full scan). The corpus ``warm()`` pins carries each row's
-        ``cid`` (``_with_cid``), so a warm probed query filters it with
-        no join and no broadcast job; an unpinned corpus (a cold read, or
-        ``warm(policy="index")``) takes the same join inside the query's
-        plan, the index side broadcast.
+        the union of those cells; ``cells`` is then, per query, its own
+        probed cids (None on the full scan). The corpus a Spark-tier
+        ``warm()`` caches carries each row's ``cid`` (``_with_cid``), so
+        a warm probed query filters it with no join and no broadcast
+        job; a cold read takes the same join inside the query's plan,
+        the index side broadcast.
 
         Warm reads serve the snapshot captured ONCE (``warm``, or one read
         of ``self._warm``), so a concurrent re-warm publishing a new dict
         mid-query can't mix snapshots; its centroids are the driver rows
-        ``warm()`` collected. Cold reads are CONSISTENT against a
-        concurrent writer (the class docstring's reader/writer contract):
-        one ``_stable_read`` bracket lists every view — torn batches
-        excluded, equal commit fingerprints around it — and the jobs run
-        after it: the captured physical paths are immutable and
+        ``warm()`` collected. A snapshot without executor caches (the
+        driver tier, or none) reads cold. Cold reads are CONSISTENT
+        against a concurrent writer (the class docstring's reader/writer
+        contract): one ``_stable_read`` bracket lists every view — torn
+        batches excluded, equal commit fingerprints around it — and the
+        jobs run after it: the captured physical paths are immutable and
         generation retention keeps them alive across the next flip. A
         committed-but-0-row index (a bootstrap whose only data batch is
         torn) degrades to the full scan (one ``isEmpty`` job), and the
@@ -2745,10 +2724,9 @@ class IngestPipeline:
         when asked for, comes from the same snapshot or bracket."""
         w = self._warm if warm is None else warm
         probed = route != "exact"
-        if w:
+        if "corpus" in w:
             corpus, ev = w["corpus"], w["edges"]
             crows = w.get("cent_rows") if probed else None
-            idx = w.get("index")
         else:
             def build(torn):
                 views = (self._probed_views(torn) if probed else (
@@ -2761,11 +2739,11 @@ class IngestPipeline:
                                                          fallback=True)
             crows = (cents.collect()
                      if idx is not None and not idx.isEmpty() else None)
+            if crows:
+                corpus = self._with_cid(corpus, F.broadcast(idx))
         cells = self._probe_cells(crows, vecs, route, probes)
         if cells is None:
             return corpus, None, ev
-        if "cid" not in corpus.columns:
-            corpus = self._with_cid(corpus, F.broadcast(idx))
         cids = ", ".join(map(str, sorted({c for cs in cells for c in cs})))
         return (corpus.filter(F.expr(f"array_contains(array({cids}), cid)")),
                 cells, ev)
@@ -3145,16 +3123,17 @@ class IngestPipeline:
         4. the edges with an endpoint among the seeds, from the same
            snapshot, feed ``_expand``, which scores the hop.
 
-        Two tiers run that body. **Driver tier** (``warm()`` kept a
-        driver copy, see ``DRIVER_TIER_BYTES``): step 2 is one
-        ``_score_block`` call over the copy and step 4 a lookup in its
-        adjacency — 0 Spark jobs on every route. **Spark tier** (cold,
-        ``warm(policy="index")``, or over the budget): step 2 is
-        ``_knn_kernel``'s pass over ``_probed_corpus`` (a driver collect
-        of at most P × pool_k × M rows) and step 4 one edge collect —
-        warm, 2 jobs for any M on either route; an unpinned probed read
-        adds the members join's broadcast, a cold one also the
-        index-emptiness check and the centroid collect. Both filters
+        Two tiers run that body, on whichever copy ``warm()`` holds.
+        **Driver tier** (the copy fits ``DRIVER_TIER_BYTES``): step 2 is
+        one ``_score_block`` call over the driver arrays and step 4 a
+        lookup in their adjacency — 0 Spark jobs on every route.
+        **Spark tier** (cold, or a copy over the budget, cached on the
+        executors): step 2 is ``_knn_kernel``'s pass over
+        ``_probed_corpus`` (a driver collect of at most P × pool_k × M
+        rows) and step 4 one edge collect — warm, 2 jobs for any M on
+        either route; a cold probed read adds the members join's
+        broadcast, the index-emptiness check and the centroid collect.
+        Both filters
         take their ids as one folded array literal (``arrays_overlap``,
         ``array_contains``), so a warm call compiles nothing (an ``IN``
         of up to 10 literals put the values in generated code: ~2.6
@@ -3194,10 +3173,12 @@ class IngestPipeline:
         """Each query's candidates ``[(s, doc_id, modality)]`` — its top
         ``pool_k`` per scored block — and, with ``edges``, the seed-edge
         lookup of the same snapshot: ``ids -> {id: [(neighbor, edge
-        score)]}``. Reads the warm snapshot once; with a driver copy the
-        pool is one ``_score_block`` call on the driver, otherwise the
-        ``_search_pool`` kernel pass. Records the tier that answered for
-        ``_serve`` (``last_serve_info["tier"]``)."""
+        score)]}``. Reads the warm snapshot once: on its driver copy the
+        pool is one ``_score_block`` call on the driver and the lookup
+        reads the copy's adjacency; otherwise (executor caches, or
+        cold) it is the ``_search_pool`` kernel pass and one edge
+        collect. Records the tier that answered for ``_serve``
+        (``last_serve_info["tier"]``)."""
         w = self._warm
         drv = w.get("driver")
         self._serve_tls.tier = "spark" if drv is None else "driver"
@@ -3297,65 +3278,67 @@ class IngestPipeline:
             groups[r.qid].append(r)
         return groups
 
+    # --- reference API facade ---------------------------------------------
+    # Together with search() these give the four reference endpoints:
+    # /submit -> submit(), /search -> search(), /graph + /graph-data ->
+    # graph_data()
 
-# --- reference API facade ----------------------------------------------------
-# Together with search() these give the four reference endpoints:
-# /submit -> submit(), /search -> search(), /graph + /graph-data -> graph_data()
+    def submit(self, text: str, modality: str = "text",
+               doc_id: int | None = None):
+        """`/submit` analog (main.py:48-87): ingest one document, return
+        its top-k corpus neighbors — the same
+        store→dedup→KNN→edge-update flow the reference runs per HTTP
+        request, as a one-row micro-batch. The batch is a local
+        relation shipped from pandas through Arrow, so scanning it
+        starts no Python task (a row list is one per parallelism
+        slice)."""
+        import pandas as pd
 
-def _facade_submit(self, text: str, modality: str = "text",
-                   doc_id: int | None = None):
-    """`/submit` analog (main.py:48-87): ingest one document, return its
-    top-k corpus neighbors — the same store→dedup→KNN→edge-update flow the
-    reference runs per HTTP request, as a one-row micro-batch. The batch
-    is a local relation shipped from pandas through Arrow, so scanning it
-    starts no Python task (a row list is one per parallelism slice)."""
-    import pandas as pd
+        if doc_id is None:
+            # TakeOrdered: one job, where a max() aggregate runs two
+            top = self.corpus().select("doc_id").orderBy(
+                F.desc("doc_id")).first()
+            doc_id = (top[0] if top else 0) + 1
+        batch = self.spark.createDataFrame(
+            pd.DataFrame({"doc_id": [int(doc_id)], "text": [text],
+                          "modality": [modality]}),
+            "doc_id bigint, text string, modality string",
+        )
+        # unique key per submit, in the facade's own ``s<n>`` namespace:
+        # state writes go to per-batch subdirectories, so a reused key
+        # would overwrite a previous batch's rows instead of accumulating
+        # — and the facade's disk-derived counter must never collide with
+        # a stream checkpoint's independent epoch sequence
+        key = self._next_submit_key()
+        neighbors = self.process_batch(batch, int(key[1:]), key=key)
+        if neighbors is None:  # a duplicate: nothing stored, no neighbors
+            neighbors = self._empty(CANDIDATE_SCHEMA + ", rn int")
+        return neighbors.select(
+            F.col("doc_id").alias("id"), "modality", "s", "rn")
 
-    if doc_id is None:
-        existing = self.corpus()
-        doc_id = (existing.agg(F.max("doc_id")).first()[0] or 0) + 1
-    batch = self.spark.createDataFrame(
-        pd.DataFrame({"doc_id": [int(doc_id)], "text": [text],
-                      "modality": [modality]}),
-        "doc_id bigint, text string, modality string",
-    )
-    # unique key per submit, in the facade's own ``s<n>`` namespace: state
-    # writes go to per-batch subdirectories, so a reused key would
-    # overwrite a previous batch's rows instead of accumulating — and the
-    # facade's disk-derived counter must never collide with a stream
-    # checkpoint's independent epoch sequence
-    key = self._next_submit_key()
-    self.process_batch(batch, int(key[1:]), key=key)
-    fresh = self.corpus().filter(F.col("doc_id") == doc_id)
-    return self.knn_against_corpus(fresh).select(
-        F.col("doc_id").alias("id"), "modality", "s", "rn"
-    )
-
-
-def _facade_graph_data(self):
-    """`/graph-data` analog (main.py:170-204): hydrated nodes + edges whose
-    endpoints both survive hydration against the corpus. Both reads share
-    one committed-batch prefix (same ``torn`` set), so a render racing a
-    concurrent ingest never sees a batch's edges without its nodes."""
-    edges, corpus = self._stable_read(lambda torn: (
-        self._read_state_excluding_keys(self.edges_dir, EDGE_SCHEMA, torn),
-        self._read_state_excluding_keys(
-            self.corpus_dir, CORPUS_SCHEMA, torn).select(
-            "doc_id", "modality"),
-    ), fallback=True)
-    nodes = (
-        edges.select(F.col("src").alias("doc_id"))
-        .union(edges.select(F.col("dst")))
-        .distinct()
-        .join(corpus, "doc_id")
-    )
-    valid = nodes.select("doc_id")
-    kept = (
-        edges.join(F.broadcast(valid), edges.src == valid.doc_id, "left_semi")
-        .join(F.broadcast(valid), edges.dst == valid.doc_id, "left_semi")
-    )
-    return nodes, kept
-
-
-IngestPipeline.submit = _facade_submit
-IngestPipeline.graph_data = _facade_graph_data
+    def graph_data(self):
+        """`/graph-data` analog (main.py:170-204): hydrated nodes + edges
+        whose endpoints both survive hydration against the corpus. Both
+        reads share one committed-batch prefix (same ``torn`` set), so a
+        render racing a concurrent ingest never sees a batch's edges
+        without its nodes."""
+        edges, corpus = self._stable_read(lambda torn: (
+            self._read_state_excluding_keys(self.edges_dir, EDGE_SCHEMA,
+                                            torn),
+            self._read_state_excluding_keys(
+                self.corpus_dir, CORPUS_SCHEMA, torn).select(
+                "doc_id", "modality"),
+        ), fallback=True)
+        nodes = (
+            edges.select(F.col("src").alias("doc_id"))
+            .union(edges.select(F.col("dst")))
+            .distinct()
+            .join(corpus, "doc_id")
+        )
+        valid = nodes.select("doc_id")
+        kept = (
+            edges.join(F.broadcast(valid), edges.src == valid.doc_id,
+                       "left_semi")
+            .join(F.broadcast(valid), edges.dst == valid.doc_id, "left_semi")
+        )
+        return nodes, kept

@@ -10,6 +10,9 @@ Builds serving state, then measures the per-query p50 wall of
 - warm, Spark tier: the same, re-warmed with `DRIVER_TIER_BYTES` patched
   to 0, so warm queries run the Spark kernel pass.
 
+Each tier's `warm()` prints its wall and its Spark job count (read from
+the call's job group) before the tier's query row.
+
 State: by default the `pipeline` benchmark's inputs at `--seed`
 (perfbench/inputs.py): a 100-doc `bulk_load`, a `cells` graph build,
 two 30-doc `/submit` batches and `compact()` — 148 docs at seed 101.
@@ -127,6 +130,7 @@ def main():
                 flush=True)
 
         row("cold")
+        sc = spark.sparkContext
         # a checkout without the driver tier warms once, Spark tier only
         budget = getattr(ingest, "DRIVER_TIER_BYTES", None)
         tiers = (("driver", budget), ("spark", 0)) if budget else (
@@ -135,9 +139,16 @@ def main():
             if ceiling is not None:
                 ingest.DRIVER_TIER_BYTES = ceiling
             pipe.unwarm()
+            group = f"bench-serving-warm-{tier}"
+            sc.setJobGroup(group, "warm()")
             t0 = time.perf_counter()
-            sizes = pipe.warm()
-            print(f"# warm() {time.perf_counter() - t0:.2f} s, "
+            try:
+                sizes = pipe.warm()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            wall = time.perf_counter() - t0
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            print(f"# warm() {wall:.2f} s, {jobs} jobs, "
                   f"driver_bytes {sizes.get('driver_bytes', 0)}",
                   flush=True)
             row(f"warm {tier} tier")

@@ -33,66 +33,55 @@ def test_fingerprint_distinguishes_queries(tables):
     assert plan_fingerprint(a) != plan_fingerprint(b)
 
 
-def test_warm_index_policy_partial_pin(spark, tables, tmp_path):
-    """r13 verdict item 8: warm(policy='index') pins only navigational
-    state (IVF assignment + edges; the centroids are driver rows) and
-    streams the corpus scan — the shape that still pins at 100 TB — while
-    serving stays correct on both routes; pinned bytes are measured per
-    store and the policy is sticky across maybe_rewarm."""
+def test_warm_holds_one_copy(spark, tables, tmp_path, monkeypatch):
+    """``warm()`` keeps ONE resident copy of the serving state. Under
+    ``DRIVER_TIER_BYTES`` it is the driver arrays, and no entry joins the
+    session's CacheManager. With the budget at 0 it pins the
+    ``cid``-carrying corpus and the edges on the executors, nothing
+    else: no index pin, and the corpus cache is most of the pinned
+    bytes. Both tiers answer the same rows."""
     from pyspark.sql import functions as F
 
-    from multi_model_vectorsearch_spark.streaming.ingest import (
-        IngestPipeline,
-    )
+    from multi_model_vectorsearch_spark.streaming import ingest
 
     docs = tables["documents"].limit(120).select(
         "doc_id", "text", F.lit("text").alias("modality"))
-    pipe = IngestPipeline(spark, str(tmp_path / "st"), k=5,
-                          maintain_ivf=True, n_centroids=None,
-                          ivf_bootstrap=16)
+    pipe = ingest.IngestPipeline(spark, str(tmp_path / "st"), k=5,
+                                 maintain_ivf=True, n_centroids=None,
+                                 ivf_bootstrap=16)
     pipe.bulk_load(docs)
+    pipe.build_graph(method="cells")
     q = docs.first().text
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
 
-    with pytest.raises(ValueError, match="policy"):
-        pipe.warm(policy="everything")
+    sizes = pipe.warm()
+    assert set(pipe._warm) == {"driver", "cent_rows", "sizes"}
+    assert cm.isEmpty(), "the driver tier caches nothing on the executors"
+    assert not any(k.startswith("pinned_bytes_") for k in sizes)
+    assert sizes["driver_rows"] == sizes["corpus_rows"] == 120
+    assert sizes["index_rows"] == 120 and sizes["centroid_rows"] > 0
+    drv = (pipe.serve_search(q, k=5), pipe.serve_search(q, k=5,
+                                                        route="ivf"))
+    assert drv[0] and drv[0][0].score == 1.0
+    assert pipe.last_serve_info["tier"] == "driver"
 
-    sizes = pipe.warm(policy="index")
-    assert sizes["policy"] == "index"
-    assert "pinned_bytes_corpus" not in sizes, "corpus must NOT pin"
-    assert sizes["pinned_bytes_index"] > 0
-    assert sizes["centroid_rows"] > 0
-    assert "pinned_bytes_centroids" not in sizes, "centroids must NOT pin"
-    assert "centroids" not in pipe._warm
-    assert sizes["pinned_bytes_edges"] >= 0
-    assert pipe._warm["corpus"].storageLevel.useMemory is False
-    assert pipe._warm["index"].storageLevel.useMemory is True
-
-    rows = pipe.serve_search(q, k=5)
-    assert rows and rows[0].score == 1.0
-    rows = pipe.serve_search_ivf(q, k=5)
-    assert rows and rows[0].s == 1.0
-
-    # sticky across the rewarm path: ANOTHER writer moves state (same
-    # root, separate pipeline object — ingest on pipe itself unwarms),
-    # the reader re-warms, the partial-pin policy survives
-    writer = IngestPipeline(spark, str(tmp_path / "st"), k=5,
-                            maintain_ivf=True, n_centroids=None,
-                            ivf_bootstrap=16)
-    fresh = tables["documents"].filter(
-        (F.col("doc_id") >= 120) & (F.col("doc_id") < 180)).select(
-        "doc_id", "text", F.lit("text").alias("modality"))
-    writer.process_batch(fresh, 0)
-    assert pipe.maybe_rewarm() is True
-    assert pipe._warm["sizes"]["policy"] == "index"
-    assert pipe._warm["corpus"].storageLevel.useMemory is False
-
-    # switching back to full pins the corpus and dominates pinned bytes
-    sizes = pipe.warm(policy="full")
-    assert sizes["policy"] == "full"
-    assert sizes["pinned_bytes_corpus"] > 0
-    total = sum(v for k, v in sizes.items()
-                if k.startswith("pinned_bytes_"))
-    assert sizes["pinned_bytes_corpus"] / total > 0.5, \
-        "the corpus cache must dominate the full-policy footprint"
-    rows = pipe.serve_search(q, k=5)
-    assert rows and rows[0].score == 1.0
+    monkeypatch.setattr(ingest, "DRIVER_TIER_BYTES", 0)
+    pipe.unwarm()
+    sizes = pipe.warm()
+    assert set(pipe._warm) == {"corpus", "edges", "cent_rows", "sizes"}
+    assert "cid" in pipe._warm["corpus"].columns
+    pinned = {k: v for k, v in sizes.items() if k.startswith("pinned_")}
+    assert set(pinned) == {"pinned_bytes_corpus", "pinned_bytes_edges"}
+    assert pinned["pinned_bytes_corpus"] > 0
+    assert pinned["pinned_bytes_corpus"] / sum(pinned.values()) > 0.5
+    assert all(pipe._warm[s].storageLevel.useMemory
+               for s in ("corpus", "edges"))
+    assert (sizes["driver_bytes"], sizes["driver_rows"]) == (0, 0)
+    assert sizes["index_rows"] == 120
+    spk = (pipe.serve_search(q, k=5), pipe.serve_search(q, k=5,
+                                                        route="ivf"))
+    assert pipe.last_serve_info["tier"] == "spark"
+    assert spk == drv
+    pipe.unwarm()
+    assert cm.isEmpty(), "unwarm releases both caches"

@@ -429,15 +429,20 @@ def test_partitionless_windows_all_classified(tables):
     assert not stale, f"classified entries no longer plan one: {stale}"
 
 
-def test_partitionless_windows_serving_plans_classified(tables, tmp_path):
+def test_partitionless_windows_serving_plans_classified(tables, tmp_path,
+                                                        monkeypatch):
     """Round-9 verdict item 3: the registry audit above misses serving and
     ingest plans. Build the representative serving DataFrames (exact
     /search cold+warm, probed search_ivf, ingest KNN on both physical
     routes, every graph-build route) and apply the same classified-or-fail
     rule via SERVING_WINDOW_CLASS — any NEW unclassified global window in
     the serving path fails here, and a classified plan that stops planning
-    one goes stale-red."""
+    one goes stale-red. The warm audit runs on the Spark tier
+    (``DRIVER_TIER_BYTES`` at 0), whose pool plans read the cached
+    corpus."""
     from pyspark.sql import functions as F
+
+    from multi_model_vectorsearch_spark.streaming import ingest
 
     from multi_model_vectorsearch_spark.plans.window_audit import (
         SERVING_WINDOW_CLASS,
@@ -475,7 +480,9 @@ def test_partitionless_windows_serving_plans_classified(tables, tmp_path):
             f"[{tag}] classified serving plans no longer plan one: {stale}")
 
     audit("cold")
+    monkeypatch.setattr(ingest, "DRIVER_TIER_BYTES", 0)
     pipe.warm()
+    assert "corpus" in pipe._warm
     try:
         audit("warm")
     finally:

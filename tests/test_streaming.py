@@ -935,14 +935,18 @@ def test_ivf_index_maintained_incrementally(spark, tables, tmp_path):
     assert len(rows) == 6 and rows[0].s == 1.0
 
 
-def test_warm_serving_cached_plan_and_equality(spark, tables, tmp_path):
-    """Round-8 warm serving: ``warm()`` pins corpus/edges (and the IVF
-    tables once bootstrapped) in executor memory; serving queries must
-    then plan as in-memory scans — NO parquet scan between queries — and
-    return row-identical results to the cold paths (driver-side query
-    embed is the same kernel the UDF maps). For ``/search`` and
-    ``search_ivf`` the plan is their kernel pool (``_search_pool``, the
-    Spark tier); both return the driver-finished answer."""
+def test_warm_serving_cached_plan_and_equality(spark, tables, tmp_path,
+                                               monkeypatch):
+    """Round-8 warm serving on the Spark tier (``DRIVER_TIER_BYTES`` at
+    0): ``warm()`` pins the ``cid``-carrying corpus and the edges in
+    executor memory; serving queries must then plan as in-memory scans
+    — NO parquet scan between queries — and return row-identical
+    results to the cold paths (driver-side query embed is the same
+    kernel the UDF maps). For ``/search`` and ``search_ivf`` the plan is
+    their kernel pool (``_search_pool``); both return the
+    driver-finished answer."""
+    from multi_model_vectorsearch_spark.streaming import ingest
+
     docs = tables["documents"].limit(120).select(
         "doc_id", "text",
         F.element_at(
@@ -961,7 +965,9 @@ def test_warm_serving_cached_plan_and_equality(spark, tables, tmp_path):
 
     cold_search = snap(pipe.search(sample.text, k=6))
     cold_probed = snap(pipe.search_ivf(sample.text, k=6, probes=2))
+    monkeypatch.setattr(ingest, "DRIVER_TIER_BYTES", 0)
     sizes = pipe.warm()
+    assert "corpus" in pipe._warm
     assert sizes["corpus_rows"] == 120 and sizes["index_rows"] == 120
     try:
         from multi_model_vectorsearch_spark.plans.explain import (
@@ -1752,28 +1758,34 @@ def test_ivf_upkeep_job_budget(spark, tables, tmp_path):
 # Spark jobs per call on the fixture below, as this engine measures
 # them. Before serving pooled with the kernel and finished on the driver,
 # a warm search ran 4 and an 8-query search_many 11; before process_batch
-# shared its corpus count with the index upkeep, a 30-doc batch ran 16;
-# before the warm corpus carried each row's cid, the probed search_many
-# broadcast its cells' members in a job of its own and ran 3. "warm" is
-# 11 jobs plus the driver copy's two collects (corpus and edges, each
-# from its pinned cache); the warm driver tier answers search,
-# search_many and search_ivf with none. The spark_* entries are the
-# same calls on the Spark route (DRIVER_TIER_BYTES at 0): pool and seed
-# edges for search/search_many, the pool alone for search_ivf.
+# shared its corpus count with the index upkeep, a 30-doc batch ran 16,
+# and 14 before its fresh-row cut materialized in its count; before the
+# warm corpus carried each row's cid, the probed search_many broadcast
+# its cells' members in a job of its own and ran 3. "submit" is a
+# one-doc process_batch whose pinned neighbour rows are its answer (22
+# when it scored its doc a second time). "warm" holds one copy: one
+# union count sizes it, and under DRIVER_TIER_BYTES it is collected to
+# the driver with no executor cache (13 when it cached every store and
+# then collected from the caches); the warm driver tier answers search,
+# search_many and search_ivf with none. The spark_* entries are the same
+# calls on the Spark route (DRIVER_TIER_BYTES at 0): the re-warm that
+# caches the corpus and edges (11 when it also pinned the index), pool
+# and seed edges for search/search_many, the pool alone for search_ivf.
 # Raise a budget only with a note in CHANGES.md saying why.
-SERVE_JOB_BUDGET = {"process_batch": 14, "warm": 13, "search": 0,
-                    "search_many": 0, "search_ivf": 0, "spark_search": 2,
+SERVE_JOB_BUDGET = {"process_batch": 13, "submit": 15, "warm": 6,
+                    "search": 0, "search_many": 0, "search_ivf": 0,
+                    "spark_warm": 8, "spark_search": 2,
                     "spark_search_many": 2, "spark_search_ivf": 1}
 
 
 def test_serve_job_budget(spark, tables, tmp_path, monkeypatch):
     """Per-call Spark job counts stay within ``SERVE_JOB_BUDGET``: a
-    30-doc ``process_batch`` on an auto-sized IVF pipeline, ``warm()``,
-    then, warm, one exact ``search``, an 8-query ``search_many`` on the
-    auto route and one ``search_ivf``, each collected — on the driver
-    tier, and again on the Spark route after a re-warm with
-    ``DRIVER_TIER_BYTES`` at 0. Jobs are counted from each call's job
-    group."""
+    30-doc ``process_batch`` on an auto-sized IVF pipeline, one
+    collected ``submit()``, ``warm()``, then, warm, one exact
+    ``search``, an 8-query ``search_many`` on the auto route and one
+    ``search_ivf``, each collected — on the driver tier, and again on
+    the Spark route after a re-warm with ``DRIVER_TIER_BYTES`` at 0.
+    Jobs are counted from each call's job group."""
     from multi_model_vectorsearch_spark.streaming import ingest
 
     sc = spark.sparkContext
@@ -1795,6 +1807,8 @@ def test_serve_job_budget(spark, tables, tmp_path, monkeypatch):
 
     counted("process_batch",
             lambda: pipe.process_batch(_mk_docs(tables, 100, 130), 0))
+    assert counted("submit", lambda: pipe.submit(
+        "a submitted document about job budgets").collect())
     texts = [r.text for r in _mk_docs(tables, 0, 130)
              .filter(F.col("doc_id") % 16 == 3).limit(8).collect()]
     assert len(texts) == 8
@@ -1813,7 +1827,7 @@ def test_serve_job_budget(spark, tables, tmp_path, monkeypatch):
     serve("")
     monkeypatch.setattr(ingest, "DRIVER_TIER_BYTES", 0)
     pipe.unwarm()
-    pipe.warm()
+    counted("spark_warm", pipe.warm)
     assert "driver" not in pipe._warm
     serve("spark_")
     assert got.keys() == SERVE_JOB_BUDGET.keys()
@@ -2634,13 +2648,18 @@ def test_freshness_gauge_tracks_writer_progress(spark, tables, tmp_path):
 
 
 def test_warm_snapshot_atomic_publish_and_shared_cache(spark, tables,
-                                                       tmp_path):
-    """r11 advice: (a) a query thread that captured the old snapshot
-    dict keeps serving from it across a re-warm (the dict is immutable
-    once published — no KeyError window); (b) a no-op warm() (state
-    unchanged) must NOT evict its own caches; (c) a re-warm whose EDGE
-    store didn't change keeps sharing that cache entry instead of
-    evicting it."""
+                                                       tmp_path,
+                                                       monkeypatch):
+    """r11 advice, on the Spark tier (``DRIVER_TIER_BYTES`` at 0, so the
+    snapshot is executor caches): (a) a query thread that captured the
+    old snapshot dict keeps serving from it across a re-warm (the dict
+    is immutable once published — no KeyError window); (b) a no-op
+    warm() (state unchanged) must NOT evict its own caches; (c) a
+    re-warm whose EDGE store didn't change keeps sharing that cache
+    entry instead of evicting it."""
+    from multi_model_vectorsearch_spark.streaming import ingest
+
+    monkeypatch.setattr(ingest, "DRIVER_TIER_BYTES", 0)
     root = str(tmp_path / "st")
     pipe = IngestPipeline(spark, root, k=5)
     pipe.process_batch(_mk_docs(tables, 0, 20), 0)
@@ -3158,8 +3177,9 @@ def _search_oracle(pipe, text, k, route="exact", modality="text"):
     (restricted on a probed route to the members of the cells
     ``_probe_selection_oracle`` picks), a TakeOrdered top ``k·OVERFETCH``
     pool, ``_balanced_select``, then ``expand_one_hop`` over the edges.
-    Reads the warm snapshot when there is one, else the state stores.
-    Returns ``[(id, score)]`` in answer order."""
+    Reads the warm snapshot's executor caches when there are some (the
+    Spark tier; their corpus carries each row's ``cid``), else the state
+    stores. Returns ``[(id, score)]`` in answer order."""
     from multi_model_vectorsearch_spark.functions.fixedpoint import (
         snap_double,
     )
@@ -3174,11 +3194,11 @@ def _search_oracle(pipe, text, k, route="exact", modality="text"):
 
     qv = F.lit(pipe._query_vec(text, modality))
     w = pipe._warm
-    if w:
+    if "corpus" in w:
         corpus, edges = w["corpus"], w["edges"]
-        idx = w.get("index")
-        cents = (pipe._centroid_frame(w["cent_rows"])
-                 if idx is not None else None)
+        crows = w.get("cent_rows")
+        cents = pipe._centroid_frame(crows) if crows else None
+        idx = corpus.select("doc_id", "cid") if crows else None
     else:
         corpus, edges = pipe.corpus(), pipe.edges()
         cents, idx = pipe.centroids(), pipe.ivf_index()
@@ -3199,12 +3219,15 @@ def _search_oracle(pipe, text, k, route="exact", modality="text"):
             for r in expand_one_hop(seeds, edges, k=k, decay=DECAY).collect()]
 
 
-def test_search_many_matches_per_query_search(spark, tables, tmp_path):
+def test_search_many_matches_per_query_search(spark, tables, tmp_path,
+                                              monkeypatch):
     """r13 verdict item 7, on the one serving body: per query,
     ``serve_search_many`` and ``search()`` both equal ``_search_oracle``
-    row for row — exact and ivf routes, cold and warm, and under
-    ``warm(policy="index")`` — including the modality-balanced selection
-    and the 1-hop expansion."""
+    row for row — exact and ivf routes, cold and warm on both tiers (the
+    Spark tier with ``DRIVER_TIER_BYTES`` at 0) — including the
+    modality-balanced selection and the 1-hop expansion."""
+    from multi_model_vectorsearch_spark.streaming import ingest
+
     pipe = IngestPipeline(spark, str(tmp_path / "st"), k=5, maintain_ivf=True,
                           n_centroids=None, ivf_bootstrap=16)
     docs = _mk_docs(tables, 0, 90)
@@ -3228,10 +3251,13 @@ def test_search_many_matches_per_query_search(spark, tables, tmp_path):
 
     check("cold")
     pipe.warm()
+    assert "driver" in pipe._warm
     check("warm")
-    # partial pin serves the batch too
-    pipe.warm(policy="index")
-    check("warm(index)", routes=("ivf",))
+    monkeypatch.setattr(ingest, "DRIVER_TIER_BYTES", 0)
+    pipe.unwarm()
+    pipe.warm()
+    assert "corpus" in pipe._warm
+    check("warm spark tier")
 
     # one serve_counters tick per batched CALL, not per query
     before = pipe.serve_counters["queries"]
@@ -3267,8 +3293,8 @@ def _tier_answers(pipe, texts, k, routes=("exact", "ivf", "auto")):
 def _driver_and_spark(pipe, texts, k, monkeypatch, routes):
     """``_tier_answers`` warm on the driver tier, then again after a
     re-warm with ``DRIVER_TIER_BYTES`` at 0 (the Spark route), with
-    ``_search_oracle``'s answer per route taken on the driver-tier
-    snapshot."""
+    ``_search_oracle``'s answer per route taken on the Spark-tier
+    snapshot of the same state."""
     from multi_model_vectorsearch_spark.streaming import ingest
 
     pipe.warm()
@@ -3278,8 +3304,6 @@ def _driver_and_spark(pipe, texts, k, monkeypatch, routes):
     drv = _tier_answers(pipe, texts, k, routes)
     assert pipe.serve_search(texts[0], k=k) is not None
     assert pipe.last_serve_info["tier"] == "driver"
-    want = {r: [_search_oracle(pipe, t, k, r) for t in texts]
-            for r in routes}
     with monkeypatch.context() as m:
         m.setattr(ingest, "DRIVER_TIER_BYTES", 0)
         pipe.unwarm()
@@ -3289,6 +3313,8 @@ def _driver_and_spark(pipe, texts, k, monkeypatch, routes):
         spk = _tier_answers(pipe, texts, k, routes)
         pipe.serve_search(texts[0], k=k)
         assert pipe.last_serve_info["tier"] == "spark"
+        want = {r: [_search_oracle(pipe, t, k, r) for t in texts]
+                for r in routes}
     return drv, spk, want
 
 
@@ -3362,13 +3388,66 @@ def test_driver_tier_small_corpus_no_edges_unembeddable(spark, tables,
     assert pipe.last_serve_info["tier"] == "driver"
 
 
-def test_driver_tier_never_answers_stale(spark, tables, tmp_path):
+def test_zero_row_index_serves_as_no_index(spark, tables, tmp_path,
+                                           monkeypatch):
+    """A committed index that assigns no row (a bootstrap whose only
+    data batch is torn) serves as no index — cold, on the driver tier
+    and on the Spark tier (``DRIVER_TIER_BYTES`` at 0):
+    ``route="auto"`` answers the full scan's rows and ``route="ivf"``
+    raises. Warm, the copy's own ``cid`` values show it: ``warm()``
+    keeps no centroid rows and reports no ``index_rows``."""
+    from multi_model_vectorsearch_spark.streaming import ingest
+
+    pipe = IngestPipeline(spark, str(tmp_path / "st"), k=5,
+                          maintain_ivf=True, n_centroids=None,
+                          ivf_bootstrap=16)
+    key = pipe.bulk_load(_mk_docs(tables, 0, 60))
+    pipe.build_graph(method="cells")
+    # fold the assignment store to zero rows, keeping the batch's commit
+    # record so the corpus batch still reads as committed
+    pipe._publish_folded_store(pipe.index_dir,
+                               pipe._empty(ingest.INDEX_SCHEMA), set(), 1,
+                               markers={key})
+    _corpus, cents, idx = pipe._probed_views(set())
+    assert cents is not None and idx is not None and idx.isEmpty()
+    texts = [r.text for r in _mk_docs(tables, 0, 60).limit(3).collect()]
+
+    def check(tier):
+        exact = [[(r.id, r.score) for r in pipe.serve_search(
+            t, k=5, route="exact")] for t in texts]
+        auto = [[(r.id, r.score) for r in pipe.serve_search(
+            t, k=5, route="auto")] for t in texts]
+        assert pipe.last_serve_info["tier"] == tier
+        assert all(exact) and auto == exact, tier
+        with pytest.raises(ValueError, match="no live IVF"):
+            pipe.search(texts[0], k=5, route="ivf")
+        return exact
+
+    cold = check("spark")
+    sizes = pipe.warm()
+    assert "driver" in pipe._warm and "cent_rows" not in pipe._warm
+    assert "index_rows" not in sizes and sizes["corpus_rows"] == 60
+    assert check("driver") == cold
+    monkeypatch.setattr(ingest, "DRIVER_TIER_BYTES", 0)
+    pipe.unwarm()
+    sizes = pipe.warm()
+    assert "corpus" in pipe._warm and "cent_rows" not in pipe._warm
+    assert "index_rows" not in sizes
+    assert check("spark") == cold
+    pipe.unwarm()
+
+
+def test_driver_tier_never_answers_stale(spark, tables, tmp_path,
+                                         monkeypatch):
     """Whatever drops the warm snapshot drops its driver copy:
-    ``process_batch``, ``compact``, ``unwarm`` and ``warm(policy=
-    "index")``, and ``maybe_rewarm`` replaces it. After each, a doc just
+    ``process_batch``, ``compact``, ``unwarm`` and a re-warm over
+    ``DRIVER_TIER_BYTES`` (onto the Spark tier), and ``maybe_rewarm``
+    replaces it (back on the driver tier). After each, a doc just
     ingested ranks first on the next read — by this pipeline, or by a
     second writer on the same state root, which leaves this pipeline's
     snapshot in place until one of those calls."""
+    from multi_model_vectorsearch_spark.streaming import ingest as mod
+
     root = str(tmp_path / "st")
     pipe = IngestPipeline(spark, root, k=5, maintain_ivf=True,
                           n_centroids=None, ivf_bootstrap=16)
@@ -3408,14 +3487,15 @@ def test_driver_tier_never_answers_stale(spark, tables, tmp_path):
 
     pipe.warm()
     doc, text = ingest(other)
-    pipe.warm(policy="index")
-    assert "driver" not in pipe._warm
+    with monkeypatch.context() as m:
+        m.setattr(mod, "DRIVER_TIER_BYTES", 0)
+        pipe.warm()
+    assert "driver" not in pipe._warm and "corpus" in pipe._warm
     ranks_first(doc, text, "spark")
 
-    pipe.warm(policy="full")
-    assert "driver" in pipe._warm
     doc, text = ingest(other)
     assert pipe.maybe_rewarm() is True
+    assert "driver" in pipe._warm and "corpus" not in pipe._warm
     ranks_first(doc, text, "driver")
 
 
